@@ -1,15 +1,22 @@
 package graft
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.ListenerBridge
+
+/** The one query timing and profiling harness, on [[GraftSession]]:
+  * per-query timings and a jobs/stages/tasks/task-time census, plus
+  * the ingest fold canary. End-to-end ingest is measured by
+  * `python3 perfbench/run.py --workload ingest_backlog [--trace 1]`.
+  */
 object Bench {
 
-  /** Ingest throughput: drive the full device state machine (decode →
-    * validate → resolve → trigger match → effects) over the events
-    * table and report events/second — the stream-processor headline
-    * the reference is actually about.
+  /** Ingest fold canary: events/second through the device state
+    * machine (decode → validate → resolve → trigger match → effects)
+    * over the events table — `processBatch(...).count()` only, no
+    * source, store or publish.
     */
-  /** Exposed for IngestBenchOnly (repeated-run profiling). */
-  def ingestEpsPublic(spark: SparkSession, sfDir: String): Double = ingestEps(spark, sfDir)
-
   private def ingestEps(spark: SparkSession, sfDir: String): Double = {
     import spark.implicits._
     import graft.core._, graft.core.AstarteValueType._
@@ -61,6 +68,29 @@ object Bench {
     }
     n / times.min
   }
+  /** Jobs, stages, tasks and summed task time per job description —
+    * separates driver-scheduling-bound queries (many tiny jobs) from
+    * data-bound ones (few jobs, big task time). */
+  private final class Census extends SparkListener {
+    final class Agg { val jobs, stages, tasks, taskMs = new AtomicLong }
+    private val byKey = new ConcurrentHashMap[String, Agg]()
+    private val stageKey = new ConcurrentHashMap[Int, String]()
+    def agg(key: String): Agg = byKey.computeIfAbsent(key, _ => new Agg)
+    private def ofStage(id: Int): Agg = agg(stageKey.getOrDefault(id, "none"))
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val k = Option(e.properties)
+        .map(_.getProperty("spark.job.description", "none")).getOrElse("none")
+      agg(k).jobs.incrementAndGet()
+      e.stageIds.foreach(stageKey.put(_, k))
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val a = ofStage(e.stageInfo.stageId)
+      a.stages.incrementAndGet(); a.tasks.addAndGet(e.stageInfo.numTasks)
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      if (e.taskInfo != null) ofStage(e.stageId).taskMs.addAndGet(e.taskInfo.duration)
+  }
+
   private def readLoadavg(): String = try {
     scala.io.Source.fromFile("/proc/loadavg").mkString.trim
       .split(" ").take(3).mkString(",")
@@ -76,8 +106,8 @@ object Bench {
     val loadavgStart = readLoadavg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cpus
-    // all session config lives in GraftSession so Verify/QueryTime/
-    // TimeQ/JobProfile measure the exact production plans
+    // all session config lives in GraftSession so Bench times the
+    // exact plans Verify checks
     val spark = GraftSession.build()
     spark.sparkContext.setLogLevel("WARN")
     // UNTIMED warm-up pass over EVERY query — not just one: several
@@ -95,9 +125,14 @@ object Bench {
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
       prefixes.forall(_.exists(n.startsWith))
     }
-    selected.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
-    }
+    // A query that fails here is named on stderr, skips its timed runs
+    // and is recorded as -1.
+    def attempt(name: String, what: String)(run: => Any): Boolean =
+      try { run; true } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name $what failed: $e"); false }
+    val warm = selected.collect {
+      case (name, fn) if attempt(name, "warm-up")(fn(spark, sfDir).count()) => name
+    }.toSet
     // CONSECUTIVE timed runs per query, first run discarded. Two
     // sampling designs were A/B-measured on one idle host, same code:
     // round-robin interleaving (each query's samples spread minutes
@@ -115,15 +150,25 @@ object Bench {
     // (rejects up to two hiccups); MIN rides along as `queries_min`
     // (the floor estimate — compare with tools/bench_compare.py
     // --key). Per-query 1-min loadavg makes a loaded entry
-    // attributable, not just a loaded run.
+    // attributable, not just a loaded run. The discarded first run
+    // also takes the query's census: the listener is attached around
+    // that run alone and its jobs carry the query's description, so
+    // the five kept samples run exactly as without it.
     val loadavgOf = () => readLoadavg().split(",").headOption.getOrElse("")
+    val census = new Census
+    val sc = spark.sparkContext
     val results = selected.map { case (name, fn) =>
       val load = loadavgOf()
-      val times = (1 to 6).map { _ =>
+      def timed(first: Boolean): Double = {
+        if (first) { sc.addSparkListener(census); sc.setJobDescription(s"bench $name") }
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case _: Throwable => -1.0 } // failures must be visible
-      }.drop(1)
+        val ok = attempt(name, "timed run")(fn(spark, sfDir).count())
+        val t = (System.nanoTime() - t0) / 1e9
+        if (first) { sc.setJobDescription(null); ListenerBridge.drain(sc); sc.removeSparkListener(census) }
+        if (ok) t else -1.0
+      }
+      val times =
+        if (warm(name)) (1 to 6).map(i => timed(i == 1)).drop(1) else Seq(-1.0)
       val (t, tMin) =
         if (times.contains(-1.0)) (-1.0, -1.0)
         else (times.sorted.apply(2), times.min)
@@ -141,11 +186,18 @@ object Bench {
     val qload = results.map { t =>
       s"\"" + t._1 + "\":\"" + t._4 + "\""
     }.mkString("{", ",", "}")
+    val qcensus = selected.collect { case (n, _) if warm(n) =>
+      val a = census.agg(s"bench $n")
+      s""""$n":{"jobs":${a.jobs.get},"stages":${a.stages.get},""" +
+        s""""tasks":${a.tasks.get},"task_ms":${a.taskMs.get}}"""
+    }.mkString("{", ",", "}")
+    val failed = results.collect { case (n, t, _, _) if t < 0 => n }
     val total =
       math.round(results.map(_._2).filter(_ >= 0).sum * 1000) / 1000.0
     val eps =
       if (prefixes.isDefined) -1L // filtered micro-bench: skip ingest
-      else try math.round(ingestEps(spark, sfDir)) catch { case _: Throwable => -1L }
+      else try math.round(ingestEps(spark, sfDir)) catch { case e: Throwable =>
+        System.err.println(s"[bench] ingest fold canary failed: $e"); -1L }
     val wall = (System.nanoTime() - wallT0) / 1e9
     // host-load snapshots: wall_sec alone can't tell a loaded box
     // from a code regression — record 1/5/15-min loadavg at both ends
@@ -157,9 +209,10 @@ object Bench {
     //  * stdout gets ONE COMPACT line — metric/value/unit/queries/sf
     //    only, nothing after it — the contract fields and nothing else;
     //  * the durable file gets the same fields PLUS every diagnostic
-    //    (min estimator, loadavg maps, ingest, wall, cpu count).
+    //    (min estimator, loadavg maps, per-query census, ingest, wall,
+    //    cpu count).
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
-    val jsonFull = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"ingest_events_per_sec":$eps,"wall_sec":$wall,"cpus":$cpus,"loadavg":"$loadavg","loadavg_start":"$loadavgStart","queries_min":$qmin,"loadavg_per_query":$qload,"sf":"$sfDir"}"""
+    val jsonFull = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"ingest_events_per_sec":$eps,"wall_sec":$wall,"cpus":$cpus,"loadavg":"$loadavg","loadavg_start":"$loadavgStart","queries_min":$qmin,"loadavg_per_query":$qload,"census":$qcensus,"sf":"$sfDir"}"""
     println(json)
     // durable copy with every entry, immune to stdout-tail truncation.
     // Lands in the working directory (or SPARK_GRAFT_BENCH_OUT) so a
@@ -176,5 +229,6 @@ object Bench {
         System.err.println(s"[bench] could not write $outPath: $e")
     }
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

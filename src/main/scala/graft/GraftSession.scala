@@ -2,22 +2,21 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE local SparkSession builder shared by every runner (Bench,
-  * Verify, QueryTime, TimeQ, JobProfile) so measurement tools always
-  * see the exact production plans — a config tuned in the bench can
-  * never silently diverge from what Verify checks or JobProfile
-  * profiles (r17 kept five hand-copied builders in sync; r18 factors
-  * them).
+  * Verify, and perfbench's workloads) so measurement tools always see
+  * the exact production plans — a config tuned in the bench can never
+  * silently diverge from what Verify checks.
   *
-  * Every performance-relevant setting is env-overridable with the
-  * LOCAL default inline and the production (100 TB, remote object
-  * storage) value documented beside it.
+  * Each setting is a constant with its LOCAL value inline and the
+  * production (100 TB, remote object storage) value documented beside
+  * it; only the core count is read from the environment.
   */
 object GraftSession {
 
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
-  def build(): SparkSession = {
-    val nCpus = cpus
+  /** Every config [[build]] sets besides the `local[nCpus]` master. */
+  def settings(nCpus: String): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> nCpus,
     // Per-file open cost for scan-split packing (guide §6). Spark's
     // 4 MB default models remote-FS open/seek latency; it ALSO floors
     // maxSplitBytes at 4 MB (maxSplit = min(maxPartitionBytes,
@@ -28,48 +27,29 @@ object GraftSession {
     // the 64 KB floor was fragmenting every normal table scan into
     // sub-MB splits, a uniform ~15% tail tax — the r17 fx_ win had
     // actually come from the parallelPartitionDiscovery threshold
-    // below. Default restored to Spark's 4 MB; the store's small
-    // files still pack ~6-per-split through the bytesPerCore term.
-    val openCost = sys.env.getOrElse("SPARK_GRAFT_OPEN_COST_BYTES", "4194304")
-    val builder = SparkSession.builder()
-      .master(s"local[$nCpus]")
-      .config("spark.sql.shuffle.partitions", nCpus)
-      .config("spark.sql.files.openCostInBytes", openCost)
-      // Distributed partition-discovery kicks in above 32 root paths
-      // (a pruned store read passes one path per live file),
-      // launching a one-task-per-directory listing JOB before every
-      // such scan — pure scheduling overhead against a local FS where
-      // the driver lists thousands of dirs in microseconds. Against
-      // slow object storage at 100 TB export a lower threshold (the
-      // Spark default 32) so listing parallelizes.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_PAR_DISCOVERY_THRESHOLD", "4096"))
-      .config("spark.sql.adaptive.enabled", "true")
-      // Coalesce post-shuffle partitions to the ADVISORY SIZE instead
-      // of pinning to the session core count (r17, guide §2.2 "fewer,
-      // larger reduce partitions"): parallelismFirst=true (the Spark
-      // default) special-cases LOCAL parallelism — every tiny exchange
-      // stays at `cpus` partitions and pays `cpus` fixed task costs;
-      // false is what Spark's own tuning docs recommend once
-      // partitions are sized in bytes, and it is scale-adaptive by
-      // construction. Re-confirmed r18 by one-variable full-suite A/B:
-      // flipping back to true read total 82.8 -> 84.2 s (geomean 1.03).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      // let AQE re-coalesce CACHED plan output: the dedup pipeline
-      // caches its 260k-row shingle/band tables, and without this the
-      // cache pins scan-sized shuffle partitioning on every consumer
-      // (the clusterers' dominant overhead at sf0.1 — 2.1s -> 0.5s on
-      // the Jaccard-verify stage alone)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Older testdata generations carried TIMESTAMP(NANOS), which
-      // Spark's vectorized reader rejects without this; current data
-      // is timestamp[us]. Either way Tables.events normalizes ts to
-      // the canonical epoch-nanos long.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Floor on post-shuffle coalescing (r18): with parallelismFirst
+    // below. Spark's 4 MB stays; the store's small files still pack
+    // ~6-per-split through the bytesPerCore term.
+    "spark.sql.files.openCostInBytes" -> "4194304",
+    // Distributed partition-discovery kicks in above 32 root paths
+    // (a pruned store read passes one path per live file),
+    // launching a one-task-per-directory listing JOB before every
+    // such scan — pure scheduling overhead against a local FS where
+    // the driver lists thousands of dirs in microseconds. Against
+    // slow object storage at 100 TB export a lower threshold (the
+    // Spark default 32) so listing parallelizes.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "4096",
+    "spark.sql.adaptive.enabled" -> "true",
+    // Coalesce post-shuffle partitions to the ADVISORY SIZE instead
+    // of pinning to the session core count (r17, guide §2.2 "fewer,
+    // larger reduce partitions"): parallelismFirst=true (the Spark
+    // default) special-cases LOCAL parallelism — every tiny exchange
+    // stays at `cpus` partitions and pays `cpus` fixed task costs;
+    // false is what Spark's own tuning docs recommend once
+    // partitions are sized in bytes, and it is scale-adaptive by
+    // construction. Re-confirmed r18 by one-variable full-suite A/B:
+    // flipping back to true read total 82.8 -> 84.2 s (geomean 1.03).
+    //
+    // No floor on post-shuffle coalescing (r18): with parallelismFirst
     // off, minNumPartitions defaults to 1, so every exchange under the
     // 64 MB advisory collapses toward ONE task (targetSize =
     // max(min(total/minNum, advisory), 1 MB minPartitionSize)) — which
@@ -79,17 +59,31 @@ object GraftSession {
     // read geomean 1.085 vs no floor (the dd_ heavies gained 13–24%
     // but ~100 small queries with light-downstream 1–8 MB exchanges
     // paid 5–40% in pure task overhead — AQE sizes by exchange bytes
-    // and cannot see downstream per-row work). Default is therefore
-    // UNSET (pure advisory coalescing); the dd_-family queries whose
-    // downstream work is heavy set the floor PER QUERY via
-    // QueryPack.withCoalesceFloor. 0 = unset.
-    val minNum = sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_NUM", "0")
-    val withMin =
-      if (minNum.toInt > 0)
-        builder.config(
-          "spark.sql.adaptive.coalescePartitions.minPartitionNum", minNum)
-      else builder
-    val spark = withMin.getOrCreate()
-    spark
+    // and cannot see downstream per-row work). minPartitionNum is
+    // therefore left UNSET (pure advisory coalescing); the dd_-family
+    // queries whose downstream work is heavy set the floor PER QUERY
+    // via QueryPack.withCoalesceFloor.
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+    // let AQE re-coalesce CACHED plan output: the dedup pipeline
+    // caches its 260k-row shingle/band tables, and without this the
+    // cache pins scan-sized shuffle partitioning on every consumer
+    // (the clusterers' dominant overhead at sf0.1 — 2.1s -> 0.5s on
+    // the Jaccard-verify stage alone)
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    "spark.ui.enabled" -> "false",
+    "spark.sql.session.timeZone" -> "UTC",
+    // Older testdata generations carried TIMESTAMP(NANOS), which
+    // Spark's vectorized reader rejects without this; current data
+    // is timestamp[us]. Either way Tables.events normalizes ts to
+    // the canonical epoch-nanos long.
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+
+  def build(): SparkSession = {
+    val nCpus = cpus
+    settings(nCpus)
+      .foldLeft(SparkSession.builder().master(s"local[$nCpus]")) {
+        case (b, (k, v)) => b.config(k, v)
+      }
+      .getOrCreate()
   }
 }

@@ -116,58 +116,3 @@ final case class Mapping(
 
 /** Introspection entry: one interface version a device announces. */
 final case class IntrospectionEntry(interfaceName: String, major: Int, minor: Int)
-
-object TableSchemas {
-  /** Shared key prefix of the individual value tables. */
-  private val keyFields = Seq(
-    StructField("device_id", StringType, nullable = false),
-    StructField("interface_id", StringType, nullable = false),
-    StructField("endpoint_id", StringType, nullable = false),
-    StructField("path", StringType, nullable = false))
-
-  private val sparseValueFields =
-    AstarteValueType.all.map(t => StructField(t.columnName, t.sparkType))
-
-  /** Last-value store keyed by (device, interface, endpoint, path);
-    * one sparse typed column per value type (SURVEY §1.5 #6).
-    */
-  val individualProperties: StructType = StructType(
-    keyFields ++
-      Seq(StructField("reception_timestamp", LongType),
-          StructField("reception_timestamp_submillis", IntegerType)) ++
-      sparseValueFields)
-
-  /** Append-only series with explicit value/reception time ordering
-    * (SURVEY §1.5 #7). Timestamps are epoch-millis longs + submillis.
-    */
-  val individualDatastreams: StructType = StructType(
-    keyFields ++
-      Seq(StructField("value_timestamp", LongType, nullable = false),
-          StructField("reception_timestamp", LongType, nullable = false),
-          StructField("reception_timestamp_submillis", IntegerType, nullable = false)) ++
-      sparseValueFields)
-
-  /** Device dimension row (SURVEY §1.5 #1), flattened for Spark. */
-  val devices: StructType = StructType(Seq(
-    StructField("device_id", StringType, nullable = false),
-    StructField("connected", BooleanType),
-    StructField("last_connection", LongType),
-    StructField("last_disconnection", LongType),
-    StructField("last_seen_ip", StringType),
-    StructField("first_registration", LongType),
-    StructField("first_credentials_request", LongType),
-    StructField("pending_empty_cache", BooleanType),
-    StructField("total_received_msgs", LongType),
-    StructField("total_received_bytes", LongType),
-    StructField("introspection", MapType(StringType, IntegerType)),
-    StructField("introspection_minor", MapType(StringType, IntegerType)),
-    StructField("old_introspection", MapType(StringType, IntegerType)),
-    StructField("exchanged_msgs_by_interface", MapType(StringType, LongType)),
-    StructField("exchanged_bytes_by_interface", MapType(StringType, LongType))))
-
-  /** Generic (group, key) → blob registry (SURVEY §1.5 #5). */
-  val kvStore: StructType = StructType(Seq(
-    StructField("group", StringType, nullable = false),
-    StructField("key", StringType, nullable = false),
-    StructField("value", BinaryType)))
-}

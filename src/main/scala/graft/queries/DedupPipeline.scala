@@ -150,8 +150,9 @@ object DedupPipeline extends QueryPack {
     * broke the bucketized candidate join's plan-pinned contract
     * (IncrementalDedupSpec: the corpus side plans shuffle-free with
     * exactly ONE increment-side shuffle). The per-row column form
-    * stays; IncrementalDedupSpec's equivalence test pins both forms
-    * so any future re-attempt cannot drift from the streaming path.
+    * stays; IncrementalDedupSpec pins its keys against keys computed
+    * independently in Scala, so any future re-attempt cannot drift
+    * from the streaming path.
     */
   private[graft] def bandsOf(arrs: DataFrame, bands: Int,
       rows: Int): DataFrame =

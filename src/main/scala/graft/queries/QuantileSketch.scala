@@ -87,7 +87,7 @@ object QuantileSketch extends QueryPack {
     // halves every still-compacting group, so the round-r row bound —
     // Σ_g max(n_g >> (r-1), min(n_g, 2·K·Rounds)) — sizes each round's
     // exchanges exactly. Under AQE each round paid a separately
-    // scheduled query-stage job per exchange (2 jobs/round, JobProfile)
+    // scheduled query-stage job per exchange (2 jobs/round, Bench census)
     // only to coalesce a known-size exchange; a fixed rp=8 was also
     // measured (q_kll_incremental 1.18→1.37 micro-pair): 8 near-empty
     // tasks per tiny round cost more than they parallelize. Safe where

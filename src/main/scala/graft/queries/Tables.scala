@@ -200,15 +200,13 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
 
   /** Absolute on-disk footprint below which [[parallelized]] inserts
-    * its narrow-row redistribution (env-overridable; default 256 MB —
-    * a shuffle that size costs seconds anywhere, and the map-work
-    * parallelism it buys dominates for the explode-heavy consumers
-    * that opt in). Production tables at 100 TB are far above it, so
-    * the repartition VANISHES at scale — the scan itself then yields
+    * its narrow-row redistribution (256 MB — a shuffle that size
+    * costs seconds anywhere, and the map-work parallelism it buys
+    * dominates for the explode-heavy consumers that opt in).
+    * Production tables at 100 TB are far above it, so the
+    * repartition VANISHES at scale — the scan itself then yields
     * ≥ cores splits. */
-  private val parallelizeBelowBytes: Long =
-    sys.env.getOrElse("SPARK_GRAFT_SMALL_SCAN_REPART_BYTES",
-      (256L * 1024 * 1024).toString).toLong
+  private val parallelizeBelowBytes: Long = 256L * 1024 * 1024
 
   private def pathBytes(p: java.io.File): Long =
     if (p.isDirectory) {

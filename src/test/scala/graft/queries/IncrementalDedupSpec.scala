@@ -28,27 +28,36 @@ class IncrementalDedupSpec extends AnyFunSuite {
 
   test("bandsOf (codegen min-aggregate form) equals the streaming column form") {
     import spark.implicits._
-    // the batch path computes band keys via explode + min(h^k)
-    // aggregates; the streaming path keeps the per-row
-    // array_min(transform) column. The two must be row-identical or
-    // stream-vs-corpus candidate sets silently drift.
+    // The batch path (bandsOf), the streaming path (bandKeyArrayOf)
+    // and the DuckDB oracle must all produce the same band keys, or
+    // stream-vs-corpus candidate sets silently drift. bandsOf explodes
+    // the streaming column itself, so the expected keys are computed
+    // independently here, from the key definition: band b of a doc is
+    // md5(lang || '|' || mins b·rows .. b·rows+rows−1 joined by ','),
+    // where min i is the doc's smallest shingle hash XOR seed i.
     val docs = (0 until 200).map { i =>
       (i.toLong, (0 to i % 7 + 3).map(j => s"tok${(i * 31 + j) % 97}")
         .mkString(" "), if (i % 3 == 0) "en" else "de", "web", 40L)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
     val arrs = DedupPipeline.shingleArraysOf(docs)
+    val perDoc = arrs.collect().map { r =>
+      (r.getAs[Long]("doc_id"), r.getAs[String]("lang"),
+        r.getAs[collection.Seq[Long]]("arr"))
+    }
+    def md5Hex(s: String): String = java.security.MessageDigest
+      .getInstance("MD5").digest(s.getBytes("UTF-8"))
+      .map(b => f"${b & 0xff}%02x").mkString
     for ((nb, nr) <- Seq((2, 4), (3, 5))) {
-      val agg = DedupPipeline.bandsOf(arrs, nb, nr)
-        .groupBy(col("doc_id"), col("band_key")).count()
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-        .toSet
-      val column = arrs.select(col("doc_id"),
-          explode(DedupPipeline.bandKeyArrayOf(nb, nr)).as("band_key"))
-        .groupBy(col("doc_id"), col("band_key")).count()
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-        .toSet
-      assert(agg == column, s"band keys drifted at banding ($nb, $nr)")
-      assert(agg.nonEmpty)
+      val expected = perDoc.flatMap { case (id, lang, arr) =>
+        val mins = MinhashSeeds.keys.map(k => arr.map(_ ^ k).min)
+        (0 until nb).map { b =>
+          (id, md5Hex(lang + "|" + mins.slice(b * nr, b * nr + nr).mkString(",")))
+        }
+      }.sorted.toSeq
+      val actual = DedupPipeline.bandsOf(arrs, nb, nr)
+        .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+      assert(actual == expected, s"band keys drifted at banding ($nb, $nr)")
+      assert(actual.size == perDoc.length * nb && actual.nonEmpty)
     }
   }
 

@@ -60,7 +60,7 @@ if [ -d "$REPO/.prevcheck" ] && [ ! -f "$REPO/.prevcheck/.git" ]; then
   git worktree prune
 fi
 if [ -d "$REPO/.prevcheck" ]; then
-  ( cd "$REPO/.prevcheck" && git checkout -qf "$PREV_REF" )
+  ( cd "$REPO/.prevcheck" && git checkout -qf "$PREV_REF" ) || exit 1
 else
   git worktree add --detach "$REPO/.prevcheck" "$PREV_REF" || exit 1
 fi
