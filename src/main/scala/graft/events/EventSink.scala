@@ -2,7 +2,7 @@ package graft.events
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.streaming.EffectRow
+import graft.streaming.{EffectBatch, EffectRow}
 
 /** Events sink (SURVEY §2.1 S7): serializes the engine's event
   * side-output with the reference's routing metadata shape — one row
@@ -25,13 +25,18 @@ final class EventSink(val path: String) {
     * map is fine here: this is the sink stage, not a codegen'd scan
     * pipeline.
     */
-  def publish(effects: Dataset[EffectRow]): Unit = {
-    val events = routed(effects)
-    if (events.isEmpty) return
-    events
-      .toDF()
+  def publish(effects: Dataset[EffectRow]): Unit =
+    if (!effects.filter(col("kind") === "event").isEmpty) write(effects)
+
+  /** The topic append of one batch's events, to be run with the store's
+    * table writes when the batch holds any.
+    */
+  private[graft] def planWrite(batch: EffectBatch): Seq[() => Unit] =
+    if (batch.has("event")) Seq(() => write(batch.rows)) else Nil
+
+  private def write(effects: Dataset[EffectRow]): Unit =
+    routed(effects).toDF()
       .write.mode("append").partitionBy("event_type").parquet(path)
-  }
 
   /** Deliver routed events through a pluggable [[EventProducer]] (the
     * real AMQP/Kafka swap-in) instead of the parquet topic. Wrap the

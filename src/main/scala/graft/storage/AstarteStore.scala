@@ -3,7 +3,7 @@ package graft.storage
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
-import graft.streaming.{EffectRow, Registry}
+import graft.streaming.{EffectBatch, EffectRow, Registry}
 
 /** The typed storage layer: the reference's 8 Cassandra tables
   * re-expressed as parquet LWW/append tables (SURVEY §1.5, §2.5, §2.6)
@@ -43,39 +43,26 @@ final class AstarteStore(val root: String) {
 
   // --- write path (the foreachBatch glue) --------------------------------
 
+  private val typedTypes = graft.core.AstarteValueType.all.filterNot(_.isArray) ++
+    graft.core.AstarteValueType.all.filter(_.isArray)
+
+  private val typedColumnNames: Seq[String] = typedTypes.map(_.columnName)
+
   /** Decode the BSON `{v: _}` envelope into the typed column for the
-    * given Astarte type code. One sparse column per type — scalars
-    * (odd codes) and their array forms (even codes) — null elsewhere;
-    * W1/W3's layout.
+    * row's Astarte type code. One sparse column per type — scalars
+    * (odd codes), then their array forms (even codes) — null elsewhere;
+    * W1/W3's layout. Selected with a table's other columns, so a
+    * table's rows are one projection.
     */
-  private def typedColumns(bsonCol: String, codeCol: String): Seq[(String, org.apache.spark.sql.Column)] = {
+  private val typedColumns: Seq[org.apache.spark.sql.Column] = {
     import org.apache.spark.sql.graft.ColumnBridge
     import graft.functions.BsonDecodeTyped
-    val ordered = graft.core.AstarteValueType.all.filterNot(_.isArray) ++
-      graft.core.AstarteValueType.all.filter(_.isArray)
-    ordered.map { t =>
-      t.columnName -> when(col(codeCol) === t.code, ColumnBridge.column(
-        BsonDecodeTyped(ColumnBridge.expression(col(bsonCol)), t)))
+    typedTypes.map { t =>
+      when(col("valueTypeCode") === t.code, ColumnBridge.column(
+        BsonDecodeTyped(ColumnBridge.expression(col("valueBson")), t))).as(t.columnName)
     }
   }
 
-  private val typedColumnNames: Seq[String] = Seq(
-    "double_value", "integer_value", "longinteger_value", "string_value",
-    "boolean_value", "binaryblob_value", "datetime_value",
-    "doublearray_value", "integerarray_value", "longintegerarray_value",
-    "stringarray_value", "booleanarray_value", "binaryblobarray_value",
-    "datetimearray_value")
-
-  private def withTyped(df: DataFrame): DataFrame =
-    typedColumns("valueBson", "valueTypeCode").foldLeft(df) {
-      case (acc, (name, c)) => acc.withColumn(name, c)
-    }
-
-  /** Apply one batch of effects to the store. Each kind is routed to
-    * its table; everything is a blind append (idempotent under the
-    * full PK), so retries after failure are harmless — the Spark
-    * replacement for the reference's ack-after-write protocol.
-    */
   /** Serializes in-JVM writers (the ingest foreachBatch) against the
     * maintenance jobs (sweep/compaction) PER TABLE PATH. The
     * file-granular rewrite protocol already guarantees no DATA FILE
@@ -100,141 +87,142 @@ final class AstarteStore(val root: String) {
   def applyEffects(effects: Dataset[EffectRow]): Unit =
     applyEffects(effects, Registry(Map.empty, Map.empty, Nil))
 
-  def applyEffects(effects: Dataset[EffectRow], registry: Registry): Unit = {
-    val df = effects.toDF().cache()
-    try {
-      val props = df.filter(col("kind").isin("property_upsert", "property_unset"))
-      if (!props.isEmpty) {
-        val rows = withTyped(props)
-          .select(Seq(col("deviceId").as("device_id"), col("iface"),
-            col("endpoint"), col("path"),
-            col("receptionMs").as("reception_timestamp"),
-            col("submillis").as("reception_timestamp_submillis")) ++
-            typedColumnNames.map(col) :+
-            when(col("kind") === "property_unset", LwwTable.OpDelete)
-              .otherwise(LwwTable.OpUpsert).as(LwwTable.OpCol): _*)
-        lockFor(properties.path).synchronized {
-          AstarteStore.appendAtomic(rows, properties.path)
-        }
+  /** Apply one batch of effects to the store. Each kind is routed to
+    * its table; everything is a blind append (idempotent under the
+    * full PK), so retries after failure are harmless — the Spark
+    * replacement for the reference's ack-after-write protocol. The
+    * batch is persisted once and the tables are written from it as
+    * concurrent jobs.
+    */
+  def applyEffects(effects: Dataset[EffectRow], registry: Registry): Unit =
+    EffectBatch.cached(effects) { batch =>
+      ConcurrentJobs.runAll(effects.sparkSession.sparkContext, planWrites(batch, registry))
+    }
+
+  /** One append per table the batch touches, each under its table's
+    * lock, to be run concurrently (the paths are disjoint). Every
+    * table's frame is built, and every object append checked against
+    * the registry, before the caller starts any write: a batch the
+    * registry cannot type fails whole, with no table written.
+    */
+  private[graft] def planWrites(batch: EffectBatch, registry: Registry): Seq[() => Unit] = {
+    val df = batch.rows.toDF()
+    def append(rows: DataFrame, path: String, partitionCols: Seq[String] = Nil): () => Unit =
+      () => lockFor(path).synchronized {
+        AstarteStore.appendAtomic(rows, path, partitionCols)
       }
 
-      val streams = df.filter(col("kind") === "datastream_append")
-      if (!streams.isEmpty) {
-        // Two-level partitioning (iface, day): per-interface reads
-        // prune whole directory trees, and time-range scans prune by
-        // UTC day of the value timestamp — at 100 TB both predicates
-        // must resolve at the directory listing, not the row scan.
-        // Retention sweeps also become whole-directory drops once a
-        // day is fully expired.
-        val streamRows = withTyped(streams)
-          .select(Seq(col("deviceId").as("device_id"), col("iface"),
-            col("endpoint"), col("path"),
-            col("valueTimestampMs").as("value_timestamp"),
-            col("receptionMs").as("reception_timestamp"),
-            col("submillis").as("reception_timestamp_submillis"),
-            // W3 retention: nullable expiry, the reference's value-row
-            // `USING TTL` (queries.ex:157-197); swept by sweepRetention.
-            regexp_extract(col("detail"), "expiry_ms:(\\d+)", 1).cast("long")
-              .as("expiry_ms"),
-            expr("valueTimestampMs div 86400000").as("day")) ++
-            typedColumnNames.map(col): _*)
-        lockFor(datastreamPath).synchronized {
-          AstarteStore.appendAtomic(streamRows, datastreamPath, Seq("iface", "day"))
-        }
-      }
+    val props = Option.when(batch.has("property_upsert") || batch.has("property_unset")) {
+      val rows = df.filter(col("kind").isin("property_upsert", "property_unset"))
+        .select(Seq(col("deviceId").as("device_id"), col("iface"),
+          col("endpoint"), col("path"),
+          col("receptionMs").as("reception_timestamp"),
+          col("submillis").as("reception_timestamp_submillis")) ++
+          typedColumns :+
+          when(col("kind") === "property_unset", LwwTable.OpDelete)
+            .otherwise(LwwTable.OpUpsert).as(LwwTable.OpCol): _*)
+      append(rows, properties.path)
+    }
 
-      val objects = df.filter(col("kind") === "object_append")
-      if (!objects.isEmpty) {
-        // One table per (interface, major) — the reference's dynamic
-        // `<iface>_v<major>` tables — with one TYPED column per
-        // endpoint leaf decoded from the object BSON at append time
-        // (queries.ex:199-297). Typed columns keep scans columnar:
-        // a two-leaf projection at 100 TB reads two parquet column
-        // chunks, not a JSON blob re-parsed per row. Only keys
-        // present in the payload are non-null (NULL-avoidance).
-        // The interface list in a batch is registry-bounded metadata,
-        // so the driver-side distinct/collect is control-plane sized.
-        // Rows are grouped by the MAJOR THEY WERE FOLDED UNDER
-        // (EffectRow.major), not the sink-time registry's major: the
-        // fold and this sink read the registry independently, so a
-        // live major bump between them must not misfile v1-validated
-        // rows into the v2 table. Leaf columns come from the mapping
-        // set of the row's major (Mapping.major keys the version).
-        val ifaceMajors =
-          objects.select("iface", "major").distinct().collect()
-            .map(r => (r.getString(0), r.getInt(1)))
-        ifaceMajors.foreach { case (name, rowMajor) =>
-          val desc = registry.descriptor(name).getOrElse(
-            throw new IllegalStateException(
-              s"object append for interface '$name' but no registry entry — " +
-                "pass the registry to applyEffects so leaf columns can be typed"))
-          val majorMappings =
-            registry.mappingsOf(name).filter(_.major == rowMajor)
-          if (majorMappings.isEmpty)
-            throw new IllegalStateException(
-              s"object append for '$name' v$rowMajor but the registry holds " +
-                s"no mappings for that major — refusing to guess leaf types")
-          val leafCols = majorMappings.map { m =>
-            import org.apache.spark.sql.graft.ColumnBridge
-            val leaf = AstarteStore.leafNameOf(m.endpoint)
-            ColumnBridge.column(graft.functions.BsonDecodeLeaf(
-              ColumnBridge.expression(col("valueBson")),
-              ColumnBridge.expression(lit(leaf)),
-              m.valueType)).as(s"v_$leaf")
-          }
-          val rows = objects
-            .filter(col("iface") === name && col("major") === rowMajor)
-            .select(Seq(col("deviceId").as("device_id"), col("path"),
-              col("valueTimestampMs").as("value_timestamp"),
-              col("receptionMs").as("reception_timestamp"),
-              col("submillis").as("reception_timestamp_submillis"),
-              regexp_extract(col("detail"), "expiry_ms:(\\d+)", 1).cast("long")
-                .as("expiry_ms"),
-              expr("valueTimestampMs div 86400000").as("day")) ++ leafCols: _*)
-          val path = objectPath(desc.copy(major = rowMajor))
-          lockFor(path).synchronized {
-            AstarteStore.appendAtomic(rows, path, Seq("day"))
-          }
-        }
-      }
+    val streams = Option.when(batch.has("datastream_append")) {
+      // Two-level partitioning (iface, day): per-interface reads
+      // prune whole directory trees, and time-range scans prune by
+      // UTC day of the value timestamp — at 100 TB both predicates
+      // must resolve at the directory listing, not the row scan.
+      // Retention sweeps also become whole-directory drops once a
+      // day is fully expired.
+      val rows = df.filter(col("kind") === "datastream_append")
+        .select(Seq(col("deviceId").as("device_id"), col("iface"),
+          col("endpoint"), col("path"),
+          col("valueTimestampMs").as("value_timestamp"),
+          col("receptionMs").as("reception_timestamp"),
+          col("submillis").as("reception_timestamp_submillis"),
+          // W3 retention: nullable expiry, the reference's value-row
+          // `USING TTL` (queries.ex:157-197); swept by sweepRetention.
+          regexp_extract(col("detail"), "expiry_ms:(\\d+)", 1).cast("long")
+            .as("expiry_ms"),
+          expr("valueTimestampMs div 86400000").as("day")) ++
+          typedColumns: _*)
+      append(rows, datastreamPath, Seq("iface", "day"))
+    }
 
-      val updates = df.filter(col("kind") === "device_update")
-      if (!updates.isEmpty) {
-        val updateRows = updates.select(col("deviceId").as("device_id"),
-            col("receptionMs").as("reception_timestamp"),
-            col("submillis").as("reception_timestamp_submillis"),
-            col("detail").as("update_json"))
-        lockFor(devicesLogPath).synchronized {
-          AstarteStore.appendAtomic(updateRows, devicesLogPath)
-        }
+    // One table per (interface, major) — the reference's dynamic
+    // `<iface>_v<major>` tables — with one TYPED column per
+    // endpoint leaf decoded from the object BSON at append time
+    // (queries.ex:199-297). Typed columns keep scans columnar:
+    // a two-leaf projection at 100 TB reads two parquet column
+    // chunks, not a JSON blob re-parsed per row. Only keys
+    // present in the payload are non-null (NULL-avoidance).
+    // Rows are grouped by the MAJOR THEY WERE FOLDED UNDER
+    // (EffectRow.major), not the sink-time registry's major: the
+    // fold and this sink read the registry independently, so a
+    // live major bump between them must not misfile v1-validated
+    // rows into the v2 table. Leaf columns come from the mapping
+    // set of the row's major (Mapping.major keys the version).
+    val objects = batch.objectTables.map { case (name, rowMajor) =>
+      val desc = registry.descriptor(name).getOrElse(
+        throw new IllegalStateException(
+          s"object append for interface '$name' but no registry entry — " +
+            "pass the registry to applyEffects so leaf columns can be typed"))
+      val majorMappings =
+        registry.mappingsOf(name).filter(_.major == rowMajor)
+      if (majorMappings.isEmpty)
+        throw new IllegalStateException(
+          s"object append for '$name' v$rowMajor but the registry holds " +
+            s"no mappings for that major — refusing to guess leaf types")
+      val leafCols = majorMappings.map { m =>
+        import org.apache.spark.sql.graft.ColumnBridge
+        val leaf = AstarteStore.leafNameOf(m.endpoint)
+        ColumnBridge.column(graft.functions.BsonDecodeLeaf(
+          ColumnBridge.expression(col("valueBson")),
+          ColumnBridge.expression(lit(leaf)),
+          m.valueType)).as(s"v_$leaf")
       }
+      val rows = df
+        .filter(col("kind") === "object_append" && col("iface") === name &&
+          col("major") === rowMajor)
+        .select(Seq(col("deviceId").as("device_id"), col("path"),
+          col("valueTimestampMs").as("value_timestamp"),
+          col("receptionMs").as("reception_timestamp"),
+          col("submillis").as("reception_timestamp_submillis"),
+          regexp_extract(col("detail"), "expiry_ms:(\\d+)", 1).cast("long")
+            .as("expiry_ms"),
+          expr("valueTimestampMs div 86400000").as("day")) ++ leafCols: _*)
+      append(rows, objectPath(desc.copy(major = rowMajor)), Seq("day"))
+    }
 
-      val paths = df.filter(col("kind") === "path_index")
-      if (!paths.isEmpty) {
-        val pathRows = paths.select(col("deviceId").as("device_id"), col("iface"),
-            col("path"), col("valueTimestampMs").as("datetime_value"),
-            col("receptionMs").as("reception_timestamp"),
-            regexp_extract(col("detail"), "expiry_ms:(\\d+)", 1).cast("long")
-              .as("expiry_ms"),
-            lit(LwwTable.OpUpsert).as(LwwTable.OpCol))
-        lockFor(pathIndex.path).synchronized {
-          AstarteStore.appendAtomic(pathRows, pathIndex.path)
-        }
-      }
+    val updates = Option.when(batch.has("device_update")) {
+      val rows = df.filter(col("kind") === "device_update")
+        .select(col("deviceId").as("device_id"),
+          col("receptionMs").as("reception_timestamp"),
+          col("submillis").as("reception_timestamp_submillis"),
+          col("detail").as("update_json"))
+      append(rows, devicesLogPath)
+    }
 
-      val kv = df.filter(col("kind") === "kv_store")
-      if (!kv.isEmpty) {
-        val kvRows = kv.select(
-            regexp_extract(col("detail"), "^(register|unregister):(.+)$", 2).as("kv_group"),
-            col("deviceId").as("kv_key"),
-            col("receptionMs").as("reception_timestamp"),
-            when(regexp_extract(col("detail"), "^(register|unregister):", 1) === "unregister",
-              LwwTable.OpDelete).otherwise(LwwTable.OpUpsert).as(LwwTable.OpCol))
-        lockFor(kvStore.path).synchronized {
-          AstarteStore.appendAtomic(kvRows, kvStore.path)
-        }
-      }
-    } finally df.unpersist()
+    val paths = Option.when(batch.has("path_index")) {
+      val rows = df.filter(col("kind") === "path_index")
+        .select(col("deviceId").as("device_id"), col("iface"),
+          col("path"), col("valueTimestampMs").as("datetime_value"),
+          col("receptionMs").as("reception_timestamp"),
+          regexp_extract(col("detail"), "expiry_ms:(\\d+)", 1).cast("long")
+            .as("expiry_ms"),
+          lit(LwwTable.OpUpsert).as(LwwTable.OpCol))
+      append(rows, pathIndex.path)
+    }
+
+    val kv = Option.when(batch.has("kv_store")) {
+      val rows = df.filter(col("kind") === "kv_store")
+        .select(
+          regexp_extract(col("detail"), "^(register|unregister):(.+)$", 2).as("kv_group"),
+          col("deviceId").as("kv_key"),
+          col("receptionMs").as("reception_timestamp"),
+          when(regexp_extract(col("detail"), "^(register|unregister):", 1) === "unregister",
+            LwwTable.OpDelete).otherwise(LwwTable.OpUpsert).as(LwwTable.OpCol))
+      append(rows, kvStore.path)
+    }
+
+    props.toSeq ++ streams ++ objects ++ updates ++ paths ++ kv
   }
 
   // --- read path (SURVEY §2.6 R1–R8) -------------------------------------

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger => StreamTrigger}
+import graft.core.ConcurrentJobs
 import graft.events.EventSink
 import graft.storage.AstarteStore
 
@@ -10,8 +11,21 @@ import graft.storage.AstarteStore
   * ```
   * source (Dataset[Envelope], any: file/Kafka/AMQP-bridge/MemoryStream)
   *   → groupByKey(realm, device).flatMapGroupsWithState  (DeviceStateMachine)
-  *   → foreachBatch: AstarteStore.applyEffects + EventSink.publish
+  *   → foreachBatch: persist once → kind census → plan every table
+  *     → store appends + event append as concurrent jobs → unpersist
   * ```
+  *
+  * One materialization per micro-batch: the batch is persisted once
+  * for both sinks ([[EffectBatch]]), and one job, adding no shuffle
+  * of its own, both fills the cache and takes the census (effect kinds present, object
+  * `(iface, major)` pairs). From it every table's rows are planned —
+  * object appends checked against the registry — before any write
+  * starts; then each table and the event topic are written as their
+  * own Spark job, concurrently, over the cached batch
+  * ([[graft.core.ConcurrentJobs]]), and the batch is unpersisted once
+  * all have ended. A batch therefore costs one census job plus one
+  * write job per table it touches, and the fold with its state-store
+  * commit runs once.
   *
   * Effectively-once: source offsets + device state checkpoint
   * together under `checkpointDir`; both sinks are blind idempotent
@@ -54,9 +68,11 @@ object Pipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(StreamTrigger.ProcessingTime(triggerInterval))
       .foreachBatch { (batch: Dataset[EffectRow], batchId: Long) =>
-        batch.sparkSession.sparkContext.setJobDescription(s"graft effects batch $batchId")
-        store.applyEffects(batch, registry.current())
-        events.publish(batch)
+        val sc = batch.sparkSession.sparkContext
+        sc.setJobDescription(s"graft effects batch $batchId")
+        EffectBatch.cached(batch) { fx =>
+          ConcurrentJobs.runAll(sc, store.planWrites(fx, registry.current()) ++ events.planWrite(fx))
+        }
       }
       .start()
 

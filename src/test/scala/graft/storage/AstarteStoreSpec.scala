@@ -146,6 +146,30 @@ class AstarteStoreSpec extends AnyFunSuite {
     assert(store.objectTable(spark, v2, m2).count() == 0)
   }
 
+  test("an object append the registry cannot type fails the batch before any write") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-obj-unregistered").toString
+    val store = new AstarteStore(root)
+    val obj = InterfaceDescriptor("com.example.TestObject", 1, 5,
+      InterfaceType.Datastream, Ownership.Device, Aggregation.Object)
+    val reg = Registry(Map(obj.name -> obj, lcd.name -> lcd),
+      Map(obj.name -> Seq(Mapping(obj.name, 1, "/value", ADouble))) ++ registry.mappings, Nil)
+    val t0 = 15216455705950000L
+    val msgs = Seq(
+      Envelope("r", "dev", "data", lcd.name, "/time/from",
+        Bson.encode(Seq("v" -> 8L)), t0, "ip", 1),
+      Envelope("r", "dev", "data", obj.name, "/",
+        Bson.encode(Seq("v" -> Map("value" -> 1.5))), t0 + 10000, "ip", 2)).toDS()
+    // folded with the object interface known, sunk without it
+    val fx = DeviceStateMachine.processBatch(msgs, reg)
+    assert(fx.filter($"kind" === "object_append").count() == 1)
+    assert(fx.filter($"kind" === "property_upsert").count() == 1)
+    val e = intercept[IllegalStateException](store.applyEffects(fx))
+    assert(e.getMessage.contains("no registry entry"))
+    // the property table, the devices log and every other table are untouched
+    assert(new java.io.File(root).list().isEmpty)
+  }
+
   test("replaying a batch of effects is harmless (effectively-once)") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-replay").toString

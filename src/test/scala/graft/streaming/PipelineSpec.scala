@@ -148,4 +148,68 @@ class PipelineSpec extends AnyFunSuite {
     assert(props.length == 1)
     assert(props.head.getAs[Long]("value") == 2L) // shard B's later write wins
   }
+
+  test("one materialization per micro-batch: a census job plus one job per table, fold runs once") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-pipe-jobs").toString
+    val srcDir = s"$base/src"
+    new java.io.File(srcDir).mkdirs()
+    val props = InterfaceDescriptor("j.props", 1, 0,
+      InterfaceType.Properties, Ownership.Device, Aggregation.Individual)
+    val stream = InterfaceDescriptor("j.stream", 1, 0,
+      InterfaceType.Datastream, Ownership.Device, Aggregation.Individual)
+    val registry = Registry(
+      Map(props.name -> props, stream.name -> stream),
+      Map(props.name -> Seq(Mapping(props.name, 1, "/p", ALongInteger)),
+        stream.name -> Seq(Mapping(stream.name, 1, "/v", AInteger))),
+      Seq(Trigger("t1", TriggerEventType.IncomingData,
+        TriggerScope.OnInterface(props.name, 1), Some("/p"),
+        MatchOperator.GreaterThan, 9L, List("job_events"))))
+    Seq(
+      Envelope("r", "devA", "data", props.name, "/p",
+        Bson.encode(Seq("v" -> 12L)), 4000010000L, "ip", 1),
+      Envelope("r", "devA", "data", stream.name, "/v",
+        Bson.encode(Seq("v" -> 1)), 4000020000L, "ip", 2),
+      Envelope("r", "devB", "data", props.name, "/p",
+        Bson.encode(Seq("v" -> 42L)), 4000030000L, "ip", 3),
+      Envelope("r", "devB", "data", stream.name, "/v",
+        Bson.encode(Seq("v" -> 2)), 4000040000L, "ip", 4)
+    ).toDS().write.parquet(s"$srcDir/shard-0")
+
+    // (job group, job description) of every job; the streaming query
+    // runs its jobs under its run id as the job group
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add((e.properties.getProperty("spark.jobGroup.id"),
+          e.properties.getProperty("spark.job.description")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val store = new AstarteStore(s"$base/store")
+    val sink = new EventSink(s"$base/events")
+    val q = Pipeline.start(
+      Pipeline.fileSource(spark, s"$srcDir/*"),
+      DeviceStateMachine.StaticRegistryProvider(registry),
+      store, sink, s"$base/ckpt")
+    try q.processAllAvailable() finally {
+      q.stop()
+      org.apache.spark.sql.graft.ListenerBridge.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+
+    val batch = q.recentProgress.filter(_.numInputRows > 0)
+    assert(batch.map(_.batchId).toSeq == Seq(0L))
+    val tables = new java.io.File(s"$base/store").listFiles()
+      .count(f => f.isDirectory && !f.getName.endsWith(".tmp"))
+    assert(tables >= 3) // properties, datastreams, devices log, ...
+    assert(new java.io.File(s"$base/events").isDirectory)
+    import scala.jdk.CollectionConverters._
+    val batchJobs = jobs.asScala.count(_ == ((q.runId.toString, "graft effects batch 0")))
+    assert(batchJobs >= 1 + tables)
+    assert(batchJobs <= 1 + tables + 1, s"$batchJobs jobs for $tables tables and the event topic")
+    // the fold (and its state-store commit) ran once: one updated
+    // state row per device, not one per re-computation
+    assert(batch.last.stateOperators(0).numRowsUpdated == 2)
+  }
 }
