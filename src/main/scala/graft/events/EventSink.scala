@@ -1,15 +1,15 @@
 package graft.events
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.streaming.{EffectBatch, EffectRow}
+import graft.storage.{EffectWriter, TableOut}
+import graft.streaming.EffectRow
 
 /** Events sink (SURVEY §2.1 S7): serializes the engine's event
   * side-output with the reference's routing metadata shape — one row
   * per (event, target) with routing key and header columns — to a
   * durable parquet topic (standing in for the AMQP events exchange;
-  * swap `write` for a Kafka/AMQP producer in `foreachBatch` without
-  * touching the routing logic).
+  * `publishTo` swaps in a Kafka/AMQP producer without touching the
+  * routing logic).
   *
   * Delivery semantics: blind append keyed by (device, reception,
   * eventType, target) — idempotent under task retry, the Spark
@@ -18,25 +18,17 @@ import graft.streaming.{EffectBatch, EffectRow}
   */
 final class EventSink(val path: String) {
 
-  /** Route events: one output row per target (a merged congruent
-    * trigger carries a comma-joined target list), each carrying the
-    * SimpleEvent protobuf wire bytes and the five x_astarte_* routing
-    * headers (S7 parity with `triggers_handler.ex:377-459`). A typed
-    * map is fine here: this is the sink stage, not a codegen'd scan
-    * pipeline.
+  /** Append the batch's routed events to the parquet topic,
+    * partitioned by event type, as one Spark job ([[EffectWriter]]).
     */
   def publish(effects: Dataset[EffectRow]): Unit =
-    if (!effects.filter(col("kind") === "event").isEmpty) write(effects)
+    EffectWriter.write(effects, None, Some(this))
 
-  /** The topic append of one batch's events, to be run with the store's
-    * table writes when the batch holds any.
-    */
-  private[graft] def planWrite(batch: EffectBatch): Seq[() => Unit] =
-    if (batch.has("event")) Seq(() => write(batch.rows)) else Nil
-
-  private def write(effects: Dataset[EffectRow]): Unit =
-    routed(effects).toDF()
-      .write.mode("append").partitionBy("event_type").parquet(path)
+  /** The topic's layout: the routed rows, partitioned by event type. */
+  private[graft] def table(spark: SparkSession): TableOut = {
+    import spark.implicits._
+    new TableOut(path, Seq("event_type"))(spark.emptyDataset[EventWireRow].toDF())
+  }
 
   /** Deliver routed events through a pluggable [[EventProducer]] (the
     * real AMQP/Kafka swap-in) instead of the parquet topic. Wrap the
@@ -50,28 +42,36 @@ final class EventSink(val path: String) {
       it.foreach(producer.send)
     }
 
-  /** The shared routing stage: one row per (event, target) with wire
-    * bytes + headers, independent of which transport delivers it.
+  /** The shared routing stage, independent of which transport
+    * delivers the events.
     */
   private def routed(effects: Dataset[EffectRow]): Dataset[EventWireRow] = {
     import effects.sparkSession.implicits._
-    effects.filter(_.kind == "event")
-      .flatMap { e =>
-        Option(e.target).getOrElse("").split(",").iterator.map { t =>
-          val ev = SimpleEventCodec.fromEffectRow(e.eventType, e.realm,
-            e.deviceId, t, e.iface, e.major, e.path, e.valueBson, e.prevBson,
-            e.receptionMs, e.detail)
-          val sid = SimpleEventCodec.triggerId(t + "|" + e.eventType)
-          val pid = SimpleEventCodec.triggerId(t)
-          EventWireRow(e.realm, e.deviceId, e.eventType, t, e.iface, e.path,
-            e.valueBson, e.prevBson, e.receptionMs, e.detail,
-            SimpleEventCodec.encode(ev, sid, pid),
-            SimpleEventCodec.headers(ev, sid, pid).toMap)
-        }
-      }
+    effects.filter(_.kind == "event").flatMap(EventSink.route)
   }
 
   def read(spark: SparkSession): DataFrame = spark.read.parquet(path)
+}
+
+object EventSink {
+
+  /** Route one event: one output row per target (a merged congruent
+    * trigger carries a comma-joined target list), each carrying the
+    * SimpleEvent protobuf wire bytes and the five x_astarte_* routing
+    * headers (S7 parity with `triggers_handler.ex:377-459`).
+    */
+  private[graft] def route(e: EffectRow): Iterator[EventWireRow] =
+    Option(e.target).getOrElse("").split(",").iterator.map { t =>
+      val ev = SimpleEventCodec.fromEffectRow(e.eventType, e.realm,
+        e.deviceId, t, e.iface, e.major, e.path, e.valueBson, e.prevBson,
+        e.receptionMs, e.detail)
+      val sid = SimpleEventCodec.triggerId(t + "|" + e.eventType)
+      val pid = SimpleEventCodec.triggerId(t)
+      EventWireRow(e.realm, e.deviceId, e.eventType, t, e.iface, e.path,
+        e.valueBson, e.prevBson, e.receptionMs, e.detail,
+        SimpleEventCodec.encode(ev, sid, pid),
+        SimpleEventCodec.headers(ev, sid, pid).toMap)
+    }
 }
 
 /** Pluggable transport for routed events — the broker swap-in point

@@ -3,7 +3,7 @@ package graft.storage
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
-import graft.streaming.{EffectBatch, EffectRow, Registry}
+import graft.streaming.{EffectRow, Registry}
 
 /** The typed storage layer: the reference's 8 Cassandra tables
   * re-expressed as parquet LWW/append tables (SURVEY §1.5, §2.5, §2.6)
@@ -63,19 +63,19 @@ final class AstarteStore(val root: String) {
     }
   }
 
-  /** Serializes in-JVM writers (the ingest foreachBatch) against the
-    * maintenance jobs (sweep/compaction) PER TABLE PATH. The
-    * file-granular rewrite protocol already guarantees no DATA FILE
-    * is ever lost under concurrency; the residual local-FS races are
-    * (a) directory-shaped — pruning a momentarily-empty partition dir
-    * while Spark's append committer is renaming files into it fails
-    * the append job — and (b) committer-shaped — two concurrent
-    * append jobs on ONE path share `_temporary/0`. Both are
-    * per-table, so the lock is per-table: compacting objects never
-    * stalls a properties append. On the 100 TB deployment target
-    * (object storage) directories don't exist and the prune is a
-    * no-op concept; cross-JVM maintenance (a separate vacuum job)
-    * should run quiesced or against an object store.
+  /** Serializes in-JVM writers (the batch commit's renames, the
+    * appends) against the maintenance jobs (sweep/compaction) PER TABLE
+    * PATH. The file-granular rewrite protocol already guarantees no
+    * DATA FILE is ever lost under concurrency, and writers never share
+    * a temporary directory (each batch stages under its own); the
+    * residual local-FS race is directory-shaped — pruning a
+    * momentarily-empty partition dir while a commit is renaming files
+    * into it fails the commit. It is per-table, so the lock is
+    * per-table: compacting objects never stalls a properties commit.
+    * On the 100 TB deployment target (object storage) directories
+    * don't exist and the prune is a no-op concept; cross-JVM
+    * maintenance (a separate vacuum job) should run quiesced or against
+    * an object store.
     */
   private def lockFor(path: String): Object = AstarteStore.lockFor(path)
 
@@ -90,61 +90,48 @@ final class AstarteStore(val root: String) {
   /** Apply one batch of effects to the store. Each kind is routed to
     * its table; everything is a blind append (idempotent under the
     * full PK), so retries after failure are harmless — the Spark
-    * replacement for the reference's ack-after-write protocol. The
-    * batch is persisted once and the tables are written from it as
-    * concurrent jobs.
+    * replacement for the reference's ack-after-write protocol. Every
+    * table is written by one Spark job ([[EffectWriter]]); a batch with
+    * an object append the registry cannot type fails whole, with no
+    * table written.
     */
   def applyEffects(effects: Dataset[EffectRow], registry: Registry): Unit =
-    EffectBatch.cached(effects) { batch =>
-      ConcurrentJobs.runAll(effects.sparkSession.sparkContext, planWrites(batch, registry))
-    }
+    EffectWriter.write(effects, Some(this -> registry), None)
 
-  /** One append per table the batch touches, each under its table's
-    * lock, to be run concurrently (the paths are disjoint). Every
-    * table's frame is built, and every object append checked against
-    * the registry, before the caller starts any write: a batch the
-    * registry cannot type fails whole, with no table written.
+  /** The store's tables as projections of the effects frame `df`: the
+    * table of each effect kind, and the table of each object
+    * `(iface, major)` the registry can type. No projection is built
+    * here; [[EffectWriter]] builds those it has not planned before.
     */
-  private[graft] def planWrites(batch: EffectBatch, registry: Registry): Seq[() => Unit] = {
-    val df = batch.rows.toDF()
-    def append(rows: DataFrame, path: String, partitionCols: Seq[String] = Nil): () => Unit =
-      () => lockFor(path).synchronized {
-        AstarteStore.appendAtomic(rows, path, partitionCols)
-      }
+  private[storage] def tables(df: DataFrame, registry: Registry)
+      : (Map[String, TableOut], Map[(String, Int), TableOut]) = {
+    val props = new TableOut(properties.path)(
+      df.select(Seq(col("deviceId").as("device_id"), col("iface"),
+        col("endpoint"), col("path"),
+        col("receptionMs").as("reception_timestamp"),
+        col("submillis").as("reception_timestamp_submillis")) ++
+        typedColumns :+
+        when(col("kind") === "property_unset", LwwTable.OpDelete)
+          .otherwise(LwwTable.OpUpsert).as(LwwTable.OpCol): _*))
 
-    val props = Option.when(batch.has("property_upsert") || batch.has("property_unset")) {
-      val rows = df.filter(col("kind").isin("property_upsert", "property_unset"))
-        .select(Seq(col("deviceId").as("device_id"), col("iface"),
-          col("endpoint"), col("path"),
-          col("receptionMs").as("reception_timestamp"),
-          col("submillis").as("reception_timestamp_submillis")) ++
-          typedColumns :+
-          when(col("kind") === "property_unset", LwwTable.OpDelete)
-            .otherwise(LwwTable.OpUpsert).as(LwwTable.OpCol): _*)
-      append(rows, properties.path)
-    }
-
-    val streams = Option.when(batch.has("datastream_append")) {
-      // Two-level partitioning (iface, day): per-interface reads
-      // prune whole directory trees, and time-range scans prune by
-      // UTC day of the value timestamp — at 100 TB both predicates
-      // must resolve at the directory listing, not the row scan.
-      // Retention sweeps also become whole-directory drops once a
-      // day is fully expired.
-      val rows = df.filter(col("kind") === "datastream_append")
-        .select(Seq(col("deviceId").as("device_id"), col("iface"),
-          col("endpoint"), col("path"),
-          col("valueTimestampMs").as("value_timestamp"),
-          col("receptionMs").as("reception_timestamp"),
-          col("submillis").as("reception_timestamp_submillis"),
-          // W3 retention: nullable expiry, the reference's value-row
-          // `USING TTL` (queries.ex:157-197); swept by sweepRetention.
-          regexp_extract(col("detail"), "expiry_ms:(\\d+)", 1).cast("long")
-            .as("expiry_ms"),
-          expr("valueTimestampMs div 86400000").as("day")) ++
-          typedColumns: _*)
-      append(rows, datastreamPath, Seq("iface", "day"))
-    }
+    // Two-level partitioning (iface, day): per-interface reads
+    // prune whole directory trees, and time-range scans prune by
+    // UTC day of the value timestamp — at 100 TB both predicates
+    // must resolve at the directory listing, not the row scan.
+    // Retention sweeps also become whole-directory drops once a
+    // day is fully expired.
+    val streams = new TableOut(datastreamPath, Seq("iface", "day"))(
+      df.select(Seq(col("deviceId").as("device_id"), col("iface"),
+        col("endpoint"), col("path"),
+        col("valueTimestampMs").as("value_timestamp"),
+        col("receptionMs").as("reception_timestamp"),
+        col("submillis").as("reception_timestamp_submillis"),
+        // W3 retention: nullable expiry, the reference's value-row
+        // `USING TTL` (queries.ex:157-197); swept by sweepRetention.
+        regexp_extract(col("detail"), "expiry_ms:(\\d+)", 1).cast("long")
+          .as("expiry_ms"),
+        expr("valueTimestampMs div 86400000").as("day")) ++
+        typedColumns: _*))
 
     // One table per (interface, major) — the reference's dynamic
     // `<iface>_v<major>` tables — with one TYPED column per
@@ -153,76 +140,59 @@ final class AstarteStore(val root: String) {
     // a two-leaf projection at 100 TB reads two parquet column
     // chunks, not a JSON blob re-parsed per row. Only keys
     // present in the payload are non-null (NULL-avoidance).
-    // Rows are grouped by the MAJOR THEY WERE FOLDED UNDER
+    // Rows are routed by the MAJOR THEY WERE FOLDED UNDER
     // (EffectRow.major), not the sink-time registry's major: the
     // fold and this sink read the registry independently, so a
     // live major bump between them must not misfile v1-validated
     // rows into the v2 table. Leaf columns come from the mapping
     // set of the row's major (Mapping.major keys the version).
-    val objects = batch.objectTables.map { case (name, rowMajor) =>
-      val desc = registry.descriptor(name).getOrElse(
-        throw new IllegalStateException(
-          s"object append for interface '$name' but no registry entry — " +
-            "pass the registry to applyEffects so leaf columns can be typed"))
-      val majorMappings =
-        registry.mappingsOf(name).filter(_.major == rowMajor)
-      if (majorMappings.isEmpty)
-        throw new IllegalStateException(
-          s"object append for '$name' v$rowMajor but the registry holds " +
-            s"no mappings for that major — refusing to guess leaf types")
-      val leafCols = majorMappings.map { m =>
-        import org.apache.spark.sql.graft.ColumnBridge
-        val leaf = AstarteStore.leafNameOf(m.endpoint)
-        ColumnBridge.column(graft.functions.BsonDecodeLeaf(
-          ColumnBridge.expression(col("valueBson")),
-          ColumnBridge.expression(lit(leaf)),
-          m.valueType)).as(s"v_$leaf")
-      }
-      val rows = df
-        .filter(col("kind") === "object_append" && col("iface") === name &&
-          col("major") === rowMajor)
-        .select(Seq(col("deviceId").as("device_id"), col("path"),
+    val objects = for {
+      (name, mappings) <- registry.mappings.toSeq
+      desc <- registry.descriptor(name).toSeq if desc.aggregation == Aggregation.Object
+      (major, majorMappings) <- mappings.groupBy(_.major)
+    } yield (name, major) ->
+      new TableOut(objectPath(desc.copy(major = major)), Seq("day"), majorMappings)({
+        val leafCols = majorMappings.map { m =>
+          import org.apache.spark.sql.graft.ColumnBridge
+          val leaf = AstarteStore.leafNameOf(m.endpoint)
+          ColumnBridge.column(graft.functions.BsonDecodeLeaf(
+            ColumnBridge.expression(col("valueBson")),
+            ColumnBridge.expression(lit(leaf)),
+            m.valueType)).as(s"v_$leaf")
+        }
+        df.select(Seq(col("deviceId").as("device_id"), col("path"),
           col("valueTimestampMs").as("value_timestamp"),
           col("receptionMs").as("reception_timestamp"),
           col("submillis").as("reception_timestamp_submillis"),
           regexp_extract(col("detail"), "expiry_ms:(\\d+)", 1).cast("long")
             .as("expiry_ms"),
           expr("valueTimestampMs div 86400000").as("day")) ++ leafCols: _*)
-      append(rows, objectPath(desc.copy(major = rowMajor)), Seq("day"))
-    }
+      })
 
-    val updates = Option.when(batch.has("device_update")) {
-      val rows = df.filter(col("kind") === "device_update")
-        .select(col("deviceId").as("device_id"),
-          col("receptionMs").as("reception_timestamp"),
-          col("submillis").as("reception_timestamp_submillis"),
-          col("detail").as("update_json"))
-      append(rows, devicesLogPath)
-    }
+    val updates = new TableOut(devicesLogPath)(
+      df.select(col("deviceId").as("device_id"),
+        col("receptionMs").as("reception_timestamp"),
+        col("submillis").as("reception_timestamp_submillis"),
+        col("detail").as("update_json")))
 
-    val paths = Option.when(batch.has("path_index")) {
-      val rows = df.filter(col("kind") === "path_index")
-        .select(col("deviceId").as("device_id"), col("iface"),
-          col("path"), col("valueTimestampMs").as("datetime_value"),
-          col("receptionMs").as("reception_timestamp"),
-          regexp_extract(col("detail"), "expiry_ms:(\\d+)", 1).cast("long")
-            .as("expiry_ms"),
-          lit(LwwTable.OpUpsert).as(LwwTable.OpCol))
-      append(rows, pathIndex.path)
-    }
+    val paths = new TableOut(pathIndex.path)(
+      df.select(col("deviceId").as("device_id"), col("iface"),
+        col("path"), col("valueTimestampMs").as("datetime_value"),
+        col("receptionMs").as("reception_timestamp"),
+        regexp_extract(col("detail"), "expiry_ms:(\\d+)", 1).cast("long")
+          .as("expiry_ms"),
+        lit(LwwTable.OpUpsert).as(LwwTable.OpCol)))
 
-    val kv = Option.when(batch.has("kv_store")) {
-      val rows = df.filter(col("kind") === "kv_store")
-        .select(
-          regexp_extract(col("detail"), "^(register|unregister):(.+)$", 2).as("kv_group"),
-          col("deviceId").as("kv_key"),
-          col("receptionMs").as("reception_timestamp"),
-          when(regexp_extract(col("detail"), "^(register|unregister):", 1) === "unregister",
-            LwwTable.OpDelete).otherwise(LwwTable.OpUpsert).as(LwwTable.OpCol))
-      append(rows, kvStore.path)
-    }
+    val kv = new TableOut(kvStore.path)(
+      df.select(
+        regexp_extract(col("detail"), "^(register|unregister):(.+)$", 2).as("kv_group"),
+        col("deviceId").as("kv_key"),
+        col("receptionMs").as("reception_timestamp"),
+        when(regexp_extract(col("detail"), "^(register|unregister):", 1) === "unregister",
+          LwwTable.OpDelete).otherwise(LwwTable.OpUpsert).as(LwwTable.OpCol)))
 
-    props.toSeq ++ streams ++ objects ++ updates ++ paths ++ kv
+    (Map("property_upsert" -> props, "property_unset" -> props, "datastream_append" -> streams,
+      "device_update" -> updates, "path_index" -> paths, "kv_store" -> kv), objects.toMap)
   }
 
   // --- read path (SURVEY §2.6 R1–R8) -------------------------------------
@@ -273,9 +243,7 @@ final class AstarteStore(val root: String) {
       val expired = pathIndex.snapshot(spark)
         .filter(col("expiry_ms") <= nowMs)
         .withColumn(LwwTable.OpCol, lit(LwwTable.OpDelete))
-      // two concurrent append jobs on ONE path share the committer's
-      // `_temporary/0` tree — the lock keeps this tombstone append
-      // from interleaving with applyEffects' path-index writes
+      // under the table lock, like every commit into the path index
       AstarteStore.appendAtomic(expired, pathIndex.path)
     }
 
@@ -721,6 +689,17 @@ object AstarteStore {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private[storage] def lockFor(path: String): Object =
     tableLocks.computeIfAbsent(path, _ => new Object)
+
+  /** The failure of a batch holding an object append of `(iface, major)`
+    * that `registry` cannot type.
+    */
+  private[storage] def untypedObject(registry: Registry, iface: String, major: Int): IllegalStateException =
+    if (registry.descriptor(iface).isEmpty)
+      new IllegalStateException(s"object append for interface '$iface' but no registry entry — " +
+        "pass the registry to applyEffects so leaf columns can be typed")
+    else
+      new IllegalStateException(s"object append for '$iface' v$major but the registry holds " +
+        "no mappings for that major — refusing to guess leaf types")
 
   /** Hadoop hidden-path convention (static twin of the instance
     * helper): `_temporary`, `_SUCCESS`, `.hidden` are committer

@@ -24,8 +24,7 @@ final class LwwTable(
 
   /** Blind-append rows with an operation marker. `df` must carry the
     * key and order columns. Locked against compaction (and any other
-    * in-JVM writer on this path) — two concurrent append jobs on one
-    * path share the committer's `_temporary/0` tree.
+    * in-JVM writer on this path), as every commit into a table is.
     */
   def append(df: DataFrame, op: String = OpUpsert): Unit =
     AstarteStore.lockFor(path).synchronized {

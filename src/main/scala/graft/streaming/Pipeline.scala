@@ -2,36 +2,35 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger => StreamTrigger}
-import graft.core.ConcurrentJobs
 import graft.events.EventSink
-import graft.storage.AstarteStore
+import graft.storage.{AstarteStore, EffectWriter}
 
 /** End-to-end streaming assembly (SURVEY §3.1 "Spark translation"):
   *
   * ```
   * source (Dataset[Envelope], any: file/Kafka/AMQP-bridge/MemoryStream)
   *   → groupByKey(realm, device).flatMapGroupsWithState  (DeviceStateMachine)
-  *   → foreachBatch: persist once → kind census → plan every table
-  *     → store appends + event append as concurrent jobs → unpersist
+  *   → foreachBatch: one job — fold, state commit, every store table and
+  *     the event topic written in the same tasks → driver renames the
+  *     tasks' files into their tables
   * ```
   *
-  * One materialization per micro-batch: the batch is persisted once
-  * for both sinks ([[EffectBatch]]), and one job, adding no shuffle
-  * of its own, both fills the cache and takes the census (effect kinds present, object
-  * `(iface, major)` pairs). From it every table's rows are planned —
-  * object appends checked against the registry — before any write
-  * starts; then each table and the event topic are written as their
-  * own Spark job, concurrently, over the cached batch
-  * ([[graft.core.ConcurrentJobs]]), and the batch is unpersisted once
-  * all have ended. A batch therefore costs one census job plus one
-  * write job per table it touches, and the fold with its state-store
-  * commit runs once.
+  * One Spark job per micro-batch ([[EffectWriter]]): each task of the
+  * fold routes its effect rows by kind to parquet writers it opens as
+  * it needs them, one per table and partition directory it touches, so
+  * the fold and its state-store commit run once and nothing is cached
+  * or re-read. Every table's files are staged under the batch's own
+  * hidden directory and renamed into place by the driver once the job
+  * has succeeded; a batch with an object append the registry cannot
+  * type writes nothing and fails.
   *
   * Effectively-once: source offsets + device state checkpoint
-  * together under `checkpointDir`; both sinks are blind idempotent
-  * appends keyed by full PK, so a replayed micro-batch rewrites
-  * identical rows (the reference's per-device ack protocol becomes
-  * checkpoint + idempotence — SURVEY §7.4 risk 1).
+  * together under `checkpointDir`, and every file a batch writes is
+  * named by (query id, batch id, partition). A replayed micro-batch
+  * lands on the names its first run committed and adds nothing, and
+  * two queries sharing a store or topic never collide (the reference's
+  * per-device ack protocol becomes checkpoint + deterministic output —
+  * SURVEY §7.4 risk 1).
   *
   * The registry (interfaces + triggers incl. volatile overlay) is
   * consulted through a [[DeviceStateMachine.RegistryProvider]] on
@@ -55,7 +54,8 @@ object Pipeline {
   /** Shared sink glue: both entry points write through the same
     * checkpointed foreachBatch (store + event sink). The registry is
     * re-read per micro-batch so object-table leaf schemas follow live
-    * minor bumps, same as the state machine's ST2 refresh.
+    * minor bumps, same as the state machine's ST2 refresh. The batch's
+    * one job is described as `graft effects batch <n>`.
     */
   private def runEffects(
       effects: Dataset[EffectRow],
@@ -68,11 +68,8 @@ object Pipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(StreamTrigger.ProcessingTime(triggerInterval))
       .foreachBatch { (batch: Dataset[EffectRow], batchId: Long) =>
-        val sc = batch.sparkSession.sparkContext
-        sc.setJobDescription(s"graft effects batch $batchId")
-        EffectBatch.cached(batch) { fx =>
-          ConcurrentJobs.runAll(sc, store.planWrites(fx, registry.current()) ++ events.planWrite(fx))
-        }
+        batch.sparkSession.sparkContext.setJobDescription(s"graft effects batch $batchId")
+        EffectWriter.write(batch, Some(store -> registry.current()), Some(events), Some(batchId))
       }
       .start()
 

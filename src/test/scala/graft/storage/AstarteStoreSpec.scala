@@ -170,6 +170,73 @@ class AstarteStoreSpec extends AnyFunSuite {
     assert(new java.io.File(root).list().isEmpty)
   }
 
+  test("a write task that fails leaves every table untouched") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-failed-task").toString
+    val store = new AstarteStore(root)
+    val t0 = 15216455705950000L
+    // one device: its property row is written before its datastream
+    // row fails the task
+    val fx = DeviceStateMachine.processBatch(Seq(
+      Envelope("r", "dev", "data", lcd.name, "/time/from",
+        Bson.encode(Seq("v" -> 8L)), t0, "ip", 1),
+      Envelope("r", "dev", "data", stream.name, "/0/value",
+        Bson.encode(Seq("v" -> 4)), t0 + 10000, "ip", 2)).toDS(), registry)
+      .map(e => if (e.kind == "datastream_append") throw new IllegalStateException("injected") else e)
+    val e = intercept[org.apache.spark.SparkException](store.applyEffects(fx, registry))
+    assert(e.getMessage.contains("injected"))
+    assert(new java.io.File(root).list().isEmpty)
+  }
+
+  test("a task whose rows span more partition dirs than it keeps writers open writes one file per dir") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-wide").toString
+    val store = new AstarteStore(root)
+    val dayMs = 86400000L
+    // one device, so one fold task sees all 80 days of history
+    val days = 0 until 80
+    val msgs = days.map { day =>
+      Envelope("realm", "dev", "data", stream.name, s"/$day/value",
+        Bson.encode(Seq("v" -> day)), (day * dayMs + 1000L) * 10000, "ip", day.toLong)
+    }.toDS()
+    store.applyEffects(DeviceStateMachine.processBatch(msgs, registry))
+    val rows = store.datastreams(spark).select($"day".cast("long"), $"integer_value")
+      .as[(Long, Int)].collect().sorted.toSeq
+    assert(rows == days.map(d => (d.toLong, d)))
+    days.foreach { day =>
+      val dir = new java.io.File(s"${store.datastreamPath}/iface=${stream.name}/day=$day")
+      assert(dir.list().count(_.endsWith(".parquet")) == 1, s"day $day")
+    }
+    assert(store.pathsFor(spark, stream.name).count() == days.size)
+  }
+
+  test("a batch plans only the tables no earlier batch planned, whatever the registry's size") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-planned").toString
+    val store = new AstarteStore(root)
+    val objects = (0 until 40).map(i => InterfaceDescriptor(s"com.example.Object$i", 1, 0,
+      InterfaceType.Datastream, Ownership.Device, Aggregation.Object))
+    def reg(n: Int) = Registry(registry.interfaces ++ objects.take(n).map(o => o.name -> o),
+      registry.mappings ++ objects.take(n).map(o => o.name -> Seq(Mapping(o.name, 1, "/value", ADouble))), Nil)
+    val t0 = 15216455705950000L
+    def batch(n: Long) = DeviceStateMachine.processBatch(Seq(
+      Envelope("r", "dev", "data", lcd.name, "/time/from",
+        Bson.encode(Seq("v" -> n)), t0 + n * 10000, "ip", 2 * n),
+      Envelope("r", "dev", "data", objects(0).name, "/",
+        Bson.encode(Seq("v" -> Map("value" -> n.toDouble))), t0 + n * 10000 + 1, "ip", 2 * n + 1)).toDS(),
+      reg(objects.size))
+    def planned(sink: => Unit): Long = {
+      val before = EffectWriter.tablesPlanned.get
+      sink
+      EffectWriter.tablesPlanned.get - before
+    }
+    // five kind tables (both property kinds share one) and every object table
+    assert(planned(store.applyEffects(batch(1), reg(39))) == 5 + 39)
+    assert(planned(store.applyEffects(batch(2), reg(39))) == 0)
+    assert(planned(store.applyEffects(batch(3), reg(40))) == 1)
+    assert(store.objectTable(spark, objects(0), reg(1).mappingsOf(objects(0).name)).count() == 3)
+  }
+
   test("replaying a batch of effects is harmless (effectively-once)") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-replay").toString
@@ -185,6 +252,75 @@ class AstarteStoreSpec extends AnyFunSuite {
     store.applyEffects(fx) // crash-redelivery replay of the same batch
     assert(store.propertyValues(spark, ALongInteger).count() == 1)
     assert(store.datastreams(spark).count() == 1)
+  }
+
+  test("the batch writer's files carry DataFrameWriter's schema, codec and Spark metadata") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-footers").toString
+    val store = new AstarteStore(s"$root/store")
+    val t0 = 15216455705950000L
+    val fx = DeviceStateMachine.processBatch(Seq(
+      Envelope("r", "dev", "data", lcd.name, "/time/from",
+        Bson.encode(Seq("v" -> 8L)), t0, "ip", 1),
+      Envelope("r", "dev", "data", stream.name, "/0/value",
+        Bson.encode(Seq("v" -> 4)), t0 + 10000, "ip", 2)).toDS(), registry).cache()
+    store.applyEffects(fx, registry)
+    val conf = spark.sparkContext.hadoopConfiguration
+    def footer(dir: String) = {
+      import scala.jdk.CollectionConverters._
+      val file = Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(file.toString), conf))
+      try (file.getFileName.toString.split('.').takeRight(2).mkString("."), reader.getFooter)
+      finally reader.close()
+    }
+    Seq("property_upsert", "datastream_append").foreach { kind =>
+      val t = store.tables(fx.toDF().filter($"kind" === kind), registry)._1(kind)
+      t.rows.write.partitionBy(t.partitionCols: _*).parquet(s"$root/ref-$kind")
+      val (ext, got) = footer(t.path)
+      val (refExt, want) = footer(s"$root/ref-$kind")
+      assert(ext == refExt, kind)
+      assert(got.getFileMetaData.getSchema == want.getFileMetaData.getSchema, kind)
+      assert(got.getFileMetaData.getKeyValueMetaData == want.getFileMetaData.getKeyValueMetaData, kind)
+      assert(got.getFileMetaData.getCreatedBy == want.getFileMetaData.getCreatedBy, kind)
+      assert(got.getBlocks.get(0).getColumns.get(0).getCodec ==
+        want.getBlocks.get(0).getColumns.get(0).getCodec, kind)
+    }
+    fx.unpersist()
+  }
+
+  test("publishing a batch's events is one Spark job") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-publish").toString
+    val reg = registry.copy(triggers = Seq(Trigger("t1", TriggerEventType.IncomingData,
+      TriggerScope.OnInterface(lcd.name, 1), Some("/time/from"),
+      MatchOperator.GreaterThan, 5L, List("store_events"))))
+    val t0 = 15216455705950000L
+    val fx = DeviceStateMachine.processBatch(Seq(
+      Envelope("r", "devA", "data", lcd.name, "/time/from",
+        Bson.encode(Seq("v" -> 8L)), t0, "ip", 1),
+      Envelope("r", "devB", "data", lcd.name, "/time/from",
+        Bson.encode(Seq("v" -> 3L)), t0 + 10000, "ip", 2)).toDS(), reg).cache()
+    fx.count()
+    val sink = new graft.events.EventSink(s"$root/events")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.job.description") == "publish probe") jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobDescription("publish probe")
+    try sink.publish(fx) finally {
+      sc.setJobDescription(null)
+      org.apache.spark.sql.graft.ListenerBridge.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get == 1)
+    assert(sink.read(spark).select("device_id").as[String].collect().toSeq == Seq("devA"))
+    fx.unpersist()
   }
 
   test("path index TTL: upsert, read-back, sweep") {
