@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * (for exact-Jaccard verification) and the banded minhash keys (for
   * candidate generation). [[SignatureStore]] persists both as store
   * tables via the crash-safe [[graft.storage.AstarteStore.appendAtomic]]
-  * append protocol (unique-tmp-then-rename; a new increment's
+  * append protocol (stage, then rename in; a new increment's
   * signatures land the same way its verdicts are computed — against
   * persisted state, the reference's last-value merge discipline,
   * `queries.ex:121-155`).
@@ -193,8 +193,8 @@ object IncrementalDedup extends QueryPack {
       * completing the delta cycle: the next increment then judges
       * against corpus + every absorbed increment without any prior
       * text being re-read. Crash-safe via the store's append protocol
-      * (a torn absorb leaves an orphan batch dir that maintenance
-      * adopts or clears; the upstream retry re-lands identical rows).
+      * (a torn absorb leaves staged files that are never table data and
+      * that maintenance clears; the upstream retry re-lands identical rows).
       * Appended bands are not re-capped here — a bucket that goes hot
       * only CUMULATIVELY across increments is periodic compaction's
       * job (`compactAppendTable` + a cap pass), not a per-absorb scan

@@ -16,7 +16,7 @@ import graft.streaming.{EffectRow, Registry}
   * (R5) a pure column projection.
   */
 final class AstarteStore(val root: String) {
-  import AstarteStore.{adoptTmpLeaves, rewriteLeaf}
+  import AstarteStore.{isHidden, maintain, rewriteLeaf}
 
   val properties = new LwwTable(s"$root/individual_properties",
     keyCols = Seq("device_id", "iface", "endpoint", "path"),
@@ -238,13 +238,11 @@ final class AstarteStore(val root: String) {
     * DELETE WHERE job standing in for storage-level TTL).
     */
   def sweepExpiredPaths(spark: SparkSession, nowMs: Long): Unit =
+    // the snapshot is listed under the table lock too, so an in-JVM
+    // compaction cannot retire its files before the tombstones are written
     lockFor(pathIndex.path).synchronized {
-      if (!pathIndex.exists(spark)) return
-      val expired = pathIndex.snapshot(spark)
-        .filter(col("expiry_ms") <= nowMs)
-        .withColumn(LwwTable.OpCol, lit(LwwTable.OpDelete))
-      // under the table lock, like every commit into the path index
-      AstarteStore.appendAtomic(expired, pathIndex.path)
+      if (pathIndex.exists(spark))
+        pathIndex.append(pathIndex.snapshot(spark).filter(col("expiry_ms") <= nowMs), LwwTable.OpDelete)
     }
 
   /** General retention sweep (W3+W5): drop expired path-index rows and
@@ -269,13 +267,14 @@ final class AstarteStore(val root: String) {
     if (!fs.exists(hroot)) return Nil
     val fixed = Set("individual_properties", "individual_datastreams",
       "devices.log", "paths", "kv_store")
+    // named as the writers name them, so maintenance takes the same
+    // table lock as the batch commit
     fs.listStatus(hroot).toSeq
       .filter(e => e.isDirectory && !isHidden(e.getPath.getName))
-      .filterNot(e => fixed(e.getPath.getName) ||
-        e.getPath.getName.endsWith(".tmp"))
+      .filterNot(e => fixed(e.getPath.getName))
       .filter(e => fs.listStatus(e.getPath).exists(c =>
         c.isDirectory && c.getPath.getName.startsWith("day=")))
-      .map(_.getPath.toString)
+      .map(e => s"$root/${e.getPath.getName}")
   }
 
   /** Partition-pruned retention sweep of an (iface, day)-partitioned
@@ -283,41 +282,34 @@ final class AstarteStore(val root: String) {
     * hold anything expired — partition pruning plus parquet min/max
     * stats on `expiry_ms` skip everything else, and the result is
     * bounded by partition count, not row count — then ONLY those leaf
-    * directories are rewritten. Every other partition's files are
-    * never read for rewrite and stay byte-identical.
-    *
-    * Per-leaf commit protocol (merge-on-read, file-granular): the
-    * rewrite of a leaf's snapshot files F is written to a tmp dir,
-    * its files are RENAMED INTO the leaf under their own unique
-    * names, and only then are the files in F retired one by one.
-    * Three properties fall out:
-    *   - no state ever holds the only copy of a row outside the leaf
-    *     (originals are untouched until their replacement is fully
-    *     in place), so crash recovery is "adopt tmp files, never
-    *     adjudicate" — there is no stale-vs-only-copy judgment whose
-    *     wrong branch loses data;
-    *   - a concurrent appender's files (new names, never in F) are
-    *     never deleted or moved — append + sweep/compact cannot lose
-    *     rows, which a directory-level delete+rename swap could
-    *     (the appended file vanishes with the directory);
-    *   - readers never see a missing partition; between move-in and
-    *     retire they can see live rows twice, and the read path
-    *     already folds byte-identical duplicates (`dropDuplicates`,
-    *     the same replay-tolerance rule the appender relies on) —
-    *     expired rows are likewise invisible at read time
-    *     (`datastreams(spark, nowMs)`), so partial retirement never
-    *     shows a wrong ANSWER. One visibility caveat remains: a read
-    *     job that planned its file list just before a retirement can
-    *     fail with FileNotFoundException when its tasks open the
-    *     retired files — a visible, retryable failure (re-planning
-    *     sees the replacements). That is deliberately NOT papered
-    *     over with ignoreMissingFiles, which would silently drop the
-    *     retired files' rows from that read instead.
-    * True multi-writer ACID needs a commit-log table format
-    * (Delta/Iceberg); on plain parquet this protocol has no lost-row
-    * window at all and only a benign transient-duplicate window that
-    * the read semantics absorb.
+    * directories are rewritten ([[AstarteStore.rewriteLeaf]]). Every
+    * other partition's files are never read for rewrite and stay
+    * byte-identical.
     */
+  private def sweepAppendTable(spark: SparkSession, path: String, nowMs: Long): Unit =
+    maintain(spark, path) { fs =>
+      val df = spark.read.parquet(path)
+      // partition layout differs per table: datastreams are (iface, day),
+      // per-interface object tables are (day) — derive it from the schema
+      val partCols = Seq("iface", "day").filter(df.columns.contains)
+      val hit =
+        if (!df.columns.contains("expiry_ms") || partCols.isEmpty) Array.empty[String]
+        else df
+          .filter(col("expiry_ms").isNotNull && col("expiry_ms") <= nowMs)
+          .select(partCols.map(col): _*).distinct()
+          .collect()
+          .map(r => partCols.indices
+            .map(i => s"${partCols(i)}=${r.get(i)}").mkString("/"))
+      // the common case is no hit: nothing to do, touch nothing
+      if (hit.nonEmpty) {
+        hit.foreach { rel =>
+          rewriteLeaf(spark, path, new org.apache.hadoop.fs.Path(s"$path/$rel"),
+            _.filter(col("expiry_ms").isNull || col("expiry_ms") > nowMs))
+        }
+        pruneEmptyDirs(fs, new org.apache.hadoop.fs.Path(path))
+      }
+    }
+
   /** Drop directories a retirement emptied — a schema-less directory
     * poisons the next read, and an empty table root masquerades as an
     * empty table with no schema. Non-recursive deletes: if a
@@ -344,98 +336,31 @@ final class AstarteStore(val root: String) {
       fs.delete(tableRoot, true)
   }
 
-  /** Hadoop hidden-path convention: a concurrent Spark append keeps
-    * its in-flight task files under `_temporary` inside the table
-    * root — maintenance must never iterate into or prune those.
-    */
-  private def isHidden(name: String): Boolean =
-    name.startsWith("_") || name.startsWith(".")
-
-  private def sweepAppendTable(spark: SparkSession, path: String,
-      nowMs: Long): Unit = lockFor(path).synchronized {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val hpath = new HPath(path)
-    val fs = hpath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // cross-process exclusion: maintenance from a second driver
-    // process takes the on-disk lock file, not just this JVM monitor
-    ProcessLock.withLock(fs, AstarteStore.maintenanceLock(path)) {
-    // adopt BOTH maintenance tmp roots before anything else — and
-    // before the missing-table early return: a sweep that emptied the
-    // table root while a compaction crash parked files under its tmp
-    // root is exactly the state that must recover here
-    adoptTmpLeaves(fs, hpath, new HPath(path + ".sweep.tmp"))
-    adoptTmpLeaves(fs, hpath, new HPath(path + ".compact.tmp"))
-    AstarteStore.recoverAppendBatches(fs, hpath)
-    if (!fs.exists(hpath)) return
-    val df = spark.read.parquet(path)
-    if (!df.columns.contains("expiry_ms")) return
-    // partition layout differs per table: datastreams are (iface, day),
-    // per-interface object tables are (day) — derive it from the schema
-    val partCols = Seq("iface", "day").filter(df.columns.contains)
-    if (partCols.isEmpty) return
-    val hit = df
-      .filter(col("expiry_ms").isNotNull && col("expiry_ms") <= nowMs)
-      .select(partCols.map(col): _*).distinct()
-      .collect()
-      .map(r => partCols.indices
-        .map(i => s"${partCols(i)}=${r.get(i)}").mkString("/"))
-    if (hit.isEmpty) return // the common case: nothing to do, touch nothing
-    val tmpRoot = new HPath(path + ".sweep.tmp")
-    hit.foreach { rel =>
-      rewriteLeaf(spark, fs,
-        new HPath(s"$path/$rel"),
-        new HPath(s"$tmpRoot/$rel"),
-        _.filter(col("expiry_ms").isNull || col("expiry_ms") > nowMs))
-    }
-    fs.delete(tmpRoot, true)
-    pruneEmptyDirs(fs, hpath)
-    }
-  }
-
   /** Partition-pruned small-file compaction of an (iface, day)
     * append table. Streaming ingest writes at least one parquet file
     * per micro-batch per partition; at 100 TB that accretes into a
     * scan-killing file count (every file is an open/seek/footer-read
     * at planning time). Leaves with more than `maxFiles` data files
-    * are rewritten into one file via the same file-granular in-leaf
-    * commit as the retention sweep (see the protocol note there);
+    * are rewritten into one file ([[AstarteStore.rewriteLeaf]]);
     * every other leaf is never read and stays byte-identical.
     * Listing cost is bounded by partition count, not row count.
     */
   def compactAppendTable(spark: SparkSession, path: String,
-      maxFiles: Int = 4): Unit = lockFor(path).synchronized {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val hpath = new HPath(path)
-    val fs = hpath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ProcessLock.withLock(fs, AstarteStore.maintenanceLock(path)) {
-    adoptTmpLeaves(fs, hpath, new HPath(path + ".sweep.tmp"))
-    val tmpRoot = new HPath(path + ".compact.tmp")
-    adoptTmpLeaves(fs, hpath, tmpRoot)
-    AstarteStore.recoverAppendBatches(fs, hpath)
-    if (!fs.exists(hpath)) return
-    // leaf dirs at any partition depth: a dir holding parquet files
-    // directly (the root itself is never a leaf — these tables are
-    // always partitioned)
-    def leafDirs(dir: HPath, rel: String): Seq[(HPath, String)] =
-      fs.listStatus(dir).toSeq
-        .filter(e => e.isDirectory && !isHidden(e.getPath.getName))
-        .flatMap { e =>
-          val childRel =
-            if (rel.isEmpty) e.getPath.getName else s"$rel/${e.getPath.getName}"
-          val hasParquet = fs.listStatus(e.getPath).exists(f =>
-            f.isFile && f.getPath.getName.endsWith(".parquet"))
-          (if (hasParquet) Seq((e.getPath, childRel)) else Nil) ++
-            leafDirs(e.getPath, childRel)
-        }
-    for ((leaf, rel) <- leafDirs(hpath, "")) {
-      val dataFiles = fs.listStatus(leaf)
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      if (dataFiles.length > maxFiles)
-        rewriteLeaf(spark, fs, leaf, new HPath(s"$tmpRoot/$rel"), _.coalesce(1))
+      maxFiles: Int = 4): Unit =
+    maintain(spark, path) { fs =>
+      import org.apache.hadoop.fs.{Path => HPath}
+      def dataFiles(dir: HPath) =
+        fs.listStatus(dir).count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      // leaf dirs at any partition depth: a dir holding parquet files
+      // directly (the root itself is never a leaf — these tables are
+      // always partitioned)
+      def leafDirs(dir: HPath): Seq[HPath] =
+        fs.listStatus(dir).toSeq
+          .filter(e => e.isDirectory && !isHidden(e.getPath.getName))
+          .flatMap(e => (if (dataFiles(e.getPath) > 0) Seq(e.getPath) else Nil) ++ leafDirs(e.getPath))
+      for (leaf <- leafDirs(new HPath(path)) if dataFiles(leaf) > maxFiles)
+        rewriteLeaf(spark, path, leaf, _.coalesce(1))
     }
-    fs.delete(tmpRoot, true)
-    }
-  }
 
   /** Datastream read as of `nowMs`: retention-expired rows are
     * invisible even before a sweep ran (Cassandra TTL read semantics).
@@ -701,14 +626,13 @@ object AstarteStore {
       new IllegalStateException(s"object append for '$iface' v$major but the registry holds " +
         "no mappings for that major — refusing to guess leaf types")
 
-  /** Hadoop hidden-path convention (static twin of the instance
-    * helper): `_temporary`, `_SUCCESS`, `.hidden` are committer
-    * internals, never table data.
+  /** Hadoop hidden-path convention: `_`- and `.`-prefixed names
+    * (`_SUCCESS`, `.crc` checksums, the `_graft_batch-*` staging dirs of
+    * [[StagedCommit]]) are never table data; maintenance never iterates
+    * into or prunes them.
     */
-  private def isHiddenName(name: String): Boolean =
+  private[storage] def isHidden(name: String): Boolean =
     name.startsWith("_") || name.startsWith(".")
-
-  private[storage] def appendTmpRoot(path: String): String = path + ".append.tmp"
 
   /** Lock file for cross-process maintenance exclusion on one table
     * (see [[ProcessLock]]). A sibling FILE, not inside the table dir,
@@ -717,148 +641,87 @@ object AstarteStore {
   private[storage] def maintenanceLock(path: String) =
     new org.apache.hadoop.fs.Path(path + ".maintenance.lock")
 
-  /** Cross-process-safe append: write the batch to a UNIQUE tmp dir
-    * beside the table, then RENAME the committed part files into the
-    * table tree (atomic per file; Spark part-file names embed the
-    * writing job's UUID, so names never collide across writers). Two
+  /** Runs maintenance `body` on an existing table at `path`, holding its
+    * JVM lock and its cross-process [[ProcessLock]], after removing the
+    * staging that crashed writes left beside it.
+    */
+  private[storage] def maintain(spark: SparkSession, path: String)(
+      body: org.apache.hadoop.fs.FileSystem => Unit): Unit =
+    lockFor(path).synchronized {
+      val hpath = new org.apache.hadoop.fs.Path(path)
+      val fs = hpath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      ProcessLock.withLock(fs, maintenanceLock(path)) {
+        StagedCommit.clearStale(fs, hpath.getParent)
+        if (fs.exists(hpath)) body(fs)
+      }
+    }
+
+  /** Append `df` to the table at `path` through the staged commit
+    * ([[StagedCommit]]): a `DataFrameWriter` job writes the batch into a
+    * fresh staging dir beside the table, and its part files are renamed
+    * into the table under the same partition dirs. Part-file names embed
+    * the writing job's UUID, so they never collide across writers. Two
     * processes appending one table therefore never share a committer
-    * `_temporary/0` tree — each batch commits alone in its own
-    * directory, and only fully-committed files ever enter the table,
-    * which is what `mode("append")` on a shared path cannot promise.
-    * Crash before the renames leaves an orphan batch dir: the batch
-    * was never acked upstream, so the pipeline replays it
-    * (byte-identical rows, folded by every read); maintenance adopts
-    * or clears orphans ([[recoverAppendBatches]]). The reference
+    * `_temporary/0` tree, and only finished files ever enter the table,
+    * which is what `mode("append")` on a shared path cannot promise. A
+    * crash before the renames leaves the table as it was: the batch was
+    * never acked upstream, so the pipeline replays it. The reference
     * leans on Cassandra's per-cell LWW for the same multi-writer
     * guarantee (`queries.ex:87-155`).
     */
   private[graft] def appendAtomic(df: DataFrame, path: String,
       partitionCols: Seq[String] = Nil): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val spark = df.sparkSession
-    val hpath = new HPath(path)
-    val fs = hpath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batch = new HPath(appendTmpRoot(path),
-      java.util.UUID.randomUUID().toString)
-    val w = df.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(batch.toString)
-    adoptTmpLeaves(fs, hpath, batch)
-    // The shared append tmp root is NEVER deleted, deliberately: it is
-    // a sibling of the table dir (readers never list it), so removing
-    // it when empty is pure cosmetics — and that delete RACES a
-    // concurrent appender fatally. Hadoop's local write path is
-    // mkdirs-then-chmod, not atomic: a cleanup that catches the root
-    // in the instant between a racing writer re-creating it and
-    // populating it makes the writer's chmod throw
-    // "No such file or directory" (observed in the two-JVM store
-    // soak). One empty directory per table is the entire cost of
-    // never losing that race.
-  }
-
-  /** Maintenance-side recovery of the append protocol: a batch dir
-    * WITHOUT `_temporary` is fully committed — crash happened between
-    * commit and rename — so adopting it is safe (at worst it re-lands
-    * rows the upstream replay also lands; byte-identical, folded by
-    * reads). Adoption is GRACE-GATED: a live writer adopts its own
-    * batch within milliseconds of commit, so only a batch that has
-    * sat committed for `graceMs` can be a crash orphan — without the
-    * gate, maintenance could race the writer's own adoptTmpLeaves in
-    * the commit-to-rename window and each could fail the other's
-    * renames. A batch dir still holding `_temporary` is in flight or
-    * died mid-write; it is removed only once the NEWEST mtime
-    * anywhere in its tree (the batch dir's own mtime freezes at job
-    * start — all write activity happens deeper under `_temporary`)
-    * is older than `staleMs`, and left alone otherwise.
-    */
-  private[storage] def recoverAppendBatches(
-      fs: org.apache.hadoop.fs.FileSystem,
-      tableRoot: org.apache.hadoop.fs.Path,
-      staleMs: Long = 60 * 60 * 1000L,
-      graceMs: Long = 10 * 60 * 1000L): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val root = new HPath(appendTmpRoot(tableRoot.toString))
-    if (!fs.exists(root)) return
-    val now = System.currentTimeMillis()
-    for (b <- fs.listStatus(root) if b.isDirectory) {
-      val inFlight = fs.exists(new HPath(b.getPath, "_temporary"))
-      if (!inFlight) {
-        if (now - newestMtime(fs, b.getPath) > graceMs)
-          adoptTmpLeaves(fs, tableRoot, b.getPath)
-      } else if (now - newestMtime(fs, b.getPath) > staleMs)
-        fs.delete(b.getPath, true)
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    val dir = StagedCommit.beside(path)
+    StagedCommit(Seq(dir), conf) {
+      val w = df.write.mode("overwrite")
+      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+        .parquet(dir.toString)
+      StagedCommit.mirror(dir.getFileSystem(conf), dir, path, path)
     }
-    // the root itself stays (see appendAtomic — deleting it races
-    // concurrent appenders' mkdirs-then-chmod fatally)
   }
 
-  /** Newest modification time anywhere under `p` (inclusive) — the
-    * liveness signal for a write whose activity happens in nested
-    * task directories, not the top-level dir.
+  /** The shared leaf rewrite of maintenance (sweep, compaction,
+    * [[LwwTable.compact]]): snapshot the leaf's CURRENT data files,
+    * stage `transform(snapshot)` beside `table`, move the staged files
+    * into the leaf under their own unique names ([[StagedCommit]]), and
+    * only then retire exactly the snapshot files. The snapshot folds
+    * byte-identical duplicates, so repeated crash/re-run cycles converge
+    * instead of accreting copies. Three properties fall out:
+    *   - no state ever holds the only copy of a row outside the leaf:
+    *     originals are untouched until their replacements are all in
+    *     place. A crash before the move-in leaves the leaf as it was
+    *     (staged files are never table data); a crash during it leaves
+    *     byte-identical duplicates, which reads fold and the next
+    *     compaction converges. There is no stale-vs-only-copy judgment
+    *     whose wrong branch loses data;
+    *   - a concurrent appender's files (new names, never in the
+    *     snapshot) are never deleted or moved — append + sweep/compact
+    *     cannot lose rows, which a directory-level delete+rename swap
+    *     could (the appended file vanishes with the directory);
+    *   - readers never see a missing partition; between move-in and
+    *     retire they can see live rows twice, and the read path
+    *     already folds byte-identical duplicates (`dropDuplicates`,
+    *     the same replay-tolerance rule the appender relies on) —
+    *     expired rows are likewise invisible at read time
+    *     (`datastreams(spark, nowMs)`), so partial retirement never
+    *     shows a wrong ANSWER. One visibility caveat remains: a read
+    *     job that planned its file list just before a retirement can
+    *     fail with FileNotFoundException when its tasks open the
+    *     retired files — a visible, retryable failure (re-planning
+    *     sees the replacements). That is deliberately NOT papered
+    *     over with ignoreMissingFiles, which would silently drop the
+    *     retired files' rows from that read instead.
+    * True multi-writer ACID needs a commit-log table format
+    * (Delta/Iceberg); on plain parquet this protocol has no lost-row
+    * window at all and only a benign transient-duplicate window that
+    * the read semantics absorb.
     */
-  private def newestMtime(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Long =
-    try {
-      val self = fs.getFileStatus(p)
-      val kids =
-        if (self.isDirectory) fs.listStatus(p).map(c => newestMtime(fs, c.getPath))
-        else Array.empty[Long]
-      (self.getModificationTime +: kids).max
-    } catch { case _: java.io.IOException => 0L }
-
-  /** Crash recovery for the leaf rewrites (sweep + compaction): a tmp
-    * root only ever holds replacement files whose originals are still
-    * in the leaf, so recovery ADOPTS every tmp file into its leaf
-    * (harmless duplicates at worst, folded by the read and converged
-    * by the next maintenance run) and drops the tmp root. Also covers
-    * a pre-protocol tmp root whose leaf was already deleted: the
-    * adopted files ARE the data then.
-    */
-  private[storage] def adoptTmpLeaves(
-      fs: org.apache.hadoop.fs.FileSystem,
-      tableRoot: org.apache.hadoop.fs.Path,
-      tmpRoot: org.apache.hadoop.fs.Path): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    if (!fs.exists(tmpRoot)) return
-    // mirror the tmp tree back under the table root at ANY partition
-    // depth — (iface, day) for datastreams, (day) for object tables
-    def walk(dir: HPath, rel: String): Unit =
-      for (e <- fs.listStatus(dir) if !isHiddenName(e.getPath.getName)) {
-        // hidden dirs (`_temporary` from a crashed write) hold
-        // task-attempt files that were never committed — adopting
-        // those would inject partial data; they die with the tmp root
-        val childRel =
-          if (rel.isEmpty) e.getPath.getName else s"$rel/${e.getPath.getName}"
-        if (e.isDirectory) walk(e.getPath, childRel)
-        else if (e.isFile && e.getPath.getName.endsWith(".parquet")) {
-          val leaf =
-            if (rel.isEmpty) tableRoot else new HPath(s"$tableRoot/$rel")
-          fs.mkdirs(leaf)
-          val dst = new HPath(leaf, e.getPath.getName)
-          // same name already in the leaf = this file was adopted by a
-          // previous crashed recovery — the tmp copy is redundant
-          if (!fs.exists(dst) && !fs.rename(e.getPath, dst))
-            throw new java.io.IOException(
-              s"tmp-leaf adopt: rename ${e.getPath} -> $dst failed")
-        }
-      }
-    walk(tmpRoot, "")
-    fs.delete(tmpRoot, true)
-  }
-
-  /** The shared leaf rewrite: snapshot the leaf's CURRENT data files,
-    * write `transform(snapshot)` to `tmpLeaf`, move the result files
-    * into the leaf, then retire exactly the snapshot files. Files
-    * appended concurrently (after the listing) are never touched.
-    * The snapshot folds byte-identical replay duplicates, so repeated
-    * crash/re-run cycles converge instead of accreting copies.
-    */
-  private[storage] def rewriteLeaf(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
+  private[storage] def rewriteLeaf(spark: SparkSession, table: String,
       leaf: org.apache.hadoop.fs.Path,
-      tmpLeaf: org.apache.hadoop.fs.Path,
       transform: DataFrame => DataFrame): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = leaf.getFileSystem(conf)
     val snapshot = fs.listStatus(leaf)
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
     if (snapshot.isEmpty) return
@@ -869,29 +732,20 @@ object AstarteStore {
       spark.read.option("mergeSchema", "true")
         .parquet(snapshot.map(_.getPath.toString).toSeq: _*)
         .dropDuplicates())
-    // write first, probe the (small) OUTPUT for emptiness — an
-    // isEmpty on `out` would run a second full scan over the exact
-    // leaves chosen for being large
-    out.write.mode("overwrite").parquet(tmpLeaf.toString)
-    if (!spark.read.parquet(tmpLeaf.toString).isEmpty) {
-      for (f <- fs.listStatus(tmpLeaf)
-           if f.isFile && f.getPath.getName.endsWith(".parquet")) {
-        val dst = new HPath(leaf, f.getPath.getName)
-        // Hadoop rename signals most failures via its return value;
-        // an unchecked false + the snapshot retirement below would
-        // drop rows whose replacement never arrived. Throw instead —
-        // originals are still in place and the run can be repeated.
-        if (!fs.rename(f.getPath, dst))
-          throw new java.io.IOException(
-            s"leaf rewrite: rename ${f.getPath} -> $dst failed; originals intact")
-      }
+    val dir = StagedCommit.beside(table)
+    StagedCommit(Seq(dir), conf) {
+      out.write.mode("overwrite").parquet(dir.toString)
+      // probe the (small) staged OUTPUT for emptiness — an isEmpty on
+      // `out` would run a second full scan over the exact leaves chosen
+      // for being large. An empty `out` means every row expired: the
+      // retirement below IS the rewrite then.
+      if (spark.read.parquet(dir.toString).isEmpty) Nil
+      else StagedCommit.mirror(fs, dir, table, leaf.toString)
     }
     // commit point: replacements are all in the leaf; retire the
-    // snapshot files (an empty `out` means every row expired — the
-    // retirement IS the rewrite then)
+    // snapshot files
     snapshot.foreach(f => fs.delete(f.getPath, false))
   }
-
 
   /** Last path segment of an endpoint: the leaf key inside the object
     * payload and the `v_<leaf>` column suffix.

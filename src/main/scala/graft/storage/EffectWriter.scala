@@ -24,6 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
 import graft.core.Mapping
 import graft.events.{EventSink, EventWireRow}
+import graft.storage.StagedCommit.Staged
 import graft.streaming.{EffectRow, Registry}
 
 /** One table a batch of effects lands in: the rows that `rows`' select
@@ -61,17 +62,17 @@ private[graft] final class TableOut(val path: String, val partitionCols: Seq[Str
   * batch plans only tables it has not seen before, however many object
   * interfaces the registry holds.
   *
-  * Commit: tasks write under one hidden per-batch directory in each
-  * root (store root, topic root), file names carrying the task attempt,
-  * and return their file lists. After the job, the driver renames
-  * exactly the reported files into their tables under the table locks,
-  * named `part-<partition>-<writer>-b<batch>`. The writer id is the
-  * streaming query id when `batchId` is given (stable across restarts
-  * from one checkpoint), a random id otherwise. A replayed batch
-  * therefore lands on the names its first run adopted and is skipped
-  * there, and two queries sharing a store never collide. A failed job,
-  * or an object append the registry cannot type, deletes the per-batch
-  * directories and leaves every table untouched.
+  * Commit ([[StagedCommit]]): tasks write under one hidden per-batch
+  * directory in each root (store root, topic root), file names carrying
+  * the task attempt, and return their file lists. After the job, the
+  * driver renames exactly the reported files into their tables under
+  * the table locks, named `part-<partition>-<writer>-b<batch>`. The
+  * writer id is the streaming query id when `batchId` is given (stable
+  * across restarts from one checkpoint), a random id otherwise. A
+  * replayed batch therefore lands on the names its first run committed
+  * and is skipped there, and two queries sharing a store never collide.
+  * A failed job, or an object append the registry cannot type, deletes
+  * the per-batch directories and leaves every table untouched.
   */
 private[graft] object EffectWriter {
 
@@ -105,7 +106,7 @@ private[graft] object EffectWriter {
     val spark = effects.sparkSession
     val writer = batchId.flatMap(_ => Option(spark.sparkContext.getLocalProperty("sql.streaming.queryId")))
       .getOrElse(UUID.randomUUID().toString)
-    val staging = s"_graft_batch-$writer-${batchId.getOrElse(0L)}"
+    val staging = s"${StagedCommit.Prefix}$writer-${batchId.getOrElse(0L)}"
     val df = effects.toDF()
     val input = df.queryExecution.analyzed.output
     val schema = df.schema
@@ -141,19 +142,14 @@ private[graft] object EffectWriter {
       specs.toIndexedSeq, schema.fieldIndex("kind"), schema.fieldIndex("iface"), schema.fieldIndex("major"),
       byKind, objects, topic)
 
-    // Private to this writer and batch: whatever is there was left by a
-    // crashed earlier run of the batch, whose staged names this run may
-    // reuse, so it goes before the job as well as after.
-    val stagingDirs = (store.map(_._1.root) ++ events.map(_.path)).map(r => new Path(s"$r/$staging"))
-    def clearStaging(): Unit = stagingDirs.foreach(d => d.getFileSystem(hadoopConf).delete(d, true))
-    clearStaging()
-    try {
+    val stagingDirs = (store.map(_._1.root) ++ events.map(_.path)).toSeq.map(r => new Path(s"$r/$staging"))
+    StagedCommit(stagingDirs, hadoopConf) {
       val out = effects.queryExecution.toRdd.mapPartitions(rows => Iterator(writeTask(rows, plan))).collect()
       out.flatMap(_.untyped).distinct.sorted.headOption.foreach { case (iface, major) =>
         throw AstarteStore.untypedObject(store.get._2, iface, major)
       }
-      commit(out.toSeq.flatMap(_.files), hadoopConf)
-    } finally clearStaging()
+      out.toSeq.flatMap(_.files)
+    }
   }
 
   /** One table as tasks write it: its select list bound to `input`, and
@@ -184,25 +180,6 @@ private[graft] object EffectWriter {
     list.map(e => BindReferences.bindReference(e: Expression, input))
   }
 
-  /** Renames every reported file into its table, one table lock at a
-    * time. A name that is already there was adopted by an earlier run of
-    * the same batch, whose rows it holds.
-    */
-  private def commit(files: Seq[Staged], conf: Configuration): Unit =
-    files.groupBy(_.table).foreach { case (table, tableFiles) =>
-      val fs = new Path(table).getFileSystem(conf)
-      AstarteStore.lockFor(table).synchronized {
-        tableFiles.foreach { f =>
-          val dst = new Path(f.target)
-          if (!fs.exists(dst)) {
-            fs.mkdirs(dst.getParent)
-            if (!fs.rename(new Path(f.staged), dst))
-              throw new java.io.IOException(s"batch commit: rename ${f.staged} -> $dst failed")
-          }
-        }
-      }
-    }
-
   /** One table as tasks write it: its bound data columns and partition
     * values (as strings), the writer factory, and the configuration
     * entries `prepareWrite` set for it on top of the shared one.
@@ -230,8 +207,6 @@ private[graft] object EffectWriter {
       byKind: Map[String, Int],
       objects: Option[Map[(String, Int), Int]],
       topic: Option[(Int, ExpressionEncoder[EffectRow], ExpressionEncoder[EventWireRow])])
-
-  private final case class Staged(table: String, staged: String, target: String)
 
   private final case class TaskFiles(files: Array[Staged], untyped: Array[(String, Int)])
 

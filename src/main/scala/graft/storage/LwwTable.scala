@@ -62,36 +62,25 @@ final class LwwTable(
   /** Fold the log down to its snapshot (run periodically, off the
     * ingest path). Equivalent to Delta OPTIMIZE + VACUUM.
     *
-    * Runs under the table's writer lock and the same file-granular
-    * adopt-and-retire commit as the store's sweep/compaction
+    * Maintenance ([[AstarteStore.maintain]]) through the same
+    * stage, move-in, retire rewrite as the store's sweep/compaction
     * ([[AstarteStore.rewriteLeaf]]): only the files listed at entry
     * are folded and retired, so a concurrent append's file — a new
-    * name, never in the listing — survives untouched, where the old
-    * whole-directory delete+rename dropped it with the directory.
-    * Crash mid-compact leaves originals in place plus adoptable tmp
-    * files; the next run converges.
+    * name, never in the listing — survives untouched. A crash before
+    * the move-in leaves the log as it was; a crash after it leaves
+    * byte-identical duplicates that the fold absorbs and the next run
+    * converges.
     */
   def compact(spark: SparkSession): Unit =
-    AstarteStore.lockFor(path).synchronized {
+    AstarteStore.maintain(spark, path) { fs =>
       val hpath = new org.apache.hadoop.fs.Path(path)
-      val fs = hpath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // cross-process exclusion (a second driver's vacuum job): the
-      // on-disk lock file, not just this JVM's monitor
-      ProcessLock.withLock(fs, AstarteStore.maintenanceLock(path)) {
-        val tmp = new org.apache.hadoop.fs.Path(path + ".compact.tmp")
-        AstarteStore.adoptTmpLeaves(fs, hpath, tmp)
-        AstarteStore.recoverAppendBatches(fs, hpath)
-        if (fs.exists(hpath)) {
-          AstarteStore.rewriteLeaf(spark, fs, hpath, tmp,
-            df => fold(df).withColumn(OpCol, lit(OpUpsert)).coalesce(1))
-          fs.delete(tmp, true)
-          // every key deleted → all files retired; drop the now-empty
-          // dir so it can't masquerade as a schema-less table
-          if (fs.exists(hpath) && !fs.listStatus(hpath).exists(f =>
-              f.isFile && f.getPath.getName.endsWith(".parquet")))
-            fs.delete(hpath, true)
-        }
-      }
+      AstarteStore.rewriteLeaf(spark, path, hpath,
+        df => fold(df).withColumn(OpCol, lit(OpUpsert)).coalesce(1))
+      // every key deleted → all files retired; drop the now-empty
+      // dir so it can't masquerade as a schema-less table
+      if (fs.exists(hpath) && !fs.listStatus(hpath).exists(f =>
+          f.isFile && f.getPath.getName.endsWith(".parquet")))
+        fs.delete(hpath, true)
     }
 }
 

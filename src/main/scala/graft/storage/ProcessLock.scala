@@ -9,11 +9,11 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   * within one driver process; two driver PROCESSES sharing a store
   * root (an ingest job plus a separate vacuum job) never see each
   * other's monitors. Maintenance (sweep/compaction) is the only part
-  * of the protocol that needs cross-process exclusion — appends are
-  * made safe structurally by [[AstarteStore.appendAtomic]]'s
-  * unique-tmp-then-rename commit, and the reference gets both for
-  * free from Cassandra's server-side per-cell LWW
-  * (`queries.ex:87-155`).
+  * of the protocol that needs cross-process exclusion — writes are
+  * made safe structurally by the staged commit ([[StagedCommit]]):
+  * each stages in its own directory and renames only finished files
+  * in. The reference gets both for free from Cassandra's server-side
+  * per-cell LWW (`queries.ex:87-155`).
   *
   * Protocol: an exclusive create wins the lock — `File.createNewFile`
   * (atomic on POSIX) for `file:` paths, since Hadoop's
@@ -24,8 +24,8 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   * our token, so an owner that overran the stale horizon can never
   * delete the lock a successor legitimately re-acquired. A crashed
   * owner's lock goes STALE and is broken after `staleMs` (maintenance
-  * is idempotent and crash-recoverable by design — adopt-and-retire
-  * converges on rerun — so breaking a stale lock is safe; the stale
+  * is idempotent and crash-recoverable by design — stage, move in,
+  * retire converges on rerun — so breaking a stale lock is safe; the stale
   * window only delays, never corrupts). A LIVE owner heartbeats the
   * lock's mtime every `staleMs / 4` from a daemon thread, so a run
   * longer than `staleMs` keeps its lock and `staleMs` only needs to

@@ -1,28 +1,35 @@
 package graft
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.core.AstarteValueType._
 import graft.streaming._
 
-/** Front-door fuzz soak (test scope): hostile device traffic through
-  * the FULL ingest path — codegen'd precompute, keyed fold, effect
-  * emission. A malicious or broken device controls every byte of its
-  * envelopes (payload bytes, paths, interface names, message types),
-  * and nothing it sends may crash the batch: bad input must become an
-  * error effect or a discard, never an exception (the reference's
-  * handleData error-precedence contract, error codes 1-6).
-  *
-  * Usage: Test/runMain graft.IngestFuzz [envelopes]
+/** Front-door fuzz: hostile device traffic through the FULL ingest
+  * path — codegen'd precompute, keyed fold, effect emission. A
+  * malicious or broken device controls every byte of its envelopes
+  * (payload bytes, paths, interface names, message types), and nothing
+  * it sends may crash the batch: bad input must become an error effect
+  * or a discard, never an exception (the reference's handleData
+  * error-precedence contract, error codes 1-6). Fixed seed, bounded
+  * size, so every run folds the same 3,000 envelopes.
   */
-object IngestFuzz {
-  def main(args: Array[String]): Unit = {
-    val total = args.headOption.map(_.toInt).getOrElse(20000)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+class IngestFuzzSpec extends AnyFunSuite {
+
+  private lazy val spark = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  private val Seed = 31337
+  private val Envelopes = 3000
+  private val BatchSize = 500
+
+  test("3,000 hostile envelopes through the full fold never throw") {
     import spark.implicits._
-    val rnd = new scala.util.Random(31337)
+    val rnd = new scala.util.Random(Seed)
 
     val iface = InterfaceDescriptor("com.test.Stream", 1, 0,
       InterfaceType.Datastream, Ownership.Device, Aggregation.Individual)
@@ -71,21 +78,19 @@ object IngestFuzz {
     val msgTypes = Seq("data", "connection", "disconnection",
       "introspection", "control", "garbage", "")
 
-    var done = 0
-    var batchNo = 0
-    while (done < total) {
-      val n = 500
-      val envs = (0 until n).map { k =>
+    val kinds = (0 until Envelopes / BatchSize).flatMap { batchNo =>
+      val envs = (0 until BatchSize).map { k =>
         Envelope("realm", s"dev${rnd.nextInt(5)}",
           msgTypes(rnd.nextInt(msgTypes.length)), ifaceName(), path(),
           payload(), 15216455705950000L + (batchNo * 1000L + k) * 10000,
           randStr(12), batchNo * 1000L + k)
       }
-      val fx = DeviceStateMachine.processBatch(envs.toDS(), registry)
-      fx.count() // execute the fold; any throw fails the soak
-      done += n; batchNo += 1
-    }
-    println(s"[ingest-fuzz] $done hostile envelopes through the full state machine, zero exceptions")
-    spark.stop()
+      // executes the fold; any throw fails the spec
+      DeviceStateMachine.processBatch(envs.toDS(), registry)
+        .groupBy("kind").count().collect().map(_.getString(0))
+    }.toSet
+    // the traffic reached both arms: rejected input and accepted data
+    assert(kinds.contains("error"), s"no error effect in $kinds")
+    assert(kinds.exists(k => k != "error" && k != "device_update"), s"no data effect in $kinds")
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * with the parent and a sibling child — the cross-process
   * concurrent-ABSORB claim exercised for real (separate driver
   * processes only meet at the filesystem: the store log's
-  * unique-tmp-then-rename appends and the deterministic generation
+  * stage-then-rename appends and the deterministic generation
   * directories). args: root, writer id, absorb count, rows per
   * absorb, event-id base (disjoint per writer so the parent can
   * assert exactly-once by id).

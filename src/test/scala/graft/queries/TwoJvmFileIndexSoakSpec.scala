@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ([[FileIndexSoakChild]]) and this (parent) JVM absorb disjoint
   * increments into ONE index root concurrently — NO lock anywhere:
   * each absorb writes its own generation directory, appends to the
-  * shared zone/bloom logs through the store's unique-tmp-then-rename
+  * shared zone/bloom logs through the store's stage-then-rename
   * protocol, and lands its manifest commit through the optimistic
   * create-exclusive version claim, so racing writers collide on the
   * version number and retry instead of corrupting each other. Pass =

@@ -552,7 +552,7 @@ class AstarteStoreSpec extends AnyFunSuite {
     assert(rowsAfter == rowsBefore, "compaction changed table contents")
   }
 
-  test("tmp-swap crash recovery: orphaned tmp leaf is restored, not destroyed") {
+  test("compaction crashed mid move-in: reads unchanged, next run converges") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-store7").toString
     val store = new AstarteStore(root)
@@ -561,28 +561,38 @@ class AstarteStoreSpec extends AnyFunSuite {
       Map(stream.name -> Seq(Mapping(stream.name, 1, "/%{i}/value", AInteger))),
       Nil)
     val t0 = 15216455705950000L
-    store.applyEffects(DeviceStateMachine.processBatch(Seq(
-      Envelope("realm", "dev", "data", stream.name, "/0/value",
-        Bson.encode(Seq("v" -> 1)), t0, "ip", 1)).toDS(), reg2))
-    val rowsBefore = store.datastreams(spark).count()
-
-    // simulate a crash between delete-leaf and rename-tmp: the leaf's
-    // only copy lives under the tmp root
+    (1 to 3).foreach { i =>
+      store.applyEffects(DeviceStateMachine.processBatch(Seq(
+        Envelope("realm", "dev", "data", stream.name, "/0/value",
+          Bson.encode(Seq("v" -> i)), t0 + i * 10000L, "ip", i)).toDS(), reg2))
+    }
+    def rows() = store.datastreams(spark).collect().map(_.toString).sorted.toSeq
+    val rowsBefore = rows()
     val day = (t0 / 10000 / 86400000L).toString
-    val leaf = java.nio.file.Paths.get(
+    val leaf = new org.apache.hadoop.fs.Path(
       s"${store.datastreamPath}/iface=${stream.name}/day=$day")
-    val tmpLeaf = java.nio.file.Paths.get(
-      s"${store.datastreamPath}.compact.tmp/iface=${stream.name}/day=$day")
-    java.nio.file.Files.createDirectories(tmpLeaf.getParent)
-    java.nio.file.Files.move(leaf, tmpLeaf)
-    assert(!java.nio.file.Files.exists(leaf))
+    val fs = leaf.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def leafFiles() = fs.listStatus(leaf).map(_.getPath.getName).filter(_.endsWith(".parquet"))
+    val originals = leafFiles()
+    assert(originals.length == 3)
 
-    // the re-run restores the leaf instead of deleting the tmp root
-    store.compactAppendTable(spark, store.datastreamPath)
-    assert(java.nio.file.Files.exists(leaf))
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"${store.datastreamPath}.compact.tmp")))
-    assert(store.datastreams(spark).count() == rowsBefore)
+    // the state a rewrite leaves when it crashes after moving one of its
+    // two staged replacements in: originals still in place, the
+    // replacement's rows in the leaf twice
+    val staged = s"$root/_graft_batch-crashed"
+    spark.read.parquet(leaf.toString).repartition(2).write.parquet(staged)
+    val parts = fs.listStatus(new org.apache.hadoop.fs.Path(staged))
+      .map(_.getPath).filter(_.getName.endsWith(".parquet"))
+    assert(parts.length == 2)
+    assert(fs.rename(parts.head, new org.apache.hadoop.fs.Path(leaf, parts.head.getName)))
+    assert(spark.read.parquet(leaf.toString).count() > rowsBefore.size)
+    assert(rows() == rowsBefore, "reads must fold the moved-in duplicates")
+
+    store.compactAppendTable(spark, store.datastreamPath, maxFiles = 1)
+    assert(leafFiles().length == 1, "the next compaction did not converge the leaf")
+    assert(!leafFiles().exists(n => originals.contains(n) || n == parts.head.getName))
+    assert(spark.read.parquet(leaf.toString).count() == rowsBefore.size)
+    assert(rows() == rowsBefore)
   }
 
   test("minor bump under live traffic: object table grows the column, old rows read NULL") {
@@ -693,25 +703,32 @@ class AstarteStoreSpec extends AnyFunSuite {
     assert(files <= 2, s"compaction did not converge: $files files")
   }
 
-  test("LwwTable compact: crash-orphaned tmp dir is adopted, deletes stay deleted") {
+  test("LwwTable crash before move-in: staging unread, deletes stay deleted") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-lww2").toString
     val table = new LwwTable(s"$root/props",
       keyCols = Seq("k"), orderCols = Seq("ts"))
     table.append(Seq(("a", 1L), ("b", 1L)).toDF("k", "ts"))
     table.append(Seq(("b", 2L)).toDF("k", "ts"), op = LwwTable.OpDelete)
-
-    // simulate a crash after the tmp write but before move-in: park a
-    // pre-folded copy under the tmp root, originals still in place
-    val tmp = java.nio.file.Paths.get(s"$root/props.compact.tmp")
-    table.snapshot(spark)
-      .withColumn(LwwTable.OpCol, org.apache.spark.sql.functions.lit(LwwTable.OpUpsert))
-      .write.parquet(tmp.toString)
-    table.compact(spark)
-    assert(!java.nio.file.Files.exists(tmp))
-    val keys = table.snapshot(spark).select("k")
+    def keys() = table.snapshot(spark).select("k")
       .collect().map(_.getString(0)).sorted.toSeq
-    assert(keys == Seq("a")) // b stays deleted, a survived the recovery
+    assert(keys() == Seq("a"))
+
+    // a rewrite that crashed before its move-in left staged files beside
+    // the table; whatever they hold (here an upsert that would bring the
+    // deleted key back) is never table data
+    val staged = s"$root/_graft_batch-crashed"
+    Seq(("a", 1L), ("b", 3L)).toDF("k", "ts")
+      .withColumn(LwwTable.OpCol, org.apache.spark.sql.functions.lit(LwwTable.OpUpsert))
+      .write.parquet(staged)
+    assert(keys() == Seq("a"), "staged files leaked into the snapshot")
+    table.compact(spark)
+    assert(keys() == Seq("a"), "b stays deleted, a survives the compaction")
+    val files = new java.io.File(s"$root/props").listFiles().map(_.getName)
+      .filter(_.endsWith(".parquet"))
+    assert(files.length == 1, s"compaction did not fold the log: ${files.toSeq}")
+    val stagedNames = new java.io.File(staged).listFiles().map(_.getName).toSet
+    assert(!files.exists(stagedNames), "a staged file was adopted into the table")
   }
 
   test("object table retention + compaction work on the day-partitioned layout") {
@@ -739,8 +756,8 @@ class AstarteStoreSpec extends AnyFunSuite {
     store.applyEffects(DeviceStateMachine.processBatch(Seq(
       objMsg(3.0, "z", 86400000L * 10000L, 3)).toDS(), reg), reg)
 
-    assert(store.objectTablePaths(spark)
-      .map(_.stripPrefix("file:")) == Seq(s"$root/${obj.objectTableName}"))
+    // the path the writers lock, so maintenance and commits exclude each other
+    assert(store.objectTablePaths(spark) == Seq(store.objectPath(obj)))
     assert(store.objectTable(spark, obj, maps).count() == 3)
 
     // sweep at +11s: only the first row expired; typed columns survive
@@ -817,9 +834,9 @@ class AstarteStoreSpec extends AnyFunSuite {
   test("two sessions appending concurrently lose no rows (cross-process protocol)") {
     // Two SparkSessions in separate threads stand in for two DRIVER
     // PROCESSES sharing a store path: appendAtomic is called directly,
-    // WITHOUT the JVM table lock, so the only thing keeping the
-    // writers safe is the on-disk protocol itself (unique tmp dir per
-    // batch + rename-in). Under plain mode("append") both writers
+    // outside any caller's table lock, so the writes run concurrently
+    // and only the on-disk protocol keeps them apart (a staging dir
+    // per write + rename-in). Under plain mode("append") both writers
     // would share the committer's `_temporary/0` tree and could
     // corrupt each other's commit.
     val root = Files.createTempDirectory("graft-store9").toString
@@ -846,54 +863,74 @@ class AstarteStoreSpec extends AnyFunSuite {
     val want = (for (base <- Seq(0, 1000); b <- 0 until 5; i <- 0 until 50)
       yield base + b * 100 + i).sorted
     assert(got == want, s"rows lost or duplicated across sessions")
-    // no batch dirs left behind on the happy path — the tmp ROOT
-    // itself deliberately persists (deleting it races a concurrent
-    // appender's mkdirs-then-chmod fatally; see appendAtomic), but it
-    // must be EMPTY: every batch was adopted
-    val tmpRoot = new java.io.File(AstarteStore.appendTmpRoot(path))
-    assert(!tmpRoot.exists() || tmpRoot.listFiles().isEmpty,
-      "orphan batch dirs left in the append tmp root")
+    // no staging left behind on the happy path
+    val left = new java.io.File(root).listFiles().map(_.getName)
+    assert(!left.exists(_.startsWith(StagedCommit.Prefix)), s"staging left: ${left.toSeq}")
   }
 
-  test("crashed append batches: committed orphans adopted, in-flight ones left alone") {
+  test("crashed staged append unread; stale cleared, fresh kept, lock freed") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-store10").toString
     val lww = new LwwTable(s"$root/kv", Seq("k"), Seq("ts"))
     lww.append(Seq(("a", 1L, "v1")).toDF("k", "ts", "v"))
-
-    // a batch that committed its files but crashed before the renames:
-    // a parquet dir WITHOUT `_temporary`, parked under the append tmp
-    // root with the table's schema (incl. the op column). Aged past
-    // the adoption grace period — a FRESH committed batch belongs to
-    // a live writer about to adopt it itself and must be left alone.
-    val orphan = s"${AstarteStore.appendTmpRoot(lww.path)}/orphan-committed"
-    Seq(("b", 2L, "v2")).toDF("k", "ts", "v")
-      .withColumn(LwwTable.OpCol, org.apache.spark.sql.functions.lit(LwwTable.OpUpsert))
-      .write.parquet(orphan)
-    val hfs = new org.apache.hadoop.fs.Path(orphan)
+    val hfs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def age(p: org.apache.hadoop.fs.Path): Unit = {
-      val st = hfs.getFileStatus(p)
-      if (st.isDirectory) hfs.listStatus(p).foreach(c => age(c.getPath))
-      hfs.setTimes(p, System.currentTimeMillis() - 30 * 60 * 1000L, -1)
+    def stage(name: String, k: String): org.apache.hadoop.fs.Path = {
+      val dir = s"$root/_graft_batch-$name"
+      Seq((k, 2L, "v2")).toDF("k", "ts", "v")
+        .withColumn(LwwTable.OpCol, org.apache.spark.sql.functions.lit(LwwTable.OpUpsert))
+        .write.parquet(dir)
+      new org.apache.hadoop.fs.Path(dir)
     }
-    age(new org.apache.hadoop.fs.Path(orphan))
-
-    // a batch still mid-write (fresh `_temporary` present): must NOT
-    // be adopted or deleted — a live writer may own it
-    val inFlight = new java.io.File(
-      s"${AstarteStore.appendTmpRoot(lww.path)}/orphan-inflight/_temporary")
-    assert(inFlight.mkdirs())
+    def age(p: org.apache.hadoop.fs.Path): Unit = {
+      if (hfs.getFileStatus(p).isDirectory) hfs.listStatus(p).foreach(c => age(c.getPath))
+      hfs.setTimes(p, System.currentTimeMillis() - 2 * 60 * 60 * 1000L, -1)
+    }
+    // an append that staged its files two hours ago and crashed before
+    // the renames, and one still staging now
+    val crashed = stage("crashed", "b")
+    age(crashed)
+    val live = stage("live", "c")
 
     lww.compact(spark)
 
     val snap = lww.snapshot(spark).select("k", "v").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(snap == Map("a" -> "v1", "b" -> "v2"),
-      s"committed orphan batch must be adopted into the snapshot: $snap")
-    assert(inFlight.exists(), "fresh in-flight batch must be left untouched")
-    // the maintenance lock is released after the run
+    assert(snap == Map("a" -> "v1"), s"staged rows must never be table data: $snap")
+    assert(!hfs.exists(crashed), "stale staging must be removed")
+    assert(hfs.exists(live), "fresh staging belongs to a live writer and must be kept")
     assert(!new java.io.File(
-      AstarteStore.maintenanceLock(lww.path).toString).exists())
+      AstarteStore.maintenanceLock(lww.path).toString).exists(),
+      "the maintenance lock is released after the run")
+  }
+
+  test("staging cleanup: stale dirs removed, fresh and busy ones kept") {
+    val root = Files.createTempDirectory("graft-rec").toString
+    val parent = new org.apache.hadoop.fs.Path(root)
+    val fs = parent.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val old = System.currentTimeMillis() - 2 * 60 * 60 * 1000L
+    // stale: the WHOLE tree's mtimes two hours old (staleness is judged
+    // by the newest mtime anywhere inside — write activity happens in
+    // nested dirs, so a single old top-dir mtime must not condemn a
+    // staging dir whose children are still being written)
+    val stale = new org.apache.hadoop.fs.Path(s"$root/_graft_batch-stale/day=1")
+    fs.mkdirs(stale)
+    fs.setTimes(stale, old, -1)
+    fs.setTimes(stale.getParent, old, -1)
+    val fresh = new org.apache.hadoop.fs.Path(s"$root/_graft_batch-fresh/day=1")
+    fs.mkdirs(fresh)
+    // old top dir but FRESH nested activity: must survive
+    val busy = new org.apache.hadoop.fs.Path(s"$root/_graft_batch-busy/day=1")
+    fs.mkdirs(busy)
+    fs.setTimes(busy.getParent, old, -1)
+    // an old table beside them is not staging
+    val table = new org.apache.hadoop.fs.Path(s"$root/t")
+    fs.mkdirs(table)
+    fs.setTimes(table, old, -1)
+    StagedCommit.clearStale(fs, parent)
+    assert(!fs.exists(stale.getParent), "stale staging must be removed")
+    assert(fs.exists(fresh.getParent), "fresh staging must survive")
+    assert(fs.exists(busy.getParent), "old top dir with fresh nested writes must survive")
+    assert(fs.exists(table), "only staging dirs are cleared")
   }
 }

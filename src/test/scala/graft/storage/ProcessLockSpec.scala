@@ -7,9 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The cross-process maintenance lock's failure paths: a crashed
   * owner's lock must not wedge maintenance forever (stale breaking),
-  * a live owner's lock must exclude, and the append-batch recovery
-  * must clear stale in-flight debris while leaving fresh writers
-  * alone — the crash-recovery arms the happy-path specs never walk.
+  * a live owner's lock must exclude, and a long run must keep its
+  * lock — the crash-recovery arms the happy-path specs never walk.
   */
 class ProcessLockSpec extends AnyFunSuite {
 
@@ -75,35 +74,5 @@ class ProcessLockSpec extends AnyFunSuite {
       assert(e.getMessage.contains("could not acquire"))
     }
     assert(!fs.exists(lock), "lock must still release cleanly after heartbeats")
-  }
-
-  test("append-batch recovery: stale in-flight debris cleared, fresh left alone") {
-    val root = Files.createTempDirectory("graft-rec").toString
-    val table = new HPath(s"$root/t")
-    fs.mkdirs(table)
-    val tmp = AstarteStore.appendTmpRoot(table.toString)
-    // stale in-flight batch: _temporary present, the WHOLE tree's
-    // mtimes an hour old (staleness is judged by the newest mtime
-    // anywhere in the batch — write activity happens in nested task
-    // dirs, so a single old top-dir mtime must not condemn a batch
-    // whose children are still being written)
-    val stale = new HPath(s"$tmp/stale-batch/_temporary")
-    fs.mkdirs(stale)
-    val old = System.currentTimeMillis() - 2 * 60 * 60 * 1000L
-    fs.setTimes(stale, old, -1)
-    fs.setTimes(stale.getParent, old, -1)
-    // fresh in-flight batch: _temporary present, current mtime
-    val fresh = new HPath(s"$tmp/fresh-batch/_temporary")
-    fs.mkdirs(fresh)
-    // old top dir but FRESH nested activity: must survive (the
-    // nested mtime is the liveness signal)
-    val busy = new HPath(s"$tmp/busy-batch/_temporary/task0")
-    fs.mkdirs(busy)
-    fs.setTimes(busy.getParent.getParent, old, -1)
-    AstarteStore.recoverAppendBatches(fs, table, staleMs = 60 * 60 * 1000L)
-    assert(!fs.exists(stale.getParent), "stale in-flight batch must be removed")
-    assert(fs.exists(fresh.getParent), "fresh in-flight batch must survive")
-    assert(fs.exists(busy.getParent.getParent),
-      "old top dir with fresh nested writes must survive")
   }
 }

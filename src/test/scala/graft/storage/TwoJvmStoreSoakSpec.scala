@@ -10,10 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * table and run maintenance compaction concurrently — the
   * multi-writer reality the in-JVM specs (threads sharing one
   * `lockFor` monitor) cannot exercise, because separate driver
-  * processes only meet at the filesystem: `appendAtomic`'s
-  * unique-tmp-then-rename commit, `rewriteLeaf`'s
-  * snapshot-then-retire compaction, and [[ProcessLock]]'s exclusive
-  * lock file. Pass = every appended row present exactly once.
+  * processes only meet at the filesystem: the staged commit
+  * ([[StagedCommit]]) that `appendAtomic` and `rewriteLeaf` share,
+  * `rewriteLeaf`'s snapshot-then-retire compaction, and
+  * [[ProcessLock]]'s exclusive lock file. Pass = every appended row
+  * present exactly once, and no staging left behind.
   * Results recorded in STORE_SOAK.md.
   */
 class TwoJvmStoreSoakSpec extends AnyFunSuite {
@@ -75,10 +76,13 @@ class TwoJvmStoreSoakSpec extends AnyFunSuite {
       c2.exitValue() == 0,
       s"child w2 failed:\n${Files.readString(java.nio.file.Path.of(s"$root/w2.out")).takeRight(3000)}")
 
-    // one more maintenance pass now that all writers are done — it
-    // must also see nothing to recover (no orphan batches survive a
-    // clean run) — then assert the exact table contents
+    // one more maintenance pass now that all writers are done, then
+    // assert the exact table contents — and that a clean run leaves
+    // nothing to recover: no staging dir and no tmp sibling
     new AstarteStore(table).compactAppendTable(spark, table, maxFiles = 2)
+    val siblings = new java.io.File(root).listFiles().map(_.getName)
+    assert(!siblings.exists(n => n.startsWith(StagedCommit.Prefix) || n.endsWith(".tmp")),
+      s"a clean run left staging beside the table: ${siblings.mkString(",")}")
     val t = spark.read.parquet(table)
     val total = 3L * nBatches * rowsPer
     assert(t.count() == total, "row count after concurrent append+compact")
