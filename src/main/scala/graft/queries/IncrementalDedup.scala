@@ -50,7 +50,7 @@ object IncrementalDedup extends QueryPack {
     */
   private val incPredicate = col("doc_id") % 10 >= 8
 
-  /** DATA-SCALED LSH banding — the `ScanPruning.pbitsOf` discipline
+  /** DATA-SCALED LSH banding — the `FileIndex.pbitsOf` discipline
     * applied to the signature scheme: (bands, rowsPerBand) derive
     * from the corpus size at store-build time and PERSIST with the
     * signature store, so every future increment bands under the same

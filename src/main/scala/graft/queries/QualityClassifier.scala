@@ -171,20 +171,24 @@ object QualityClassifier extends QueryPack {
     * the SAME constants as the Spark side, so the two cannot drift.
     * Defines feats (dense centered + bias, labels attached), w0, and
     * m{r}/u{r}/w{r} per round. `tdiv(u, n)` must truncate toward
-    * zero like Spark's `div`; DuckDB `//` floors, hence the CASE. */
+    * zero like Spark's `div`; DuckDB `//` floors, hence the CASE.
+    * feats and every round's CTEs are MATERIALIZED: each w{r} reads
+    * w{r-1} three times, so an inlining planner would copy feats ~3^8
+    * times over 8 rounds. Materializing changes the plan, not the
+    * rows. */
   private def perceptronSql: String = {
     def tdiv(u: String): String =
       s"CASE WHEN $u >= 0 THEN $u // nn.n ELSE -((-($u)) // nn.n) END"
     val rounds = (1 to Rounds).map { r =>
-      s"""m$r AS (
+      s"""m$r AS MATERIALIZED (
          |  SELECT f.doc_id, f.y, sum(f.x * w.w)::BIGINT AS margin
          |  FROM feats f JOIN w${r - 1} w USING (idx)
          |  GROUP BY 1, 2),
-         |u$r AS (
+         |u$r AS MATERIALIZED (
          |  SELECT f.idx, sum(m.y * f.x)::BIGINT AS uw
          |  FROM m$r m JOIN feats f USING (doc_id)
          |  WHERE m.y * m.margin <= 0 GROUP BY 1),
-         |w$r AS (
+         |w$r AS MATERIALIZED (
          |  SELECT w.idx,
          |    (w.w + ${tdiv("coalesce(u.uw, 0)")})::BIGINT AS w
          |  FROM w${r - 1} w LEFT JOIN u$r u USING (idx), nn)""".stripMargin
@@ -204,7 +208,7 @@ object QualityClassifier extends QueryPack {
        |  SELECT doc_id,
        |    CASE WHEN n_chars >= $LabelThreshold THEN 1 ELSE -1 END AS y
        |  FROM documents),
-       |feats AS (
+       |feats AS MATERIALIZED (
        |  SELECT d.doc_id, b.idx,
        |    $S * coalesce(g.x, 0) - m.mu AS x, l.y
        |  FROM documents d CROSS JOIN buckets b

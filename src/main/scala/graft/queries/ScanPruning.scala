@@ -2,58 +2,13 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.storage.FileIndex
 
-/** Data layout + file-skipping index — the scan side of the 100 TB
-  * story. Every operator in this engine runs AFTER a scan; at 100 TB
-  * the cheapest row is the one never read, and parquet's own
-  * row-group statistics only help after a task has opened the file
-  * footer. At 100k+ files the footer reads themselves are the
-  * bottleneck, which is why production table formats keep file-level
-  * min/max statistics OUTSIDE the files and prune the file list
-  * before scheduling a single task (the Delta/Iceberg manifest-stats
-  * design, public knowledge). This pack builds that structure from
-  * first principles on plain parquet:
-  *
-  *   - **Z-order clustering**: events are rewritten clustered by the
-  *     bit-interleave of 8-bit (user_id, time) codes, so BOTH
-  *     dimensions are tight per file — a range-partition by either
-  *     one alone leaves the other spanning every file. The layout
-  *     function is fixed integer arithmetic (scale → interleave →
-  *     top-4-bit bucket), so the DuckDB oracle replays file
-  *     assignment bit-for-bit.
-  *   - **Zone maps**: one row per (generation, file) holding
-  *     count/min/max of both clustered dimensions. Files-count-sized:
-  *     at 100 TB with 1 GiB files that is ~100k rows — the prune
-  *     filter is evaluated distributed and only SURVIVING paths are
-  *     collected, so the driver never holds more than the read set.
-  *   - **Per-file bloom bit-set** (k=2, m=4096) over user_id, as a
-  *     relational (file, r, bit) table — the same
-  *     sketch-as-relational-rows move as the HLL register table.
-  *     Zone maps prune RANGES; blooms prune POINT lookups that fall
-  *     inside a file's [min,max] but hit none of its rows. m is a
-  *     BUILD-TIME constant sized to the per-file distinct count
-  *     (~10 bits/key): a deployment with millions of keys per file
-  *     raises m accordingly — a saturated bloom is conservative
-  *     (keeps everything), never wrong, just useless.
-  *   - **Per-file value-domain stats** over `event_type` — the
-  *     low-cardinality dictionary-stats move: a type-filtered read
-  *     opens only files whose domain list contains the type; zone
-  *     maps alone (clustered dims only) cannot skip for it.
-  *   - **Incremental maintenance through the store log**: each new
-  *     increment is written as NEW clustered files and its index rows
-  *     are one atomic append ([[graft.storage.AstarteStore]]), with
-  *     the same inc_id ledger + merge-on-read dedup that makes the
-  *     sketch log replay-idempotent ([[IncrementalSketch]]). Absorbing
-  *     an increment scans ONLY the increment (spec-pinned); corpus
-  *     files are never rewritten.
-  *   - **Optimistic multi-writer commits**: manifest versions are
-  *     claimed create-exclusively (numbered commit files), so
-  *     concurrent absorbs and even a racing compaction serialize
-  *     without any lock — collisions retry, stale retirements abort.
-  *   - **Merge-on-read deletion vectors**: an erase can publish
-  *     per-file deleted keys instead of rewriting files; reads
-  *     anti-join the vectors, compaction folds them into rewritten
-  *     files.
+/** File-skipping queries over the file index ([[graft.storage.FileIndex]]):
+  * pruned box and point reads, the copy-on-write and merge-on-read
+  * erase/update/delete lifecycles, compaction, layout migration, schema
+  * evolution, time travel and the change feeds, each over a per-SF
+  * fixture root built from `events`.
   *
   * Correctness anchor: pruning must be CONSERVATIVE — a pruned read
   * plus the residual predicate equals the full-scan answer. The
@@ -61,2533 +16,26 @@ import org.apache.spark.sql.functions._
   * proves exactly that; `fx_prune_audit` additionally hash-checks the
   * per-file keep/skip DECISIONS against DuckDB's replay of the
   * layout, zone, and bloom arithmetic.
-  *
-  * Reference analogue: the reference reads per-device slices via
-  * clustering-key-ordered tables rather than corpus scans
-  * (`queries.ex:30-60` — every read is bounded by the Cassandra
-  * partition key); this pack is that discipline for immutable
-  * analytics files.
   */
 object ScanPruning extends QueryPack {
-
-  private val Codes = 256 // 8-bit per-dimension codes
-  private val BloomM = 4096 // bloom bits per file
-  private val BloomK = 2 // hash rows per key
 
   /** Increment membership — the pack-wide convention: the most recent
     * ~20% of events play the "new crawl batch" role. */
   private[graft] val incPredicate = col("event_id") % 10 >= 8
 
-  /** Rows-per-logical-file target the bucket count derives from. At
-    * demo scale 4096 rows plays the role a ~1 GiB file does in
-    * production; the DERIVATION is the point — file granularity grows
-    * with data instead of capping prune selectivity at a fixed 1/16
-    * forever. Thresholds are pure integer compares, so the oracle
-    * replays the choice from its own corpus count. */
-  private val FileRows = 4096L
-
-  /** Morton-prefix depth (bits per dimension) for a corpus of `n`
-    * rows: smallest p in [2, 4] with 4^p logical files of ≤ FileRows
-    * rows — 16, 64, or 256 files per generation. */
-  private[graft] def pbitsOf(n: Long): Int =
-    if (n > 64 * FileRows) 4 else if (n > 16 * FileRows) 3 else 2
-
-  /** Layout constants, fixed when the table is first clustered (a
-    * production pipeline chooses them a priori; this demo derives
-    * them from the corpus slice in one aggregate and PERSISTS them so
-    * increments never rescan the corpus). All derived constants are
-    * non-negative integer arithmetic — `//` in DuckDB ≡ `div` in
-    * Spark — so the oracle replays them exactly.
-    */
-  private[graft] final case class Layout(
-      umin: Long, umax: Long, tmin: Long, tmax: Long, pbits: Int = 2,
-      curve: String = "z", splits: Seq[Long] = Nil) {
-    /** zbucket = zkey div zdiv — the top `2·pbits` Morton bits. */
-    val zdiv: Long = 1L << (16 - 2 * pbits)
-    /** RANGE bucketing (`splits` non-empty) assigns files by curve-
-      * position split points instead of aligned key prefixes: equal-
-      * COUNT curve segments, so files stay size-balanced however
-      * skewed the key distribution — and the segments of a HILBERT
-      * curve are connected regions, so their zone boxes shrink. */
-    def buckets: Int =
-      if (splits.nonEmpty) splits.size + 1 else 1 << (2 * pbits)
-    val wu: Long = (umax - umin) / Codes + 1 // code widths
-    val wt: Long = (tmax - tmin) / Codes + 1
-    // the demo box predicate: one-eighth of the user range × one-
-    // eighth of the time range — selective on both clustered dims
-    val ulo: Long = umin + (umax - umin) / 8
-    val uhi: Long = umin + 2 * ((umax - umin) / 8)
-    val tlo: Long = tmin + 5 * ((tmax - tmin) / 8)
-    val thi: Long = tmin + 6 * ((tmax - tmin) / 8)
-    // the demo point probe
-    val probe: Long = umin + (umax - umin) / 3
-    // a second probe (exists at every SF, distinct from `probe`) for
-    // reads that must compose with an erase OF `probe`
-    val probe2: Long = umin + 2 * ((umax - umin) / 3)
-  }
-
-  /** Full 16-bit Morton key (intra-file sort only — row groups inside
-    * a file inherit the locality; never oracle-visible). */
-  private def zkeyExpr: String =
-    (0 until 8).map { i =>
-      s"((cu div ${1L << i}) % 2) * ${1L << (2 * i + 1)}" +
-        s" + ((ct div ${1L << i}) % 2) * ${1L << (2 * i)}"
-    }.mkString(" + ")
-
-  /** File assignment: under prefix bucketing the layout's top
-    * 2·pbits key bits (a plain integral divide); under range
-    * bucketing the searchsorted position among the persisted split
-    * points — a linear chain of literal comparisons (≤ 255 at the
-    * deepest prefix), fully codegen'd and branch-predictable on the
-    * WRITE path only, replayed identically by every writer from the
-    * layout state. */
-  private def zbucketExprOf(l: Layout): String =
-    if (l.splits.isEmpty) s"cast(zkey div ${l.zdiv}L as int)"
-    else "cast(" + l.splits.map(sp =>
-      s"(CASE WHEN zkey >= ${sp}L THEN 1 ELSE 0 END)").mkString(" + ") +
-      " as int)"
-
-  /** Canonical events columns + (cu, ct, zkey, zbucket) under a fixed
-    * layout. Codes clamp to [0, 255]: values outside the layout's
-    * creation-time bounds (late-arriving increments) land in edge
-    * files rather than failing. `zkey` is whichever space-filling
-    * curve the layout persisted — Morton by default, Hilbert when the
-    * table was built with it (the codegen'd `hilbert_key` walker);
-    * either way the top 2·pbits key bits are the file assignment. */
-  private def codesOf(events: DataFrame, l: Layout): DataFrame = {
-    if (l.curve == "hilbert")
-      graft.functions.GraftFunctions.register(events.sparkSession)
-    val keyExpr = if (l.curve == "hilbert") "hilbert_key(cu, ct)" else zkeyExpr
-    events
-      .withColumn("tsu", expr("ts div 1000"))
-      .withColumn("cu", expr(
-        s"greatest(0L, least(255L, (user_id - ${l.umin}L) div ${l.wu}L))"))
-      .withColumn("ct", expr(
-        s"greatest(0L, least(255L, (tsu - ${l.tmin}L) div ${l.wt}L))"))
-      .withColumn("zkey", expr(keyExpr))
-      .withColumn("zbucket", expr(zbucketExprOf(l)))
-  }
-
-  /** The k=2 bloom bit positions of a user id — the CMS hash
-    * convention (md5 of "r:key", first 8 hex chars, mod m). */
-  private def bloomBitExpr: String =
-    "cast(conv(substring(md5(concat(cast(r as string), ':'," +
-      s" cast(user_id as string))),1,8),16,10) as bigint) % $BloomM"
-
-  /** The same bit positions computed driver-side for a probe constant
-    * (bit-identical to [[bloomBitExpr]] — pinned by the spec's pruned
-    * reads agreeing with the stored bits), so the point-lookup prune
-    * becomes a LITERAL filter that pushes into the bloom log's
-    * parquet scan instead of a join below a log-wide distinct. */
-  private[graft] def bloomBitsOf(key: Long): Seq[(Int, Long)] =
-    (0 until BloomK).map { r =>
-      val hex = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$r:$key".getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString.substring(0, 8)
-      r -> java.lang.Long.parseLong(hex, 16) % BloomM
-    }
-
-  // ───────────────────────────── the persisted layout + index store
-  private[graft] object FileIndexStore {
-    // LRU-bounded like every per-root control-plane memo (an evicted
-    // sfDir simply rebuilds its root on the next touch)
-    private val roots =
-      new graft.core.BoundedMemo[String, String](64, "fx.roots")
-
-    /** The canonical data columns every generation carries. Evolved
-      * columns (anything else a frame brings along) append after
-      * these in name order. */
-    private val DataCols = Seq("event_id", "ts", "user_id",
-      "event_type", "value", "props")
-
-    /** A read frame's data columns in canonical order — the
-      * rewrite-path projection: canonical first, evolved extras after,
-      * index internals (file identity) dropped. A rewrite that
-      * projected a FIXED list would silently amputate an evolved
-      * column at the first compaction. */
-    private def dataColsOf(df: DataFrame): Seq[String] = {
-      val extras = df.columns
-        .filterNot(DataCols.toSet ++ Set("inc_id", "zbucket", "tsu")).sorted
-      DataCols ++ extras
-    }
-
-    def zonePath(root: String): String = s"$root/index_zone"
-    def schemaPath(root: String): String = s"$root/index_schema"
-    def splitsPath(root: String): String = s"$root/index_splits"
-    def bloomPath(root: String): String = s"$root/index_bloom"
-    def boundsPath(root: String): String = s"$root/index_bounds"
-    def typesPath(root: String): String = s"$root/index_types"
-    def dvPath(root: String): String = s"$root/index_dv"
-    def dvPosPath(root: String): String = s"$root/index_dvpos"
-    def manifestPath(root: String): String = s"$root/index_manifest"
-    private def genPath(root: String, incId: String): String =
-      s"$root/data_$incId"
-
-    /** The DETERMINISTIC address of one logical file — the bucket
-      * directory, not a physical part-file name. A crash-window
-      * absorb retry overwrites the generation directory with fresh
-      * part-file names; indexing the directory keeps every logged row
-      * pointing at the live copy. */
-    def bucketDir(root: String, incId: String, zbucket: Int): String =
-      s"${genPath(root, incId)}/zbucket=$zbucket"
-
-    def rootFor(s: SparkSession, sfDir: String): String =
-      roots.getOrElseUpdate(sfDir)(buildRoot(s, sfDir))
-
-    private[graft] def buildRoot(s: SparkSession, sfDir: String): String =
-      buildRootFrom(s, Tables.events(s, sfDir).filter(!incPredicate))
-
-    /** Cluster + index a corpus frame into a fresh root (uncached —
-      * specs use this for mutation-isolated and synthetic-data tests).
-      * One corpus pass for the bounds, one for the clustered write,
-      * one generation-only read-back for the index rows. */
-    private[graft] def buildRootFrom(s: SparkSession, corpus: DataFrame,
-        forcedPbits: Option[Int] = None, curve: String = "z",
-        rangeBucketed: Boolean = false): String = {
-      val root =
-        java.nio.file.Files.createTempDirectory("graft-fileindex").toString
-      val b = corpus
-        .agg(min(col("user_id")), max(col("user_id")),
-          min(expr("ts div 1000")), max(expr("ts div 1000")),
-          count(lit(1)))
-        .head()
-      // prefix depth, curve, and (under range bucketing) the curve-
-      // position split points all derive at build time and PERSIST,
-      // so increments cluster under the same granularity, curve, and
-      // file assignment forever (forcedPbits is a spec hook)
-      val pb = forcedPbits.getOrElse(pbitsOf(b.getLong(4)))
-      val l0 = Layout(b.getLong(0), b.getLong(1), b.getLong(2), b.getLong(3),
-        pb, curve)
-      val l = if (!rangeBucketed) l0
-        else l0.copy(splits = deriveSplits(corpus, l0))
-      persistLayout(s, root, l, 0L)
-      val buckets = writeAndIndex(s, root, corpus, "corpus", l)
-      publish(root, "corpus", buckets, Nil, 0L)
-      root
-    }
-
-    /** Equal-count curve segments: one distributed quantile pass over
-      * the frame's keys (approx is fine — split points are persisted
-      * state, never replayed by the oracle), deduped in case skew
-      * collapses neighbors. */
-    private def deriveSplits(data: DataFrame, l: Layout): Seq[Long] = {
-      val nb = l.buckets
-      val probes = (1 until nb).map(_.toDouble / nb).toArray
-      codesOf(data, l).stat
-        .approxQuantile("zkey", probes, 0.001)
-        .map(_.toLong).distinct.sorted.toSeq
-    }
-
-    /** Persist one layout VERSION (bounds row + its split points,
-      * both stamped `v`). The layout store is append-only like
-      * everything else: readers take the newest version, and a
-      * replayed append is bit-identical content under a possibly
-      * different stamp — latest-wins folds make that harmless. */
-    private def persistLayout(s: SparkSession, root: String, l: Layout,
-        v: Long): Unit = {
-      import s.implicits._
-      if (l.splits.nonEmpty)
-        graft.storage.AstarteStore.appendAtomic(
-          l.splits.zipWithIndex
-            .map { case (sp, i) => (i, sp, v, "layout") }
-            .toDF("pos", "split", "v", "inc_id"),
-          splitsPath(root))
-      graft.storage.AstarteStore.appendAtomic(
-        Seq((l.umin, l.umax, l.tmin, l.tmax, l.pbits, l.curve,
-            l.splits.size, v, "layout"))
-          .toDF("umin", "umax", "tmin", "tmax", "pbits", "curve",
-            "nsplits", "v", "inc_id"),
-        boundsPath(root))
-    }
-
-    // ─────────────────────── the optimistic manifest commit log
-    // The manifest is a directory of numbered COMMIT FILES (v<seq>),
-    // claimed create-exclusively — the Delta/Iceberg optimistic-
-    // concurrency protocol on plain files (public knowledge). Each
-    // commit marks logical files (generation, bucket) live or dead;
-    // a rewrite retires exactly the files it replaced in the same
-    // commit that publishes their replacement, so readers see either
-    // file set, never a mix. Every commit also carries a bucket = −1
-    // ledger marker, so an id that produced no live files (an
-    // all-rows-erased rewrite) still registers in the replay ledger.
-    // Commits are control-plane sized (a few rows each) and parsed
-    // driver-side; merge-on-read takes the latest status per
-    // (gen, bucket).
-
-    /** One parsed manifest row: `status` of logical file
-      * (gen, zbucket) as of commit `mseq` (zbucket −1 = ledger). */
-    private[graft] final case class ManifestRow(
-        gen: String, zbucket: Int, status: String, mseq: Long)
-
-    /** Thrown when a commit's precondition fails: a file this write
-      * meant to retire was already retired by a racing writer —
-      * committing anyway would resurrect rewritten-away rows, so the
-      * caller must recompute from fresh state instead. */
-    private[graft] final class CommitConflict(msg: String)
-      extends RuntimeException(msg)
-
-    private val CommitName = """^v(\d{19})\.tsv$""".r
-
-    private def commitFile(root: String, seq: Long): java.nio.file.Path =
-      java.nio.file.Paths.get(manifestPath(root), f"v$seq%019d.tsv")
-
-    /** CREATE-EXCLUSIVE claim of manifest version `seq`: the content
-      * is fully written to a temp sibling, then hard-linked to the
-      * version name — link(2) fails EEXIST atomically, so exactly one
-      * writer in any PROCESS ever owns a version number, and readers
-      * never observe a partial commit. Returns false on collision
-      * (the caller re-reads and retries at the next number). An
-      * object-store deployment swaps this for the store's conditional
-      * put (If-None-Match) — same protocol, same caller code. */
-    private[graft] def tryCommit(root: String, seq: Long,
-        rows: Seq[(String, Int, String)]): Boolean = {
-      val dir = java.nio.file.Paths.get(manifestPath(root))
-      java.nio.file.Files.createDirectories(dir)
-      val tmp = java.nio.file.Files.createTempFile(dir, ".commit-", ".tmp")
-      try {
-        java.nio.file.Files.write(tmp,
-          rows.map { case (g, b, st) => s"$g\t$b\t$st" }
-            .mkString("", "\n", "\n").getBytes("UTF-8"))
-        try {
-          java.nio.file.Files.createLink(commitFile(root, seq), tmp)
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-        }
-      } finally java.nio.file.Files.deleteIfExists(tmp)
-    }
-
-    /** Every committed manifest row in version order — the read every
-      * optimistic writer validates against. Temp siblings and foreign
-      * names are skipped, so a half-prepared commit is invisible. */
-    private[graft] def readCommits(root: String): Seq[ManifestRow] = {
-      import scala.jdk.CollectionConverters._
-      val dir = java.nio.file.Paths.get(manifestPath(root))
-      if (!java.nio.file.Files.isDirectory(dir)) return Seq.empty
-      val stream = java.nio.file.Files.list(dir)
-      val files =
-        try stream.iterator().asScala.flatMap { p =>
-          p.getFileName.toString match {
-            case CommitName(d) => Some(d.toLong -> p)
-            case _ => None
-          }
-        }.toVector
-        finally stream.close()
-      files.sortBy(_._1).flatMap { case (seq, p) =>
-        java.nio.file.Files.readAllLines(p).asScala
-          .filter(_.nonEmpty).map { line =>
-            val f = line.split('\t')
-            ManifestRow(f(0), f(1).toInt, f(2), seq)
-          }
-      }
-    }
-
-    /** Latest status per (gen, zbucket). */
-    private def latestOf(rows: Seq[ManifestRow]): Seq[ManifestRow] =
-      rows.groupBy(r => (r.gen, r.zbucket))
-        .map { case (_, g) => g.maxBy(_.mseq) }.toSeq
-
-    private def liveSetOf(rows: Seq[ManifestRow]): Set[(String, Int)] =
-      latestOf(rows).collect {
-        case ManifestRow(g, b, "live", _) => (g, b)
-      }.toSet
-
-    // ───────────── manifest checkpoints (head-read acceleration)
-    // Without them every head read parses every commit ever written —
-    // O(commits) per read, unbounded over a table's lifetime. Every
-    // CkptEvery-th committer folds the full history into a checkpoint
-    // file (latest row per logical file, original mseq kept), also
-    // claimed create-exclusively; head reads then parse newest
-    // checkpoint + the commit suffix — O(CkptEvery + files), however
-    // old the table. Commit files are NEVER deleted (time travel
-    // reads raw history); the checkpoint is pure acceleration, and a
-    // missing/raced one degrades to the full parse. The
-    // Delta-checkpoint design, public knowledge.
-    private val CkptEvery = 8L
-    private val CkptName = """^ckpt-(\d{19})\.tsv$""".r
-
-    private def ckptFile(root: String, seq: Long): java.nio.file.Path =
-      java.nio.file.Paths.get(manifestPath(root), f"ckpt-$seq%019d.tsv")
-
-    /** Newest checkpoint: (base seq, folded rows), if any. */
-    private def newestCkpt(root: String): Option[(Long, Seq[ManifestRow])] = {
-      import scala.jdk.CollectionConverters._
-      val dir = java.nio.file.Paths.get(manifestPath(root))
-      if (!java.nio.file.Files.isDirectory(dir)) return None
-      val stream = java.nio.file.Files.list(dir)
-      val newest =
-        try stream.iterator().asScala.flatMap { p =>
-          p.getFileName.toString match {
-            case CkptName(d) => Some(d.toLong -> p)
-            case _ => None
-          }
-        }.maxByOption(_._1)
-        finally stream.close()
-      newest.map { case (seq, p) =>
-        seq -> java.nio.file.Files.readAllLines(p).asScala.toSeq
-          .filter(_.nonEmpty).map { line =>
-            val f = line.split('\t')
-            ManifestRow(f(0), f(1).toInt, f(2), f(3).toLong)
-          }
-      }
-    }
-
-    /** Fold-and-claim a checkpoint at `seq`. The content is a pure
-      * deterministic fold of history ≤ seq, so a collision (a racing
-      * committer already wrote it) is identical content — ignored. */
-    private def writeCkpt(root: String, seq: Long): Unit = {
-      val rows = latestOf(readCommits(root).filter(_.mseq <= seq))
-        .sortBy(r => (r.gen, r.zbucket))
-      val dir = java.nio.file.Paths.get(manifestPath(root))
-      val tmp = java.nio.file.Files.createTempFile(dir, ".ckpt-", ".tmp")
-      try {
-        java.nio.file.Files.write(tmp,
-          rows.map(r => s"${r.gen}\t${r.zbucket}\t${r.status}\t${r.mseq}")
-            .mkString("", "\n", "\n").getBytes("UTF-8"))
-        try java.nio.file.Files.createLink(ckptFile(root, seq), tmp)
-        catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      } finally java.nio.file.Files.deleteIfExists(tmp)
-    }
-
-    /** The HEAD state (latest row per logical file): newest checkpoint
-      * + the commit suffix past it. Equivalent to folding the full
-      * history — pinned in the spec by answering correctly with every
-      * pre-checkpoint commit file moved away. */
-    private[graft] def headState(root: String): Seq[ManifestRow] =
-      newestCkpt(root) match {
-        case Some((base, ck)) =>
-          latestOf(ck ++ readCommitsAfter(root, base))
-        case None => latestOf(readCommits(root))
-      }
-
-    /** Commit rows with mseq > `after` only — the suffix read that
-      * keeps head reads O(CkptEvery) whatever the table's age. */
-    private def readCommitsAfter(root: String,
-        after: Long): Seq[ManifestRow] = {
-      import scala.jdk.CollectionConverters._
-      val dir = java.nio.file.Paths.get(manifestPath(root))
-      if (!java.nio.file.Files.isDirectory(dir)) return Seq.empty
-      val stream = java.nio.file.Files.list(dir)
-      val files =
-        try stream.iterator().asScala.flatMap { p =>
-          p.getFileName.toString match {
-            case CommitName(d) if d.toLong > after => Some(d.toLong -> p)
-            case _ => None
-          }
-        }.toVector
-        finally stream.close()
-      files.sortBy(_._1).flatMap { case (seq, p) =>
-        java.nio.file.Files.readAllLines(p).asScala
-          .filter(_.nonEmpty).map { line =>
-            val f = line.split('\t')
-            ManifestRow(f(0), f(1).toInt, f(2), seq)
-          }
-      }
-    }
-
-    /** Publish at an EXPLICIT version — only the root build uses this
-      * (version 0 of a fresh root); everything else goes through
-      * [[commitNext]]. */
-    private[graft] def publish(root: String, gen: String,
-        liveBuckets: Seq[Int], deadPairs: Seq[(String, Int)],
-        mseq: Long): Unit =
-      require(tryCommit(root, mseq,
-        ((gen, -1, "ledger") +: liveBuckets.map(b => (gen, b, "live"))) ++
-          deadPairs.map { case (g, b) => (g, b, "dead") }),
-        s"manifest version $mseq already exists under $root")
-
-    /** The live (generation, bucket) pairs — what readers may touch. */
-    def livePairs(s: SparkSession, root: String): Seq[(String, Int)] =
-      liveSetOf(headState(root)).toSeq.sorted
-
-    /** Generations with at least one live file. */
-    def liveGens(s: SparkSession, root: String): Seq[String] =
-      livePairs(s, root).map(_._1).distinct.sorted
-
-    /** The manifest's current version number — each commit claims
-      * exactly one, so the number is unambiguous even under racing
-      * multi-process writers. A filename max: no commit is parsed. */
-    def currentSeq(s: SparkSession, root: String): Long =
-      maxCommitSeq(root)
-
-    private def maxCommitSeq(root: String): Long = {
-      import scala.jdk.CollectionConverters._
-      val dir = java.nio.file.Paths.get(manifestPath(root))
-      if (!java.nio.file.Files.isDirectory(dir)) return -1L
-      val stream = java.nio.file.Files.list(dir)
-      try stream.iterator().asScala.flatMap { p =>
-        p.getFileName.toString match {
-          case CommitName(d) => Some(d.toLong)
-          case _ => None
-        }
-      }.maxOption.getOrElse(-1L)
-      finally stream.close()
-    }
-
-    /** TIME TRAVEL: the live file set as of manifest version `seq` —
-      * versions are never rewritten (the manifest is an append-only
-      * commit log), so any past file set stays addressable until
-      * [[vacuum]] reclaims its dead data. A snapshot BELOW the
-      * persisted vacuum horizon may reference destroyed files, so it
-      * raises the same typed [[OutOfRetentionException]] the feeds
-      * do (Delta's `versionAsOf`-below-retention contract) instead
-      * of a raw missing-file crash mid-scan. */
-    def livePairsAt(s: SparkSession, root: String,
-        seq: Long): Seq[(String, Int)] = {
-      assertInRetention(root, seq)
-      liveSetOf(readCommits(root).filter(_.mseq <= seq)).toSeq.sorted
-    }
-
-    /** Reclaim every file dead at the CURRENT version (retention
-      * horizon zero) — see [[vacuumBefore]]. This is the second half
-      * of a privacy erase: the copy-on-write rewrite unpublishes the
-      * bytes, vacuum DESTROYS them. */
-    def vacuum(s: SparkSession, root: String): Seq[(String, Int)] =
-      vacuumBefore(s, root, currentSeq(s, root))
-
-    /** Retention-horizon vacuum: reclaim only files whose DEATH
-      * landed at version ≤ `horizonSeq`, so time travel to any
-      * version ≥ horizonSeq keeps working — the production shape
-      * ("keep 7 days of snapshots"). A file dead since version d is
-      * needed by snapshots < d and by none ≥ d. Index and manifest
-      * rows stay: history remains auditable, but snapshots older than
-      * the horizon are no longer readable. When bytes were actually
-      * destroyed the horizon PERSISTS (monotonic max), so feed/CDC
-      * cursors that predate it fail with an explicit
-      * [[OutOfRetentionException]] instead of a missing-file crash
-      * mid-diff, and the deletion-vector log FOLDS: vectors targeting
-      * destroyed files can never be legally read again (any version
-      * that needed them is below the horizon), so they are dropped —
-      * without this the dv parquet is O(all vectors ever written).
-      * Returns the reclaimed (gen, bucket) pairs. */
-    def vacuumBefore(s: SparkSession, root: String,
-        horizonSeq: Long): Seq[(String, Int)] = {
-      val dead = headState(root).collect {
-        case ManifestRow(g, b, "dead", mseq) if mseq <= horizonSeq => (g, b)
-      }.toSeq.sorted
-      val conf = s.sparkContext.hadoopConfiguration
-      dead.foreach { case (g, b) =>
-        val p = new org.apache.hadoop.fs.Path(bucketDir(root, g, b))
-        p.getFileSystem(conf).delete(p, true)
-      }
-      if (dead.nonEmpty) {
-        persistHorizon(root, horizonSeq)
-        foldLog(s, dvPath(root), dead.toSet)
-        foldLog(s, dvPosPath(root), dead.toSet)
-      }
-      dead
-    }
-
-    // ───────────────────── retention horizon
-    /** A feed cursor or snapshot version below the persisted horizon
-      * would read commits whose files vacuum physically destroyed —
-      * the explicit out-of-retention contract of every production
-      * feed and table format (Kafka's OffsetOutOfRange, Delta's
-      * `versionAsOf`-below-retention error), raised at poll/plan time
-      * instead of a raw FileNotFoundException mid-scan. */
-    final class OutOfRetentionException(
-        val fromSeq: Long, val horizonSeq: Long)
-      extends RuntimeException(
-        s"version $fromSeq predates the retention horizon " +
-        s"$horizonSeq — files dead at or below the horizon were " +
-        "reclaimed by vacuum. Re-bootstrap this consumer: snapshot-" +
-        "read the table at a version at or above the horizon, then " +
-        "tail from a fresh cursor at currentSeq.")
-
-    private def horizonFile(root: String): java.nio.file.Path =
-      java.nio.file.Paths.get(root, "retention-horizon.tsv")
-
-    /** The newest vacuum's declared horizon, -1 when no destroying
-      * vacuum ever ran. One tiny file read per poll. */
-    def retentionHorizon(root: String): Long = {
-      val f = horizonFile(root)
-      if (!java.nio.file.Files.exists(f)) -1L
-      else new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-        .trim.toLong
-    }
-
-    /** Monotonic-max persist via write-tmp-then-atomic-rename — a
-      * crashed write never leaves a torn horizon, and a replayed
-      * vacuum's equal value is a no-op. Vacuums are "schedule one per
-      * root" maintenance (like compaction), so the read-max-write is
-      * not racing itself. */
-    private def persistHorizon(root: String, horizonSeq: Long): Unit = {
-      val cur = retentionHorizon(root)
-      if (horizonSeq <= cur) return
-      val f = horizonFile(root)
-      val tmp = java.nio.file.Files.createTempFile(
-        f.getParent, ".horizon", ".tmp")
-      java.nio.file.Files.write(tmp, s"$horizonSeq\n".getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp, f,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-
-    private def assertInRetention(root: String, fromSeq: Long): Unit = {
-      val h = retentionHorizon(root)
-      if (fromSeq < h) throw new OutOfRetentionException(fromSeq, h)
-    }
-
-    /** The (gen, bucket) pairs vacuum has physically destroyed: dead
-      * at or below the persisted horizon. Control-plane sized and
-      * checkpoint-fast; empty when no destroying vacuum ever ran.
-      * Exact because a file's death seq always exceeds its append seq
-      * and vacuums run at horizons at or below the then-current head,
-      * so every pair dead ≤ horizon was reclaimed by some vacuum. */
-    private def destroyedPairs(root: String, h: Long): Set[(String, Int)] =
-      if (h < 0) Set.empty
-      else headState(root).collect {
-        case ManifestRow(g, b, "dead", m) if b >= 0 && m <= h => (g, b)
-      }.toSet
-
-    /** The APPEND feed's exact retention gate — error only when a
-      * pending append in (fromSeq, min(toSeq, head)] references a
-      * destroyed file, not merely because the cursor predates the
-      * horizon (the Kafka analogue: an old offset whose bytes all
-      * survive is served, one whose bytes were reclaimed errors).
-      * Cursors at or above the horizon skip even the head read: an
-      * append at seq > horizon cannot have files destroyed (death
-      * seq > append seq > horizon). */
-    private def assertAppsReadable(root: String, fromSeq: Long,
-        apps: Seq[(Long, String, Seq[Int])]): Unit = {
-      val h = retentionHorizon(root)
-      if (fromSeq >= h) return
-      val destroyed = destroyedPairs(root, h)
-      if (apps.exists { case (_, g, bs) =>
-          bs.exists(b => destroyed((g, b))) })
-        throw new OutOfRetentionException(fromSeq, h)
-    }
-
-    /** Claim-time validation for a streaming tail of the append feed:
-      * raises the typed out-of-retention error BEFORE the consumer
-      * persists a claim for a range it can never emit. */
-    private[graft] def assertFeedReadable(root: String, fromSeq: Long,
-        toSeq: Long): Unit = {
-      if (fromSeq >= retentionHorizon(root)) return
-      val (_, apps) = appendsSince(root, fromSeq)
-      assertAppsReadable(root, fromSeq, apps.filter(_._1 <= toSeq))
-    }
-
-    /** Claim-time validation for a streaming CDC tail — the
-      * deliberately COARSE per-root gate [[changeDataFeed]] itself
-      * applies (see the note there). */
-    private[graft] def assertCdcReadable(root: String,
-        fromSeq: Long): Unit =
-      assertInRetention(root, fromSeq)
-
-    /** The persisted layout constants — a 1-row control-plane read;
-      * max-fold makes a replayed bounds append harmless (replays are
-      * bit-identical). */
-    /** The persisted layout — the NEWEST version (a migration appends
-      * a fresh bounds row; the original build is version 0). Both
-      * reads are 1-row/control-plane sized; the per-pos max fold on
-      * the splits collapses replayed bit-identical appends. */
-    def layoutOf(s: SparkSession, root: String): Layout = {
-      val r = s.read.parquet(boundsPath(root))
-        .orderBy(col("v").desc).limit(1).head()
-      val nsplits = r.getInt(6)
-      val v = r.getLong(7)
-      val splits =
-        if (nsplits == 0) Nil
-        else s.read.parquet(splitsPath(root))
-          .filter(col("v") === v)
-          .groupBy(col("pos")).agg(max(col("split")).as("split"))
-          .orderBy(col("pos"))
-          .collect().map(_.getLong(1)).toSeq
-      Layout(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getInt(4), r.getString(5), splits)
-    }
-
-    /** Cluster one generation's rows and append its index rows,
-      * returning the buckets it wrote (for the caller's manifest
-      * publish). The read-back of the freshly written generation is
-      * the ONLY data scan — O(generation), never the corpus. */
-    private[graft] def writeAndIndex(s: SparkSession, root: String,
-        events: DataFrame, incId: String, l: Layout): Seq[Int] = {
-      // empty generations write nothing: a parquet dir holding only
-      // _SUCCESS fails schema inference on the read-back, so an erase
-      // whose touched files held only the erased user — or an empty
-      // streaming micro-batch — publishes with zero live buckets
-      // instead of crashing before the publish
-      if (events.isEmpty) return Seq.empty
-      // SCHEMA EVOLUTION: the canonical columns come first; any extra
-      // columns the increment carries (a new feature landing mid-
-      // table) ride along in name order — older generations simply
-      // lack them and reads null-fill via schema merge
-      val extras = events.columns
-        .filterNot(DataCols.toSet ++ Set("tsu", "cu", "ct", "zkey", "zbucket"))
-        .sorted
-      val path = genPath(root, incId)
-      // write parallelism must not cap at the bucket count: at 100 TB
-      // one bucket is 1/16 of the table, so a zbucket-only repartition
-      // would funnel it through one task. Fan each bucket out across
-      // parallelism/buckets writers (the TwoPhaseTopK session-derived
-      // shard discipline); the bucket DIRECTORY stays the logical
-      // file, so multi-part buckets change nothing downstream — the
-      // zone map aggregates per bucket and reads address directories.
-      val fanout = math.max(1, s.sparkContext.defaultParallelism / l.buckets)
-      codesOf(events, l)
-        .repartition(col("zbucket"), pmod(col("event_id"), lit(fanout)))
-        .sortWithinPartitions(col("zkey"), col("event_id"))
-        .select((Seq("zbucket") ++ DataCols ++ extras).map(col): _*)
-        .write.mode("overwrite").partitionBy("zbucket").parquet(path)
-      val back = s.read.parquet(path)
-        .withColumn("tsu", expr("ts div 1000"))
-      // per-file min/max for the numeric `value` column ride along in
-      // the same read-back aggregation: zone maps prune on the two
-      // CLUSTERED dimensions, but `value` is a hot filter column and
-      // a range predicate on it would otherwise open every file —
-      // the plain column-statistics move of production table formats.
-      // The bound is conservative by construction (a file is skipped
-      // only when its whole [v_lo, v_hi] misses the predicate), so
-      // deletion vectors can only make it LOOSER, never wrong.
-      val zoneRows =
-        back.groupBy(col("zbucket").cast("int").as("zbucket"))
-          .agg(count(lit(1)).as("n"),
-            min(col("user_id")).as("u_lo"), max(col("user_id")).as("u_hi"),
-            min(col("tsu")).as("t_lo"), max(col("tsu")).as("t_hi"),
-            min(col("value")).as("v_lo"), max(col("value")).as("v_hi"))
-          .withColumn("inc_id", lit(incId))
-          .localCheckpoint(true) // index-sized; scanned for append + buckets
-      graft.storage.AstarteStore.appendAtomic(zoneRows, zonePath(root))
-      graft.storage.AstarteStore.appendAtomic(
-        back.select(col("zbucket").cast("int").as("zbucket"), col("user_id"),
-            explode(sequence(lit(0), lit(BloomK - 1))).as("r"))
-          .withColumn("bit", expr(bloomBitExpr))
-          .select(lit(incId).as("inc_id"), col("zbucket"), col("r"),
-            col("bit"))
-          .distinct(),
-        bloomPath(root))
-      // secondary-column VALUE-DOMAIN stats: the distinct event_types
-      // each file holds, WITH per-type row counts — zone maps prune on
-      // the two CLUSTERED dimensions only, so a type-filtered read
-      // would otherwise open every file; the domain list is the
-      // dictionary-stats move of production table formats, and the
-      // counts riding along make a GROUP BY event_type census a
-      // metadata-only read. Crash-window double appends are
-      // bit-identical rows; reads fold with max per key.
-      graft.storage.AstarteStore.appendAtomic(
-        back.groupBy(col("zbucket").cast("int").as("zbucket"),
-            col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(lit(incId).as("inc_id"), col("zbucket"),
-            col("event_type"), col("n")),
-        typesPath(root))
-      // PERSISTED DATA SCHEMA: one row per generation with the
-      // written frame's data schema as json. Evolved multi-generation
-      // reads project from the UNION of the live generations' logged
-      // schemas instead of parquet `mergeSchema` — the same
-      // information without the O(files) footer reads at plan time
-      // (the merged-schema-in-the-manifest move of production table
-      // formats). Crash-window double appends are bit-identical rows;
-      // reads fold with max per generation.
-      locally {
-        import s.implicits._
-        val dataSchema = org.apache.spark.sql.types.StructType(
-          back.schema.fields
-            .filterNot(f => f.name == "zbucket" || f.name == "tsu")
-            .map(_.copy(nullable = true)))
-        graft.storage.AstarteStore.appendAtomic(
-          Seq((incId, dataSchema.json)).toDF("inc_id", "schema_json"),
-          schemaPath(root))
-      }
-      zoneRows.select(col("zbucket")).collect().map(_.getInt(0)).toSeq.sorted
-    }
-
-    /** A column's type differs across the generations a read spans —
-      * the typed cross-generation evolution error (parquet's own
-      * merge would throw an opaque "Failed to merge fields" mid-plan;
-      * picking either generation's type would silently mis-read the
-      * other's files). */
-    final class SchemaEvolutionConflict(
-        val column: String, val typeA: String, val typeB: String)
-      extends RuntimeException(
-        s"column `$column` has conflicting types across the " +
-        s"generations of this read ($typeA vs $typeB) — cross-" +
-        "generation type evolution is not servable by a merged " +
-        "read. Rewrite the table to one schema first (compact or " +
-        "migrate folds every live generation), then re-read.")
-
-    /** The union DATA schema of a set of generations, served from the
-      * per-generation schema log: canonical columns first, evolved
-      * extras after in name order (the [[dataColsOf]] discipline),
-      * every field nullable (a generation predating a column
-      * null-fills it, exactly like a footer merge). None when some
-      * generation has no logged schema (a root populated outside
-      * [[writeAndIndex]]) — callers fall back to `mergeSchema`. */
-    private[graft] def mergedSchemaFor(s: SparkSession, root: String,
-        gens: Seq[String]): Option[org.apache.spark.sql.types.StructType] = {
-      import org.apache.spark.sql.types.{StructType, StructField}
-      val want = gens.distinct
-      val known = genSchemas(s, root, want).getOrElse(return None)
-      val byName = scala.collection.mutable.LinkedHashMap[String, StructField]()
-      // a column whose TYPE differs across the generations OF THIS
-      // READ (a widening evolution, e.g. int→long) cannot be served
-      // by picking one generation's field — an explicit-schema read
-      // would mis-read the other generations' files — and Spark's
-      // parquet mergeSchema does NOT widen either (StructType.merge
-      // throws an opaque "Failed to merge fields" at scan time). So
-      // the conflict fails FAST and TYPED, naming the column and both
-      // types; the fix is a rewriting migration (compact/migrate
-      // folds every generation to one schema), not a read option.
-      want.foreach(g => known(g).fields.foreach { f =>
-        byName.get(f.name) match {
-          case None => byName(f.name) = f
-          case Some(prev) =>
-            if (prev.dataType != f.dataType)
-              throw new SchemaEvolutionConflict(
-                f.name, prev.dataType.simpleString,
-                f.dataType.simpleString)
-        }
-      })
-      val extras = byName.keys.filterNot(DataCols.toSet).toSeq.sorted
-      Some(StructType(
-        (DataCols.filter(byName.contains) ++ extras).map(byName(_))))
-    }
-
-    /** Per-root cache of the schema log. A generation's schema is
-      * IMMUTABLE once written (the log is append-only and a replayed
-      * append is bit-identical), so caching is safe across processes:
-      * a generation another writer absorbed is simply a cache miss
-      * that triggers one refresh read. Without this every pruned read
-      * would pay a (tiny but real) schema-log job. */
-    private val schemaCache = new graft.core.BoundedMemo[
-      String, Map[String, org.apache.spark.sql.types.StructType]](
-      64, "fx.schema")
-
-    private def genSchemas(s: SparkSession, root: String,
-        want: Seq[String])
-        : Option[Map[String, org.apache.spark.sql.types.StructType]] = {
-      import org.apache.spark.sql.types.{DataType, StructType}
-      val cached = schemaCache.get(root).getOrElse(Map.empty)
-      if (want.forall(cached.contains)) return Some(cached)
-      if (!java.nio.file.Files.isDirectory(
-          java.nio.file.Paths.get(schemaPath(root)))) return None
-      val fresh = s.read.parquet(schemaPath(root))
-        .groupBy(col("inc_id")).agg(max(col("schema_json")).as("j"))
-        .collect()
-        .map(r => r.getString(0) ->
-          DataType.fromJson(r.getString(1)).asInstanceOf[StructType])
-        .toMap
-      schemaCache.put(root, fresh)
-      if (want.forall(fresh.contains)) Some(fresh) else None
-    }
-
-    /** Every generation the manifest has EVER named, live or dead —
-      * the replay ledger. Dead generations stay in the ledger: an
-      * increment whose rows now live inside a compacted generation
-      * must never be re-absorbed as new data. */
-    def absorbedIds(s: SparkSession, root: String): Set[String] =
-      headState(root).iterator.map(_.gen).toSet
-
-    /** OPTIMISTIC version allocation — read the commit log, validate
-      * the precondition (every file this commit retires is still
-      * live), claim version max+1 create-exclusively. A COLLISION
-      * means a racing writer in any process took the number: re-read
-      * and retry — the loop terminates because each collision implies
-      * someone else committed. A failed PRECONDITION throws
-      * [[CommitConflict]] instead: the writer's rewrite inputs were
-      * retired under it, and blindly recommitting would resurrect
-      * rewritten-away rows — the caller recomputes from fresh state.
-      * Returns false when `gen` is already in the ledger (a racing
-      * replay of the same id won the race — the no-op replay
-      * semantics, now atomic across processes, no ProcessLock). */
-    /** `ledgerKind` is the commit's data-change declaration: "ledger"
-      * (default — the commit may change the table's logical rows) or
-      * "maint" for rewrites that provably PRESERVE them (compaction,
-      * layout migration — the dataChange=false flag of public table
-      * formats, recorded at commit time so a CDC reader can skip the
-      * rewrite without opening a single file). Every existing reader
-      * keys on "live"/"dead" or on the -1 bucket alone, so the marker
-      * is invisible to them.
-      *
-      * `foldedRows` (≥ 0, maint commits only) declares how many
-      * logical rows the rewrite FOLDED AWAY by applying deletion
-      * vectors — rows already deleted logically by their own erase
-      * commits, so the rewrite is still row-preserving. Logged as a
-      * (gen, -2, "folded:n") row in the SAME atomic commit, it turns
-      * [[auditMaint]]'s one-sided bound (`pub < ret` passes whenever
-      * ANY vector targeted the inputs) into the exact equation
-      * `pub == ret − folded`. Invisible to every other reader (they
-      * key on "live"/"dead" status or the -1 bucket). −1 = unlogged
-      * (pre-existing commits; the audit falls back to the bound).
-      *
-      * Two OPTIONAL preconditions close the merge-on-read erase ↔
-      * rewrite races (both directions would silently LOSE an erasure,
-      * because [[dv]] serves vectors only against live files):
-      * `requireLive` — files this commit's vectors target must still
-      * be live (no retirement): an eraseDv whose touched files a
-      * racing compaction retired must conflict and replan, or its
-      * vectors would be born dead. `guardLedgerSince` — no
-      * ledger-only commit (the MoR-erase shape) may have landed after
-      * the rewrite's planning snapshot: a compaction that read its
-      * inputs BEFORE an erase's vectors existed would retire the
-      * files those vectors target without folding them. Both checks
-      * validate against the SAME head snapshot that claims the next
-      * version, so the optimistic collision-retry loop makes them
-      * atomic — exactly like the deadPairs precondition. */
-    @annotation.tailrec
-    private[graft] def commitNext(root: String, gen: String,
-        liveBuckets: Seq[Int], deadPairs: Seq[(String, Int)],
-        ledgerKind: String = "ledger", foldedRows: Long = -1L,
-        requireLive: Seq[(String, Int)] = Nil,
-        guardLedgerSince: Long = -1L): Boolean = {
-      val head = headState(root) // ledger + live set, checkpoint-fast
-      if (head.exists(_.gen == gen)) return false
-      val liveNow = liveSetOf(head)
-      val gone = deadPairs.filterNot(liveNow.contains)
-      if (gone.nonEmpty)
-        throw new CommitConflict(
-          s"files retired by a racing writer: ${gone.mkString(", ")}")
-      val staleLive = requireLive.filterNot(liveNow.contains)
-      if (staleLive.nonEmpty)
-        throw new CommitConflict(
-          "files this commit's vectors target were retired by a " +
-          s"racing writer: ${staleLive.mkString(", ")}")
-      if (guardLedgerSince >= 0) {
-        // conservative: any ledger-only gen committed after the
-        // planning snapshot conflicts (MoR erases are the hazard;
-        // no-op replays and empty absorbs are rare collateral — the
-        // aborted rewrite simply replans)
-        val racing = head.groupBy(_.gen).collect {
-          case (g, rows)
-            if rows.exists(r => r.zbucket == -1 &&
-              r.mseq > guardLedgerSince) &&
-              !rows.exists(_.zbucket >= 0) => g
-        }
-        if (racing.nonEmpty)
-          throw new CommitConflict(
-            "ledger-only commits landed after this rewrite's " +
-            s"planning snapshot: ${racing.toSeq.sorted.mkString(", ")}")
-      }
-      // next derives from the SAME snapshot as the validation (the
-      // newest commit's ledger row carries the max mseq): a commit
-      // racing in after our read makes our claim COLLIDE, forcing the
-      // retry to re-validate against the racer's changes — reading a
-      // fresher number here would let a stale precondition commit
-      val next = head.iterator.map(_.mseq).max + 1
-      val declRows =
-        if (foldedRows >= 0) Seq((gen, -2, s"folded:$foldedRows"))
-        else Nil
-      if (tryCommit(root, next,
-          ((gen, -1, ledgerKind) +: declRows ++:
-            liveBuckets.map(b => (gen, b, "live"))) ++
-            deadPairs.map { case (g, b) => (g, b, "dead") })) {
-        // every CkptEvery-th committer folds history into a
-        // checkpoint so head reads stay O(CkptEvery) forever
-        if (next % CkptEvery == 0) writeCkpt(root, next)
-        true
-      } else commitNext(root, gen, liveBuckets, deadPairs, ledgerKind,
-        foldedRows, requireLive, guardLedgerSince)
-    }
-
-    /** Cluster + index one increment under the persisted layout.
-      * Replay-idempotent end to end: the ledger skips an already-
-      * absorbed id; a crash AFTER the index appends but BEFORE the
-      * manifest row leaves the generation invisible to readers and
-      * absent from the ledger, so the retry re-runs writeAndIndex —
-      * its duplicate index rows collapse under the read-side fold and
-      * the manifest append then publishes the generation exactly
-      * once. Returns true when newly absorbed. */
-    def absorb(s: SparkSession, root: String, increment: DataFrame,
-        incId: String): Boolean = {
-      if (absorbedIds(s, root).contains(incId)) return false
-      val buckets = writeAndIndex(s, root, increment, incId, layoutOf(s, root))
-      commitNext(root, incId, buckets, Nil)
-    }
-
-    /** Bin-packing maintenance (the OPTIMIZE of this store): rewrite
-      * ALL live generations as one fresh clustered generation, then
-      * swap the manifest atomically — new-live + olds-dead land in a
-      * single append, so readers see either the old file set or the
-      * new one, never a mix. Crash windows: the rewritten data and
-      * its index rows are invisible until the swap (no manifest row),
-      * and a retry regenerates the same deterministic name, so the
-      * orphans are overwritten, their duplicate index rows collapse
-      * on read, and the swap lands once. No-op (None) when fewer than
-      * two generations are live. Concurrency is OPTIMISTIC, no lock:
-      * concurrent ABSORBS are safe (a gen absorbed mid-compaction is
-      * not in the rewrite's live set and stays live after the swap —
-      * pinned by the lock-free TwoJvm soak), and a compaction whose
-      * inputs were retired under it aborts at commit time (None)
-      * instead of resurrecting them. Two SIMULTANEOUS compactions of
-      * an overlapping tier remain one-at-a-time work: the loser
-      * aborts, but both may write the same deterministic generation
-      * directory mid-flight, so schedule one compactor per root. */
-    def compact(s: SparkSession, root: String): Option[String] =
-      compactTier(s, root, Long.MaxValue)
-
-    /** SIZE-TIERED compaction — the steady-state maintenance shape:
-      * fold only generations whose total live row count is ≤
-      * `maxRows`, leaving big generations' files physically untouched
-      * (same paths, same bytes). Rewriting everything on every pass is
-      * O(table) maintenance; selecting the small tier makes
-      * steady-state write amplification logarithmic — each row is
-      * rewritten only when its generation graduates a tier (the
-      * LSM/size-tiered discipline, public knowledge). The per-
-      * generation sizes come from the zone map's `n` sums — an
-      * index-sized read, never a data scan. The freshly folded
-      * generation may itself sit under a larger tier's threshold and
-      * join ITS next fold — the cascade is the design. No-op (None)
-      * when fewer than two generations are under the threshold. */
-    def compactTier(s: SparkSession, root: String,
-        maxRows: Long): Option[String] = {
-      // planning snapshot for the ledger guard: an eraseDv landing
-      // after this seq publishes vectors this rewrite's reads never
-      // saw — retiring their target files would silently lose the
-      // erasure, so the commit conflicts and the next pass replans
-      val planningSeq = currentSeq(s, root)
-      val sizes = zone(s, root).groupBy(col("inc_id"))
-        .agg(sum(col("n")).as("rows")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val small = sizes.filter(_._2 <= maxRows).keySet
-      if (small.size < 2) return None
-      val pairs = livePairs(s, root).filter(p => small.contains(p._1))
-      // ATTEMPT-SCOPED name — keyed by the planning snapshot, not a
-      // running counter. A crash replay re-plans against the same
-      // state (nothing committed), regenerates the SAME name, and
-      // overwrites the orphan with bit-identical data and index rows
-      // (the replay contract). A conflict-ABORTED attempt replans
-      // against CHANGED state (e.g. new deletion vectors): its retry
-      // takes a NEW name, so the aborted attempt's stale index rows
-      // can never max-fold into the committed generation's — reusing
-      // the name there inflated zone `n` by the fold delta (caught by
-      // MorRaceSoakSpec: audit read pub=2580 where 2340 rows were
-      // written). Orphan rows reference a never-ledgered name and are
-      // invisible to every read (the manifest join).
-      val newGen = s"compact-$planningSeq"
-      // the rewrite reads WITH deletion vectors applied — compaction
-      // is where merge-on-read erasures fold into physical files and
-      // the residual anti-join disappears for the rewritten range
-      val union = readPairs(s, root, pairs)
-      val buckets = writeAndIndex(s, root,
-        union.select(dataColsOf(union).map(col): _*), newGen,
-        layoutOf(s, root))
-      val folded = countFoldedRows(s, root, pairs)
-      // optimistic abort: a racing writer retired one of the rewrite
-      // inputs (or claimed this fold's name) — the orphaned rewrite
-      // stays invisible (no manifest row) and the next maintenance
-      // pass recomputes from fresh state
-      try {
-        // row-preserving by construction (vectors it folds were
-        // already deleted logically by their own erase commit) —
-        // declared so the change-data feed skips it unread, with the
-        // folded-row count logged so the audit can EQUATE instead of
-        // bound (the count is an independent measurement: a semi-join
-        // census of the dv-matched input rows, not ret − pub)
-        if (commitNext(root, newGen, buckets, pairs, "maint", folded,
-            guardLedgerSince = planningSeq))
-          Some(newGen)
-        else None
-      } catch { case _: CommitConflict => None }
-    }
-
-    /** The independent folded-row census a maint commit logs: how
-      * many rows of `pairs` the CURRENT live deletion vectors delete.
-      * Deliberately NOT derived as retired − published (that would
-      * make [[auditMaint]]'s equation a tautology): it is its own
-      * semi-join count over the dv-touched subset of the inputs, so a
-      * rewrite that drops rows by BUG shows up as
-      * `pub ≠ ret − folded`. Cost: zero when no vector targets the
-      * inputs; otherwise one job over the touched files' key column
-      * (column-pruned — never the full rows). */
-    private def countFoldedRows(s: SparkSession, root: String,
-        pairs: Seq[(String, Int)]): Long = {
-      import s.implicits._
-      val inputs = pairs.toSet
-      val kTouched = dvLiveState(s, root)._2.filter(inputs)
-      val pTouched = posDvLiveState(s, root)._2.filter(inputs)
-      val touched = (kTouched ++ pTouched).distinct.sorted
-      if (touched.isEmpty) return 0L
-      // a row folds when a KEYED vector or a POSITIONAL vector (or
-      // both) targets it — marker left-joins count the union in one
-      // job without double-counting a doubly-targeted row
-      var marked =
-        if (pTouched.isEmpty) readPairsTagged(s, root, touched)
-        else readPairsTaggedPos(s, root, touched)
-      if (kTouched.nonEmpty) {
-        val kSide = (dvLiveRows(s, root) match {
-          case Some(rows) => broadcast(rows
-            .filter { case (g, b, _) => inputs((g, b)) }
-            .toDF("inc_id", "zbucket", "user_id"))
-          case None => dv(s, root) // over-cap backlog: distributed
-        }).withColumn("__km", lit(1))
-        marked = marked.join(kSide,
-          Seq("inc_id", "zbucket", "user_id"), "left")
-      } else marked = marked.withColumn("__km", lit(null).cast("int"))
-      if (pTouched.nonEmpty) {
-        val pSide = (posDvLiveState(s, root)._1 match {
-          case Some(rows) => broadcast(rows
-            .filter { case (g, b, _, _) => inputs((g, b)) }
-            .toDF("inc_id", "zbucket", "__fname", "__ridx"))
-          case None => dvPos(s, root)
-            .withColumnRenamed("fname", "__fname")
-            .withColumnRenamed("row_idx", "__ridx")
-        }).withColumn("__pm", lit(1))
-        marked = marked.join(pSide,
-          Seq("inc_id", "zbucket", "__fname", "__ridx"), "left")
-      } else marked = marked.withColumn("__pm", lit(null).cast("int"))
-      marked.filter(col("__km").isNotNull || col("__pm").isNotNull)
-        .count()
-    }
-
-    /** LAYOUT MIGRATION — re-OPTIMIZE the table onto a different
-      * space-filling curve and/or bucketing (the "change the Z-order
-      * columns" maintenance move of production table formats): every
-      * live generation rewrites re-clustered under the NEW layout
-      * (deletion vectors fold in like compaction), the swap lands in
-      * one atomic manifest commit, and the new layout version
-      * persists append-only (latest-wins) so every later absorb
-      * clusters under it. The layout is ADVISORY for writes only —
-      * readers address files through the manifest and prune through
-      * each file's own zone rows — so every crash window is benign:
-      * layout persisted but rewrite unpublished (absorbs cluster new
-      * data under the new curve, old generations stay as they were,
-      * reads correct throughout) or rewrite orphaned (invisible, the
-      * retry overwrites it). Ledgered and conflict-aborting like
-      * compaction; schedule one migrator per root. Range split points
-      * re-derive from the CURRENT data, not the original corpus. */
-    def migrate(s: SparkSession, root: String, toCurve: String,
-        rangeBucketed: Boolean, migrateId: String): Boolean =
-      optimistically(migrateId) {
-        val prior = ledgerRowOf(root, migrateId).map(_.mseq)
-        if (prior.isDefined) {
-          // replayed id: the rewrite committed. Repair the one crash
-          // window left by persist-after-commit — commit landed, JVM
-          // died before the layout row — unless a later layout
-          // version already superseded this migration.
-          ensureLayoutAt(s, root, prior.get, toCurve, rangeBucketed)
-          false
-        } else {
-          val old = layoutOf(s, root)
-          val pairs = livePairs(s, root)
-          if (pairs.isEmpty) {
-            // nothing live to rewrite (fresh or fully-erased table):
-            // a zero-path parquet read would crash, and there is no
-            // data to derive range splits from — publish the new
-            // curve for future absorbs and ledger the id
-            val ok = commitNext(root, migrateId, Nil, Nil, "maint", 0L)
-            if (ok) persistLayout(s, root,
-              old.copy(curve = toCurve, splits = Nil),
-              mseqOfLedger(root, migrateId))
-            ok
-          } else {
-            // same ledger guard as compaction: a racing MoR erase's
-            // vectors must not be retired unfolded; the attempt-
-            // scoped name keeps a conflict-retry's index rows from
-            // folding with this attempt's
-            val planningSeq = currentSeq(s, root)
-            val gen = attemptName(migrateId, planningSeq)
-            val union = readPairs(s, root, pairs)
-            // two passes over the live set (quantiles, then the
-            // clustered write) — re-scanning is the right cost at
-            // scale; materializing the whole table to save one scan
-            // is not
-            val data = union.select(dataColsOf(union).map(col): _*)
-            var l = old.copy(curve = toCurve, splits = Nil)
-            if (rangeBucketed) l = l.copy(splits = deriveSplits(data, l))
-            val buckets = writeAndIndex(s, root, data, gen, l)
-            // row-preserving re-clustering — maint, like compaction,
-            // with the same independent folded-row census logged
-            val folded = countFoldedRows(s, root, pairs)
-            val ok = commitNext(root, gen, buckets, pairs, "maint",
-              folded, guardLedgerSince = planningSeq)
-            // layout persists AFTER (and stamped with) the commit
-            // that published the rewrite: an aborted or crashed
-            // rewrite then leaves NO layout row behind, so later
-            // absorbs never bucket by split points of a layout that
-            // never materialized. The reverse window (commit landed,
-            // persist lost) is repaired on replay above.
-            if (ok) persistLayout(s, root, l, mseqOfLedger(root, gen))
-            ok
-          }
-        }
-      }
-
-    /** The manifest version that ledgered `gen` — defined only after
-      * its commit landed. */
-    private def mseqOfLedger(root: String, gen: String): Long =
-      headState(root)
-        .find(r => r.gen == gen && r.zbucket == -1).map(_.mseq)
-        .getOrElse(throw new IllegalStateException(
-          s"$gen has no ledger row under $root"))
-
-    /** Attempt-scoped physical generation name for a ledgered rewrite
-      * id (erase/update/migrate): the planning snapshot in the name
-      * gives a conflict-aborted RETRY — whose content may differ (new
-      * deletion vectors, a changed touched set) — a fresh name, so
-      * the aborted attempt's stale index rows never fold into the
-      * committed generation's (the compactTier name note; caught by
-      * MorRaceSoakSpec). A CRASH replay re-plans against unchanged
-      * state, regenerates the same name, and overwrites the orphan
-      * bit-identically. Caller ids never contain '@'. */
-    private def attemptName(id: String, planningSeq: Long): String =
-      s"$id@p$planningSeq"
-
-    /** The ledger row of `id` — committed under its plain name (a
-      * ledger-only commit) or under any attempt suffix (a rewrite). */
-    private def ledgerRowOf(root: String, id: String): Option[ManifestRow] =
-      headState(root).find(r => r.zbucket == -1 &&
-        (r.gen == id || r.gen.startsWith(id + "@")))
-
-    /** Crash repair for [[migrate]]'s persist-after-commit ordering:
-      * if no layout version ≥ the migration's commit seq exists, the
-      * JVM died between the commit and the layout persist — re-derive
-      * the layout from the CURRENT live data (advisory state, so
-      * deriving from newer data than the rewrite saw is fine) and
-      * persist it at the migration's seq. A layout row at a seq ≥ the
-      * migration's means this migration's persist landed or a later
-      * migration superseded it — either way nothing to repair. */
-    private def ensureLayoutAt(s: SparkSession, root: String, mseq: Long,
-        toCurve: String, rangeBucketed: Boolean): Unit = {
-      val newestV = s.read.parquet(boundsPath(root))
-        .agg(max(col("v"))).head().getLong(0)
-      if (newestV >= mseq) return
-      val old = layoutOf(s, root)
-      var l = old.copy(curve = toCurve, splits = Nil)
-      if (rangeBucketed) {
-        val pairs = livePairs(s, root)
-        if (pairs.nonEmpty) {
-          val union = readPairs(s, root, pairs)
-          l = l.copy(splits =
-            deriveSplits(union.select(dataColsOf(union).map(col): _*), l))
-        }
-      }
-      persistLayout(s, root, l, mseq)
-    }
-
-    /** Copy-on-write keyed UPDATE — the MERGE/upsert write path on
-      * the same mechanism as [[erase]]: zone+bloom prune the rewrite
-      * set to the files that may hold the key, survivors republish
-      * with the new value, touched files retire in the same atomic
-      * manifest append. Cost is O(files containing the key).
-      * Ledgered and replay-idempotent like every publish. */
-    def updateUser(s: SparkSession, root: String, userId: Long,
-        newValue: Double, updateId: String): Boolean =
-      optimistically(updateId) {
-        if (ledgerRowOf(root, updateId).isDefined) false
-        else {
-          val touched = pointSurvivors(s, root, userId)
-            .select(col("inc_id"), col("zbucket")).collect()
-            .map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
-          if (touched.isEmpty) commitNext(root, updateId, Nil, Nil)
-          else {
-            // attempt-scoped: a conflict-retry's touched set (and so
-            // its rewritten content) may differ — fresh name, no
-            // stale-index fold
-            val gen = attemptName(updateId, currentSeq(s, root))
-            val updated = readPairs(s, root, touched)
-              .withColumn("value", when(col("user_id") <=> userId,
-                lit(newValue)).otherwise(col("value")))
-            val buckets = writeAndIndex(s, root,
-              updated.select(dataColsOf(updated).map(col): _*), gen,
-              layoutOf(s, root))
-            commitNext(root, gen, buckets, touched)
-          }
-        }
-      }
-
-    /** The optimistic-writer retry loop shared by the keyed COW
-      * paths: on [[CommitConflict]] (a racing writer retired one of
-      * the rewrite inputs mid-flight) the whole read-rewrite-commit
-      * recomputes from fresh state — the aborted attempt's data and
-      * index rows stay invisible (never-ledgered [[attemptName]]s;
-      * the retry takes a FRESH name so its index rows can never fold
-      * with the aborted attempt's). Bounded so a genuine livelock
-      * surfaces loudly instead of spinning. */
-    private def optimistically(id: String)(body: => Boolean): Boolean = {
-      var attempt = 0
-      while (true) {
-        try return body
-        catch {
-          case e: CommitConflict =>
-            attempt += 1
-            if (attempt >= 5) throw e
-        }
-      }
-      throw new IllegalStateException("unreachable")
-    }
-
-    /** Copy-on-write privacy ERASE (the right-to-be-forgotten
-      * rewrite): delete every row of one user by rewriting ONLY the
-      * files that may hold the user — zone range AND bloom bits prune
-      * the rewrite set exactly like a point read, so the cost is
-      * O(files containing the key), never a table rewrite. The
-      * rewritten survivors publish as one generation and the touched
-      * files retire in the same atomic manifest append. The bytes
-      * still exist in the dead files (time travel can still see
-      * them — the documented privacy caveat) until [[vacuum]]
-      * destroys them; erase + vacuum is the complete deletion.
-      * Ledgered: a replayed erase id is a no-op. */
-    def erase(s: SparkSession, root: String, userId: Long,
-        eraseId: String): Boolean =
-      optimistically(eraseId) {
-        if (ledgerRowOf(root, eraseId).isDefined) false
-        else {
-          val touched = pointSurvivors(s, root, userId)
-            .select(col("inc_id"), col("zbucket")).collect()
-            .map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
-          if (touched.isEmpty) // nothing holds the user; just ledger it
-            commitNext(root, eraseId, Nil, Nil)
-          else {
-            // attempt-scoped name: a conflict-retry rewrites a
-            // different touched set — fresh name, no stale-index fold
-            val gen = attemptName(eraseId, currentSeq(s, root))
-            // null-SAFE keep predicate: a bare =!= evaluates NULL for
-            // NULL user_id rows and would silently drop unrelated
-            // null-key rows from every touched file — latent data
-            // loss, not a smaller table
-            val kept = readPairs(s, root, touched)
-              .filter(!(col("user_id") <=> userId))
-            val buckets = writeAndIndex(s, root,
-              kept.select(dataColsOf(kept).map(col): _*), gen,
-              layoutOf(s, root))
-            commitNext(root, gen, buckets, touched)
-          }
-        }
-      }
-
-    /** The live (gen, bucket) pairs as a broadcastable frame — the
-      * join-side twin of [[livePairs]] (control-plane sized: one row
-      * per live logical file). */
-    // ─────────────────────────── predicate DML (data-skipping DELETE/UPDATE)
-
-    /** Translate a ROW predicate into a ZONE-ROW survival predicate —
-      * the data-skipping move of production table formats (Delta's
-      * DataSkippingReader, public design): a comparison on a stat'd
-      * column becomes a bound check on that column's per-file
-      * [lo, hi], And/Or distribute, and any leaf the stats cannot
-      * decide collapses to `true` (CONSERVATIVE — skip a file only
-      * when provably no row in it can satisfy the predicate; null
-      * rows satisfy no comparison, so bound checks never over-skip).
-      * `ts` literals are nanos (the stored column) while the zone's
-      * t_lo/t_hi are micros; the translation compares in micro space
-      * with one unit of slack on the floor division. */
-    /** Column-API predicates arrive as UNRESOLVED function nodes
-      * (`'and`, `'>='` — Spark 4's converter resolves names only at
-      * analysis); rewrite the closed boolean/comparison vocabulary
-      * into its Catalyst forms so one pattern set serves both
-      * unresolved and analyzer-resolved trees. Unknown functions stay
-      * as-is and fall to the conservative `true` leaf. */
-    private def normalizePred(
-        e: org.apache.spark.sql.catalyst.expressions.Expression)
-        : org.apache.spark.sql.catalyst.expressions.Expression = {
-      import org.apache.spark.sql.catalyst.{expressions => ce}
-      import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-      e match {
-        case f: UnresolvedFunction =>
-          val kids = f.arguments.map(normalizePred)
-          (f.nameParts.last.toLowerCase, kids) match {
-            case ("and", Seq(a, b)) => ce.And(a, b)
-            case ("or", Seq(a, b)) => ce.Or(a, b)
-            case ("not" | "!", Seq(a)) => ce.Not(a)
-            case (">", Seq(a, b)) => ce.GreaterThan(a, b)
-            case (">=", Seq(a, b)) => ce.GreaterThanOrEqual(a, b)
-            case ("<", Seq(a, b)) => ce.LessThan(a, b)
-            case ("<=", Seq(a, b)) => ce.LessThanOrEqual(a, b)
-            case ("=" | "==" | "equalto", Seq(a, b)) => ce.EqualTo(a, b)
-            case _ => f.copy(arguments = kids)
-          }
-        case _ => e.withNewChildren(e.children.map(normalizePred))
-      }
-    }
-
-    private[graft] def skippingFilter(
-        pred0: org.apache.spark.sql.catalyst.expressions.Expression): Column = {
-      val pred = normalizePred(pred0)
-      import org.apache.spark.sql.catalyst.{expressions => ce}
-      import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-      def nameOf(e: ce.Expression): Option[String] = e match {
-        case a: ce.Attribute => Some(a.name)
-        case u: UnresolvedAttribute => Some(u.name)
-        case ce.Cast(c, _, _, _) => nameOf(c)
-        case _ => None
-      }
-      // (lo stat, hi stat, literal → stat-space bounds [vLo, vHi]):
-      // a literal maps to the RANGE of stat values any row equal to it
-      // could produce — exact for user_id/value, ±1 micro for ts
-      def statsOf(n: String): Option[(Column, Column, Any => (Column, Column))] =
-        n match {
-          case "user_id" =>
-            Some((col("u_lo"), col("u_hi"), v => (lit(v), lit(v))))
-          case "value" =>
-            Some((col("v_lo"), col("v_hi"), v => (lit(v), lit(v))))
-          case "ts" => Some((col("t_lo"), col("t_hi"), { v =>
-            val micros = java.lang.Math.floorDiv(
-              v.asInstanceOf[Number].longValue(), 1000L)
-            (lit(micros - 1L), lit(micros + 1L))
-          }))
-          case _ => None
-        }
-      // survive(cmp): some row in the file COULD satisfy attr OP lit
-      def cmp(attr: ce.Expression, litE: ce.Expression,
-          op: String): Option[Column] =
-        for {
-          n <- nameOf(attr)
-          (lo, hi, toStat) <- statsOf(n)
-          l <- litE match {
-            case ce.Literal(v, _) if v != null => Some(v)
-            case _ => None
-          }
-        } yield {
-          val (vLo, vHi) = toStat(l)
-          op match {
-            case ">"  => hi > vLo
-            case ">=" => hi >= vLo
-            case "<"  => lo < vHi
-            case "<=" => lo <= vHi
-            case "="  => lo <= vHi && hi >= vLo
-            // complement forms (from a pushed-down Not): some row
-            // could FAIL the comparison
-            case "!>"  => lo <= vHi // exists a row with attr <= lit
-            case "!>=" => lo < vHi
-            case "!<"  => hi >= vLo
-            case "!<=" => hi > vLo
-            case "!="  => !(lo === vLo && hi === vHi && lo === hi)
-          }
-        }
-      def walk(e: ce.Expression, neg: Boolean): Column = e match {
-        case ce.And(a, b) =>
-          if (neg) walk(a, neg) || walk(b, neg) // De Morgan
-          else walk(a, neg) && walk(b, neg)
-        case ce.Or(a, b) =>
-          if (neg) walk(a, neg) && walk(b, neg)
-          else walk(a, neg) || walk(b, neg)
-        case ce.Not(a) => walk(a, !neg)
-        case ce.GreaterThan(a, l) =>
-          cmp(a, l, if (neg) "!>" else ">")
-            .orElse(cmp(l, a, if (neg) "!<" else "<"))
-            .getOrElse(lit(true))
-        case ce.GreaterThanOrEqual(a, l) =>
-          cmp(a, l, if (neg) "!>=" else ">=")
-            .orElse(cmp(l, a, if (neg) "!<=" else "<="))
-            .getOrElse(lit(true))
-        case ce.LessThan(a, l) =>
-          cmp(a, l, if (neg) "!<" else "<")
-            .orElse(cmp(l, a, if (neg) "!>" else ">"))
-            .getOrElse(lit(true))
-        case ce.LessThanOrEqual(a, l) =>
-          cmp(a, l, if (neg) "!<=" else "<=")
-            .orElse(cmp(l, a, if (neg) "!>=" else ">="))
-            .getOrElse(lit(true))
-        case ce.EqualTo(a, l) =>
-          cmp(a, l, if (neg) "!=" else "=")
-            .orElse(cmp(l, a, if (neg) "!=" else "="))
-            .getOrElse(lit(true))
-        case _ => lit(true) // undecidable leaf — never skip on it
-      }
-      walk(pred, neg = false)
-    }
-
-    /** The candidate live files for a row predicate: zone-stat
-      * pruning via [[skippingFilter]], narrowed further by the
-      * event_type domain log when a top-level conjunct pins the type
-      * (the dictionary-stats prune). Driver-side result — read-set
-      * sized, like every survivor list. */
-    private[graft] def skipCandidates(s: SparkSession, root: String,
-        pred: Column): Seq[(String, Int)] = {
-      import org.apache.spark.sql.catalyst.{expressions => ce}
-      import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-      val predE = normalizePred(
-        org.apache.spark.sql.graftshim.ColumnExpr.exprOf(s, pred))
-      var z = zone(s, root).filter(skippingFilter(predE))
-      def conjuncts(e: ce.Expression): Seq[ce.Expression] = e match {
-        case ce.And(a, b) => conjuncts(a) ++ conjuncts(b)
-        case other => Seq(other)
-      }
-      def typeName(e: ce.Expression): Option[String] = e match {
-        case a: ce.Attribute if a.name == "event_type" => Some(a.name)
-        case u: UnresolvedAttribute if u.name == "event_type" => Some(u.name)
-        case _ => None
-      }
-      conjuncts(predE).foreach {
-        case ce.EqualTo(a, ce.Literal(v, _)) if typeName(a).isDefined &&
-            v != null =>
-          z = z.join(typesMatching(s, root, v.toString),
-            Seq("inc_id", "zbucket"), "left_semi")
-        case ce.EqualTo(ce.Literal(v, _), a) if typeName(a).isDefined &&
-            v != null =>
-          z = z.join(typesMatching(s, root, v.toString),
-            Seq("inc_id", "zbucket"), "left_semi")
-        case _ => ()
-      }
-      z.select(col("inc_id"), col("zbucket")).collect()
-        .map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
-    }
-
-    /** Predicate DELETE (`DELETE FROM t WHERE p`), copy-on-write —
-      * the general-predicate sibling of the keyed [[erase]]: zone +
-      * type-domain stats prune to candidate files, ONE pruned probe
-      * scan narrows to the files actually holding a matching row, and
-      * only those rewrite (survivors republish, touched files retire
-      * in the same atomic commit). SQL semantics: rows where `p` is
-      * TRUE are deleted; FALSE and NULL rows survive. Cost is
-      * O(files the predicate can touch), never a table rewrite — at
-      * 100 TB a selective predicate rewrites a handful of files.
-      * Ledgered, replay-idempotent, conflict-retrying, and
-      * ledger-guarded like every rewrite (a racing merge-on-read
-      * erase's vectors must not be retired unfolded). */
-    def deleteWhere(s: SparkSession, root: String, pred: Column,
-        deleteId: String): Boolean =
-      optimistically(deleteId) {
-        if (ledgerRowOf(root, deleteId).isDefined) false
-        else {
-          val planningSeq = currentSeq(s, root)
-          val cand = skipCandidates(s, root, pred)
-          // probe scan: which candidates actually hold a TRUE row —
-          // rewriting a candidate with zero matches would churn bytes
-          // for nothing (write amplification is the scarce budget at
-          // scale). Vectors deliberately NOT applied here: a file
-          // whose only matches are already dv-erased still rewrites,
-          // which folds its vectors — harmless and strictly tidier.
-          val touched =
-            if (cand.isEmpty) Nil
-            else readPairsTagged(s, root, cand).filter(pred)
-              .select(col("inc_id"), col("zbucket")).distinct().collect()
-              .map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
-          if (touched.isEmpty) commitNext(root, deleteId, Nil, Nil)
-          else {
-            val gen = attemptName(deleteId, planningSeq)
-            val kept = readPairs(s, root, touched)
-              .filter(!coalesce(pred, lit(false)))
-            val buckets = writeAndIndex(s, root,
-              kept.select(dataColsOf(kept).map(col): _*), gen,
-              layoutOf(s, root))
-            commitNext(root, gen, buckets, touched,
-              guardLedgerSince = planningSeq)
-          }
-        }
-      }
-
-    /** Predicate UPDATE (`UPDATE t SET c = e WHERE p`), copy-on-write
-      * on the same prune-probe-rewrite mechanism as [[deleteWhere]]:
-      * only files holding a TRUE row rewrite, matching rows map
-      * through the assignments, every other row republishes verbatim.
-      * Assignment expressions may reference the row's own columns
-      * (`value -> col("value") * 2`). Commits as a plain rewrite (NOT
-      * `maint`): an update changes the logical table, so the change
-      * feed must emit it as delete+insert like any rewrite. */
-    def updateWhere(s: SparkSession, root: String, pred: Column,
-        assignments: Map[String, Column], updateId: String): Boolean =
-      optimistically(updateId) {
-        if (ledgerRowOf(root, updateId).isDefined) false
-        else {
-          val planningSeq = currentSeq(s, root)
-          val cand = skipCandidates(s, root, pred)
-          val touched =
-            if (cand.isEmpty) Nil
-            else readPairsTagged(s, root, cand).filter(pred)
-              .select(col("inc_id"), col("zbucket")).distinct().collect()
-              .map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
-          if (touched.isEmpty) commitNext(root, updateId, Nil, Nil)
-          else {
-            val gen = attemptName(updateId, planningSeq)
-            val hit = coalesce(pred, lit(false))
-            // ONE projection so every assignment expression sees the
-            // ORIGINAL row (SQL UPDATE semantics) — a column-by-column
-            // fold would feed later assignments the earlier ones'
-            // results
-            val base = readPairs(s, root, touched)
-            val updated = base.select(dataColsOf(base).map { c =>
-              assignments.get(c) match {
-                case Some(e) => when(hit, e).otherwise(col(c)).as(c)
-                case None => col(c)
-              }
-            }: _*)
-            val buckets = writeAndIndex(s, root, updated, gen,
-              layoutOf(s, root))
-            commitNext(root, gen, buckets, touched,
-              guardLedgerSince = planningSeq)
-          }
-        }
-      }
-
-    private def livePairsDf(s: SparkSession, root: String): DataFrame = {
-      import s.implicits._
-      liveSetOf(readCommits(root)).toSeq.sorted.toDF("inc_id", "zbucket")
-    }
-
-    /** Merge-on-read zone map: one row per LIVE logical file. The
-      * manifest join hides dead (rewritten-away) and half-absorbed
-      * files; the per-(inc_id, zbucket) fold collapses crash-window
-      * double appends — a replayed build's stats rows are
-      * bit-identical, so max/min are the identity on them. */
-    def zone(s: SparkSession, root: String): DataFrame =
-      zoneOf(s, root, livePairsDf(s, root))
-
-    /** The zone map of a PAST version — time-travel reads prune
-      * against exactly the files that were live then. */
-    def zoneAt(s: SparkSession, root: String, seq: Long): DataFrame = {
-      import s.implicits._
-      zoneOf(s, root, livePairsAt(s, root, seq)
-        .toDF("inc_id", "zbucket"))
-    }
-
-    private def zoneOf(s: SparkSession, root: String,
-        pairs: DataFrame): DataFrame =
-      s.read.parquet(zonePath(root))
-        .join(broadcast(pairs), Seq("inc_id", "zbucket"))
-        .groupBy(col("inc_id"), col("zbucket"))
-        .agg(max(col("n")).as("n"),
-          min(col("u_lo")).as("u_lo"), max(col("u_hi")).as("u_hi"),
-          min(col("t_lo")).as("t_lo"), max(col("t_hi")).as("t_hi"),
-          min(col("v_lo")).as("v_lo"), max(col("v_hi")).as("v_hi"))
-
-    /** Merge-on-read bloom bit table for live files (distinct =
-      * the replay defense — bits are set-valued). */
-    def bloom(s: SparkSession, root: String): DataFrame =
-      bloomMatching(s, root, lit(true))
-
-    /** Bloom rows matching a probe predicate. The filter sits BELOW
-      * the replay-dedup distinct (bits are set-valued, so filtering
-      * first is equivalent) and pushes into the parquet scan — a
-      * point probe reads only its own bits from the log, never the
-      * full files × m bit table. */
-    def bloomMatching(s: SparkSession, root: String,
-        pred: org.apache.spark.sql.Column): DataFrame =
-      s.read.parquet(bloomPath(root))
-        .filter(pred)
-        .join(broadcast(livePairsDf(s, root)), Seq("inc_id", "zbucket"))
-        .select(col("inc_id"), col("zbucket"), col("r"), col("bit"))
-        .distinct()
-
-    // ───────────────────── merge-on-read deletion vectors
-    // Two logs share one lifecycle (append → live-gate by ledger →
-    // fold at vacuum, swap-repair from the read path): the KEYED log
-    // (`index_dv`: file, erased user_id — an erase prunes to the
-    // files holding the key) and the POSITIONAL log (`index_dvpos`:
-    // file, part-file name, row index — a predicate delete marks
-    // exact row positions, the Delta/Iceberg positional-delete shape).
-    private[graft] def hasDv(root: String): Boolean =
-      hasLog(dvPath(root))
-    private[graft] def hasDvPos(root: String): Boolean =
-      hasLog(dvPosPath(root))
-    private def hasLog(dir: String): Boolean = {
-      repairLogSwap(dir)
-      java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir))
-    }
-
-    private def logFoldPath(dir: String): java.nio.file.Path =
-      java.nio.file.Paths.get(dir + ".fold")
-    private def logTrashPath(dir: String): java.nio.file.Path =
-      java.nio.file.Paths.get(dir + ".trash")
-
-    /** Crash repair for [[foldLog]]'s one exposed window: the old
-      * dv dir was renamed away but the folded replacement not yet
-      * renamed in. Losing dv rows would RESURRECT erased rows, so the
-      * swap is rename-only (atomic on one filesystem) and this repair
-      * completes it from the _SUCCESS-complete fold dir. Two
-      * Files.exists probes on the common path — called from [[hasDv]]
-      * so every reader self-heals. Concurrent healers race benignly:
-      * the loser's move fails with source-gone / destination-exists,
-      * which MEANS another reader completed the heal — swallowed, the
-      * read proceeds against the healed dir. Leftover crash debris is
-      * also cleared here (not only at the next destroying vacuum,
-      * which may never come): a `.trash` from the fold-to-empty
-      * window (dv renamed away, nothing to rename in, crash before
-      * the trash delete — [[foldLog]] early-returns on the missing
-      * dv dir forever) and a `.trash` surviving a completed swap. A
-      * _SUCCESS-less `.fold` NEXT TO a live dv dir is deliberately
-      * NOT touched: it is indistinguishable from a fold write in
-      * flight, and the next [[foldLog]] clears it safely. */
-    private def repairLogSwap(dir: String): Unit = {
-      val dv = java.nio.file.Paths.get(dir)
-      val fold = logFoldPath(dir)
-      val trash = logTrashPath(dir)
-      val foldComplete =
-        java.nio.file.Files.exists(fold.resolve("_SUCCESS"))
-      if (!java.nio.file.Files.exists(dv) && foldComplete)
-        try java.nio.file.Files.move(fold, dv,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch {
-          case _: java.nio.file.NoSuchFileException => ()
-          case _: java.nio.file.FileAlreadyExistsException => ()
-          case _: java.nio.file.DirectoryNotEmptyException => ()
-        }
-      // trash is dead bytes the moment it exists (the old dv dir was
-      // renamed away only after its replacement was durably written,
-      // or the fold was to-empty); deleting it races only other
-      // deleters, which deleteRecursively tolerates
-      if (java.nio.file.Files.exists(trash) &&
-          !(java.nio.file.Files.exists(fold) && !foldComplete))
-        deleteRecursively(trash)
-    }
-
-    /** Vacuum-time fold of the deletion-vector log: drop vectors
-      * whose target file this vacuum DESTROYED — every version that
-      * could read them is now below the retention horizon, so they
-      * are dead weight that would otherwise accumulate forever (the
-      * dv scan is O(rows in the log)). Vectors targeting surviving
-      * dead files stay: the CDC diff of versions above the horizon
-      * still applies them ([[dvRowsAt]]). Crash-safe in rename steps:
-      * write fold dir → rename dv away → rename fold in → delete
-      * trash; the only exposed window is healed by [[repairLogSwap]].
-      * Like vacuum itself, schedule one per root — a reader planning
-      * a scan of the dv dir mid-swap can fail and retry, exactly as
-      * with vacuum's data-file deletes. */
-    private def foldLog(s: SparkSession, dir: String,
-        destroyed: Set[(String, Int)]): Unit = {
-      if (!hasLog(dir)) return
-      val dvDir = java.nio.file.Paths.get(dir)
-      val all = s.read.parquet(dir)
-      // the destroyed set is driver-side and vacuum-sized, so the
-      // keep/drop test is a plain codegen'd predicate — no join — and
-      // ONE aggregation pass censuses both counts (total and dropped)
-      val isDestroyed = concat_ws("#", col("inc_id"), col("zbucket"))
-        .isin(destroyed.toSeq.sorted
-          .map { case (g, b) => s"$g#$b" }: _*)
-      val kept = all.filter(!isDestroyed)
-      val census = all.agg(count(lit(1)).as("total"),
-        sum(when(isDestroyed, 1L).otherwise(0L)).as("dropped")).head()
-      val dropped = if (census.isNullAt(1)) 0L else census.getLong(1)
-      if (dropped == 0L) return // no vector targeted a destroyed file
-      val keptN = census.getLong(0) - dropped
-      val fold = logFoldPath(dir)
-      val trash = logTrashPath(dir)
-      // leftovers from an interrupted earlier fold (fold dir already
-      // consumed or abandoned, trash never deleted) clear first
-      deleteRecursively(fold)
-      deleteRecursively(trash)
-      if (keptN > 0) kept.write.mode("overwrite").parquet(fold.toString)
-      java.nio.file.Files.move(dvDir, trash,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      if (keptN > 0)
-        java.nio.file.Files.move(fold, dvDir,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      deleteRecursively(trash)
-    }
-
-    private def deleteRecursively(p: java.nio.file.Path): Unit =
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        // tolerates a concurrent deleter (reader-side trash cleanup
-        // racing the folder's own): a walk over a tree being deleted
-        // under us throws mid-iteration — the other deleter finishes
-        // the job, so the race is swallowed, not surfaced
-        try {
-          val stream = java.nio.file.Files.walk(p)
-          try stream.sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-          finally stream.close()
-        } catch {
-          case _: java.nio.file.NoSuchFileException => ()
-          case e: java.io.UncheckedIOException
-            if e.getCause.isInstanceOf[java.nio.file.NoSuchFileException]
-            => ()
-          case _: java.nio.file.DirectoryNotEmptyException => ()
-        }
-      }
-
-    /** MERGE-ON-READ privacy erase — the deletion-vector twin of
-      * [[erase]] (the Delta/Iceberg MoR design, public knowledge):
-      * instead of rewriting every file that may hold the key, publish
-      * the key as deletion-vector rows against exactly those files
-      * and let reads anti-join them. An erase is O(index) — not one
-      * data byte moves (pinned in ScanPruningSpec by fingerprinting
-      * every live part-file) — at the price of a broadcast anti-join
-      * per read until the next compaction folds the vectors into
-      * rewritten files. Visibility is still commit-gated: DV rows
-      * carry their erase id and [[dv]] shows only ledgered ids, so a
-      * crash between the DV append and the manifest commit leaves the
-      * erase invisible and the retry's duplicate rows collapse under
-      * the read-side distinct. Privacy caveat, documented: the bytes
-      * remain in the live files (and zone `n` keeps counting them)
-      * until compaction rewrites them and [[vacuum]] destroys the
-      * retired copies — eraseDv + compact + vacuum is the complete
-      * deletion. */
-    def eraseDv(s: SparkSession, root: String, userId: Long,
-        eraseId: String): Boolean =
-      optimistically(eraseId) {
-        if (absorbedIds(s, root).contains(eraseId)) false
-        else {
-          val touched = pointSurvivors(s, root, userId)
-            .select(col("inc_id"), col("zbucket")).collect()
-            .map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
-          if (touched.nonEmpty) {
-            import s.implicits._
-            graft.storage.AstarteStore.appendAtomic(
-              touched.map { case (g, b) => (g, b, userId, eraseId) }
-                .toDF("inc_id", "zbucket", "user_id", "erase_id"),
-              dvPath(root))
-          }
-          // ledger-only commit — the touched files STAY live; their
-          // vectors ride along on every read. requireLive closes the
-          // race against a rewrite retiring the touched files between
-          // the plan above and this commit: vectors born against dead
-          // files would be invisible to [[dv]] (silently losing the
-          // erasure), so the commit conflicts and the retry replans
-          // against the fresh live set — its superseded dv rows
-          // target dead files and fall out of every read (and the
-          // next vacuum's fold)
-          commitNext(root, eraseId, Nil, Nil, requireLive = touched)
-        }
-      }
-
-    /** MERGE-ON-READ predicate DELETE — the positional-vector twin of
-      * [[deleteWhere]] (the Delta/Iceberg positional-delete design,
-      * public knowledge): instead of rewriting the files holding a
-      * match, mark the matching ROW POSITIONS (part-file name + row
-      * index) in the positional log and let reads anti-join them.
-      * Not one data byte moves; zone + type stats prune the marking
-      * scan exactly like the copy-on-write path; compaction later
-      * folds the positions into rewritten files and [[vacuum]] folds
-      * the log. Same race guard as [[eraseDv]]: requireLive conflicts
-      * the commit when a racing rewrite retired a marked file, so a
-      * confirmed delete is never silently lost. Crash contract:
-      * vectors are invisible until the manifest commit lands (ids
-      * gate through the ledger), and a retry's duplicate log rows
-      * collapse under the read-side distinct. */
-    def deleteWhereDv(s: SparkSession, root: String, pred: Column,
-        deleteId: String): Boolean =
-      optimistically(deleteId) {
-        if (ledgerRowOf(root, deleteId).isDefined) false
-        else {
-          val cand = skipCandidates(s, root, pred)
-          if (cand.isEmpty) commitNext(root, deleteId, Nil, Nil)
-          else {
-            // the one data-sized artifact is the log write itself and
-            // it stays distributed end to end
-            val matched = readPairsTaggedPos(s, root, cand)
-              .filter(pred)
-              .select(col("inc_id"), col("zbucket"),
-                col("__fname").as("fname"), col("__ridx").as("row_idx"))
-              .withColumn("delete_id", lit(deleteId))
-            graft.storage.AstarteStore.appendAtomic(
-              matched, dvPosPath(root))
-            // touched pairs from the just-written log slice — an
-            // index read, never a second data scan
-            val touched = s.read.parquet(dvPosPath(root))
-              .filter(col("delete_id") === deleteId)
-              .select(col("inc_id"), col("zbucket")).distinct().collect()
-              .map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
-            commitNext(root, deleteId, Nil, Nil, requireLive = touched)
-          }
-        }
-      }
-
-    /** The live deletion-vector rows: (file, deleted key), ledgered
-      * ids only, replay-deduped. Control-plane sized — erased keys ×
-      * files that held them — so reads broadcast it. */
-    def dv(s: SparkSession, root: String): DataFrame = {
-      import s.implicits._
-      if (!hasDv(root))
-        return Seq.empty[(String, Int, Long)]
-          .toDF("inc_id", "zbucket", "user_id")
-      val ledger = absorbedIds(s, root).toSeq.sorted.toDF("erase_id")
-      s.read.parquet(dvPath(root))
-        .join(broadcast(ledger), Seq("erase_id"))
-        .join(broadcast(livePairsDf(s, root)), Seq("inc_id", "zbucket"))
-        .select(col("inc_id"), col("zbucket"), col("user_id"))
-        .distinct()
-    }
-
-    /** Driver-materialization cap for the live vector set: above this
-      * many (file, key) rows the memoized collect-and-broadcast is
-      * skipped and reads keep the distributed anti-join — a tenant
-      * bulk-erasing 10⁶ users before any compaction must not put
-      * every vector row on the driver. Overridable for soak runs. */
-    private def DvCollectCap: Int =
-      sys.props.get("graft.dv.collectCap").map(_.toInt).getOrElse(100000)
-
-    /** [[dv]] collected, memoized per MANIFEST VERSION: the live
-      * vector set only changes when a commit lands (an erase adds
-      * rows, a rewrite retires the files they target), so one
-      * control-plane collect per version serves every read at that
-      * version. The payoff is the fast path it unlocks — once a
-      * compaction folds the vectors in, this is EMPTY and reads drop
-      * the per-generation anti-join entirely, instead of paying it
-      * forever because a dv directory exists on disk. Memo value:
-      * (version, per-key rows or None above [[DvCollectCap]], the
-      * DV-TOUCHED file pairs — always control-plane sized, erased
-      * keys never bound the pair count). LRU-bounded so retired
-      * roots age out instead of pinning driver memory forever. */
-    private val dvLiveCache = new graft.core.BoundedMemo[
-      String, (Long, Option[Seq[(String, Int, Long)]], Seq[(String, Int)])](
-      64, "fx.dvLive")
-
-    private def dvLiveState(s: SparkSession, root: String)
-        : (Option[Seq[(String, Int, Long)]], Seq[(String, Int)]) = {
-      if (!hasDv(root)) return (Some(Nil), Nil)
-      val seq = maxCommitSeq(root)
-      dvLiveCache.get(root) match {
-        case Some((v, rowsOpt, touched)) if v == seq => (rowsOpt, touched)
-        case _ =>
-          val df = dv(s, root)
-          val cap = DvCollectCap
-          // one early-stopping job decides collect-vs-distributed
-          val head = df.limit(cap + 1).collect()
-          val (rowsOpt, touched) =
-            if (head.length <= cap) {
-              val rows = head
-                .map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
-                .toSeq.sorted
-              (Some(rows), rows.map { case (g, b, _) => (g, b) }.distinct)
-            } else {
-              // over-cap: only the touched PAIRS come to the driver
-              // (files an erase pruned to — control-plane sized)
-              (None, df.select(col("inc_id"), col("zbucket")).distinct()
-                .collect().map(r => (r.getString(0), r.getInt(1)))
-                .toSeq.sorted)
-            }
-          dvLiveCache.put(root, (seq, rowsOpt, touched))
-          (rowsOpt, touched)
-      }
-    }
-
-    /** Entry counts of EVERY named per-root control-plane memo in the
-      * process (the store's own plus every query pack's root caches,
-      * via the [[graft.core.BoundedMemo]] registry) — exposed so
-      * soaks can pin that cycling many roots never grows the driver
-      * footprint past the LRU bounds. */
-    private[graft] def memoSizes: Map[String, Int] =
-      graft.core.BoundedMemo.sizes
-
-    /** The live vector rows when small enough to broadcast from the
-      * driver; None above [[DvCollectCap]] — callers then anti-join
-      * the distributed [[dv]] frame instead. */
-    private[graft] def dvLiveRows(s: SparkSession,
-        root: String): Option[Seq[(String, Int, Long)]] =
-      dvLiveState(s, root)._1
-
-    /** The live files any vector targets — keyed OR positional —
-      * always driver-safe (the metadata-stats split needs the FILE
-      * set, never the keys/positions). */
-    private[graft] def dvTouchedPairs(s: SparkSession,
-        root: String): Seq[(String, Int)] =
-      (dvLiveState(s, root)._2 ++ posDvLiveState(s, root)._2)
-        .distinct.sorted
-
-    /** The live POSITIONAL deletion-vector rows: (file, part-file
-      * name, row index), ledgered ids only, replay-deduped — the
-      * positional-delete twin of [[dv]]. Data-sized in the worst case
-      * (a predicate can mark many rows), so reads broadcast it only
-      * under [[DvCollectCap]] and fall back to a distributed
-      * anti-join above it. */
-    def dvPos(s: SparkSession, root: String): DataFrame = {
-      import s.implicits._
-      if (!hasDvPos(root))
-        return Seq.empty[(String, Int, String, Long)]
-          .toDF("inc_id", "zbucket", "fname", "row_idx")
-      val ledger = absorbedIds(s, root).toSeq.sorted.toDF("delete_id")
-      s.read.parquet(dvPosPath(root))
-        .join(broadcast(ledger), Seq("delete_id"))
-        .join(broadcast(livePairsDf(s, root)), Seq("inc_id", "zbucket"))
-        .select(col("inc_id"), col("zbucket"), col("fname"),
-          col("row_idx"))
-        .distinct()
-    }
-
-    /** [[dvPos]] collected and memoized per manifest version —
-      * structure and contract identical to [[dvLiveState]]: value is
-      * (version, per-position rows or None above [[DvCollectCap]],
-      * the touched file pairs, always control-plane sized). */
-    private val posDvLiveCache = new graft.core.BoundedMemo[
-      String, (Long, Option[Seq[(String, Int, String, Long)]],
-        Seq[(String, Int)])](64, "fx.dvPosLive")
-
-    private def posDvLiveState(s: SparkSession, root: String)
-        : (Option[Seq[(String, Int, String, Long)]], Seq[(String, Int)]) = {
-      if (!hasDvPos(root)) return (Some(Nil), Nil)
-      val seq = maxCommitSeq(root)
-      posDvLiveCache.get(root) match {
-        case Some((v, rowsOpt, touched)) if v == seq => (rowsOpt, touched)
-        case _ =>
-          val df = dvPos(s, root)
-          val cap = DvCollectCap
-          val head = df.limit(cap + 1).collect()
-          val (rowsOpt, touched) =
-            if (head.length <= cap) {
-              val rows = head.map(r => (r.getString(0), r.getInt(1),
-                r.getString(2), r.getLong(3))).toSeq.sorted
-              (Some(rows),
-                rows.map { case (g, b, _, _) => (g, b) }.distinct)
-            } else {
-              (None, df.select(col("inc_id"), col("zbucket")).distinct()
-                .collect().map(r => (r.getString(0), r.getInt(1)))
-                .toSeq.sorted)
-            }
-          posDvLiveCache.put(root, (seq, rowsOpt, touched))
-          (rowsOpt, touched)
-      }
-    }
-
-    /** Read a set of live logical files with their deletion vectors
-      * applied. The no-DV fast path is the plain multi-path parquet
-      * scan; with vectors present, per-generation reads keep the
-      * (inc_id, zbucket) file identity the PER-FILE anti-join needs
-      * (generation count is control-plane sized, so the union is a
-      * handful of scans), and the DV side broadcasts. */
-    private[graft] def readPairs(s: SparkSession, root: String,
-        pairs: Seq[(String, Int)]): DataFrame = {
-      // Evolved generations unify under the PERSISTED union schema
-      // (older files null-fill the columns they predate): plan-time
-      // schema comes from the control-plane schema log, so the read
-      // opens zero parquet footers beyond the pruned data files —
-      // `mergeSchema` (O(files) footer reads at plan time) remains
-      // only as the fallback for roots populated outside the store's
-      // own write path.
-      // gate on the LIVE vector set at the current version, not on a
-      // dv directory existing: once compaction folds every vector
-      // into rewritten files, reads recover the plain multi-path scan
-      // instead of paying the per-generation anti-join forever
-      import s.implicits._
-      val keyOpt = dvLiveRows(s, root)
-      val posOpt = posDvLiveState(s, root)._1
-      val keyEmpty = keyOpt.exists(_.isEmpty)
-      val posEmpty = posOpt.exists(_.isEmpty)
-      if (keyEmpty && posEmpty) {
-        val dirs = pairs.map { case (g, b) => bucketDir(root, g, b) }
-        mergedSchemaFor(s, root, pairs.map(_._1)) match {
-          case Some(sch) => s.read.schema(sch).parquet(dirs: _*)
-          case None => s.read.option("mergeSchema", "true").parquet(dirs: _*)
-        }
-      } else {
-        // positional vectors need the (part-file, row-index) identity
-        // from the scan's metadata struct — only paid when they live
-        var df =
-          if (posEmpty) readPairsTagged(s, root, pairs)
-          else readPairsTaggedPos(s, root, pairs)
-        posOpt match {
-          case Some(rows) if rows.isEmpty => ()
-          case Some(rows) =>
-            df = df.join(broadcast(
-                rows.toDF("inc_id", "zbucket", "__fname", "__ridx")),
-              Seq("inc_id", "zbucket", "__fname", "__ridx"), "left_anti")
-          case None =>
-            df = df.join(dvPos(s, root)
-                .withColumnRenamed("fname", "__fname")
-                .withColumnRenamed("row_idx", "__ridx"),
-              Seq("inc_id", "zbucket", "__fname", "__ridx"), "left_anti")
-        }
-        if (!posEmpty) df = df.drop("__fname", "__ridx")
-        keyOpt match {
-          case Some(rows) if rows.isEmpty => df
-          case Some(rows) =>
-            df.join(broadcast(rows.toDF("inc_id", "zbucket", "user_id")),
-              Seq("inc_id", "zbucket", "user_id"), "left_anti")
-          case None =>
-            // over-[[DvCollectCap]] backlog: the vector set stays
-            // distributed and AQE picks the join strategy — correct at
-            // any vector count, never unbounded driver memory
-            df.join(dv(s, root), Seq("inc_id", "zbucket", "user_id"),
-              "left_anti")
-        }
-      }
-    }
-
-    /** The raw multi-generation read KEEPING the (inc_id, zbucket)
-      * file identity and applying NO deletion vectors — the shared
-      * base of the vector-applying read and the change-data-feed's
-      * version-pinned legs (which must apply vectors AS OF a given
-      * version, not the current ones). */
-    private def readPairsTagged(s: SparkSession, root: String,
-        pairs: Seq[(String, Int)]): DataFrame =
-      pairs.groupBy(_._1).toSeq.sortBy(_._1).map { case (g, ps) =>
-        // basePath resurrects the zbucket partition column a direct
-        // leaf-dir read would drop — the anti-join needs the full
-        // (inc_id, zbucket) file identity
-        s.read.option("basePath", genPath(root, g)).parquet(
-            ps.map { case (_, b) => bucketDir(root, g, b) }: _*)
-          .withColumn("inc_id", lit(g))
-          .withColumn("zbucket", col("zbucket").cast("int"))
-      }.reduce(_.unionByName(_, allowMissingColumns = true))
-
-    /** [[readPairsTagged]] plus the POSITIONAL file identity: the
-      * part-file name and row index from the parquet scan's metadata
-      * struct (`_metadata.file_path` / `row_index` — resolvable only
-      * on the scan itself, so both derive per-generation BEFORE the
-      * union). Part-file names are write-job-unique, so
-      * (inc_id, zbucket, __fname, __ridx) addresses one physical row
-      * whatever the bucket's part-file fan-out. */
-    private def readPairsTaggedPos(s: SparkSession, root: String,
-        pairs: Seq[(String, Int)]): DataFrame =
-      pairs.groupBy(_._1).toSeq.sortBy(_._1).map { case (g, ps) =>
-        s.read.option("basePath", genPath(root, g)).parquet(
-            ps.map { case (_, b) => bucketDir(root, g, b) }: _*)
-          .withColumn("__fname",
-            element_at(split(col("_metadata.file_path"), "/"), -1))
-          .withColumn("__ridx", col("_metadata.row_index"))
-          .withColumn("inc_id", lit(g))
-          .withColumn("zbucket", col("zbucket").cast("int"))
-      }.reduce(_.unionByName(_, allowMissingColumns = true))
-
-    /** Live files that contain at least one row of `eventType` — the
-      * type-filtered read's survivor set. The equality filter sits
-      * below the replay-dedup distinct and pushes into the type-log
-      * parquet scan (a LITERAL predicate, like the point probe's
-      * bloom bits), so the scan reads only the probed type's rows. */
-    def typesMatching(s: SparkSession, root: String,
-        eventType: String): DataFrame =
-      s.read.parquet(typesPath(root))
-        .filter(col("event_type") === eventType)
-        .join(broadcast(livePairsDf(s, root)), Seq("inc_id", "zbucket"))
-        .select(col("inc_id"), col("zbucket"))
-        .distinct()
-
-    // ───────────────────── metadata-only table stats
-    /** Table stats (row count + clustered-dimension min/max) served
-      * from METADATA — the metadata-only-query move of modern table
-      * formats: count/min/max fold over the live zone rows, zero data
-      * files opened (pinned in ScanPruningSpec via `inputFiles`). At
-      * 100 TB this answers "how big is the table, what range does it
-      * span" in O(index) instead of a full scan.
-      *
-      * Deletion vectors make raw zone stats STALE — zone `n` still
-      * counts merge-on-read-erased rows, and an erased key may have
-      * held the min or max — so the fold splits: files no vector
-      * targets stay metadata-served; the DV-TOUCHED files (a
-      * control-plane-sized set, exactly the files an erase pruned to)
-      * are re-read with vectors applied and folded exactly. count,
-      * min, and max all decompose over the file partition, so the
-      * combined answer is exact. Cost O(touched files) — never a
-      * table scan, and exactly zero data bytes on a vector-free
-      * table. */
-    def metaStats(s: SparkSession, root: String): DataFrame = {
-      val touched = dvTouchedPairs(s, root)
-      val touchedKeys = touched.map { case (g, b) => s"$g#$b" }
-      val metaPart = zone(s, root)
-        .filter(if (touchedKeys.isEmpty) lit(true)
-          else !concat_ws("#", col("inc_id"), col("zbucket"))
-            .isin(touchedKeys: _*))
-        .agg(sum(col("n")).as("n"),
-          min(col("u_lo")).as("u_lo"), max(col("u_hi")).as("u_hi"),
-          min(col("t_lo")).as("t_lo"), max(col("t_hi")).as("t_hi"),
-          min(col("v_lo")).as("v_lo"), max(col("v_hi")).as("v_hi"))
-      val parts =
-        if (touched.isEmpty) metaPart
-        else metaPart.unionByName(
-          readPairs(s, root, touched)
-            .withColumn("tsu", expr("ts div 1000"))
-            .agg(count(lit(1)).as("n"),
-              min(col("user_id")).as("u_lo"),
-              max(col("user_id")).as("u_hi"),
-              min(col("tsu")).as("t_lo"), max(col("tsu")).as("t_hi"),
-              min(col("value")).as("v_lo"), max(col("value")).as("v_hi")))
-      // the final fold ignores an all-touched/all-untouched null leg;
-      // the count coalesces so an EMPTY (or fully-erased) table
-      // answers n=0 instead of null — callers read it with getLong
-      parts.agg(coalesce(sum(col("n")), lit(0L)).as("n"),
-        min(col("u_lo")).as("u_lo"), max(col("u_hi")).as("u_hi"),
-        min(col("t_lo")).as("t_lo"), max(col("t_hi")).as("t_hi"),
-        min(col("v_lo")).as("v_lo"), max(col("v_hi")).as("v_hi"))
-    }
-
-    /** GROUP BY event_type census served from METADATA: the per-file
-      * type counts folded over live files (max per key collapses
-      * crash-window replays), zero data files opened on a vector-free
-      * table — the group-by twin of [[metaStats]]. Deletion vectors
-      * make the logged counts stale, so the fold splits exactly like
-      * metaStats: untouched files stay metadata-served, DV-touched
-      * files re-read with vectors applied. */
-    def metaTypeCensus(s: SparkSession, root: String): DataFrame = {
-      val touched = dvTouchedPairs(s, root)
-      val touchedKeys = touched.map { case (g, b) => s"$g#$b" }
-      val metaPart = s.read.parquet(typesPath(root))
-        .join(broadcast(livePairsDf(s, root)), Seq("inc_id", "zbucket"))
-        .groupBy(col("inc_id"), col("zbucket"), col("event_type"))
-        .agg(max(col("n")).as("n"))
-        .filter(if (touchedKeys.isEmpty) lit(true)
-          else !concat_ws("#", col("inc_id"), col("zbucket"))
-            .isin(touchedKeys: _*))
-        .select(col("event_type"), col("n"))
-      val parts =
-        if (touched.isEmpty) metaPart
-        else metaPart.unionByName(
-          readPairs(s, root, touched)
-            .groupBy(col("event_type")).agg(count(lit(1)).as("n")))
-      parts.groupBy(col("event_type")).agg(sum(col("n")).as("n"))
-    }
-
-    /** The commit history as relational rows — DESCRIBE HISTORY for
-      * this table format: one row per manifest version with the
-      * generation it published, its KIND derived from the commit's
-      * own shape (append = live files and nothing retired; rewrite =
-      * retired inputs in the same atomic swap; ledger = bookkeeping
-      * only, e.g. a merge-on-read erase or a no-op replay), and the
-      * file add/remove counts. Control-plane sized: the manifest is
-      * a few rows per commit however big the table. */
-    def history(s: SparkSession, root: String): DataFrame = {
-      import s.implicits._
-      readCommits(root).groupBy(_.mseq).toSeq.sortBy(_._1)
-        .map { case (seq, rows) =>
-          val added = rows.count(_.status == "live")
-          val removed = rows.count(_.status == "dead")
-          val kind =
-            if (removed > 0) "rewrite"
-            else if (added > 0) "append"
-            else "ledger"
-          (seq, rows.head.gen, kind, added.toLong, removed.toLong)
-        }
-        .toDF("mseq", "gen", "kind", "files_added", "files_removed")
-    }
-
-    /** AUDIT of the "maint" (row-preserving) declarations — the
-      * honesty check for the trust [[changeDataFeed]] places in the
-      * committer: CDC skips maint commits UNREAD, so a buggy or
-      * malicious rewrite declared maint would silently vanish from
-      * the feed. This recomputes the row-preservation claim from the
-      * zone map's LOGGED per-file counts (index rows survive death
-      * and vacuum) — zero data reads. Per maint commit, published
-      * rows (zone n over its live files) vs retired rows (over its
-      * dead files): a row-preserving rewrite must publish exactly
-      * what it retired MINUS the rows it declared folded away by
-      * deletion vectors — the commit logs that count as its own
-      * independent measurement (a semi-join census of the dv-matched
-      * input rows, [[countFoldedRows]]), so the audit EQUATES:
-      * `pub == ret − folded`. A rewrite that folds vectors AND drops
-      * one extra row is flagged — the two sides of the equation come
-      * from different jobs. Commits without a logged count (pre-
-      * existing history) fall back to the one-sided bound: flagged
-      * when published > retired, or published ≠ retired with no
-      * vector (as of the commit) targeting the retired files.
-      * Commits at or below the retention horizon are SKIPPED —
-      * vacuum folded their dv evidence, so audit before vacuuming
-      * past a commit. Returns (version, gen, published, retired,
-      * folded [−1 = unlogged], ok) per audited maint commit. */
-    def auditMaint(s: SparkSession, root: String)
-        : Seq[(Long, String, Long, Long, Long, Boolean)] = {
-      import s.implicits._
-      // commits at or below the retention horizon are unauditable by
-      // design: vacuum folded the dv log, so an honest DV-folding
-      // compaction down there is indistinguishable from a lie — audit
-      // maintenance BEFORE vacuuming past it
-      val horizon = retentionHorizon(root)
-      val maints = readCommits(root).groupBy(_.mseq).toSeq.sortBy(_._1)
-        .filter { case (seq, rows) => seq > horizon &&
-          rows.exists(r => r.zbucket == -1 && r.status == "maint") }
-      if (maints.isEmpty) return Nil
-      val allPairs = maints.flatMap(_._2).collect {
-        case ManifestRow(g, b, _, _) if b >= 0 => (g, b)
-      }.distinct
-      val n: Map[(String, Int), Long] =
-        if (allPairs.isEmpty) Map.empty
-        else zoneOf(s, root, allPairs.toDF("inc_id", "zbucket"))
-          .select(col("inc_id"), col("zbucket"), col("n")).collect()
-          .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
-      maints.map { case (seq, rows) =>
-        val gen = rows.find(_.zbucket == -1).map(_.gen)
-          .getOrElse(rows.head.gen)
-        val pub = rows.collect {
-          case ManifestRow(g, b, "live", _) if b >= 0 =>
-            n.getOrElse((g, b), 0L) }.sum
-        val retired = rows.collect {
-          case ManifestRow(g, b, "dead", _) => (g, b) }.toSet
-        val ret = retired.iterator.map(p => n.getOrElse(p, 0L)).sum
-        val folded = rows.collectFirst {
-          case ManifestRow(_, -2, st, _) if st.startsWith("folded:") =>
-            st.stripPrefix("folded:").toLong
-        }.getOrElse(-1L)
-        val ok =
-          if (folded >= 0) pub == ret - folded
-          else {
-            val dvTouchesRetired = retired.nonEmpty && hasDv(root) &&
-              dvRowsAt(s, root, seq - 1)
-                .select(col("inc_id"), col("zbucket")).distinct().collect()
-                .exists(r => retired.contains((r.getString(0), r.getInt(1))))
-            pub == ret || (pub < ret && dvTouchesRetired)
-          }
-        (seq, gen, pub, ret, folded, ok)
-      }
-    }
-
-    // ───────────────────── the append change feed
-    /** Commits after `fromSeq` that appended data without retiring
-      * any file — the DATA-CHANGE appends of the change feed (the
-      * corpus build and every absorb). Rewrite commits (compaction,
-      * copy-on-write erase/update) retire their inputs in the same
-      * atomic append and are maintenance: the rows they publish were
-      * already emitted by the append that first carried them — a
-      * feed that re-emitted them would double-count every compaction
-      * (the `dataChange=false` discipline of public table formats,
-      * derived here from the commit's own shape instead of a flag).
-      * Ledger-only commits (MoR erases, no-op replays) carry no live
-      * files and emit nothing. Returns (commit seq, generation,
-      * buckets) in commit order, plus the snapshot's head seq — the
-      * caller's next cursor, taken from the SAME directory listing so
-      * a commit landing mid-read is never skipped. */
-    private[graft] def appendsSince(root: String,
-        fromSeq: Long): (Long, Seq[(Long, String, Seq[Int])]) = {
-      // suffix read only: a poll parses the commits PAST the cursor,
-      // never the table's whole history — tailing stays O(new
-      // commits) however old the table (the checkpoint discipline's
-      // feed-side twin; commit kind needs no folded state, it derives
-      // from each commit's own rows)
-      val commits = readCommitsAfter(root, fromSeq)
-      val head = commits.iterator.map(_.mseq).maxOption.getOrElse(fromSeq)
-      val apps = commits.groupBy(_.mseq).toSeq.sortBy(_._1)
-        .collect { case (seq, rows) if
-            !rows.exists(_.status == "dead") &&
-            rows.exists(_.status == "live") =>
-          (seq, rows.head.gen,
-            rows.collect { case ManifestRow(_, b, "live", _) => b }.sorted)
-        }
-      (head, apps)
-    }
-
-    /** The change-feed read: every row APPENDED by commits in
-      * (fromSeq, head] — reads only those generations' files, so
-      * tailing a 100 TB table costs O(new data) per poll, never a
-      * scan. Rows are emitted AS APPENDED (deletion vectors are
-      * read-time state; deletions surface through the version diff
-      * instead). History stays addressable because the manifest is
-      * append-only and dead generations' bytes survive until
-      * [[vacuum]] — the retention horizon bounds how far back a new
-      * consumer may start, exactly the log-retention contract of
-      * public table formats. */
-    def changeFeed(s: SparkSession, root: String,
-        fromSeq: Long): DataFrame =
-      changeFeedState(s, root, fromSeq)._2
-
-    /** One feed poll as an atomic pair: (next cursor, appended rows).
-      * Both come from a SINGLE manifest snapshot — a consumer that
-      * read the rows and then re-listed for its cursor would skip any
-      * commit that landed between the two listings. */
-    def changeFeedState(s: SparkSession, root: String,
-        fromSeq: Long): (Long, DataFrame) = {
-      val (head, apps) = appendsSince(root, fromSeq)
-      assertAppsReadable(root, fromSeq, apps)
-      (head, feedFrameOf(s, root, apps))
-    }
-
-    /** The rows appended by commits in (fromSeq, toSeq] — the REPLAY
-      * read of a pinned micro-batch range: a restarted consumer
-      * re-reading a recorded range gets byte-identical rows however
-      * many commits landed since. */
-    def changeFeedRange(s: SparkSession, root: String,
-        fromSeq: Long, toSeq: Long): DataFrame = {
-      val (_, apps) = appendsSince(root, fromSeq)
-      val inRange = apps.filter(_._1 <= toSeq)
-      assertAppsReadable(root, fromSeq, inRange)
-      feedFrameOf(s, root, inRange)
-    }
-
-    /** Deletion-vector rows AS OF manifest version `seq` — vectors of
-      * erase ids ledgered at or below it, unfiltered by the CURRENT
-      * live set (the change-data feed reads files that have since
-      * been retired). Control-plane sized like [[dv]]. */
-    private def dvRowsAt(s: SparkSession, root: String,
-        seq: Long): DataFrame = {
-      import s.implicits._
-      val empty = Seq.empty[(String, Int, Long)]
-        .toDF("inc_id", "zbucket", "user_id")
-      if (!hasDv(root)) return empty
-      val ids = headState(root).iterator
-        .filter(r => r.zbucket == -1 && r.mseq <= seq).map(_.gen)
-        .toSeq.sorted
-      if (ids.isEmpty) return empty
-      s.read.parquet(dvPath(root))
-        .filter(col("erase_id").isin(ids: _*))
-        .select(col("inc_id"), col("zbucket"), col("user_id"))
-        .distinct()
-    }
-
-    /** Positional-vector rows AS OF manifest version `seq` — the
-      * [[dvRowsAt]] twin over the positional log, columns pre-aliased
-      * to the tagged read's helper names. */
-    private def dvPosRowsAt(s: SparkSession, root: String,
-        seq: Long): DataFrame = {
-      import s.implicits._
-      val empty = Seq.empty[(String, Int, String, Long)]
-        .toDF("inc_id", "zbucket", "__fname", "__ridx")
-      if (!hasDvPos(root)) return empty
-      val ids = headState(root).iterator
-        .filter(r => r.zbucket == -1 && r.mseq <= seq).map(_.gen)
-        .toSeq.sorted
-      if (ids.isEmpty) return empty
-      s.read.parquet(dvPosPath(root))
-        .filter(col("delete_id").isin(ids: _*))
-        .select(col("inc_id"), col("zbucket"),
-          col("fname").as("__fname"), col("row_idx").as("__ridx"))
-        .distinct()
-    }
-
-    /** The CDC read: every row-level change in versions
-      * (fromSeq, toSeq], tagged `_change_type` (insert | delete) and
-      * `_commit_version` — the change-data-feed contract of public
-      * table formats, composing the append feed (inserts) with the
-      * deletion surfaces so one API maintains a downstream mirror.
-      * Per commit kind:
-      *   - append → its published rows, as inserts (O(new data));
-      *   - rewrite DECLARED row-preserving at commit time (the
-      *     "maint" ledger marker: compaction, layout migration) →
-      *     nothing, with zero files read;
-      *   - any other rewrite → the logical delta between retired and
-      *     published file sets, deletion vectors applied AS OF each
-      *     side's version (a copy-on-write erase diffs to its
-      *     deletes, an update to delete+insert). Cost O(files that
-      *     changed hands), bounded by the rewrite itself, never a
-      *     table diff;
-      *   - ledger-only → a merge-on-read erase deletes exactly its
-      *     vector's rows from the files it targeted, as they stood
-      *     before this version (earlier vectors applied); other
-      *     ledger commits emit nothing.
-      * History stays addressable until [[vacuum]] destroys retired
-      * bytes — the same retention horizon as the append feed. */
-    def changeDataFeed(s: SparkSession, root: String,
-        fromSeq: Long, toSeq: Long): DataFrame = {
-      // DELIBERATELY COARSE gate (unlike the append feed's exact
-      // per-file check): CDC legs read files on BOTH sides of
-      // rewrites and files MoR erases targeted as of earlier
-      // versions, so "which files does this range need" is itself a
-      // dv-log read per ledger commit — the cursor-vs-horizon test is
-      // the honest cheap bound, and it is exactly where vacuum's
-      // destruction is concentrated (files dead ≤ horizon)
-      assertInRetention(root, fromSeq)
-      // suffix read only — a CDC tail polling this per micro-batch
-      // parses the commits past its cursor, never the whole history
-      val bySeq = readCommitsAfter(root, fromSeq)
-        .filter(_.mseq <= toSeq)
-        .groupBy(_.mseq).toSeq.sortBy(_._1)
-      def untag(df: DataFrame): DataFrame =
-        df.drop("inc_id", "zbucket", "__fname", "__ridx")
-      def tag(df: DataFrame, ct: String, seq: Long): DataFrame =
-        df.withColumn("_change_type", lit(ct))
-          .withColumn("_commit_version", lit(seq))
-      // the file state AS OF version `seq`: both vector kinds of ids
-      // ledgered at or below it applied (positional joins only exist
-      // when that log does, so key-only roots pay nothing new)
-      def stateAt(pairs: Seq[(String, Int)], seq: Long): DataFrame = {
-        val df =
-          if (!hasDvPos(root)) readPairsTagged(s, root, pairs)
-          else readPairsTaggedPos(s, root, pairs)
-            .join(broadcast(dvPosRowsAt(s, root, seq)),
-              Seq("inc_id", "zbucket", "__fname", "__ridx"), "left_anti")
-        df.join(broadcast(dvRowsAt(s, root, seq)),
-          Seq("inc_id", "zbucket", "user_id"), "left_anti")
-      }
-      val legs = bySeq.flatMap { case (seq, rows) =>
-        val live = rows.collect {
-          case ManifestRow(g, b, "live", _) if b >= 0 => (g, b) }
-        val dead = rows.collect {
-          case ManifestRow(g, b, "dead", _) => (g, b) }
-        val isMaint = rows.exists(r =>
-          r.zbucket == -1 && r.status == "maint")
-        if (isMaint)
-          // the committer DECLARED the commit row-preserving
-          // (compaction, layout migration): nothing to emit and — the
-          // point of the marker — nothing to read; an undeclared
-          // rewrite still gets the honest file-pruned diff below.
-          // Checked FIRST so the declaration always wins: a maint
-          // commit that only ADDS files (no dead pairs) must not be
-          // emitted as inserts despite its append-like shape.
-          Nil
-        else if (dead.isEmpty && live.nonEmpty)
-          Seq(tag(untag(readPairsTagged(s, root, live)), "insert", seq))
-        else if (dead.nonEmpty) {
-          val before0 = untag(stateAt(dead, seq - 1))
-          val after0 =
-            if (live.isEmpty) before0.limit(0)
-            else untag(stateAt(live, seq))
-          // a rewrite across a schema evolution can retire and
-          // publish file sets with different columns; exceptAll is
-          // positional, so both legs align to the union (null-filled)
-          val (before, after) = aligned(before0, after0)
-          Seq(tag(before.exceptAll(after), "delete", seq),
-            tag(after.exceptAll(before), "insert", seq))
-        } else {
-          // ledger-only commit: a keyed MoR erase and/or a positional
-          // MoR delete — each deletes exactly its own vectors' rows
-          // from the files as they stood BEFORE this version (earlier
-          // vectors of both kinds applied); other ledger commits
-          // (retention markers, no-op deletes) emit nothing
-          val gen = rows.head.gen
-          val keyLeg =
-            if (!hasDv(root)) Nil
-            else {
-              val mine = s.read.parquet(dvPath(root))
-                .filter(col("erase_id") === gen)
-                .select(col("inc_id"), col("zbucket"), col("user_id"))
-                .distinct()
-              val touched = mine.select(col("inc_id"), col("zbucket"))
-                .distinct().collect()
-                .map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
-              if (touched.isEmpty) Nil
-              else Seq(tag(untag(stateAt(touched, seq - 1)
-                .join(broadcast(mine),
-                  Seq("inc_id", "zbucket", "user_id"), "left_semi")),
-                "delete", seq))
-            }
-          val posLeg =
-            if (!hasDvPos(root)) Nil
-            else {
-              val mine = s.read.parquet(dvPosPath(root))
-                .filter(col("delete_id") === gen)
-                .select(col("inc_id"), col("zbucket"),
-                  col("fname").as("__fname"),
-                  col("row_idx").as("__ridx"))
-                .distinct()
-              val touched = mine.select(col("inc_id"), col("zbucket"))
-                .distinct().collect()
-                .map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
-              if (touched.isEmpty) Nil
-              else Seq(tag(untag(readPairsTaggedPos(s, root, touched)
-                .join(broadcast(dvPosRowsAt(s, root, seq - 1)),
-                  Seq("inc_id", "zbucket", "__fname", "__ridx"),
-                  "left_anti")
-                .join(broadcast(dvRowsAt(s, root, seq - 1)),
-                  Seq("inc_id", "zbucket", "user_id"), "left_anti")
-                .join(broadcast(mine),
-                  Seq("inc_id", "zbucket", "__fname", "__ridx"),
-                  "left_semi")),
-                "delete", seq))
-            }
-          keyLeg ++ posLeg
-        }
-      }
-      if (legs.isEmpty)
-        tag(feedFrameOf(s, root, Nil), "none", -1L).limit(0)
-      else legs.reduce(_.unionByName(_, allowMissingColumns = true))
-    }
-
-    /** Project both frames onto the union of their columns (missing
-      * ones null-filled with the other side's type) so positional set
-      * operations are well-defined across a schema evolution. */
-    private def aligned(a: DataFrame, b: DataFrame): (DataFrame, DataFrame) = {
-      val types = (a.schema.fields ++ b.schema.fields)
-        .groupBy(_.name).map { case (n, fs) => n -> fs.head.dataType }
-      val names = (a.columns ++ b.columns).distinct.toSeq
-      def sel(df: DataFrame) = df.select(names.map(n =>
-        if (df.columns.contains(n)) col(n)
-        else lit(null).cast(types(n)).as(n)): _*)
-      (sel(a), sel(b))
-    }
-
-    private def feedFrameOf(s: SparkSession, root: String,
-        apps: Seq[(Long, String, Seq[Int])]): DataFrame = {
-      val dirs = apps.flatMap { case (_, g, bs) =>
-        bs.map(b => bucketDir(root, g, b))
-      }
-      if (dirs.isEmpty) {
-        // the canonical empty frame: with no appended generations in
-        // range there is no evolved column to know about, so the
-        // schema is exactly the canonical six — derived through the
-        // same name list the projection below uses
-        import org.apache.spark.sql.types._
-        val types = Map[String, DataType](
-          "event_id" -> LongType, "ts" -> LongType, "user_id" -> LongType,
-          "event_type" -> StringType, "value" -> DoubleType,
-          "props" -> StringType)
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(DataCols.map(c => StructField(c, types(c)))))
-      } else {
-        // schema-merged like every other multi-generation read: a
-        // fixed canonical projection would silently DROP an evolved
-        // column from the feed — a CDC consumer of an evolved table
-        // would lose the new column's data with no error. Canonical
-        // columns first, evolved extras after in name order (the
-        // dataColsOf discipline); generations predating a column
-        // null-fill it. The union schema comes from the persisted
-        // schema log (zero plan-time footer reads), mergeSchema only
-        // as the outside-writer fallback.
-        val df = mergedSchemaFor(s, root, apps.map(_._2)) match {
-          case Some(sch) => s.read.schema(sch).parquet(dirs: _*)
-          case None => s.read.option("mergeSchema", "true").parquet(dirs: _*)
-        }
-        df.select(dataColsOf(df).map(col): _*)
-      }
-    }
-  }
+  // ───────────────────────────── the per-SF fixture roots
+  // LRU-bounded like every per-root control-plane memo (an evicted
+  // sfDir simply rebuilds its root on the next touch)
+  private val roots =
+    new graft.core.BoundedMemo[String, String](64, "fx.roots")
+
+  private def rootFor(s: SparkSession, sfDir: String): String =
+    roots.getOrElseUpdate(sfDir)(buildRoot(s, sfDir))
+
+  /** A fresh root over the corpus slice of `events` — uncached, so a
+    * fixture that mutates it never changes what another observes. */
+  private[graft] def buildRoot(s: SparkSession, sfDir: String): String =
+    FileIndex.buildRootFrom(s, Tables.events(s, sfDir).filter(!incPredicate))
 
   /** The increment slice — the only corpus-table scan absorb makes. */
   private[graft] def incrementEvents(s: SparkSession, d: String): DataFrame =
@@ -2596,8 +44,8 @@ object ScanPruning extends QueryPack {
   /** Root with corpus built and the demo increment absorbed (ledger
     * makes the absorb a no-op after the first call). */
   private def readyRoot(s: SparkSession, d: String): String = {
-    val root = FileIndexStore.rootFor(s, d)
-    FileIndexStore.absorb(s, root, incrementEvents(s, d), "inc-1")
+    val root = rootFor(s, d)
+    FileIndex.absorb(s, root, incrementEvents(s, d), "inc-1")
     root
   }
 
@@ -2623,10 +71,10 @@ object ScanPruning extends QueryPack {
     * copy-on-write (corpus build → increment absorb → keyed update). */
   private def updatedRoot(s: SparkSession, d: String): String =
     updatedRoots.getOrElseUpdate(d)( {
-      val root = FileIndexStore.buildRoot(s, d)
-      FileIndexStore.absorb(s, root, incrementEvents(s, d), "inc-1")
-      FileIndexStore.updateUser(s, root,
-        FileIndexStore.layoutOf(s, root).probe, UpdatedValue, "upd-1")
+      val root = buildRoot(s, d)
+      FileIndex.absorb(s, root, incrementEvents(s, d), "inc-1")
+      FileIndex.updateUser(s, root,
+        FileIndex.layoutOf(s, root).probe, UpdatedValue, "upd-1")
       root
     })
 
@@ -2641,10 +89,10 @@ object ScanPruning extends QueryPack {
     * the layout bounds are micros). */
   private def deletedWhereRoot(s: SparkSession, d: String): String =
     deletedWhereRoots.getOrElseUpdate(d)( {
-      val root = FileIndexStore.buildRoot(s, d)
-      FileIndexStore.absorb(s, root, incrementEvents(s, d), "inc-1")
-      val l = FileIndexStore.layoutOf(s, root)
-      FileIndexStore.deleteWhere(s, root,
+      val root = buildRoot(s, d)
+      FileIndex.absorb(s, root, incrementEvents(s, d), "inc-1")
+      val l = FileIndex.layoutOf(s, root)
+      FileIndex.deleteWhere(s, root,
         col("ts").between(l.tlo * 1000L, l.thi * 1000L + 999L) &&
           col("value") > 0.5,
         "delw-1")
@@ -2660,10 +108,10 @@ object ScanPruning extends QueryPack {
     * only, every data file byte-identical to the pre-delete state. */
   private def dvDeletedWhereRoot(s: SparkSession, d: String): String =
     dvDeletedWhereRoots.getOrElseUpdate(d)( {
-      val root = FileIndexStore.buildRoot(s, d)
-      FileIndexStore.absorb(s, root, incrementEvents(s, d), "inc-1")
-      val l = FileIndexStore.layoutOf(s, root)
-      FileIndexStore.deleteWhereDv(s, root,
+      val root = buildRoot(s, d)
+      FileIndex.absorb(s, root, incrementEvents(s, d), "inc-1")
+      val l = FileIndex.layoutOf(s, root)
+      FileIndex.deleteWhereDv(s, root,
         col("ts").between(l.tlo * 1000L, l.thi * 1000L + 999L) &&
           col("value") > 0.5,
         "dvdelw-1")
@@ -2675,14 +123,14 @@ object ScanPruning extends QueryPack {
     * positions into rewritten files. */
   private def dvDeletedCompactRoot(s: SparkSession, d: String): String =
     dvDeletedCompactRoots.getOrElseUpdate(d)( {
-      val root = FileIndexStore.buildRoot(s, d)
-      FileIndexStore.absorb(s, root, incrementEvents(s, d), "inc-1")
-      val l = FileIndexStore.layoutOf(s, root)
-      FileIndexStore.deleteWhereDv(s, root,
+      val root = buildRoot(s, d)
+      FileIndex.absorb(s, root, incrementEvents(s, d), "inc-1")
+      val l = FileIndex.layoutOf(s, root)
+      FileIndex.deleteWhereDv(s, root,
         col("ts").between(l.tlo * 1000L, l.thi * 1000L + 999L) &&
           col("value") > 0.5,
         "dvdelw-1")
-      FileIndexStore.compact(s, root)
+      FileIndex.compact(s, root)
       root
     })
 
@@ -2691,10 +139,10 @@ object ScanPruning extends QueryPack {
     * conjunct exercises the type-domain prune. */
   private def updatedWhereRoot(s: SparkSession, d: String): String =
     updatedWhereRoots.getOrElseUpdate(d)( {
-      val root = FileIndexStore.buildRoot(s, d)
-      FileIndexStore.absorb(s, root, incrementEvents(s, d), "inc-1")
-      val l = FileIndexStore.layoutOf(s, root)
-      FileIndexStore.updateWhere(s, root,
+      val root = buildRoot(s, d)
+      FileIndex.absorb(s, root, incrementEvents(s, d), "inc-1")
+      val l = FileIndex.layoutOf(s, root)
+      FileIndex.updateWhere(s, root,
         col("user_id").between(l.ulo, l.uhi) &&
           col("event_type") === "click",
         Map("value" -> lit(UpdatedValue)), "updw-1")
@@ -2706,10 +154,10 @@ object ScanPruning extends QueryPack {
     * erasure queries never change what the other roots observe. */
   private def erasedRoot(s: SparkSession, d: String): String =
     erasedRoots.getOrElseUpdate(d)( {
-      val root = FileIndexStore.buildRoot(s, d)
-      FileIndexStore.absorb(s, root, incrementEvents(s, d), "inc-1")
-      FileIndexStore.erase(s, root,
-        FileIndexStore.layoutOf(s, root).probe, "erase-1")
+      val root = buildRoot(s, d)
+      FileIndex.absorb(s, root, incrementEvents(s, d), "inc-1")
+      FileIndex.erase(s, root,
+        FileIndex.layoutOf(s, root).probe, "erase-1")
       root
     })
 
@@ -2718,10 +166,10 @@ object ScanPruning extends QueryPack {
     * pre-erase state. */
   private def dvRoot(s: SparkSession, d: String): String =
     dvRoots.getOrElseUpdate(d)( {
-      val root = FileIndexStore.buildRoot(s, d)
-      FileIndexStore.absorb(s, root, incrementEvents(s, d), "inc-1")
-      FileIndexStore.eraseDv(s, root,
-        FileIndexStore.layoutOf(s, root).probe, "dve-1")
+      val root = buildRoot(s, d)
+      FileIndex.absorb(s, root, incrementEvents(s, d), "inc-1")
+      FileIndex.eraseDv(s, root,
+        FileIndex.layoutOf(s, root).probe, "dve-1")
       root
     })
 
@@ -2729,11 +177,11 @@ object ScanPruning extends QueryPack {
     * then a compaction that folds the vectors into rewritten files. */
   private def dvCompactedRoot(s: SparkSession, d: String): String =
     dvCompactedRoots.getOrElseUpdate(d)( {
-      val root = FileIndexStore.buildRoot(s, d)
-      FileIndexStore.absorb(s, root, incrementEvents(s, d), "inc-1")
-      FileIndexStore.eraseDv(s, root,
-        FileIndexStore.layoutOf(s, root).probe, "dve-1")
-      FileIndexStore.compact(s, root)
+      val root = buildRoot(s, d)
+      FileIndex.absorb(s, root, incrementEvents(s, d), "inc-1")
+      FileIndex.eraseDv(s, root,
+        FileIndex.layoutOf(s, root).probe, "dve-1")
+      FileIndex.compact(s, root)
       root
     })
 
@@ -2746,11 +194,11 @@ object ScanPruning extends QueryPack {
     * NOTHING for the compaction. */
   private def cdfRoot(s: SparkSession, d: String): String =
     cdfRoots.getOrElseUpdate(d)( {
-      val root = FileIndexStore.buildRoot(s, d)
-      FileIndexStore.absorb(s, root, incrementEvents(s, d), "inc-1")
-      FileIndexStore.eraseDv(s, root,
-        FileIndexStore.layoutOf(s, root).probe, "dve-1")
-      FileIndexStore.compact(s, root)
+      val root = buildRoot(s, d)
+      FileIndex.absorb(s, root, incrementEvents(s, d), "inc-1")
+      FileIndex.eraseDv(s, root,
+        FileIndex.layoutOf(s, root).probe, "dve-1")
+      FileIndex.compact(s, root)
       root
     })
 
@@ -2765,10 +213,10 @@ object ScanPruning extends QueryPack {
     * persisted layout. */
   private def hilbertRoot(s: SparkSession, d: String): String =
     hilbertRoots.getOrElseUpdate(d)( {
-      val root = FileIndexStore.buildRootFrom(s,
+      val root = FileIndex.buildRootFrom(s,
         Tables.events(s, d).filter(!incPredicate), curve = "hilbert",
         rangeBucketed = true)
-      FileIndexStore.absorb(s, root, incrementEvents(s, d), "inc-1")
+      FileIndex.absorb(s, root, incrementEvents(s, d), "inc-1")
       root
     })
 
@@ -2781,13 +229,13 @@ object ScanPruning extends QueryPack {
     * increments are the halves of the standard increment slice. */
   private def migratedRoot(s: SparkSession, d: String): String =
     migratedRoots.getOrElseUpdate(d)( {
-      val root = FileIndexStore.buildRoot(s, d)
+      val root = buildRoot(s, d)
       val inc = incrementEvents(s, d)
-      FileIndexStore.absorb(s, root,
+      FileIndex.absorb(s, root,
         inc.filter(col("event_id") % 10 === 8), "inc-8")
-      FileIndexStore.migrate(s, root, "hilbert", rangeBucketed = true,
+      FileIndex.migrate(s, root, "hilbert", rangeBucketed = true,
         "migrate-1")
-      FileIndexStore.absorb(s, root,
+      FileIndex.absorb(s, root,
         inc.filter(col("event_id") % 10 === 9), "inc-9")
       root
     })
@@ -2802,12 +250,12 @@ object ScanPruning extends QueryPack {
     * generation read; the head exercises the evolved rewrite. */
   private def evolvedRoot(s: SparkSession, d: String): String =
     evolvedRoots.getOrElseUpdate(d)( {
-      val root = FileIndexStore.buildRoot(s, d)
-      FileIndexStore.absorb(s, root,
+      val root = buildRoot(s, d)
+      FileIndex.absorb(s, root,
         incrementEvents(s, d)
           .withColumn("score", pmod(col("event_id"), lit(7L))),
         "inc-1")
-      FileIndexStore.compact(s, root)
+      FileIndex.compact(s, root)
       root
     })
 
@@ -2817,9 +265,9 @@ object ScanPruning extends QueryPack {
     * queries above observe. */
   private def compactedRoot(s: SparkSession, d: String): String =
     compactedRoots.getOrElseUpdate(d)( {
-      val root = FileIndexStore.buildRoot(s, d)
-      FileIndexStore.absorb(s, root, incrementEvents(s, d), "inc-1")
-      FileIndexStore.compact(s, root)
+      val root = buildRoot(s, d)
+      FileIndex.absorb(s, root, incrementEvents(s, d), "inc-1")
+      FileIndex.compact(s, root)
       root
     })
 
@@ -2828,12 +276,12 @@ object ScanPruning extends QueryPack {
     * oracle SQL: neither compaction nor the version read may change
     * the answer). */
   private def boxAggOf(s: SparkSession, root: String): DataFrame =
-    boxAggOf(s, root, FileIndexStore.zone(s, root))
+    boxAggOf(s, root, FileIndex.zone(s, root))
 
   private def boxAggOf(s: SparkSession, root: String,
       zone: DataFrame): DataFrame = {
-    val l = FileIndexStore.layoutOf(s, root)
-    readFiles(s, root, boxSurvivors(zone, l))
+    val l = FileIndex.layoutOf(s, root)
+    readFiles(s, root, FileIndex.boxSurvivors(zone, l))
       .withColumn("tsu", expr("ts div 1000"))
       .filter(col("user_id").between(l.ulo, l.uhi) &&
         col("tsu").between(l.tlo, l.thi))
@@ -2843,32 +291,6 @@ object ScanPruning extends QueryPack {
         countDistinct(col("user_id")).as("users"))
   }
 
-  /** Files whose zone ranges intersect the box — evaluated
-    * distributed; only surviving paths reach the driver. */
-  private[graft] def boxSurvivors(zone: DataFrame, l: Layout): DataFrame =
-    zone.filter(!(col("u_hi") < l.ulo || col("u_lo") > l.uhi ||
-      col("t_hi") < l.tlo || col("t_lo") > l.thi))
-
-  /** Files that may contain the probe user: zone range test AND both
-    * bloom bits present. The probe's bits are LITERALS (computed
-    * control-plane-side), so the bloom-log scan reads only matching
-    * rows via pushdown — the whole-log distinct the read-side replay
-    * defense needs then runs over probe-matching rows only, never the
-    * full bit table. */
-  private[graft] def pointSurvivors(s: SparkSession, root: String,
-      probe: Long): DataFrame = {
-    val zoneKept = FileIndexStore.zone(s, root)
-      .filter(col("u_lo") <= probe && col("u_hi") >= probe)
-    val bitPred = bloomBitsOf(probe)
-      .map { case (r, b) => col("r") === r && col("bit") === b }
-      .reduce(_ || _)
-    val bloomKept = FileIndexStore.bloomMatching(s, root, bitPred)
-      .groupBy(col("inc_id"), col("zbucket"))
-      .agg(countDistinct(col("r")).as("hits"))
-      .filter(col("hits") === BloomK)
-      .select(col("inc_id"), col("zbucket"))
-    zoneKept.join(bloomKept, Seq("inc_id", "zbucket"))
-  }
 
   /** Read exactly the surviving logical files, deletion vectors
     * applied. Only the survivor list crosses to the driver —
@@ -2878,11 +300,11 @@ object ScanPruning extends QueryPack {
     val pairs = survivors.select(col("inc_id"), col("zbucket")).collect()
       .map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
     require(pairs.nonEmpty, "pruned read eliminated every file")
-    FileIndexStore.readPairs(s, root, pairs)
+    FileIndex.readPairs(s, root, pairs)
   }
 
   // ─────────────────────────────────────────── shared oracle SQL
-  /** bounds → layout constants, replaying [[Layout]]'s integer
+  /** bounds → layout constants, replaying [[FileIndex.Layout]]'s integer
     * arithmetic on the corpus slice. */
   private def constsSql: String =
     s"""bounds AS (
@@ -2892,10 +314,10 @@ object ScanPruning extends QueryPack {
        |  FROM events WHERE event_id % 10 < 8),
        |consts AS (
        |  SELECT umin, tmin,
-       |    (umax - umin) // $Codes + 1 AS wu,
-       |    (tmax - tmin) // $Codes + 1 AS wt,
-       |    CASE WHEN nc > ${64 * FileRows} THEN 256
-       |         WHEN nc > ${16 * FileRows} THEN 1024
+       |    (umax - umin) // ${FileIndex.Codes} + 1 AS wu,
+       |    (tmax - tmin) // ${FileIndex.Codes} + 1 AS wt,
+       |    CASE WHEN nc > ${64 * FileIndex.FileRows} THEN 256
+       |         WHEN nc > ${16 * FileIndex.FileRows} THEN 1024
        |         ELSE 4096 END AS zdiv,
        |    umin + (umax - umin) // 8 AS ulo,
        |    umin + 2 * ((umax - umin) // 8) AS uhi,
@@ -2906,7 +328,7 @@ object ScanPruning extends QueryPack {
        |  FROM bounds)""".stripMargin
 
   /** The full 16-bit Morton key in DuckDB arithmetic — the replay of
-    * [[zkeyExpr]]; zbucket = zkey // zdiv (top 2·pbits bits). */
+    * [[FileIndex.zkeyExpr]]; zbucket = zkey // zdiv (top 2·pbits bits). */
   private def zkeySql: String =
     (0 until 8).map { i =>
       s"((cu // ${1L << i}) % 2) * ${1L << (2 * i + 1)}" +
@@ -2941,7 +363,7 @@ object ScanPruning extends QueryPack {
     // store-log merge agree with DuckDB's replay of the clustering
     "fx_layout" -> ((s, d) => {
       val root = readyRoot(s, d)
-      FileIndexStore.zone(s, root)
+      FileIndex.zone(s, root)
         .groupBy(col("zbucket"))
         .agg(count(lit(1)).as("gens"), sum(col("n")).as("n"),
           min(col("u_lo")).as("u_lo"), max(col("u_hi")).as("u_hi"),
@@ -2961,15 +383,15 @@ object ScanPruning extends QueryPack {
     // pre-compaction generations, still hash-equal to the full scan
     "fx_timetravel_box" -> ((s, d) => {
       val root = compactedRoot(s, d)
-      val asOf = FileIndexStore.currentSeq(s, root) - 1
-      boxAggOf(s, root, FileIndexStore.zoneAt(s, root, asOf))
+      val asOf = FileIndex.currentSeq(s, root) - 1
+      boxAggOf(s, root, FileIndex.zoneAt(s, root, asOf))
     }),
     // post-compaction index census: exactly one live generation per
     // bucket, and its persisted stats equal DuckDB's from-scratch
     // replay over ALL events — the compaction-preserves-the-index gate
     "fx_compact_census" -> ((s, d) => {
       val root = compactedRoot(s, d)
-      FileIndexStore.zone(s, root)
+      FileIndex.zone(s, root)
         .groupBy(col("zbucket"))
         .agg(count(lit(1)).as("gens"), sum(col("n")).as("n"),
           min(col("u_lo")).as("u_lo"), max(col("u_hi")).as("u_hi"),
@@ -2981,9 +403,9 @@ object ScanPruning extends QueryPack {
     // as bloom_kept=1, n_probe=0 — conservative, never the reverse)
     "fx_prune_audit" -> ((s, d) => {
       val root = readyRoot(s, d)
-      val l = FileIndexStore.layoutOf(s, root)
-      val zone = FileIndexStore.zone(s, root)
-      val bloomKept = pointSurvivors(s, root, l.probe)
+      val l = FileIndex.layoutOf(s, root)
+      val zone = FileIndex.zone(s, root)
+      val bloomKept = FileIndex.pointSurvivors(s, root, l.probe)
         .select(col("inc_id"), col("zbucket"), lit(1).as("bloom_kept"))
       // ground truth riding along: exact probe-row counts per
       // generation bucket (an audit query full-scans BY DESIGN —
@@ -2997,8 +419,8 @@ object ScanPruning extends QueryPack {
           s"greatest(0L, least(255L, (user_id - ${l.umin}L) div ${l.wu}L))"))
         .withColumn("ct", expr(
           s"greatest(0L, least(255L, (tsu - ${l.tmin}L) div ${l.wt}L))"))
-        .withColumn("zkey", expr(zkeyExpr))
-        .withColumn("zbucket", expr(zbucketExprOf(l)))
+        .withColumn("zkey", expr(FileIndex.zkeyExpr))
+        .withColumn("zbucket", expr(FileIndex.zbucketExprOf(l)))
         .groupBy(col("inc_id"), col("zbucket"))
         .agg(count(lit(1)).as("n_probe"))
       zone
@@ -3022,7 +444,7 @@ object ScanPruning extends QueryPack {
     // exactly that user's rows and nothing else
     "fx_updated_census" -> ((s, d) => {
       val root = updatedRoot(s, d)
-      readFiles(s, root, FileIndexStore.zone(s, root))
+      readFiles(s, root, FileIndex.zone(s, root))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(round(col("value") * 100).cast("long")).as("cents"),
@@ -3036,7 +458,7 @@ object ScanPruning extends QueryPack {
     // else
     "fx_erased_census" -> ((s, d) => {
       val root = erasedRoot(s, d)
-      readFiles(s, root, FileIndexStore.zone(s, root))
+      readFiles(s, root, FileIndex.zone(s, root))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(round(col("value") * 100).cast("long")).as("cents"),
@@ -3050,7 +472,7 @@ object ScanPruning extends QueryPack {
     // filter.
     "fx_delete_where" -> ((s, d) => {
       val root = deletedWhereRoot(s, d)
-      readFiles(s, root, FileIndexStore.zone(s, root))
+      readFiles(s, root, FileIndex.zone(s, root))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(round(col("value") * 100).cast("long")).as("cents"),
@@ -3062,7 +484,7 @@ object ScanPruning extends QueryPack {
     // copy-on-write fx_delete_where (same oracle SQL)
     "fx_dv_delete_where" -> ((s, d) => {
       val root = dvDeletedWhereRoot(s, d)
-      readFiles(s, root, FileIndexStore.zone(s, root))
+      readFiles(s, root, FileIndex.zone(s, root))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(round(col("value") * 100).cast("long")).as("cents"),
@@ -3072,7 +494,7 @@ object ScanPruning extends QueryPack {
     // files the anti-join is gone and the answer is unchanged
     "fx_dv_delete_compact" -> ((s, d) => {
       val root = dvDeletedCompactRoot(s, d)
-      readFiles(s, root, FileIndexStore.zone(s, root))
+      readFiles(s, root, FileIndex.zone(s, root))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(round(col("value") * 100).cast("long")).as("cents"),
@@ -3084,7 +506,7 @@ object ScanPruning extends QueryPack {
     // the update as a CASE projection over the raw table.
     "fx_update_where" -> ((s, d) => {
       val root = updatedWhereRoot(s, d)
-      readFiles(s, root, FileIndexStore.zone(s, root))
+      readFiles(s, root, FileIndex.zone(s, root))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(round(col("value") * 100).cast("long")).as("cents"),
@@ -3097,7 +519,7 @@ object ScanPruning extends QueryPack {
     // mechanisms must be observationally identical
     "fx_dv_census" -> ((s, d) => {
       val root = dvRoot(s, d)
-      readFiles(s, root, FileIndexStore.zone(s, root))
+      readFiles(s, root, FileIndex.zone(s, root))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(round(col("value") * 100).cast("long")).as("cents"),
@@ -3108,7 +530,7 @@ object ScanPruning extends QueryPack {
     // rows target live files), the answer is unchanged
     "fx_dv_compact_census" -> ((s, d) => {
       val root = dvCompactedRoot(s, d)
-      readFiles(s, root, FileIndexStore.zone(s, root))
+      readFiles(s, root, FileIndex.zone(s, root))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(round(col("value") * 100).cast("long")).as("cents"),
@@ -3122,8 +544,8 @@ object ScanPruning extends QueryPack {
     // oracle replays both legs from the raw table.
     "fx_cdf_range" -> ((s, d) => {
       val root = cdfRoot(s, d)
-      FileIndexStore.changeDataFeed(s, root, 0L,
-          FileIndexStore.currentSeq(s, root))
+      FileIndex.changeDataFeed(s, root, 0L,
+          FileIndex.currentSeq(s, root))
         .select(col("_change_type").as("change_type"), col("event_id"),
           expr("ts div 1000").as("tsu"), col("event_type"),
           round(col("value") * 100).cast("long").as("cents"))
@@ -3137,9 +559,9 @@ object ScanPruning extends QueryPack {
     // handful of files, so the diff reads a handful of files.
     "fx_version_diff" -> ((s, d) => {
       val root = erasedRoot(s, d)
-      val head = FileIndexStore.currentSeq(s, root)
-      val before = FileIndexStore.livePairsAt(s, root, head - 1).toSet
-      val after = FileIndexStore.livePairs(s, root).toSet
+      val head = FileIndex.currentSeq(s, root)
+      val before = FileIndex.livePairsAt(s, root, head - 1).toSet
+      val after = FileIndex.livePairs(s, root).toSet
       def proj(pairs: Set[(String, Int)]): DataFrame = {
         val sorted = pairs.toSeq.sorted
         if (sorted.isEmpty)
@@ -3147,7 +569,7 @@ object ScanPruning extends QueryPack {
             .select(col("event_id"), expr("ts div 1000").as("tsu"),
               col("event_type"),
               round(col("value") * 100).cast("long").as("cents"))
-        else FileIndexStore.readPairs(s, root, sorted)
+        else FileIndex.readPairs(s, root, sorted)
           .select(col("event_id"), expr("ts div 1000").as("tsu"),
             col("event_type"),
             round(col("value") * 100).cast("long").as("cents"))
@@ -3161,8 +583,8 @@ object ScanPruning extends QueryPack {
     // nothing of the probed user's
     "fx_dv_point" -> ((s, d) => {
       val root = dvRoot(s, d)
-      val l = FileIndexStore.layoutOf(s, root)
-      readFiles(s, root, pointSurvivors(s, root, l.probe2))
+      val l = FileIndex.layoutOf(s, root)
+      readFiles(s, root, FileIndex.pointSurvivors(s, root, l.probe2))
         .filter(col("user_id") === l.probe2)
         .select(col("event_id"), expr("ts div 1000").as("tsu"),
           col("event_type"),
@@ -3181,7 +603,7 @@ object ScanPruning extends QueryPack {
         .groupBy(col("event_type")).agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt"), col("event_type")).limit(1)
         .head().getString(0)
-      readFiles(s, root, FileIndexStore.typesMatching(s, root, t))
+      readFiles(s, root, FileIndex.typesMatching(s, root, t))
         .filter(col("event_type") === t)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -3202,7 +624,7 @@ object ScanPruning extends QueryPack {
         .agg(min(col("value")), max(col("value"))).head()
       val thr = b.getDouble(0) + 9 * (b.getDouble(1) - b.getDouble(0)) / 10
       readFiles(s, root,
-          FileIndexStore.zone(s, root).filter(col("v_hi") > thr))
+          FileIndex.zone(s, root).filter(col("v_hi") > thr))
         .filter(col("value") > thr)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -3228,9 +650,9 @@ object ScanPruning extends QueryPack {
     // from scratch with the corpus slice CASE'd to NULL
     "fx_evolved_census" -> ((s, d) => {
       val root = evolvedRoot(s, d)
-      val asOf = FileIndexStore.currentSeq(s, root) - 1
-      FileIndexStore.readPairs(s, root,
-          FileIndexStore.livePairsAt(s, root, asOf))
+      val asOf = FileIndex.currentSeq(s, root) - 1
+      FileIndex.readPairs(s, root,
+          FileIndex.livePairsAt(s, root, asOf))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("score")).as("score_sum"),
           countDistinct(col("user_id")).as("users"))
@@ -3241,7 +663,7 @@ object ScanPruning extends QueryPack {
     // column (and its nulls) instead of amputating it
     "fx_evolved_compact" -> ((s, d) => {
       val root = evolvedRoot(s, d)
-      FileIndexStore.readPairs(s, root, FileIndexStore.livePairs(s, root))
+      FileIndex.readPairs(s, root, FileIndex.livePairs(s, root))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("score")).as("score_sum"),
           countDistinct(col("user_id")).as("users"))
@@ -3252,7 +674,7 @@ object ScanPruning extends QueryPack {
     // full-scans, so a hash match proves the persisted per-file stats
     // reconstruct the exact table-level answer across generations
     "fx_meta_stats" -> ((s, d) =>
-      FileIndexStore.metaStats(s, readyRoot(s, d))),
+      FileIndex.metaStats(s, readyRoot(s, d))),
     // the same stats on the MERGE-ON-READ erased root: zone rows
     // still count the erased user's rows (not one data byte moved),
     // so the metadata fold must re-read exactly the DV-touched files
@@ -3260,19 +682,19 @@ object ScanPruning extends QueryPack {
     // proves the split fold is exact, including a min/max the erased
     // key may have held
     "fx_dv_meta_stats" -> ((s, d) =>
-      FileIndexStore.metaStats(s, dvRoot(s, d))),
+      FileIndex.metaStats(s, dvRoot(s, d))),
     // GROUP BY event_type census served from METADATA only (the
     // per-file type counts folded over live files) — the oracle
     // full-scans, so a hash match proves the logged counts
     // reconstruct the exact group-by across generations
     "fx_meta_type_census" -> ((s, d) =>
-      FileIndexStore.metaTypeCensus(s, readyRoot(s, d))),
+      FileIndex.metaTypeCensus(s, readyRoot(s, d))),
     // the same census on the MERGE-ON-READ erased root: logged type
     // counts still include the erased user's rows, so the fold must
     // re-read exactly the DV-touched files — oracle full-scans
     // WHERE user_id <> probe
     "fx_dv_meta_type_census" -> ((s, d) =>
-      FileIndexStore.metaTypeCensus(s, dvRoot(s, d))),
+      FileIndex.metaTypeCensus(s, dvRoot(s, d))),
     // METADATA-ASSISTED time-range count: files whose time span lies
     // fully INSIDE the window contribute their zone row count without
     // being opened; only BOUNDARY files (span straddles a window
@@ -3286,10 +708,10 @@ object ScanPruning extends QueryPack {
     // non-degenerate
     "fx_box_count_meta" -> ((s, d) => {
       val root = readyRoot(s, d)
-      val l = FileIndexStore.layoutOf(s, root)
+      val l = FileIndex.layoutOf(s, root)
       val (tlo, thi) = (l.tmin + (l.tmax - l.tmin) / 8,
         l.tmin + 6 * ((l.tmax - l.tmin) / 8))
-      val zone = FileIndexStore.zone(s, root)
+      val zone = FileIndex.zone(s, root)
         .select(col("inc_id"), col("zbucket"), col("n"),
           col("t_lo"), col("t_hi")).collect()
       def contained(r: org.apache.spark.sql.Row) =
@@ -3302,7 +724,7 @@ object ScanPruning extends QueryPack {
         .map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
       val boundaryN =
         if (boundary.isEmpty) 0L
-        else FileIndexStore.readPairs(s, root, boundary)
+        else FileIndex.readPairs(s, root, boundary)
           .withColumn("tsu", expr("ts div 1000"))
           .filter(col("tsu").between(tlo, thi))
           .count()
@@ -3316,7 +738,7 @@ object ScanPruning extends QueryPack {
     // clustering replay, so a hash match proves the manifest recorded
     // exactly the file movements the layout function dictates
     "fx_history" -> ((s, d) =>
-      FileIndexStore.history(s, compactedRoot(s, d))),
+      FileIndex.history(s, compactedRoot(s, d))),
     // the MAINT HONESTY AUDIT as a driver-gated relational row: for
     // the clean compaction pub == ret (folded 0); for the DV-folding
     // one pub == ret − folded, where each leg of the equation is an
@@ -3327,7 +749,7 @@ object ScanPruning extends QueryPack {
     "fx_maint_audit" -> ((s, d) => {
       import s.implicits._
       def rowsOf(tag: String, root: String) =
-        FileIndexStore.auditMaint(s, root).map {
+        FileIndex.auditMaint(s, root).map {
           case (seq, gen, pub, ret, folded, ok) =>
             (tag, seq, gen, pub, ret, folded, if (ok) 1L else 0L)
         }
@@ -3344,7 +766,7 @@ object ScanPruning extends QueryPack {
     "fx_append_feed" -> ((s, d) => {
       val root = compactedRoot(s, d)
       // cursor −1 = before the corpus commit (which claims seq 0)
-      FileIndexStore.changeFeed(s, root, -1L)
+      FileIndex.changeFeed(s, root, -1L)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(round(col("value") * 100).cast("long")).as("cents"),
@@ -3356,8 +778,8 @@ object ScanPruning extends QueryPack {
     // the oracle recomputes the increment slice from scratch
     "fx_feed_incremental" -> ((s, d) => {
       val root = compactedRoot(s, d)
-      val (_, apps) = FileIndexStore.appendsSince(root, -1L)
-      FileIndexStore.changeFeed(s, root, apps.head._1)
+      val (_, apps) = FileIndex.appendsSince(root, -1L)
+      FileIndex.changeFeed(s, root, apps.head._1)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(round(col("value") * 100).cast("long")).as("cents"),
@@ -3368,8 +790,8 @@ object ScanPruning extends QueryPack {
     // full-scans on user_id = probe
     "fx_point_lookup" -> ((s, d) => {
       val root = readyRoot(s, d)
-      val l = FileIndexStore.layoutOf(s, root)
-      readFiles(s, root, pointSurvivors(s, root, l.probe))
+      val l = FileIndex.layoutOf(s, root)
+      readFiles(s, root, FileIndex.pointSurvivors(s, root, l.probe))
         .filter(col("user_id") === l.probe)
         .select(col("event_id"), expr("ts div 1000").as("tsu"),
           col("event_type"),
@@ -3425,17 +847,17 @@ object ScanPruning extends QueryPack {
          |bloombits AS (
          |  SELECT DISTINCT inc_id, zbucket, r,
          |    ('0x' || substr(md5(r::VARCHAR || ':' || user_id::VARCHAR),
-         |      1, 8))::BIGINT % $BloomM AS bit
+         |      1, 8))::BIGINT % ${FileIndex.BloomM} AS bit
          |  FROM slices CROSS JOIN (SELECT unnest([0, 1]) AS r) rr),
          |probebits AS (
          |  SELECT r,
          |    ('0x' || substr(md5(r::VARCHAR || ':' || probe::VARCHAR),
-         |      1, 8))::BIGINT % $BloomM AS bit
+         |      1, 8))::BIGINT % ${FileIndex.BloomM} AS bit
          |  FROM consts CROSS JOIN (SELECT unnest([0, 1]) AS r) rr),
          |bloomkept AS (
          |  SELECT inc_id, zbucket FROM bloombits b
          |  JOIN probebits p USING (r, bit)
-         |  GROUP BY 1, 2 HAVING count(DISTINCT r) = $BloomK),
+         |  GROUP BY 1, 2 HAVING count(DISTINCT r) = ${FileIndex.BloomK}),
          |probecounts AS (
          |  SELECT inc_id, zbucket, count(*) AS n_probe
          |  FROM slices CROSS JOIN consts c

@@ -16,7 +16,7 @@ import graft.streaming.{EffectRow, Registry}
   * (R5) a pure column projection.
   */
 final class AstarteStore(val root: String) {
-  import AstarteStore.{isHidden, maintain, rewriteLeaf}
+  import AstarteStore.{isHidden, maintain, pruneEmptyDirs, rewriteLeaf}
 
   val properties = new LwwTable(s"$root/individual_properties",
     keyCols = Seq("device_id", "iface", "endpoint", "path"),
@@ -309,32 +309,6 @@ final class AstarteStore(val root: String) {
         pruneEmptyDirs(fs, new org.apache.hadoop.fs.Path(path))
       }
     }
-
-  /** Drop directories a retirement emptied — a schema-less directory
-    * poisons the next read, and an empty table root masquerades as an
-    * empty table with no schema. Non-recursive deletes: if a
-    * concurrent appender repopulated the directory between the check
-    * and the delete, the delete fails and the directory survives.
-    */
-  private def pruneEmptyDirs(
-      fs: org.apache.hadoop.fs.FileSystem,
-      tableRoot: org.apache.hadoop.fs.Path): Unit = {
-    if (!fs.exists(tableRoot)) return
-    // bottom-up: empty leaves first, then parents they emptied —
-    // works for any partition depth
-    def prune(dir: org.apache.hadoop.fs.Path): Unit =
-      for (e <- fs.listStatus(dir)
-           if e.isDirectory && !isHidden(e.getPath.getName)) {
-        prune(e.getPath)
-        if (fs.listStatus(e.getPath).isEmpty)
-          try fs.delete(e.getPath, false) catch { case _: java.io.IOException => () }
-      }
-    prune(tableRoot)
-    val leftover = fs.listStatus(tableRoot)
-    if (!leftover.exists(st => st.isDirectory && !isHidden(st.getPath.getName)) &&
-        !leftover.exists(st => st.isFile && st.getPath.getName.endsWith(".parquet")))
-      fs.delete(tableRoot, true)
-  }
 
   /** Partition-pruned small-file compaction of an (iface, day)
     * append table. Streaming ingest writes at least one parquet file
@@ -656,6 +630,36 @@ object AstarteStore {
       }
     }
 
+  /** Drop directories a retirement emptied — a schema-less directory
+    * poisons the next read, and an empty table root masquerades as an
+    * empty table with no schema. Non-recursive deletes: if a
+    * concurrent appender repopulated the directory between the check
+    * and the delete, the delete fails and the directory survives.
+    */
+  private[storage] def pruneEmptyDirs(
+      fs: org.apache.hadoop.fs.FileSystem,
+      tableRoot: org.apache.hadoop.fs.Path): Unit = {
+    if (!fs.exists(tableRoot)) return
+    // bottom-up: empty leaves first, then parents they emptied —
+    // works for any partition depth
+    def prune(dir: org.apache.hadoop.fs.Path): Unit =
+      for (e <- fs.listStatus(dir)
+           if e.isDirectory && !isHidden(e.getPath.getName)) {
+        prune(e.getPath)
+        if (fs.listStatus(e.getPath).isEmpty)
+          try fs.delete(e.getPath, false) catch { case _: java.io.IOException => () }
+      }
+    prune(tableRoot)
+    val leftover = fs.listStatus(tableRoot)
+    if (!leftover.exists(st => st.isDirectory && !isHidden(st.getPath.getName)) &&
+        !leftover.exists(st => st.isFile && st.getPath.getName.endsWith(".parquet"))) {
+      // the listed leftovers are not data; the root itself goes only if
+      // no writer renamed a file in since the listing
+      leftover.foreach(st => fs.delete(st.getPath, true))
+      try fs.delete(tableRoot, false) catch { case _: java.io.IOException => () }
+    }
+  }
+
   /** Append `df` to the table at `path` through the staged commit
     * ([[StagedCommit]]): a `DataFrameWriter` job writes the batch into a
     * fresh staging dir beside the table, and its part files are renamed
@@ -682,7 +686,8 @@ object AstarteStore {
   }
 
   /** The shared leaf rewrite of maintenance (sweep, compaction,
-    * [[LwwTable.compact]]): snapshot the leaf's CURRENT data files,
+    * [[LwwTable.compact]], the deletion-vector fold of
+    * [[FileIndex.vacuumBefore]]): snapshot the leaf's CURRENT data files,
     * stage `transform(snapshot)` beside `table`, move the staged files
     * into the leaf under their own unique names ([[StagedCommit]]), and
     * only then retire exactly the snapshot files. The snapshot folds

@@ -7,8 +7,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 /** The one way files enter a store or index table. A writer stages its
   * files in a hidden `_graft_batch-<id>` directory, reports them, and
   * [[apply]] renames each into its table and deletes the directory. The
-  * batch writer ([[EffectWriter]]), `AstarteStore.appendAtomic` and the
-  * maintenance rewrites (`AstarteStore.rewriteLeaf`) all commit here.
+  * batch writer ([[EffectWriter]]), `AstarteStore.appendAtomic` (which
+  * also writes every file-index log) and the maintenance rewrites
+  * (`AstarteStore.rewriteLeaf`: sweep, compaction, `LwwTable.compact`
+  * and the file index's vacuum-time deletion-vector fold) all commit
+  * here.
   *
   * A staged file is never table data. A crash before the renames leaves
   * every table as it was, and the writer re-runs: a pipeline from its

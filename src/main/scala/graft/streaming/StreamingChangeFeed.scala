@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import graft.queries.ScanPruning.FileIndexStore
+import graft.storage.FileIndex
 
 /** Structured-Streaming TAIL of the file index's append change feed —
   * the source twin of [[StreamingFileMaintenance]]: a `foreachBatch`
@@ -15,11 +15,11 @@ import graft.queries.ScanPruning.FileIndexStore
   * replayed batchId — a crash between emit and the checkpoint
   * commit — finds its claim and re-reads exactly the recorded range,
   * byte-identical however many commits landed since
-  * ([[FileIndexStore.changeFeedRange]]). The cursor is the max `to`
+  * ([[FileIndex.changeFeedRange]]). The cursor is the max `to`
   * over all claims, so ranges tile the manifest with no gap and no
   * overlap. Rewrite commits (compaction, copy-on-write erase/update)
   * never emit — the append-commit shape test in
-  * [[FileIndexStore.appendsSince]].
+  * [[FileIndex.appendsSince]].
   *
   * Scale shape: each poll reads ONLY the newly appended generations'
   * files — tailing a 100 TB table costs O(new data) per batch; the
@@ -43,12 +43,12 @@ object StreamingChangeFeed {
   def tail(root: String, stateDir: String)(
       emit: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit =
     tailWith(root, stateDir,
-      (s, from, to) => FileIndexStore.changeFeedRange(s, root, from, to),
-      (from, to) => FileIndexStore.assertFeedReadable(root, from, to))(emit)
+      (s, from, to) => FileIndex.changeFeedRange(s, root, from, to),
+      (from, to) => FileIndex.assertFeedReadable(root, from, to))(emit)
 
   /** The CDC twin of [[tail]]: exactly-once delivery of ROW-LEVEL
     * CHANGES (`_change_type` insert/delete, `_commit_version`) via
-    * [[FileIndexStore.changeDataFeed]] — same claim ledger, same
+    * [[FileIndex.changeDataFeed]] — same claim ledger, same
     * replay contract (the manifest is append-only, so a pinned
     * version range re-reads byte-identically), so a downstream
     * mirror can be maintained by one idempotent-per-batchId sink.
@@ -57,8 +57,8 @@ object StreamingChangeFeed {
   def tailCdc(root: String, stateDir: String)(
       emit: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit =
     tailWith(root, stateDir,
-      (s, from, to) => FileIndexStore.changeDataFeed(s, root, from, to),
-      (from, _) => FileIndexStore.assertCdcReadable(root, from))(emit)
+      (s, from, to) => FileIndex.changeDataFeed(s, root, from, to),
+      (from, _) => FileIndex.assertCdcReadable(root, from))(emit)
 
   /** `validate(from, to)` runs BEFORE a fresh claim is persisted: a
     * stale cursor must throw the typed out-of-retention error WITHOUT
@@ -76,36 +76,23 @@ object StreamingChangeFeed {
       val dir = java.nio.file.Paths.get(stateDir)
       java.nio.file.Files.createDirectories(dir)
       val claim = dir.resolve(f"b$batchId%019d.tsv")
-      val (from, to) =
-        if (java.nio.file.Files.exists(claim)) {
-          // replayed batch: re-read the recorded range verbatim
-          val f = new String(
-            java.nio.file.Files.readAllBytes(claim), "UTF-8")
-            .trim.split('\t')
-          (f(0).toLong, f(1).toLong)
-        } else {
-          val cursor = maxClaimedTo(dir)
-          val (head, _) = FileIndexStore.appendsSince(root, cursor)
-          // validate BEFORE claiming: an out-of-retention cursor must
-          // never record a claim for a range that will never emit
-          validate(cursor, head)
-          // claim before emit: a crash after the claim replays this
-          // exact range; a crash before it re-claims fresh — either
-          // way the ranges tile with no gap and no overlap
-          val tmp = java.nio.file.Files.createTempFile(dir, ".b", ".tmp")
-          try {
-            java.nio.file.Files.write(tmp,
-              s"$cursor\t$head\n".getBytes("UTF-8"))
-            try java.nio.file.Files.createLink(claim, tmp)
-            catch { case _: java.nio.file.FileAlreadyExistsException => () }
-          } finally java.nio.file.Files.deleteIfExists(tmp)
-          // a racing claim (same batchId from a zombie executor) wrote
-          // the same cursor math or lost — read back the winner
-          val f = new String(
-            java.nio.file.Files.readAllBytes(claim), "UTF-8")
-            .trim.split('\t')
-          (f(0).toLong, f(1).toLong)
-        }
+      if (!java.nio.file.Files.exists(claim)) {
+        val cursor = maxClaimedTo(dir)
+        val (head, _) = FileIndex.appendsSince(root, cursor)
+        // validate BEFORE claiming: an out-of-retention cursor must
+        // never record a claim for a range that will never emit
+        validate(cursor, head)
+        // claim before emit: a crash after the claim replays this
+        // exact range; a crash before it re-claims fresh — either
+        // way the ranges tile with no gap and no overlap
+        FileIndex.claimExclusive(claim, s"$cursor\t$head\n")
+      }
+      // a replayed batch re-reads its recorded range verbatim; a racing
+      // claim (same batchId from a zombie executor) wrote the same
+      // cursor math or lost — either way the file holds the winner
+      val f = new String(java.nio.file.Files.readAllBytes(claim), "UTF-8")
+        .trim.split('\t')
+      val (from, to) = (f(0).toLong, f(1).toLong)
       emit(read(s, from, to), batchId)
       pruneClaims(dir, batchId)
     }

@@ -17,12 +17,12 @@ import org.apache.spark.sql.DataFrame
   * yet landed) re-runs to the identical end state. This is the same
   * sink-side idempotence contract the engine's other foreachBatch
   * paths rely on, made literal through
-  * [[graft.queries.ScanPruning.FileIndexStore.absorb]].
+  * [[graft.storage.FileIndex.absorb]].
   *
   * Scale shape: each trigger touches only its own micro-batch (one
   * clustered write + one read-back of the new files + three
   * control-plane appends); compaction
-  * ([[graft.queries.ScanPruning.FileIndexStore.compact]]) runs as
+  * ([[graft.storage.FileIndex.compact]]) runs as
   * separate maintenance when small per-trigger generations pile up.
   */
 object StreamingFileIngest {
@@ -37,8 +37,7 @@ object StreamingFileIngest {
     * `stream.writeStream.foreachBatch(sink(root)).start()`. */
   def sink(root: String): (DataFrame, Long) => Unit =
     (batch, batchId) => {
-      graft.queries.ScanPruning.FileIndexStore
-        .absorb(batch.sparkSession, root, batch, genId(batchId))
+      graft.storage.FileIndex.absorb(batch.sparkSession, root, batch, genId(batchId))
       ()
     }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
   * the mutation twin of [[StreamingFileIngest]]: a `foreachBatch`
   * sink over a CONTROL stream of erase/update commands (privacy
   * erasures, keyed corrections) that applies each through
-  * [[graft.queries.ScanPruning.FileIndexStore]]'s ledgered
+  * [[graft.storage.FileIndex]]'s ledgered
   * copy-on-write paths.
   *
   * Effectively-once BY THE LEDGER, exactly like the ingest twin:
@@ -40,12 +40,10 @@ object StreamingFileMaintenance {
       cmds.foreach { r =>
         r.getString(0) match {
           case "erase" =>
-            graft.queries.ScanPruning.FileIndexStore
-              .erase(s, root, r.getLong(1), r.getString(3))
+            graft.storage.FileIndex.erase(s, root, r.getLong(1), r.getString(3))
           case "update" =>
-            graft.queries.ScanPruning.FileIndexStore
-              .updateUser(s, root, r.getLong(1), r.getDouble(2),
-                r.getString(3))
+            graft.storage.FileIndex.updateUser(s, root, r.getLong(1),
+              r.getDouble(2), r.getString(3))
           case other =>
             throw new IllegalArgumentException(s"unknown command op: $other")
         }

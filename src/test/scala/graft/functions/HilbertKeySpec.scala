@@ -62,7 +62,7 @@ class HilbertKeySpec extends AnyFunSuite {
 
   test("range-bucketed Hilbert prunes <= Morton on boxes; range buckets stay balanced under skew") {
     import spark.implicits._
-    import graft.queries.ScanPruning.FileIndexStore
+    import graft.storage.FileIndex
     // heavily skewed users (cubed uniform -> mass near 0), uniform time
     val n = 32768
     val synth = (0 until n).map { i =>
@@ -73,16 +73,16 @@ class HilbertKeySpec extends AnyFunSuite {
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
 
     def zoneBoxes(root: String): Seq[(Long, Long, Long, Long, Long)] =
-      FileIndexStore.zone(spark, root).collect().map { r =>
+      FileIndex.zone(spark, root).collect().map { r =>
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
           r.getLong(6))
       }.toSeq
 
-    val zRoot = FileIndexStore.buildRootFrom(spark, synth,
+    val zRoot = FileIndex.buildRootFrom(spark, synth,
       forcedPbits = Some(3), rangeBucketed = true)
-    val hRoot = FileIndexStore.buildRootFrom(spark, synth,
+    val hRoot = FileIndex.buildRootFrom(spark, synth,
       forcedPbits = Some(3), curve = "hilbert", rangeBucketed = true)
-    val pRoot = FileIndexStore.buildRootFrom(spark, synth,
+    val pRoot = FileIndex.buildRootFrom(spark, synth,
       forcedPbits = Some(3)) // prefix-bucketed baseline
 
     // size balance: equal-count curve segments keep every file near

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.SparkSession
+import graft.storage.FileIndex
 
 /** Child-process half of the two-JVM FILE-INDEX soak
   * ([[TwoJvmFileIndexSoakSpec]]): a real second JVM absorbing
@@ -32,7 +33,7 @@ object FileIndexSoakChild {
           val id = off + i
           (id, (id % 2000) * 1000000000L, id % 50, "view", 1.0, "{}")
         }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        ScanPruning.FileIndexStore.absorb(spark, root, df, s"$writer-$b")
+        FileIndex.absorb(spark, root, df, s"$writer-$b")
       }
     } finally spark.stop()
     sys.exit(0)

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.storage.FileIndex
 
 /** Lifecycle soak for the file index: a seeded random interleaving of
   * absorbs, keyed updates, privacy erases, compactions, vacuums, and
@@ -42,7 +43,7 @@ class FileIndexSoakSpec extends AnyFunSuite {
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
 
     val firstSlice = slice(120)
-    val root = ScanPruning.FileIndexStore.buildRootFrom(spark, df(firstSlice))
+    val root = FileIndex.buildRootFrom(spark, df(firstSlice))
 
     // the append change feed tails the same lifecycle: every absorbed
     // row must arrive exactly once however the maintenance interleaves
@@ -50,7 +51,7 @@ class FileIndexSoakSpec extends AnyFunSuite {
     var feedCursor = -1L
     val feedSeen = scala.collection.mutable.Set.empty[Long]
     def pollFeed(tag: String): Unit = {
-      val (head, rows) = ScanPruning.FileIndexStore
+      val (head, rows) = FileIndex
         .changeFeedState(spark, root, feedCursor)
       val ids = rows.select(col("event_id")).collect().map(_.getLong(0))
       assert(ids.length == ids.distinct.length,
@@ -66,7 +67,7 @@ class FileIndexSoakSpec extends AnyFunSuite {
     def checkMeta(tag: String): Unit = {
       // metadata-only stats must track the model through every op mix
       // (DV erases leave stale zone counts; the split fold hides that)
-      val r = ScanPruning.FileIndexStore.metaStats(spark, root).head()
+      val r = FileIndex.metaStats(spark, root).head()
       assert(r.getLong(0) == model.size.toLong,
         s"metaStats row count diverged after $tag")
       if (model.nonEmpty) {
@@ -77,7 +78,7 @@ class FileIndexSoakSpec extends AnyFunSuite {
           r.getLong(4) == model.keys.max * 1000000L,
           s"metaStats time bounds diverged after $tag")
       }
-      val census = ScanPruning.FileIndexStore.metaTypeCensus(spark, root)
+      val census = FileIndex.metaTypeCensus(spark, root)
         .collect().map(r2 => r2.getString(0) -> r2.getLong(1)).toMap
       val want =
         if (model.isEmpty) Map.empty[String, Long]
@@ -88,10 +89,10 @@ class FileIndexSoakSpec extends AnyFunSuite {
     def check(tag: String): Unit = {
       // the DV-aware read path — merge-on-read erasures must be
       // invisible to every later lifecycle op's observable table
-      val pairs = ScanPruning.FileIndexStore.livePairs(spark, root)
+      val pairs = FileIndex.livePairs(spark, root)
       val got =
         if (pairs.isEmpty) Map.empty[Long, (Long, Long)]
-        else ScanPruning.FileIndexStore.readPairs(spark, root, pairs)
+        else FileIndex.readPairs(spark, root, pairs)
           .select(col("event_id"), col("user_id"),
             round(col("value") * 100).cast("long").as("cents"))
           .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
@@ -108,37 +109,37 @@ class FileIndexSoakSpec extends AnyFunSuite {
       op match {
         case 0 | 1 => // absorb a fresh slice
           val rows = slice(30 + rng.nextInt(40))
-          assert(ScanPruning.FileIndexStore.absorb(
+          assert(FileIndex.absorb(
             spark, root, df(rows), s"inc-$opN"))
           appended ++= rows.map(_._1)
           check(s"absorb inc-$opN")
         case 2 => // keyed update to a fresh constant
           val u = rng.nextInt(Users.toInt).toLong
           val cents = (rng.nextInt(9000) + 100).toLong
-          assert(ScanPruning.FileIndexStore.updateUser(
+          assert(FileIndex.updateUser(
             spark, root, u, cents / 100.0, s"upd-$opN"))
           model = model.map { case (id, (mu, mc)) =>
             id -> (mu, if (mu == u) cents else mc) }
           check(s"update u=$u upd-$opN")
         case 3 => // privacy erase
           val u = rng.nextInt(Users.toInt).toLong
-          assert(ScanPruning.FileIndexStore.erase(
+          assert(FileIndex.erase(
             spark, root, u, s"erase-$opN"))
           model = model.filter { case (_, (mu, _)) => mu != u }
           check(s"erase u=$u erase-$opN")
         case 4 => // compaction (may be a no-op with one live gen)
-          ScanPruning.FileIndexStore.compact(spark, root)
+          FileIndex.compact(spark, root)
           check(s"compact at op $opN")
         case 5 => // vacuum dead files mid-lifecycle
-          ScanPruning.FileIndexStore.vacuum(spark, root)
+          FileIndex.vacuum(spark, root)
           check(s"vacuum at op $opN")
         case 6 => // size-tiered fold of small generations (often no-op)
-          ScanPruning.FileIndexStore.compactTier(
+          FileIndex.compactTier(
             spark, root, 40L + rng.nextInt(100))
           check(s"compactTier at op $opN")
         case 7 => // merge-on-read erase: deletion vectors, no rewrite
           val u = rng.nextInt(Users.toInt).toLong
-          assert(ScanPruning.FileIndexStore.eraseDv(
+          assert(FileIndex.eraseDv(
             spark, root, u, s"dve-$opN"))
           model = model.filter { case (_, (mu, _)) => mu != u }
           check(s"eraseDv u=$u dve-$opN")
@@ -150,7 +151,7 @@ class FileIndexSoakSpec extends AnyFunSuite {
       // ledger no-op whatever the original op was ("corpus" is always
       // in the ledger from the initial build)
       if (opN % 7 == 0) {
-        assert(!ScanPruning.FileIndexStore.absorb(
+        assert(!FileIndex.absorb(
           spark, root, df(slice(0)), "corpus"),
           "replayed publish id was re-absorbed")
         check(s"replay at op $opN")

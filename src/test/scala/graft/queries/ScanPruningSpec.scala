@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.storage.FileIndex
 
 /** What the oracle hash-match cannot see about the file-skipping
   * index: pruning must be conservative for ARBITRARY boxes (not just
@@ -24,8 +25,8 @@ class ScanPruningSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private def isolatedRoot(): String = {
-    val root = ScanPruning.FileIndexStore.buildRoot(spark, dir)
-    ScanPruning.FileIndexStore.absorb(spark, root,
+    val root = ScanPruning.buildRoot(spark, dir)
+    FileIndex.absorb(spark, root,
       ScanPruning.incrementEvents(spark, dir), "inc-1")
     root
   }
@@ -33,7 +34,7 @@ class ScanPruningSpec extends AnyFunSuite {
   private def readBuckets(root: String, survivors: DataFrame): DataFrame = {
     val paths = survivors.select(col("inc_id"), col("zbucket")).collect()
       .map(r =>
-        ScanPruning.FileIndexStore.bucketDir(root, r.getString(0), r.getInt(1)))
+        FileIndex.bucketDir(root, r.getString(0), r.getInt(1)))
     spark.read.parquet(paths.toIndexedSeq: _*)
   }
 
@@ -43,31 +44,31 @@ class ScanPruningSpec extends AnyFunSuite {
       (i.toLong, (i % 500).toLong * 1000000000L, (i % 20).toLong,
         "view", 1.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val root = ScanPruning.FileIndexStore.buildRootFrom(spark, synth)
+    val root = FileIndex.buildRootFrom(spark, synth)
 
     // create-exclusive version claim: the second writer at one number
     // loses, whatever it carries
-    assert(ScanPruning.FileIndexStore.tryCommit(root, 7L,
+    assert(FileIndex.tryCommit(root, 7L,
       Seq(("x", -1, "ledger"))))
-    assert(!ScanPruning.FileIndexStore.tryCommit(root, 7L,
+    assert(!FileIndex.tryCommit(root, 7L,
       Seq(("y", -1, "ledger"))), "version 7 was claimed twice")
 
     // precondition: retiring a file a racing writer already retired
     // throws CommitConflict instead of resurrecting the rewrite
-    val pair = ScanPruning.FileIndexStore.livePairs(spark, root).head
-    assert(ScanPruning.FileIndexStore.commitNext(root, "racer", Nil,
+    val pair = FileIndex.livePairs(spark, root).head
+    assert(FileIndex.commitNext(root, "racer", Nil,
       Seq(pair)), "first retirement should land")
-    intercept[ScanPruning.FileIndexStore.CommitConflict] {
-      ScanPruning.FileIndexStore.commitNext(root, "loser", Seq(3),
+    intercept[FileIndex.CommitConflict] {
+      FileIndex.commitNext(root, "loser", Seq(3),
         Seq(pair))
     }
     // the loser left no trace: not in the ledger, no version burned
-    assert(!ScanPruning.FileIndexStore.absorbedIds(spark, root)
+    assert(!FileIndex.absorbedIds(spark, root)
       .contains("loser"))
 
     // same-gen race: the slower duplicate publish degrades to the
     // replay no-op (false), atomically
-    assert(!ScanPruning.FileIndexStore.commitNext(root, "racer", Nil, Nil))
+    assert(!FileIndex.commitNext(root, "racer", Nil, Nil))
   }
 
   test("manifest checkpoints serve head reads without the commit prefix") {
@@ -75,13 +76,13 @@ class ScanPruningSpec extends AnyFunSuite {
     def synth(ids: Range) = ids.map { i =>
       (i.toLong, i.toLong * 1000000000L, (i % 20).toLong, "view", 1.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val root = ScanPruning.FileIndexStore.buildRootFrom(spark, synth(0 until 300))
+    val root = FileIndex.buildRootFrom(spark, synth(0 until 300))
     for (b <- 1 to 9) // commits 1..9; the 8th folds a checkpoint
-      assert(ScanPruning.FileIndexStore.absorb(spark, root,
+      assert(FileIndex.absorb(spark, root,
         synth(1000 * b until 1000 * b + 50), s"inc-$b"))
 
     val mdir = java.nio.file.Paths.get(
-      ScanPruning.FileIndexStore.manifestPath(root))
+      FileIndex.manifestPath(root))
     import scala.jdk.CollectionConverters._
     def names() = {
       val st = java.nio.file.Files.list(mdir)
@@ -90,8 +91,8 @@ class ScanPruningSpec extends AnyFunSuite {
     }
     assert(names().exists(_.startsWith("ckpt-")), "no checkpoint written")
 
-    val pairsBefore = ScanPruning.FileIndexStore.livePairs(spark, root)
-    val ledgerBefore = ScanPruning.FileIndexStore.absorbedIds(spark, root)
+    val pairsBefore = FileIndex.livePairs(spark, root)
+    val ledgerBefore = FileIndex.absorbedIds(spark, root)
 
     // move every PRE-checkpoint commit file away: head reads must
     // still answer identically from checkpoint + suffix — the proof
@@ -102,18 +103,18 @@ class ScanPruningSpec extends AnyFunSuite {
     try {
       moved.foreach(n => java.nio.file.Files.move(
         mdir.resolve(n), backup.resolve(n)))
-      assert(ScanPruning.FileIndexStore.livePairs(spark, root)
+      assert(FileIndex.livePairs(spark, root)
         == pairsBefore, "head live set needed the pre-checkpoint commits")
-      assert(ScanPruning.FileIndexStore.absorbedIds(spark, root)
+      assert(FileIndex.absorbedIds(spark, root)
         == ledgerBefore, "ledger needed the pre-checkpoint commits")
       // replays still no-op off the checkpointed ledger
-      assert(!ScanPruning.FileIndexStore.absorb(spark, root,
+      assert(!FileIndex.absorb(spark, root,
         synth(0 until 1), "inc-3"))
     } finally moved.foreach(n => java.nio.file.Files.move(
       backup.resolve(n), mdir.resolve(n)))
 
     // with history restored, time travel through the prefix works
-    assert(ScanPruning.FileIndexStore
+    assert(FileIndex
       .livePairsAt(spark, root, 0L).forall(_._1 == "corpus"))
   }
 
@@ -124,16 +125,16 @@ class ScanPruningSpec extends AnyFunSuite {
       (i.toLong, i.toLong * 1000000000L, u, "view",
         (i % 97 + 1) / 100.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val root = ScanPruning.FileIndexStore.buildRootFrom(spark, synth)
-    assert(ScanPruning.FileIndexStore.absorb(spark, root,
+    val root = FileIndex.buildRootFrom(spark, synth)
+    assert(FileIndex.absorb(spark, root,
       synth.withColumn("event_id", col("event_id") + 10000L), "inc-1"))
 
     def fingerprints(): Map[String, String] = {
       val md = java.security.MessageDigest.getInstance("MD5")
-      ScanPruning.FileIndexStore.livePairs(spark, root).flatMap {
+      FileIndex.livePairs(spark, root).flatMap {
         case (g, b) =>
           val dir = java.nio.file.Paths.get(
-            ScanPruning.FileIndexStore.bucketDir(root, g, b))
+            FileIndex.bucketDir(root, g, b))
           val stream = java.nio.file.Files.list(dir)
           try {
             import scala.jdk.CollectionConverters._
@@ -147,13 +148,13 @@ class ScanPruningSpec extends AnyFunSuite {
     }
 
     val before = fingerprints()
-    val fullBefore = ScanPruning.FileIndexStore
-      .readPairs(spark, root, ScanPruning.FileIndexStore
+    val fullBefore = FileIndex
+      .readPairs(spark, root, FileIndex
         .livePairs(spark, root))
       .select(col("event_id")).collect().map(_.getLong(0)).toSet
 
-    assert(ScanPruning.FileIndexStore.eraseDv(spark, root, 7L, "dve-1"))
-    assert(!ScanPruning.FileIndexStore.eraseDv(spark, root, 7L, "dve-1"),
+    assert(FileIndex.eraseDv(spark, root, 7L, "dve-1"))
+    assert(!FileIndex.eraseDv(spark, root, 7L, "dve-1"),
       "replayed MoR erase was re-applied")
 
     // THE deletion-vector property: every live data file is
@@ -162,8 +163,8 @@ class ScanPruningSpec extends AnyFunSuite {
       "a merge-on-read erase rewrote data files")
 
     // ...yet reads no longer see the user, and lose nothing else
-    val afterIds = ScanPruning.FileIndexStore
-      .readPairs(spark, root, ScanPruning.FileIndexStore
+    val afterIds = FileIndex
+      .readPairs(spark, root, FileIndex
         .livePairs(spark, root))
       .select(col("event_id"), col("user_id")).collect()
     assert(afterIds.forall(_.getLong(1) != 7L), "erased user still read")
@@ -176,14 +177,14 @@ class ScanPruningSpec extends AnyFunSuite {
     // compaction folds the vectors into rewritten files: the new
     // generation physically lacks the user, and no DV row targets a
     // live file any more (the residual anti-join is gone)
-    assert(ScanPruning.FileIndexStore.compact(spark, root).isDefined)
-    val newPairs = ScanPruning.FileIndexStore.livePairs(spark, root)
+    assert(FileIndex.compact(spark, root).isDefined)
+    val newPairs = FileIndex.livePairs(spark, root)
     val physical = spark.read.parquet(newPairs.map { case (g, b) =>
-        ScanPruning.FileIndexStore.bucketDir(root, g, b)
+        FileIndex.bucketDir(root, g, b)
       }: _*) // raw read, NO dv applied
     assert(physical.filter(col("user_id") === 7L).count() == 0,
       "compaction did not fold the deletion vector")
-    assert(ScanPruning.FileIndexStore.dv(spark, root).isEmpty,
+    assert(FileIndex.dv(spark, root).isEmpty,
       "stale DV rows still target live files after the fold")
     assert(physical.count().toInt == want.size)
   }
@@ -198,10 +199,10 @@ class ScanPruningSpec extends AnyFunSuite {
       (i.toLong, u * 1000000000L, u,
         if (u < 64) "rare" else "common", 1.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val root = ScanPruning.FileIndexStore.buildRootFrom(spark, synth)
+    val root = FileIndex.buildRootFrom(spark, synth)
 
-    val liveN = ScanPruning.FileIndexStore.livePairs(spark, root).size
-    val kept = ScanPruning.FileIndexStore
+    val liveN = FileIndex.livePairs(spark, root).size
+    val kept = FileIndex
       .typesMatching(spark, root, "rare")
       .collect().map(r => (r.getString(0), r.getInt(1)))
     assert(kept.length * 2 < liveN,
@@ -209,20 +210,20 @@ class ScanPruningSpec extends AnyFunSuite {
 
     // conservative: the pruned read + residual equals the full filter
     val pruned = spark.read.parquet(kept.map { case (g, b) =>
-        ScanPruning.FileIndexStore.bucketDir(root, g, b)
+        FileIndex.bucketDir(root, g, b)
       }.toIndexedSeq: _*)
       .filter(col("event_type") === "rare").count()
     assert(pruned == 8192L / 16L, s"pruned read found $pruned rare rows")
 
     // a type the corpus never held keeps zero files
-    assert(ScanPruning.FileIndexStore
+    assert(FileIndex
       .typesMatching(spark, root, "absent").isEmpty)
   }
 
   test("zone pruning is conservative for arbitrary boxes") {
     val root = isolatedRoot()
-    val zone = ScanPruning.FileIndexStore.zone(spark, root)
-    val l = ScanPruning.FileIndexStore.layoutOf(spark, root)
+    val zone = FileIndex.zone(spark, root)
+    val l = FileIndex.layoutOf(spark, root)
     val all = Tables.events(spark, dir).withColumn("tsu", expr("ts div 1000"))
     // boxes as (ulo8, uhi8, tlo8, thi8) eighths of each range — edge
     // boxes, full-range boxes, and empty-intersection boxes included
@@ -251,10 +252,10 @@ class ScanPruningSpec extends AnyFunSuite {
 
   test("the demo box actually skips files, and the physical read set shrinks") {
     val root = isolatedRoot()
-    val zone = ScanPruning.FileIndexStore.zone(spark, root)
-    val l = ScanPruning.FileIndexStore.layoutOf(spark, root)
+    val zone = FileIndex.zone(spark, root)
+    val l = FileIndex.layoutOf(spark, root)
     val total = zone.count()
-    val kept = ScanPruning.boxSurvivors(zone, l).count()
+    val kept = FileIndex.boxSurvivors(zone, l).count()
     assert(kept < total, s"box pruning kept all $total logical files")
     assert(kept > 0, "box pruning eliminated everything — box misplaced")
     // physical pin via the public query: the pruned plan's data-file
@@ -275,14 +276,14 @@ class ScanPruningSpec extends AnyFunSuite {
       val u = if (i % 20 < 10) i % 20 else i % 20 + 10
       (i, i * 1000000000L, u, "view", 1.5, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val root = ScanPruning.FileIndexStore.buildRootFrom(spark, synth)
-    val zone = ScanPruning.FileIndexStore.zone(spark, root)
+    val root = FileIndex.buildRootFrom(spark, synth)
+    val zone = FileIndex.zone(spark, root)
     val zoneKept = zone.filter(col("u_lo") <= 15 && col("u_hi") >= 15).count()
     assert(zoneKept > 0, "no file's zone range covers 15 — bad synth layout")
-    assert(ScanPruning.pointSurvivors(spark, root, 15L).isEmpty,
+    assert(FileIndex.pointSurvivors(spark, root, 15L).isEmpty,
       "bloom failed to reject the absent user 15")
     // a PRESENT user survives both layers and reads back its rows
-    val hits = readBuckets(root, ScanPruning.pointSurvivors(spark, root, 7L))
+    val hits = readBuckets(root, FileIndex.pointSurvivors(spark, root, 7L))
       .filter(col("user_id") === 7L).count()
     assert(hits == synth.filter(col("user_id") === 7L).count())
   }
@@ -292,20 +293,20 @@ class ScanPruningSpec extends AnyFunSuite {
     val synth = (0L until 100L)
       .map(i => (i, i * 1000000000L, i % 10, "view", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val root = ScanPruning.FileIndexStore.buildRootFrom(spark, synth)
+    val root = FileIndex.buildRootFrom(spark, synth)
     // user 1000 is far outside the layout's creation-time [0, 9]
     val late = Seq((1000L, 5000000000L, 1000L, "click", 2.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    assert(ScanPruning.FileIndexStore.absorb(spark, root, late, "late-1"))
+    assert(FileIndex.absorb(spark, root, late, "late-1"))
     val found = readBuckets(root,
-      ScanPruning.pointSurvivors(spark, root, 1000L))
+      FileIndex.pointSurvivors(spark, root, 1000L))
       .filter(col("user_id") === 1000L).count()
     assert(found == 1L, "clamped out-of-range row not found via the index")
   }
 
   test("compaction swaps atomically, preserves answers, and keeps the ledger") {
     val root = isolatedRoot()
-    val zone = () => ScanPruning.FileIndexStore.zone(spark, root)
+    val zone = () => FileIndex.zone(spark, root)
     // pre-compaction census, merged across generations
     def census(df: DataFrame) = df.groupBy(col("zbucket"))
       .agg(sum(col("n")).as("n"), min(col("u_lo")).as("u_lo"),
@@ -313,37 +314,37 @@ class ScanPruningSpec extends AnyFunSuite {
         max(col("t_hi")).as("t_hi"))
       .collect().map(_.toSeq).toSet
     val before = census(zone())
-    assert(ScanPruning.FileIndexStore.liveGens(spark, root).size == 2)
+    assert(FileIndex.liveGens(spark, root).size == 2)
 
     // a half-published generation (index rows, no manifest row — the
     // mid-absorb crash) must be invisible to readers
     val orphan = spark.read.parquet(
-      ScanPruning.FileIndexStore.zonePath(root))
+      FileIndex.zonePath(root))
       .filter(col("inc_id") === "corpus")
       .withColumn("inc_id", lit("orphan-gen"))
     graft.storage.AstarteStore.appendAtomic(orphan,
-      ScanPruning.FileIndexStore.zonePath(root))
+      FileIndex.zonePath(root))
     assert(zone().filter(col("inc_id") === "orphan-gen").isEmpty,
       "unpublished generation leaked into the zone map")
 
-    val swapped = ScanPruning.FileIndexStore.compact(spark, root)
+    val swapped = FileIndex.compact(spark, root)
     assert(swapped.exists(_.startsWith("compact-")))
-    assert(ScanPruning.FileIndexStore.liveGens(spark, root)
+    assert(FileIndex.liveGens(spark, root)
       == Seq(swapped.get), "old generations still live after the swap")
     assert(census(zone()) == before,
       "compaction changed the merged per-bucket statistics")
 
     // dead generations stay in the ledger: re-absorbing an increment
     // whose rows now live inside the compacted generation is a no-op
-    assert(!ScanPruning.FileIndexStore.absorb(spark, root,
+    assert(!FileIndex.absorb(spark, root,
       ScanPruning.incrementEvents(spark, dir), "inc-1"),
       "compacted-away increment was re-absorbed")
     // a single live generation needs no compaction
-    assert(ScanPruning.FileIndexStore.compact(spark, root).isEmpty)
+    assert(FileIndex.compact(spark, root).isEmpty)
 
     // and the pruned point read still answers from the compacted files
-    val l = ScanPruning.FileIndexStore.layoutOf(spark, root)
-    val got = readBuckets(root, ScanPruning.pointSurvivors(spark, root, l.probe))
+    val l = FileIndex.layoutOf(spark, root)
+    val got = readBuckets(root, FileIndex.pointSurvivors(spark, root, l.probe))
       .filter(col("user_id") === l.probe).count()
     val want = Tables.events(spark, dir)
       .filter(col("user_id") === l.probe).count()
@@ -358,18 +359,18 @@ class ScanPruningSpec extends AnyFunSuite {
     val synth = (0L until 20000L).map(i =>
       (i, (i / 200L) * 1000000000L, i % 200L, "view", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val root = ScanPruning.FileIndexStore.buildRootFrom(spark, synth,
+    val root = FileIndex.buildRootFrom(spark, synth,
       forcedPbits = Some(4))
-    val l = ScanPruning.FileIndexStore.layoutOf(spark, root)
+    val l = FileIndex.layoutOf(spark, root)
     assert(l.pbits == 4 && l.buckets == 256, "forced prefix depth lost")
-    val zone = ScanPruning.FileIndexStore.zone(spark, root)
+    val zone = FileIndex.zone(spark, root)
     val total = zone.count()
     assert(total > 64, s"fine-grained build produced only $total files")
-    val kept = ScanPruning.boxSurvivors(zone, l).count()
+    val kept = FileIndex.boxSurvivors(zone, l).count()
     assert(kept.toDouble / total < 1.0 / 16,
       s"finer granularity did not sharpen the prune: kept $kept/$total")
     // and the pruned read still answers exactly
-    val pruned = readBuckets(root, ScanPruning.boxSurvivors(zone, l))
+    val pruned = readBuckets(root, FileIndex.boxSurvivors(zone, l))
       .withColumn("tsu", expr("ts div 1000"))
       .filter(col("user_id").between(l.ulo, l.uhi) &&
         col("tsu").between(l.tlo, l.thi)).count()
@@ -386,9 +387,9 @@ class ScanPruningSpec extends AnyFunSuite {
       .map(i => (i.toLong, (i % 2000) * 1000000000L, (i % 50).toLong,
         "view", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val root = ScanPruning.FileIndexStore.buildRootFrom(spark, synth(0 until 2000))
+    val root = FileIndex.buildRootFrom(spark, synth(0 until 2000))
     for (j <- 1 to 3)
-      assert(ScanPruning.FileIndexStore.absorb(spark, root,
+      assert(FileIndex.absorb(spark, root,
         synth(2000 + j * 10 until 2000 + j * 10 + 10), s"tiny-$j"))
     def fileSet(gen: String): Set[(String, Long)] = {
       val p = java.nio.file.Paths.get(root, s"data_$gen")
@@ -400,80 +401,80 @@ class ScanPruningSpec extends AnyFunSuite {
       out.toSet
     }
     val corpusBefore = fileSet("corpus")
-    val totalBefore = ScanPruning.FileIndexStore.zone(spark, root)
+    val totalBefore = FileIndex.zone(spark, root)
       .agg(sum(col("n"))).head().getLong(0)
 
     // threshold under the corpus size: folds exactly the three tiny
     // generations, corpus files keep their paths AND bytes
-    val swapped = ScanPruning.FileIndexStore.compactTier(spark, root, 100L)
+    val swapped = FileIndex.compactTier(spark, root, 100L)
     assert(swapped.exists(_.startsWith("compact-")))
-    assert(ScanPruning.FileIndexStore.liveGens(spark, root).toSet ==
+    assert(FileIndex.liveGens(spark, root).toSet ==
       Set("corpus", swapped.get), "tiered fold touched the big generation")
     assert(fileSet("corpus") == corpusBefore,
       "size-tiered compaction rewrote the large generation's files")
-    assert(ScanPruning.FileIndexStore.zone(spark, root)
+    assert(FileIndex.zone(spark, root)
       .agg(sum(col("n"))).head().getLong(0) == totalBefore,
       "tiered fold changed the live row census")
     // reads still correct across the folded + untouched generations
     val hits = readBuckets(root,
-      ScanPruning.pointSurvivors(spark, root, 7L))
+      FileIndex.pointSurvivors(spark, root, 7L))
       .filter(col("user_id") === 7L).count()
     assert(hits == synth(0 until 2000).filter(col("user_id") === 7L).count() +
       (1 to 3).map(j => synth(2000 + j * 10 until 2000 + j * 10 + 10)
         .filter(col("user_id") === 7L).count()).sum)
     // only one generation now sits under the threshold → no-op
-    assert(ScanPruning.FileIndexStore.compactTier(spark, root, 100L).isEmpty)
+    assert(FileIndex.compactTier(spark, root, 100L).isEmpty)
     // the full OPTIMIZE still folds everything down to one generation
-    val full = ScanPruning.FileIndexStore.compact(spark, root)
+    val full = FileIndex.compact(spark, root)
     assert(full.exists(_.startsWith("compact-")) && full != swapped)
-    assert(ScanPruning.FileIndexStore.liveGens(spark, root) == Seq(full.get))
+    assert(FileIndex.liveGens(spark, root) == Seq(full.get))
   }
 
   test("time travel reads past versions; vacuum reclaims only dead data") {
     val root = isolatedRoot()
-    val seqBefore = ScanPruning.FileIndexStore.currentSeq(spark, root)
-    assert(ScanPruning.FileIndexStore.compact(spark, root).isDefined)
+    val seqBefore = FileIndex.currentSeq(spark, root)
+    assert(FileIndex.compact(spark, root).isDefined)
 
     // the as-of live set is the pre-compaction one; its (dead) files
     // still answer point reads identically to the head
-    assert(ScanPruning.FileIndexStore.livePairsAt(spark, root, seqBefore)
+    assert(FileIndex.livePairsAt(spark, root, seqBefore)
       .map(_._1).distinct.sorted == Seq("corpus", "inc-1"))
-    val l = ScanPruning.FileIndexStore.layoutOf(spark, root)
+    val l = FileIndex.layoutOf(spark, root)
     def probeCount(zone: DataFrame) = {
       val survivors = zone.filter(
         col("u_lo") <= l.probe && col("u_hi") >= l.probe)
       readBuckets(root, survivors).filter(col("user_id") === l.probe).count()
     }
     val past = probeCount(
-      ScanPruning.FileIndexStore.zoneAt(spark, root, seqBefore))
-    val head = probeCount(ScanPruning.FileIndexStore.zone(spark, root))
+      FileIndex.zoneAt(spark, root, seqBefore))
+    val head = probeCount(FileIndex.zone(spark, root))
     assert(past == head && head > 0,
       s"time-travel read diverged from head ($past vs $head)")
 
     // vacuum deletes exactly the dead files' data; head reads are
     // untouched, the old snapshot's files are gone
-    val reclaimed = ScanPruning.FileIndexStore.vacuum(spark, root)
+    val reclaimed = FileIndex.vacuum(spark, root)
     assert(reclaimed.nonEmpty &&
       reclaimed.map(_._1).distinct.sorted == Seq("corpus", "inc-1"))
     // per-file reclamation: every dead bucket dir is gone (the empty
     // generation parent may remain), the live generation is intact
     for ((g, b) <- reclaimed)
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(
-        ScanPruning.FileIndexStore.bucketDir(root, g, b))))
-    val liveGen = ScanPruning.FileIndexStore.liveGens(spark, root).head
+        FileIndex.bucketDir(root, g, b))))
+    val liveGen = FileIndex.liveGens(spark, root).head
     assert(liveGen.startsWith("compact-") && java.nio.file.Files.exists(
       java.nio.file.Paths.get(root, s"data_$liveGen")))
-    assert(probeCount(ScanPruning.FileIndexStore.zone(spark, root)) == head,
+    assert(probeCount(FileIndex.zone(spark, root)) == head,
       "vacuum broke the head read")
   }
 
   test("point-probe bloom bits reach the bloom-log scan as pushed literals") {
     val root = isolatedRoot()
-    val l = ScanPruning.FileIndexStore.layoutOf(spark, root)
-    val pred = ScanPruning.bloomBitsOf(l.probe)
+    val l = FileIndex.layoutOf(spark, root)
+    val pred = FileIndex.bloomBitsOf(l.probe)
       .map { case (r, b) => col("r") === r && col("bit") === b }
       .reduce(_ || _)
-    val p = ScanPruning.FileIndexStore.bloomMatching(spark, root, pred)
+    val p = FileIndex.bloomMatching(spark, root, pred)
       .queryExecution.executedPlan.toString()
     assert(p.contains("PushedFilters:") && p.contains("EqualTo(bit,"),
       s"probe bits not pushed into the bloom-log scan:\n${p.take(1200)}")
@@ -481,22 +482,22 @@ class ScanPruningSpec extends AnyFunSuite {
 
   test("copy-on-write erase rewrites only touched files; vacuum destroys the bytes") {
     val root = isolatedRoot()
-    val l = ScanPruning.FileIndexStore.layoutOf(spark, root)
-    val pairsBefore = ScanPruning.FileIndexStore.livePairs(spark, root).toSet
-    val touched = ScanPruning.pointSurvivors(spark, root, l.probe)
+    val l = FileIndex.layoutOf(spark, root)
+    val pairsBefore = FileIndex.livePairs(spark, root).toSet
+    val touched = FileIndex.pointSurvivors(spark, root, l.probe)
       .select(col("inc_id"), col("zbucket")).collect()
       .map(r => (r.getString(0), r.getInt(1))).toSet
     assert(touched.nonEmpty && touched.size < pairsBefore.size,
       "probe erase would rewrite everything — pruning is not selective")
-    val seqBefore = ScanPruning.FileIndexStore.currentSeq(spark, root)
+    val seqBefore = FileIndex.currentSeq(spark, root)
 
-    assert(ScanPruning.FileIndexStore.erase(spark, root, l.probe, "erase-1"))
+    assert(FileIndex.erase(spark, root, l.probe, "erase-1"))
     // ledger: replay is a no-op
-    assert(!ScanPruning.FileIndexStore.erase(spark, root, l.probe, "erase-1"))
+    assert(!FileIndex.erase(spark, root, l.probe, "erase-1"))
 
     // untouched files keep their original generation — only the
     // touched pairs were retired
-    val pairsAfter = ScanPruning.FileIndexStore.livePairs(spark, root).toSet
+    val pairsAfter = FileIndex.livePairs(spark, root).toSet
     assert((pairsBefore -- touched).subsetOf(pairsAfter),
       "erase retired files it did not touch")
     assert(pairsAfter.forall(p =>
@@ -504,7 +505,7 @@ class ScanPruningSpec extends AnyFunSuite {
       "a touched file is still live under its old generation")
 
     // the user is gone from head reads; everyone else is intact
-    val head = readBuckets(root, ScanPruning.FileIndexStore.zone(spark, root))
+    val head = readBuckets(root, FileIndex.zone(spark, root))
     assert(head.filter(col("user_id") === l.probe).count() == 0,
       "erased user still readable at head")
     val expectOthers = Tables.events(spark, dir)
@@ -514,45 +515,45 @@ class ScanPruningSpec extends AnyFunSuite {
     // privacy caveat: time travel BEFORE the erase still sees the
     // user — until vacuum destroys the dead bytes
     val past = readBuckets(root,
-      ScanPruning.FileIndexStore.zoneAt(spark, root, seqBefore))
+      FileIndex.zoneAt(spark, root, seqBefore))
     assert(past.filter(col("user_id") === l.probe).count() > 0,
       "pre-erase snapshot should still hold the user (before vacuum)")
     // retention horizon: a vacuum bounded BEFORE the erase's death
     // version reclaims nothing — the pre-erase snapshot survives
-    assert(ScanPruning.FileIndexStore
+    assert(FileIndex
       .vacuumBefore(spark, root, seqBefore).isEmpty,
       "horizon vacuum reclaimed files still needed by retained snapshots")
     assert(readBuckets(root,
-      ScanPruning.FileIndexStore.zoneAt(spark, root, seqBefore))
+      FileIndex.zoneAt(spark, root, seqBefore))
       .filter(col("user_id") === l.probe).count() > 0,
       "horizon vacuum broke a retained snapshot")
-    val reclaimed = ScanPruning.FileIndexStore.vacuum(spark, root).toSet
+    val reclaimed = FileIndex.vacuum(spark, root).toSet
     assert(reclaimed == touched, "vacuum reclaimed a different file set")
     for ((g, b) <- touched)
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(
-        ScanPruning.FileIndexStore.bucketDir(root, g, b))),
+        FileIndex.bucketDir(root, g, b))),
         s"dead file ($g, $b) still on disk after vacuum")
     // erase + vacuum = complete deletion; head reads still intact
-    assert(readBuckets(root, ScanPruning.FileIndexStore.zone(spark, root))
+    assert(readBuckets(root, FileIndex.zone(spark, root))
       .count() == expectOthers, "vacuum broke the post-erase head read")
   }
 
   test("copy-on-write update rewrites only touched files and only the key's rows") {
     val root = isolatedRoot()
-    val l = ScanPruning.FileIndexStore.layoutOf(spark, root)
-    val pairsBefore = ScanPruning.FileIndexStore.livePairs(spark, root).toSet
-    val touched = ScanPruning.pointSurvivors(spark, root, l.probe)
+    val l = FileIndex.layoutOf(spark, root)
+    val pairsBefore = FileIndex.livePairs(spark, root).toSet
+    val touched = FileIndex.pointSurvivors(spark, root, l.probe)
       .select(col("inc_id"), col("zbucket")).collect()
       .map(r => (r.getString(0), r.getInt(1))).toSet
-    assert(ScanPruning.FileIndexStore.updateUser(
+    assert(FileIndex.updateUser(
       spark, root, l.probe, 9.99, "upd-1"))
-    assert(!ScanPruning.FileIndexStore.updateUser(
+    assert(!FileIndex.updateUser(
       spark, root, l.probe, 1.23, "upd-1"), "replayed update id re-ran")
 
-    val pairsAfter = ScanPruning.FileIndexStore.livePairs(spark, root).toSet
+    val pairsAfter = FileIndex.livePairs(spark, root).toSet
     assert((pairsBefore -- touched).subsetOf(pairsAfter),
       "update retired files it did not touch")
-    val head = readBuckets(root, ScanPruning.FileIndexStore.zone(spark, root))
+    val head = readBuckets(root, FileIndex.zone(spark, root))
     assert(head.filter(col("user_id") === l.probe &&
       col("value") =!= 9.99).count() == 0, "a probe row kept its old value")
     val othersTouched = head.filter(col("user_id") =!= l.probe &&
@@ -566,7 +567,7 @@ class ScanPruningSpec extends AnyFunSuite {
   }
 
   test("predicate delete/update rewrite only stat-candidate files") {
-    val fis = ScanPruning.FileIndexStore
+    val fis = FileIndex
     val root = isolatedRoot()
     val l = fis.layoutOf(spark, root)
     // the demo TIME box (ts stored in nanos; layout bounds in micros)
@@ -633,7 +634,7 @@ class ScanPruningSpec extends AnyFunSuite {
   }
 
   test("positional predicate delete moves no bytes; compaction folds it") {
-    val fis = ScanPruning.FileIndexStore
+    val fis = FileIndex
     val root = isolatedRoot()
     val l = fis.layoutOf(spark, root)
     val pred = col("ts").between(l.tlo * 1000L, l.thi * 1000L + 999L) &&
@@ -696,7 +697,7 @@ class ScanPruningSpec extends AnyFunSuite {
   }
 
   test("absorb is ledger-guarded, replay-idempotent, and corpus-blind") {
-    val root = ScanPruning.FileIndexStore.buildRoot(spark, dir)
+    val root = ScanPruning.buildRoot(spark, dir)
     val inc = ScanPruning.incrementEvents(spark, dir).localCheckpoint(true)
 
     // corpus-blind: absorbing must succeed with the corpus DATA gone
@@ -704,7 +705,7 @@ class ScanPruningSpec extends AnyFunSuite {
     val corpusData = java.nio.file.Paths.get(root, "data_corpus")
     val hidden = java.nio.file.Paths.get(root, "data_corpus_hidden")
     java.nio.file.Files.move(corpusData, hidden)
-    try assert(ScanPruning.FileIndexStore.absorb(spark, root, inc, "inc-1"),
+    try assert(FileIndex.absorb(spark, root, inc, "inc-1"),
       "first absorb should land")
     finally java.nio.file.Files.move(hidden, corpusData)
 
@@ -715,30 +716,30 @@ class ScanPruningSpec extends AnyFunSuite {
     def bloomSet(df: DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getLong(3)))
       .toSet
-    val zone0 = zoneMap(ScanPruning.FileIndexStore.zone(spark, root))
-    val bloom0 = bloomSet(ScanPruning.FileIndexStore.bloom(spark, root))
+    val zone0 = zoneMap(FileIndex.zone(spark, root))
+    val bloom0 = bloomSet(FileIndex.bloom(spark, root))
     assert(zone0.keys.exists(_._1 == "inc-1"))
 
     // ledger: a replayed absorb is a no-op
-    assert(!ScanPruning.FileIndexStore.absorb(spark, root, inc, "inc-1"))
-    assert(zoneMap(ScanPruning.FileIndexStore.zone(spark, root)) == zone0)
+    assert(!FileIndex.absorb(spark, root, inc, "inc-1"))
+    assert(zoneMap(FileIndex.zone(spark, root)) == zone0)
 
     // crash window: the retry that raced the ledger read and DOUBLE-
     // appended the same inc_id's index rows — merge-on-read still
     // yields the same index
     val rawZone = spark.read.parquet(
-      ScanPruning.FileIndexStore.zonePath(root))
+      FileIndex.zonePath(root))
       .filter(col("inc_id") === "inc-1")
     graft.storage.AstarteStore.appendAtomic(rawZone,
-      ScanPruning.FileIndexStore.zonePath(root))
+      FileIndex.zonePath(root))
     val rawBloom = spark.read.parquet(
-      ScanPruning.FileIndexStore.bloomPath(root))
+      FileIndex.bloomPath(root))
       .filter(col("inc_id") === "inc-1")
     graft.storage.AstarteStore.appendAtomic(rawBloom,
-      ScanPruning.FileIndexStore.bloomPath(root))
-    assert(zoneMap(ScanPruning.FileIndexStore.zone(spark, root)) == zone0,
+      FileIndex.bloomPath(root))
+    assert(zoneMap(FileIndex.zone(spark, root)) == zone0,
       "double-appended zone rows changed the merged index")
-    assert(bloomSet(ScanPruning.FileIndexStore.bloom(spark, root)) == bloom0,
+    assert(bloomSet(FileIndex.bloom(spark, root)) == bloom0,
       "double-appended bloom rows changed the merged bit set")
   }
 
@@ -751,28 +752,28 @@ class ScanPruningSpec extends AnyFunSuite {
       (i.toLong, (i.toLong % 3000) * 1000000000L, u, "view",
         (i % 97 + 1) / 100.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val root = ScanPruning.FileIndexStore.buildRootFrom(spark, synth,
+    val root = FileIndex.buildRootFrom(spark, synth,
       forcedPbits = Some(3))
-    assert(ScanPruning.FileIndexStore.absorb(spark, root,
+    assert(FileIndex.absorb(spark, root,
       synth.withColumn("event_id", col("event_id") + 10000L), "inc-1"))
-    assert(ScanPruning.FileIndexStore.layoutOf(spark, root).curve == "z")
+    assert(FileIndex.layoutOf(spark, root).curve == "z")
 
-    def allIds(): Set[Long] = ScanPruning.FileIndexStore
-      .readPairs(spark, root, ScanPruning.FileIndexStore
+    def allIds(): Set[Long] = FileIndex
+      .readPairs(spark, root, FileIndex
         .livePairs(spark, root))
       .select(col("event_id")).collect().map(_.getLong(0)).toSet
     val before = allIds()
 
-    assert(ScanPruning.FileIndexStore.migrate(spark, root, "hilbert",
+    assert(FileIndex.migrate(spark, root, "hilbert",
       rangeBucketed = true, "migrate-1"))
-    assert(!ScanPruning.FileIndexStore.migrate(spark, root, "hilbert",
+    assert(!FileIndex.migrate(spark, root, "hilbert",
       rangeBucketed = true, "migrate-1"), "replayed migration re-ran")
 
     // the new layout is active and persisted; the old generations are
     // gone from the live set; not a row moved logically
-    val l = ScanPruning.FileIndexStore.layoutOf(spark, root)
+    val l = FileIndex.layoutOf(spark, root)
     assert(l.curve == "hilbert" && l.splits.nonEmpty)
-    val liveGens = ScanPruning.FileIndexStore
+    val liveGens = FileIndex
       .livePairs(spark, root).map(_._1).distinct
     assert(liveGens.forall(_.startsWith("migrate-1@")) &&
       liveGens.size == 1,
@@ -780,14 +781,14 @@ class ScanPruningSpec extends AnyFunSuite {
     assert(allIds() == before, "migration changed the logical table")
 
     // range bucketing balanced the skew the prefix layout could not
-    val rows = ScanPruning.FileIndexStore.zone(spark, root)
+    val rows = FileIndex.zone(spark, root)
       .select(col("n")).collect().map(_.getLong(0))
     assert(rows.max <= 2L * (16384L / rows.length),
       s"migrated buckets unbalanced: ${rows.sorted.reverse.take(4).toSeq}")
 
     // a post-migration absorb clusters under the NEW layout (its keys
     // route through the persisted split points) and reads compose
-    assert(ScanPruning.FileIndexStore.absorb(spark, root,
+    assert(FileIndex.absorb(spark, root,
       synth.withColumn("event_id", col("event_id") + 20000L), "inc-2"))
     assert(allIds() == before ++ (0L until 8192L).map(_ + 20000L),
       "post-migration absorb diverged")
@@ -800,18 +801,18 @@ class ScanPruningSpec extends AnyFunSuite {
       (i.toLong, (i.toLong + 5) * 1000000000L, u, "view",
         (i % 97 + 1) / 100.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val root = ScanPruning.FileIndexStore.buildRootFrom(spark, synth)
-    assert(ScanPruning.FileIndexStore.absorb(spark, root,
+    val root = FileIndex.buildRootFrom(spark, synth)
+    assert(FileIndex.absorb(spark, root,
       synth.withColumn("event_id", col("event_id") + 10000L), "inc-1"))
 
     def statsOf(): (Long, Long, Long, Long, Long) = {
-      val r = ScanPruning.FileIndexStore.metaStats(spark, root).head()
+      val r = FileIndex.metaStats(spark, root).head()
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
     }
 
     // vector-free: the stats frame scans ONLY index state — the
     // metadata-only-query property, pinned on the physical read set
-    val clean = ScanPruning.FileIndexStore.metaStats(spark, root)
+    val clean = FileIndex.metaStats(spark, root)
     assert(clean.inputFiles.nonEmpty &&
       clean.inputFiles.forall(!_.contains("/data_")),
       "a metadata-only read opened a data file")
@@ -820,12 +821,12 @@ class ScanPruningSpec extends AnyFunSuite {
     // merge-on-read erase of the MIN user: the zone stats are now
     // stale on both count and u_lo — the split fold must re-read the
     // touched files (and only those) and still be exact
-    assert(ScanPruning.FileIndexStore.eraseDv(spark, root, 0L, "dve-1"))
-    val touchedDirs = ScanPruning.FileIndexStore.dv(spark, root)
+    assert(FileIndex.eraseDv(spark, root, 0L, "dve-1"))
+    val touchedDirs = FileIndex.dv(spark, root)
       .select(col("inc_id"), col("zbucket")).distinct().collect()
-      .map(r => ScanPruning.FileIndexStore.bucketDir(root,
+      .map(r => FileIndex.bucketDir(root,
         r.getString(0), r.getInt(1)))
-    val after = ScanPruning.FileIndexStore.metaStats(spark, root)
+    val after = FileIndex.metaStats(spark, root)
     // inputFiles are file: URIs; bucketDir is a bare path
     val dataRead = after.inputFiles.filter(_.contains("/data_"))
       .map(_.replaceFirst("^file:/+", "/"))
@@ -853,7 +854,7 @@ class ScanPruningSpec extends AnyFunSuite {
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
 
     val corpus = mk(0L, 1500)
-    val root = ScanPruning.FileIndexStore.buildRootFrom(spark, corpus)
+    val root = FileIndex.buildRootFrom(spark, corpus)
     val cursorFile = java.nio.file.Paths.get(root, "feed_cursor")
     def loadCursor(): Long =
       if (java.nio.file.Files.exists(cursorFile))
@@ -863,7 +864,7 @@ class ScanPruningSpec extends AnyFunSuite {
       // rows + next cursor come from ONE manifest snapshot, so a
       // commit racing in mid-poll lands in the next poll, never lost
       val (head, rows) =
-        ScanPruning.FileIndexStore.changeFeedState(spark, root, loadCursor())
+        FileIndex.changeFeedState(spark, root, loadCursor())
       val ids = rows.select(col("event_id")).collect()
         .map(_.getLong(0)).toSet
       java.nio.file.Files.write(cursorFile, head.toString.getBytes("UTF-8"))
@@ -875,7 +876,7 @@ class ScanPruningSpec extends AnyFunSuite {
     assert(first == (0L until 1500L).toSet, "feed missed corpus rows")
     seen ++= first
 
-    assert(ScanPruning.FileIndexStore.absorb(spark, root, mk(10000L, 700),
+    assert(FileIndex.absorb(spark, root, mk(10000L, 700),
       "inc-a"))
     val second = poll()
     assert(second == (10000L until 10700L).toSet)
@@ -887,9 +888,9 @@ class ScanPruningSpec extends AnyFunSuite {
     // aggressive rewrite commit there is. Only the absorb's rows may
     // emit — and they emit from the absorb's own (now-dead, not yet
     // vacuumed) generation, as appended
-    assert(ScanPruning.FileIndexStore.absorb(spark, root, mk(20000L, 700),
+    assert(FileIndex.absorb(spark, root, mk(20000L, 700),
       "inc-b"))
-    assert(ScanPruning.FileIndexStore.erase(spark, root, 7L, "erase-1"))
+    assert(FileIndex.erase(spark, root, 7L, "erase-1"))
     val third = poll()
     assert(third == (20000L until 20700L).toSet,
       "a rewrite commit leaked rows into the append feed")
@@ -898,15 +899,15 @@ class ScanPruningSpec extends AnyFunSuite {
     // restart: the cursor reloads from disk (poll() already re-reads
     // it each time — this poll IS the restarted consumer), a replayed
     // absorb is ledger-blocked, and an empty poll emits nothing
-    assert(!ScanPruning.FileIndexStore.absorb(spark, root, mk(20000L, 700),
+    assert(!FileIndex.absorb(spark, root, mk(20000L, 700),
       "inc-b"), "replayed absorb landed twice")
     assert(poll().isEmpty, "an empty poll emitted rows")
     // an absorb and a compaction land in the same window: the
     // compaction re-publishes EVERYTHING (erase survivors + inc-c),
     // yet only inc-c's rows emit
-    assert(ScanPruning.FileIndexStore.absorb(spark, root, mk(30000L, 300),
+    assert(FileIndex.absorb(spark, root, mk(30000L, 300),
       "inc-c"))
-    assert(ScanPruning.FileIndexStore.compact(spark, root).isDefined)
+    assert(FileIndex.compact(spark, root).isDefined)
     val fourth = poll()
     assert(fourth == (30000L until 30300L).toSet,
       "the compaction rewrite leaked rows into the append feed")
@@ -929,11 +930,11 @@ class ScanPruningSpec extends AnyFunSuite {
       val u = (i % 1024).toLong
       (i.toLong, u * 1000000000L, u, "view", u / 10.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val root = ScanPruning.FileIndexStore.buildRootFrom(spark, synth)
+    val root = FileIndex.buildRootFrom(spark, synth)
 
-    val liveN = ScanPruning.FileIndexStore.livePairs(spark, root).size
+    val liveN = FileIndex.livePairs(spark, root).size
     val thr = 90.0 // only users ≥ 901 qualify — the top Morton corner
-    val kept = ScanPruning.FileIndexStore.zone(spark, root)
+    val kept = FileIndex.zone(spark, root)
       .filter(col("v_hi") > thr)
     assert(kept.count() * 2 < liveN,
       s"value prune kept ${kept.count()}/$liveN files — no skipping")
@@ -947,12 +948,12 @@ class ScanPruningSpec extends AnyFunSuite {
     // from the value-pruned read without any stat rewrite (pruning
     // is monotone under row removal, so the stale v_hi only keeps a
     // file it could have skipped, never skips one it must read)
-    assert(ScanPruning.FileIndexStore.eraseDv(spark, root, 1000L, "dve-v"))
-    val keptPairs = ScanPruning.FileIndexStore.zone(spark, root)
+    assert(FileIndex.eraseDv(spark, root, 1000L, "dve-v"))
+    val keptPairs = FileIndex.zone(spark, root)
       .filter(col("v_hi") > thr)
       .select(col("inc_id"), col("zbucket")).collect()
       .map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
-    val prunedDv = ScanPruning.FileIndexStore.readPairs(spark, root, keptPairs)
+    val prunedDv = FileIndex.readPairs(spark, root, keptPairs)
       .filter(col("value") > thr).count()
     assert(prunedDv == synth.filter(col("value") > thr &&
       col("user_id") =!= 1000L).count(),
@@ -965,22 +966,22 @@ class ScanPruningSpec extends AnyFunSuite {
       ((base + i).toLong, (base + i) * 1000000000L, (i % 40).toLong,
         "view", (i % 97 + 1) / 100.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val root = ScanPruning.FileIndexStore.buildRootFrom(spark, mk(0L, 800))
-    assert(ScanPruning.FileIndexStore.absorb(spark, root,
+    val root = FileIndex.buildRootFrom(spark, mk(0L, 800))
+    assert(FileIndex.absorb(spark, root,
       mk(10000L, 400).withColumn("score", pmod(col("event_id"), lit(7L))),
       "inc-ev"))
 
     // the persisted union schema serves the multi-generation read:
     // canonical columns first, the evolved extra after, all nullable —
     // and the read plans from it (schema equality), so no footer merge
-    val pairs = ScanPruning.FileIndexStore.livePairs(spark, root)
-    val merged = ScanPruning.FileIndexStore
+    val pairs = FileIndex.livePairs(spark, root)
+    val merged = FileIndex
       .mergedSchemaFor(spark, root, pairs.map(_._1))
     assert(merged.isDefined, "generations missing from the schema log")
     assert(merged.get.fieldNames.toSeq == Seq("event_id", "ts", "user_id",
       "event_type", "value", "props", "score"))
     assert(merged.get.fields.forall(_.nullable))
-    val read = ScanPruning.FileIndexStore.readPairs(spark, root, pairs)
+    val read = FileIndex.readPairs(spark, root, pairs)
     assert(read.schema == merged.get,
       "the evolved read did not plan from the persisted schema")
     // old generation null-fills, new one carries values
@@ -989,7 +990,7 @@ class ScanPruningSpec extends AnyFunSuite {
 
     // the change feed must carry the evolved column too (a CDC
     // consumer would otherwise silently lose it)
-    val feed = ScanPruning.FileIndexStore.changeFeed(spark, root, 0L)
+    val feed = FileIndex.changeFeed(spark, root, 0L)
     assert(feed.columns.contains("score"),
       "the change feed dropped an evolved column")
     assert(feed.count() == 400L &&
@@ -1002,23 +1003,23 @@ class ScanPruningSpec extends AnyFunSuite {
     val synth = (0 until 200).map { i =>
       (i.toLong, i.toLong * 1000000000L, 5L, "view", 1.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val root = ScanPruning.FileIndexStore.buildRootFrom(spark, synth)
+    val root = FileIndex.buildRootFrom(spark, synth)
     // one user everywhere: the COW erase rewrites everything away
-    assert(ScanPruning.FileIndexStore.erase(spark, root, 5L, "erase-all"))
-    assert(ScanPruning.FileIndexStore.livePairs(spark, root).isEmpty)
-    val st = ScanPruning.FileIndexStore.metaStats(spark, root).head()
+    assert(FileIndex.erase(spark, root, 5L, "erase-all"))
+    assert(FileIndex.livePairs(spark, root).isEmpty)
+    val st = FileIndex.metaStats(spark, root).head()
     assert(st.getLong(0) == 0L, "empty-table count was not 0")
     assert(st.isNullAt(1) && st.isNullAt(3), "empty-table bounds not null")
 
     // migrating the empty table neither crashes nor invents files; it
     // publishes the new curve for future absorbs
-    assert(ScanPruning.FileIndexStore.migrate(spark, root, "hilbert",
+    assert(FileIndex.migrate(spark, root, "hilbert",
       rangeBucketed = true, "mig-empty"))
-    assert(ScanPruning.FileIndexStore.livePairs(spark, root).isEmpty)
-    assert(ScanPruning.FileIndexStore.layoutOf(spark, root).curve
+    assert(FileIndex.livePairs(spark, root).isEmpty)
+    assert(FileIndex.layoutOf(spark, root).curve
       == "hilbert")
-    assert(ScanPruning.FileIndexStore.absorb(spark, root, synth, "inc-back"))
-    assert(ScanPruning.FileIndexStore
+    assert(FileIndex.absorb(spark, root, synth, "inc-back"))
+    assert(FileIndex
       .metaStats(spark, root).head().getLong(0) == 200L)
   }
 
@@ -1028,7 +1029,7 @@ class ScanPruningSpec extends AnyFunSuite {
     val synth = (0 until 100).map { i =>
       (i.toLong, i.toLong * 1000000000L, (i % 7).toLong, "view", 1.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val root = ScanPruning.FileIndexStore.buildRootFrom(spark, synth)
+    val root = FileIndex.buildRootFrom(spark, synth)
     def headReadSet(): Int = {
       // the files a head read parses: the newest checkpoint plus the
       // commit suffix past it — computed from the manifest listing,
@@ -1047,18 +1048,18 @@ class ScanPruningSpec extends AnyFunSuite {
       }
     }
     (1 to 8).foreach(i =>
-      assert(ScanPruning.FileIndexStore.commitNext(root, s"n-$i", Nil, Nil)))
+      assert(FileIndex.commitNext(root, s"n-$i", Nil, Nil)))
     val at8 = headReadSet()
     (9 to 100).foreach(i =>
-      assert(ScanPruning.FileIndexStore.commitNext(root, s"n-$i", Nil, Nil)))
+      assert(FileIndex.commitNext(root, s"n-$i", Nil, Nil)))
     val at100 = headReadSet()
     // the count cycles with the checkpoint phase (1..CkptEvery+1) but
     // NEVER grows with the log's length — the O(CkptEvery) bound
     assert(at8 <= 9 && at100 <= 9,
       s"head-read file count grew with the log: $at8 -> $at100")
     // and the head state is still correct after 100 commits
-    assert(ScanPruning.FileIndexStore.livePairs(spark, root).nonEmpty)
-    assert(ScanPruning.FileIndexStore
+    assert(FileIndex.livePairs(spark, root).nonEmpty)
+    assert(FileIndex
       .absorbedIds(spark, root).count(_.startsWith("n-")) == 100)
   }
 
@@ -1071,17 +1072,17 @@ class ScanPruningSpec extends AnyFunSuite {
       (i.toLong, i.toLong * 1000000000L, (i / 50).toLong, "view",
         (i % 97 + 1) / 100.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val root = ScanPruning.FileIndexStore.buildRootFrom(spark, synth)
-    assert(ScanPruning.FileIndexStore.absorb(spark, root,
+    val root = FileIndex.buildRootFrom(spark, synth)
+    assert(FileIndex.absorb(spark, root,
       synth.withColumn("event_id", col("event_id") + 1000L), "inc-1"))
-    val v1 = ScanPruning.FileIndexStore.currentSeq(spark, root)
-    assert(ScanPruning.FileIndexStore.updateUser(spark, root, 3L, 9.99,
+    val v1 = FileIndex.currentSeq(spark, root)
+    assert(FileIndex.updateUser(spark, root, 3L, 9.99,
       "upd-1"))
-    val v2 = ScanPruning.FileIndexStore.currentSeq(spark, root)
-    assert(ScanPruning.FileIndexStore.compact(spark, root).isDefined)
-    val v3 = ScanPruning.FileIndexStore.currentSeq(spark, root)
+    val v2 = FileIndex.currentSeq(spark, root)
+    assert(FileIndex.compact(spark, root).isDefined)
+    val v3 = FileIndex.currentSeq(spark, root)
 
-    def cdf(from: Long, to: Long) = ScanPruning.FileIndexStore
+    def cdf(from: Long, to: Long) = FileIndex
       .changeDataFeed(spark, root, from, to)
       .groupBy(col("_change_type")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -1092,7 +1093,7 @@ class ScanPruningSpec extends AnyFunSuite {
     // the compaction version emits nothing
     assert(cdf(v2, v3).isEmpty)
     // and the update's inserts really carry the new value
-    val upd = ScanPruning.FileIndexStore.changeDataFeed(spark, root, v1, v2)
+    val upd = FileIndex.changeDataFeed(spark, root, v1, v2)
     assert(upd.filter(col("_change_type") === "insert" &&
       col("value") =!= 9.99).count() == 0L)
   }
@@ -1103,37 +1104,37 @@ class ScanPruningSpec extends AnyFunSuite {
       (i.toLong, i.toLong * 1000000000L, (i % 40).toLong, "view",
         (i % 97 + 1) / 100.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val root = ScanPruning.FileIndexStore.buildRootFrom(spark, synth)
-    assert(ScanPruning.FileIndexStore.absorb(spark, root,
+    val root = FileIndex.buildRootFrom(spark, synth)
+    assert(FileIndex.absorb(spark, root,
       synth.withColumn("event_id", col("event_id") + 10000L), "inc-1"))
     def dvRaw() = spark.read.parquet(
-      ScanPruning.FileIndexStore.dvPath(root))
-    def liveIds() = ScanPruning.FileIndexStore
-      .readPairs(spark, root, ScanPruning.FileIndexStore
+      FileIndex.dvPath(root))
+    def liveIds() = FileIndex
+      .readPairs(spark, root, FileIndex
         .livePairs(spark, root))
       .select(col("event_id"), col("user_id")).collect()
 
     // dve-1 targets the original files; compaction folds it (the
     // vectors then point at DEAD files); dve-2 then targets the
     // freshly compacted LIVE files
-    assert(ScanPruning.FileIndexStore.eraseDv(spark, root, 7L, "dve-1"))
-    assert(ScanPruning.FileIndexStore.compact(spark, root).isDefined)
+    assert(FileIndex.eraseDv(spark, root, 7L, "dve-1"))
+    assert(FileIndex.compact(spark, root).isDefined)
     assert(dvRaw().filter(col("erase_id") === "dve-1").count() > 0,
       "pre-vacuum dv log should still hold the folded vectors")
-    assert(ScanPruning.FileIndexStore.eraseDv(spark, root, 11L, "dve-2"))
+    assert(FileIndex.eraseDv(spark, root, 11L, "dve-2"))
 
     // the honest DV-folding compaction passes the maint audit while
     // its evidence is still in the dv log (pub < ret, explained by
     // the vectors that targeted its inputs); after the vacuum below
     // the commit falls under the horizon and is skipped by design
-    val audit = ScanPruning.FileIndexStore.auditMaint(spark, root)
+    val audit = FileIndex.auditMaint(spark, root)
     assert(audit.nonEmpty && audit.forall(_._6),
       s"honest maintenance flagged: $audit")
 
     // vacuum destroys the retired files AND folds the dv log: dve-1's
     // vectors (targets destroyed, unreadable below the horizon) drop;
     // dve-2's (targets live) survive
-    assert(ScanPruning.FileIndexStore.vacuum(spark, root).nonEmpty)
+    assert(FileIndex.vacuum(spark, root).nonEmpty)
     val left = dvRaw().select(col("erase_id")).distinct()
       .collect().map(_.getString(0)).toSet
     assert(left == Set("dve-2"),
@@ -1143,24 +1144,24 @@ class ScanPruningSpec extends AnyFunSuite {
       "an erased user resurfaced after the dv fold")
     assert(ids.length == 2 * synth.filter(
       col("user_id") =!= 7L && col("user_id") =!= 11L).count().toInt)
-    assert(ScanPruning.FileIndexStore.auditMaint(spark, root).isEmpty,
+    assert(FileIndex.auditMaint(spark, root).isEmpty,
       "pre-horizon maint commits should be skipped, not misjudged")
 
     // a forced over-threshold erase keeps the DISTRIBUTED anti-join
     // and still answers exactly (never unbounded driver memory)
     System.setProperty("graft.dv.collectCap", "1")
     try {
-      val root2 = ScanPruning.FileIndexStore.buildRootFrom(spark, synth)
-      assert(ScanPruning.FileIndexStore.eraseDv(spark, root2, 3L, "dve-a"))
-      assert(ScanPruning.FileIndexStore.eraseDv(spark, root2, 5L, "dve-b"))
-      val got = ScanPruning.FileIndexStore
-        .readPairs(spark, root2, ScanPruning.FileIndexStore
+      val root2 = FileIndex.buildRootFrom(spark, synth)
+      assert(FileIndex.eraseDv(spark, root2, 3L, "dve-a"))
+      assert(FileIndex.eraseDv(spark, root2, 5L, "dve-b"))
+      val got = FileIndex
+        .readPairs(spark, root2, FileIndex
           .livePairs(spark, root2))
         .select(col("event_id"), col("user_id")).collect()
       assert(got.forall(r => r.getLong(1) != 3L && r.getLong(1) != 5L))
       assert(got.length == synth.filter(
         col("user_id") =!= 3L && col("user_id") =!= 5L).count().toInt)
-      val n = ScanPruning.FileIndexStore.metaStats(spark, root2)
+      val n = FileIndex.metaStats(spark, root2)
         .head().getLong(0)
       assert(n == got.length.toLong,
         "metadata stats diverged on the over-cap dv path")
@@ -1168,7 +1169,7 @@ class ScanPruningSpec extends AnyFunSuite {
 
     // the per-root memos stay LRU-bounded however many roots a
     // process cycles (BoundedMemoSpec pins the eviction itself)
-    assert(ScanPruning.FileIndexStore.memoSizes.values.forall(_ <= 64))
+    assert(FileIndex.memoSizes.values.forall(_ <= 64))
   }
 
   test("the maint audit flags a lying row-preserving declaration") {
@@ -1177,28 +1178,28 @@ class ScanPruningSpec extends AnyFunSuite {
       (i.toLong, i.toLong * 1000000000L, (i % 40).toLong, "view",
         (i % 97 + 1) / 100.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val root = ScanPruning.FileIndexStore.buildRootFrom(spark, synth)
-    assert(ScanPruning.FileIndexStore.absorb(spark, root,
+    val root = FileIndex.buildRootFrom(spark, synth)
+    assert(FileIndex.absorb(spark, root,
       synth.withColumn("event_id", col("event_id") + 10000L), "inc-1"))
     // an honest row-preserving rewrite audits clean
-    assert(ScanPruning.FileIndexStore.compact(spark, root).isDefined)
-    assert(ScanPruning.FileIndexStore.auditMaint(spark, root).forall(_._6))
+    assert(FileIndex.compact(spark, root).isDefined)
+    assert(FileIndex.auditMaint(spark, root).forall(_._6))
 
     // the lie: a rewrite that DROPS user 3's rows but declares itself
     // row-preserving — CDC would skip it unread, silently losing the
     // deletes; the audit recomputes the claim from logged counts only
-    val pairs = ScanPruning.FileIndexStore.livePairs(spark, root)
-    val sneaky = ScanPruning.FileIndexStore
+    val pairs = FileIndex.livePairs(spark, root)
+    val sneaky = FileIndex
       .readPairs(spark, root, pairs)
       .filter(col("user_id") =!= 3L)
       .select(Seq("event_id", "ts", "user_id", "event_type", "value",
         "props").map(col): _*)
-    val buckets = ScanPruning.FileIndexStore.writeAndIndex(
+    val buckets = FileIndex.writeAndIndex(
       spark, root, sneaky, "lie-1",
-      ScanPruning.FileIndexStore.layoutOf(spark, root))
-    assert(ScanPruning.FileIndexStore.commitNext(
+      FileIndex.layoutOf(spark, root))
+    assert(FileIndex.commitNext(
       root, "lie-1", buckets, pairs, "maint"))
-    val audit = ScanPruning.FileIndexStore.auditMaint(spark, root)
+    val audit = FileIndex.auditMaint(spark, root)
     val lie = audit.find(_._2 == "lie-1")
     assert(lie.exists(!_._6),
       s"the lying maint commit went undetected: $audit")
@@ -1208,7 +1209,7 @@ class ScanPruningSpec extends AnyFunSuite {
 
   test("the maint audit equates under DV folds: an extra dropped row is flagged") {
     import spark.implicits._
-    val fis = ScanPruning.FileIndexStore
+    val fis = FileIndex
     val synth = (0 until 800).map { i =>
       (i.toLong, i.toLong * 1000000000L, (i % 40).toLong, "view",
         (i % 97 + 1) / 100.0, "{}")
@@ -1248,7 +1249,7 @@ class ScanPruningSpec extends AnyFunSuite {
 
   test("time travel below the vacuum horizon raises the typed retention error") {
     import spark.implicits._
-    val fis = ScanPruning.FileIndexStore
+    val fis = FileIndex
     val synth = (0 until 600).map { i =>
       (i.toLong, i.toLong * 1000000000L, (i % 40).toLong, "view",
         (i % 97 + 1) / 100.0, "{}")
@@ -1290,7 +1291,7 @@ class ScanPruningSpec extends AnyFunSuite {
 
   test("cross-generation type evolution fails fast with the typed conflict error") {
     import spark.implicits._
-    val fis = ScanPruning.FileIndexStore
+    val fis = FileIndex
     def mk(base: Long, n: Int) = (0 until n).map { i =>
       ((base + i).toLong, (base + i) * 1000000000L, (i % 40).toLong,
         "view", 1.0, "{}")
@@ -1315,7 +1316,7 @@ class ScanPruningSpec extends AnyFunSuite {
 
   test("a merge-on-read erase and a rewrite cannot race each other's files away") {
     import spark.implicits._
-    val fis = ScanPruning.FileIndexStore
+    val fis = FileIndex
     def mkSynth() = (0 until 600).map { i =>
       (i.toLong, i.toLong * 1000000000L, (i % 40).toLong, "view",
         (i % 97 + 1) / 100.0, "{}")
@@ -1369,7 +1370,7 @@ class ScanPruningSpec extends AnyFunSuite {
     // (object init); the registry then proves no per-root cache
     // anywhere in main can grow driver memory one entry per root
     // forever — a newly added NAMED memo joins the pin automatically
-    ScanPruning.FileIndexStore.retentionHorizon("/nonexistent")
+    FileIndex.retentionHorizon("/nonexistent")
     assert(Seq(ScanPruning, IncrementalDedup, IncrementalRetrieval,
       IncrementalAnn, IncrementalSketch, AstarteOpsQueries)
       .forall(_.oracle != null))
@@ -1391,40 +1392,116 @@ class ScanPruningSpec extends AnyFunSuite {
     assert(sizes.values.forall(_ <= 64), s"a memo exceeded its bound: $sizes")
   }
 
-  test("dv crash debris heals from the read path, not only the next vacuum") {
+  /** A root over two generations of 400 synthetic rows (40 users)
+    * with user 7 erased merge-on-read and then compacted, so dve-1's vectors target dead
+    * files that the next vacuum destroys. */
+  private def foldedDvRoot(): String = {
     import spark.implicits._
-    val fis = ScanPruning.FileIndexStore
     val synth = (0 until 400).map { i =>
       (i.toLong, i.toLong * 1000000000L, (i % 40).toLong, "view",
         (i % 97 + 1) / 100.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val root = fis.buildRootFrom(spark, synth)
-    assert(fis.eraseDv(spark, root, 7L, "dve-1"))
-    val dv = java.nio.file.Paths.get(fis.dvPath(root))
-    val trash = java.nio.file.Paths.get(fis.dvPath(root) + ".trash")
+    val root = FileIndex.buildRootFrom(spark, synth)
+    assert(FileIndex.absorb(spark, root,
+      synth.withColumn("event_id", col("event_id") + 10000L), "inc-1"))
+    assert(FileIndex.eraseDv(spark, root, 7L, "dve-1"))
+    assert(FileIndex.compact(spark, root).isDefined)
+    root
+  }
 
-    // the fold-to-empty crash window: dv renamed away, nothing to
-    // rename in, crash before the trash delete — the next foldDvLog
-    // early-returns on the missing dv dir, so without read-path
-    // healing this .trash leaks forever
-    java.nio.file.Files.move(dv, trash,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    assert(!fis.hasDv(root))
-    assert(!java.nio.file.Files.exists(trash),
-      "the fold-to-empty crash window leaked .trash")
+  private def userIds(root: String): Set[Long] =
+    FileIndex.readPairs(spark, root, FileIndex.livePairs(spark, root))
+      .select(col("user_id")).distinct().collect().map(_.getLong(0)).toSet
 
-    // the completed-swap window: dv healthy, stale trash beside it —
-    // also cleared on the next read
-    assert(fis.eraseDv(spark, root, 9L, "dve-2"))
-    java.nio.file.Files.createDirectories(trash)
-    java.nio.file.Files.write(trash.resolve("stale.bin"),
-      Array[Byte](1, 2, 3))
-    assert(fis.hasDv(root))
-    assert(!java.nio.file.Files.exists(trash),
-      "a completed swap's leftover .trash survived the read")
-    // and the fresh vectors still apply (dve-1's rows went with the
-    // simulated crash's dv dir — this spec destroyed them by hand)
-    assert(fis.readPairs(spark, root, fis.livePairs(spark, root))
-      .filter(col("user_id") === 9L).count() == 0L)
+  private def dvFiles(root: String): Set[String] = {
+    val d = new java.io.File(FileIndex.dvPath(root))
+    Option(d.listFiles()).toSeq.flatten.map(_.getName)
+      .filter(_.endsWith(".parquet")).toSet
+  }
+
+  test("a dv fold that crashed between move-in and retire") {
+    val root = foldedDvRoot()
+    assert(FileIndex.eraseDv(spark, root, 11L, "dve-2"))
+    val dv = java.nio.file.Paths.get(FileIndex.dvPath(root))
+    val snapshot = dvFiles(root)
+    val saved = java.nio.file.Files.createTempDirectory("dv-snapshot")
+    snapshot.foreach(n => java.nio.file.Files.copy(dv.resolve(n),
+      saved.resolve(n)))
+    assert(FileIndex.vacuum(spark, root).nonEmpty)
+    val liveDv = FileIndex.dv(spark, root).collect().toSet
+    val ids = userIds(root)
+    assert(!ids(7L) && !ids(11L))
+
+    // the crash: the folded replacement moved in, the snapshot files
+    // never retired — copy them back beside it
+    snapshot.foreach(n => java.nio.file.Files.copy(saved.resolve(n),
+      dv.resolve(n)))
+    assert(snapshot.subsetOf(dvFiles(root)))
+    assert(FileIndex.dv(spark, root).collect().toSet == liveDv)
+    assert(userIds(root) == ids)
+
+    // the next vacuum folds the destroyed files' vectors out again and
+    // retires every file it read: the snapshot names are gone, the log
+    // holds each live vector once
+    FileIndex.vacuum(spark, root)
+    val raw = spark.read.parquet(dv.toString)
+    assert(raw.select(col("erase_id")).distinct().collect()
+      .map(_.getString(0)).toSet == Set("dve-2"))
+    assert(raw.count() == raw.distinct().count())
+    assert(dvFiles(root).intersect(snapshot).isEmpty)
+    assert(FileIndex.dv(spark, root).collect().toSet == liveDv)
+    assert(userIds(root) == ids)
+  }
+
+  test("a fold to empty leaves no dv dir") {
+    val root = foldedDvRoot()
+    assert(FileIndex.vacuum(spark, root).nonEmpty)
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(FileIndex.dvPath(root))))
+    assert(!FileIndex.hasDv(root))
+    assert(FileIndex.dv(spark, root).count() == 0L)
+    assert(!userIds(root)(7L), "the compacted erase resurfaced")
+
+    // a fold that crashed between its last retirement and the prune
+    // leaves the dir empty: reads take it for no log, and the next
+    // vacuum removes it
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(FileIndex.dvPath(root)))
+    assert(!FileIndex.hasDv(root))
+    assert(FileIndex.dv(spark, root).count() == 0L)
+    assert(!userIds(root)(7L), "the compacted erase resurfaced")
+    FileIndex.vacuum(spark, root)
+    assert(!FileIndex.hasDv(root))
+
+    // a later erase recreates the log
+    assert(FileIndex.eraseDv(spark, root, 9L, "dve-2"))
+    assert(FileIndex.hasDv(root))
+    assert(spark.read.parquet(FileIndex.dvPath(root))
+      .select(col("erase_id")).distinct().collect()
+      .map(_.getString(0)).toSet == Set("dve-2"))
+    val ids = userIds(root)
+    assert(!ids(7L) && !ids(9L))
+  }
+
+  test("a destroying vacuum clears stale index staging and keeps fresh") {
+    val root = foldedDvRoot()
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val old = System.currentTimeMillis() - 2 * 60 * 60 * 1000L
+    def staging(name: String): org.apache.hadoop.fs.Path = {
+      val f = new org.apache.hadoop.fs.Path(
+        s"$root/_graft_batch-$name/part-0.parquet")
+      fs.create(f).close()
+      f
+    }
+    val stale = staging("stale")
+    fs.setTimes(stale, old, -1)
+    fs.setTimes(stale.getParent, old, -1)
+    val fresh = staging("fresh")
+    assert(FileIndex.vacuum(spark, root).nonEmpty)
+    assert(!fs.exists(stale.getParent), "stale index staging survived")
+    assert(fs.exists(fresh), "a fresh staging dir was cleared")
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(root))
+      .forall(!_.getPath.getName.endsWith(".maintenance.lock")))
   }
 }

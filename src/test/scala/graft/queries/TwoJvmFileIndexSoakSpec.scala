@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.storage.FileIndex
 
 /** True cross-PROCESS file-index soak: two forked child JVMs
   * ([[FileIndexSoakChild]]) and this (parent) JVM absorb disjoint
@@ -62,7 +63,7 @@ class TwoJvmFileIndexSoakSpec extends AnyFunSuite {
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
 
     val logDir = Files.createTempDirectory("graft-fx2jvm").toString
-    val root = ScanPruning.FileIndexStore.buildRootFrom(
+    val root = FileIndex.buildRootFrom(
       spark, synth(0 until 500))
     val nAbs = 3; val rowsPer = 100
 
@@ -71,22 +72,22 @@ class TwoJvmFileIndexSoakSpec extends AnyFunSuite {
     val c2 = launchChild(root, "w2", nAbs, rowsPer, 20000L, logDir)
     for (b <- 1 to nAbs) {
       val off = 30000 + (b - 1) * rowsPer
-      assert(ScanPruning.FileIndexStore.absorb(spark, root,
+      assert(FileIndex.absorb(spark, root,
         synth(off until off + rowsPer), s"w0-$b"))
     }
     assert(c1.waitFor() == 0, s"child w1 crashed — see $logDir/w1.out")
     assert(c2.waitFor() == 0, s"child w2 crashed — see $logDir/w2.out")
 
     // every generation live, ledger complete
-    val gens = ScanPruning.FileIndexStore.liveGens(spark, root).toSet
+    val gens = FileIndex.liveGens(spark, root).toSet
     val wantGens = Set("corpus") ++
       (for (w <- Seq("w0", "w1", "w2"); b <- 1 to nAbs) yield s"$w-$b")
     assert(gens == wantGens, s"live generations diverged: $gens")
 
     // exactly-once head read: every id present once, none invented
-    val pairs = ScanPruning.FileIndexStore.livePairs(spark, root)
+    val pairs = FileIndex.livePairs(spark, root)
     val all = spark.read.parquet(pairs.map { case (g, b) =>
-      ScanPruning.FileIndexStore.bucketDir(root, g, b)
+      FileIndex.bucketDir(root, g, b)
     }: _*)
     val wantIds = (0 until 500).map(_.toLong) ++
       (for (base <- Seq(10000, 20000, 30000); k <- 0 until nAbs * rowsPer)
@@ -98,7 +99,7 @@ class TwoJvmFileIndexSoakSpec extends AnyFunSuite {
     assert(gotIds.length == gotIds.distinct.length, "a row was doubled")
 
     // the zone census agrees with the data, per generation
-    val census = ScanPruning.FileIndexStore.zone(spark, root)
+    val census = FileIndex.zone(spark, root)
       .groupBy(col("inc_id")).agg(sum(col("n")).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(census("corpus") == 500L)
@@ -106,7 +107,7 @@ class TwoJvmFileIndexSoakSpec extends AnyFunSuite {
 
     // optimistic versioning: 1 + 9 racing publishes landed as a
     // CONTIGUOUS run of create-exclusive commits, one gen per version
-    val commits = ScanPruning.FileIndexStore.readCommits(root)
+    val commits = FileIndex.readCommitsAfter(root, -1L)
     val seqs = commits.map(_.mseq).distinct.sorted
     assert(seqs == (0L to (3L * nAbs)).toVector,
       s"version numbers not contiguous/unique: $seqs")
@@ -115,9 +116,9 @@ class TwoJvmFileIndexSoakSpec extends AnyFunSuite {
 
     // and the pruned point path still answers exactly
     val hits = spark.read.parquet(
-      ScanPruning.pointSurvivors(spark, root, 7L)
+      FileIndex.pointSurvivors(spark, root, 7L)
         .select(col("inc_id"), col("zbucket")).collect().map(r =>
-          ScanPruning.FileIndexStore.bucketDir(root, r.getString(0),
+          FileIndex.bucketDir(root, r.getString(0),
             r.getInt(1))).toIndexedSeq: _*)
       .filter(col("user_id") === 7L).count()
     assert(hits == all.filter(col("user_id") === 7L).count(),
@@ -132,7 +133,7 @@ class TwoJvmFileIndexSoakSpec extends AnyFunSuite {
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
 
     val logDir = Files.createTempDirectory("graft-fx2jvmc").toString
-    val root = ScanPruning.FileIndexStore.buildRootFrom(
+    val root = FileIndex.buildRootFrom(
       spark, synth(0 until 500))
     val nAbs = 3; val rowsPer = 100
 
@@ -144,21 +145,21 @@ class TwoJvmFileIndexSoakSpec extends AnyFunSuite {
     // the fold's input set and stay live after the swap
     var folds = 0
     while (c1.isAlive || c2.isAlive) {
-      if (ScanPruning.FileIndexStore.compact(spark, root).isDefined)
+      if (FileIndex.compact(spark, root).isDefined)
         folds += 1
       Thread.sleep(50)
     }
     assert(c1.waitFor() == 0, s"child w1 crashed — see $logDir/w1.out")
     assert(c2.waitFor() == 0, s"child w2 crashed — see $logDir/w2.out")
     // one terminal fold so the final state is itself post-compaction
-    ScanPruning.FileIndexStore.compact(spark, root)
+    FileIndex.compact(spark, root)
     assert(folds >= 1, "compaction never overlapped the absorbs — " +
       "weak race coverage, raise nAbs")
 
     // exactly-once: every id present once, none invented, none doubled
-    val pairs = ScanPruning.FileIndexStore.livePairs(spark, root)
+    val pairs = FileIndex.livePairs(spark, root)
     val all = spark.read.parquet(pairs.map { case (g, b) =>
-      ScanPruning.FileIndexStore.bucketDir(root, g, b)
+      FileIndex.bucketDir(root, g, b)
     }: _*)
     val wantIds = ((0 until 500).map(_.toLong) ++
       (for (base <- Seq(10000, 20000); k <- 0 until nAbs * rowsPer)
@@ -170,13 +171,13 @@ class TwoJvmFileIndexSoakSpec extends AnyFunSuite {
     assert(gotIds.length == gotIds.distinct.length, "a row was doubled")
 
     // every absorbed generation is in the ledger (live or folded away)
-    val ledger = ScanPruning.FileIndexStore.absorbedIds(spark, root)
+    val ledger = FileIndex.absorbedIds(spark, root)
     for (w <- Seq("w1", "w2"); b <- 1 to nAbs)
       assert(ledger.contains(s"$w-$b"), s"$w-$b missing from the ledger")
 
     // zone census over live files equals the data — the index
     // followed every fold
-    val total = ScanPruning.FileIndexStore.zone(spark, root)
+    val total = FileIndex.zone(spark, root)
       .agg(sum(col("n"))).head().getLong(0)
     assert(total == wantIds.size.toLong, s"zone census $total")
   }
@@ -189,7 +190,7 @@ class TwoJvmFileIndexSoakSpec extends AnyFunSuite {
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
 
     val logDir = Files.createTempDirectory("graft-fx2jvmf").toString
-    val root = ScanPruning.FileIndexStore.buildRootFrom(
+    val root = FileIndex.buildRootFrom(
       spark, synth(0 until 500))
     val nAbs = 3; val rowsPer = 100
 
@@ -204,7 +205,7 @@ class TwoJvmFileIndexSoakSpec extends AnyFunSuite {
     val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
     def poll(): Unit = {
       val (head, rows) =
-        ScanPruning.FileIndexStore.changeFeedState(spark, root, cursor)
+        FileIndex.changeFeedState(spark, root, cursor)
       seen ++= rows.select(col("event_id")).collect().map(_.getLong(0))
       cursor = head
     }
@@ -224,14 +225,14 @@ class TwoJvmFileIndexSoakSpec extends AnyFunSuite {
 
     // a compaction AFTER the drain re-publishes everything — the
     // feed must emit nothing for it...
-    assert(ScanPruning.FileIndexStore.compact(spark, root).isDefined)
+    assert(FileIndex.compact(spark, root).isDefined)
     poll()
     assert(seen.size == wantIds.size,
       "the compaction rewrite leaked rows into the feed")
     // ...and once the cursor is past the appends, vacuum may destroy
     // the retired generations without breaking the consumer — the
     // retention contract: vacuum must trail the slowest cursor
-    ScanPruning.FileIndexStore.vacuum(spark, root)
+    FileIndex.vacuum(spark, root)
     poll()
     assert(seen.size == wantIds.size, "post-vacuum poll emitted rows")
   }

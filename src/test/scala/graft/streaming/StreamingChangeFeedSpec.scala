@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.ScanPruning
+import graft.storage.FileIndex
 
 /** The streaming tail of the append change feed: every appended row
   * is delivered exactly once across micro-batches, a REPLAYED batch
@@ -33,7 +34,7 @@ class StreamingChangeFeedSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
-    val root = ScanPruning.FileIndexStore.buildRootFrom(spark, mk(0L, 1200))
+    val root = FileIndex.buildRootFrom(spark, mk(0L, 1200))
     val stateDir = Files.createTempDirectory("graft-scf").toString
     val emitted =
       scala.collection.mutable.Map.empty[Long, Set[Long]] // batchId -> ids
@@ -53,14 +54,14 @@ class StreamingChangeFeedSpec extends AnyFunSuite {
     try {
       input.addData(1) // tick: corpus
       q.processAllAvailable()
-      assert(ScanPruning.FileIndexStore.absorb(spark, root, mk(10000L, 500),
+      assert(FileIndex.absorb(spark, root, mk(10000L, 500),
         "inc-a"))
       input.addData(2) // tick: inc-a
       q.processAllAvailable()
       // maintenance + an absorb between ticks: only inc-b may emit
-      assert(ScanPruning.FileIndexStore.absorb(spark, root, mk(20000L, 500),
+      assert(FileIndex.absorb(spark, root, mk(20000L, 500),
         "inc-b"))
-      assert(ScanPruning.FileIndexStore.erase(spark, root, 7L, "erase-1"))
+      assert(FileIndex.erase(spark, root, 7L, "erase-1"))
       input.addData(3)
       q.processAllAvailable()
       input.addData(4) // tick with nothing new
@@ -83,7 +84,7 @@ class StreamingChangeFeedSpec extends AnyFunSuite {
     // streaming contract replays at most the LAST uncommitted batch,
     // so claims older than that are pruned (bounded-state-dir test
     // below) and ids 1..3 are the replayable tail after batch 3.
-    assert(ScanPruning.FileIndexStore.absorb(spark, root, mk(30000L, 300),
+    assert(FileIndex.absorb(spark, root, mk(30000L, 300),
       "inc-c"))
     val before = emitted.toMap
     val tick = spark.range(1).toDF()
@@ -100,7 +101,7 @@ class StreamingChangeFeedSpec extends AnyFunSuite {
 
   test("CDC tail delivers row-level changes exactly once; maintenance emits nothing") {
     import scala.jdk.CollectionConverters._
-    val root = ScanPruning.FileIndexStore.buildRootFrom(spark, mk(0L, 800))
+    val root = FileIndex.buildRootFrom(spark, mk(0L, 800))
     val stateDir = Files.createTempDirectory("graft-scf-cdc").toString
     // (batchId -> (inserts, deletes)) by event_id
     val emitted = scala.collection.mutable.Map
@@ -118,9 +119,9 @@ class StreamingChangeFeedSpec extends AnyFunSuite {
     // an absorb + a COW erase of user 7 land between polls: the CDC
     // batch carries the increment as inserts AND the erased user's
     // rows (from BOTH generations) as deletes
-    assert(ScanPruning.FileIndexStore.absorb(spark, root, mk(10000L, 400),
+    assert(FileIndex.absorb(spark, root, mk(10000L, 400),
       "inc-a"))
-    assert(ScanPruning.FileIndexStore.erase(spark, root, 7L, "erase-1"))
+    assert(FileIndex.erase(spark, root, 7L, "erase-1"))
     sink(tick, 1L)
     val wantDel = ((0L until 800L) ++ (10000L until 10400L))
       .filter(e => e % 40 == 7).toSet
@@ -130,9 +131,9 @@ class StreamingChangeFeedSpec extends AnyFunSuite {
     // one generation, the absorb makes two): the CDC batch carries
     // exactly the absorb's inserts — the compaction, declared
     // row-preserving, contributes nothing
-    assert(ScanPruning.FileIndexStore.absorb(spark, root, mk(30000L, 120),
+    assert(FileIndex.absorb(spark, root, mk(30000L, 120),
       "inc-mid"))
-    val compacted = ScanPruning.FileIndexStore.compact(spark, root)
+    val compacted = FileIndex.compact(spark, root)
     assert(compacted.isDefined)
     sink(tick, 2L)
     assert(emitted(2L) == ((30000L until 30120L).toSet, Set.empty[Long]),
@@ -140,7 +141,7 @@ class StreamingChangeFeedSpec extends AnyFunSuite {
 
     // crash replay: re-invoking the LAST batch id after a new absorb
     // re-reads its recorded range byte-identically, not the new commit
-    assert(ScanPruning.FileIndexStore.absorb(spark, root, mk(20000L, 100),
+    assert(FileIndex.absorb(spark, root, mk(20000L, 100),
       "inc-b"))
     sink(tick, 2L)
     assert(emitted(2L) == ((30000L until 30120L).toSet, Set.empty[Long]),
@@ -151,7 +152,7 @@ class StreamingChangeFeedSpec extends AnyFunSuite {
 
   test("claim ledger stays bounded over 1000 batches; replay across the prune boundary is byte-identical") {
     import scala.jdk.CollectionConverters._
-    val root = ScanPruning.FileIndexStore.buildRootFrom(spark, mk(0L, 400))
+    val root = FileIndex.buildRootFrom(spark, mk(0L, 400))
     val stateDir = Files.createTempDirectory("graft-scf-gc")
     val collected =
       scala.collection.mutable.Map.empty[Long, Set[Long]]
@@ -172,7 +173,7 @@ class StreamingChangeFeedSpec extends AnyFunSuite {
     }
     (0L until 1000L).foreach { id =>
       if (id % 250 == 0) {
-        assert(ScanPruning.FileIndexStore.absorb(spark, root,
+        assert(FileIndex.absorb(spark, root,
           mk(100000L + id * 10, 50), s"inc-$id"))
         collectNext = true
       }
@@ -195,7 +196,7 @@ class StreamingChangeFeedSpec extends AnyFunSuite {
     // boundary: a new append lands, the LAST batch is re-invoked
     // (the foreachBatch crash window), and it re-reads its recorded
     // range — not the new commit
-    assert(ScanPruning.FileIndexStore.absorb(spark, root,
+    assert(FileIndex.absorb(spark, root,
       mk(900000L, 30), "inc-late"))
     collectNext = true
     sink(tick, 999L) // replayed id: claim exists, range is recorded
@@ -207,7 +208,7 @@ class StreamingChangeFeedSpec extends AnyFunSuite {
   }
 
   test("a cursor below the vacuum horizon raises the out-of-retention contract") {
-    val fis = ScanPruning.FileIndexStore
+    val fis = FileIndex
     val root = fis.buildRootFrom(spark, mk(0L, 400)) // seq 0
     assert(fis.absorb(spark, root, mk(10000L, 200), "inc-a")) // seq 1
     // the CoW erase retires every file holding user 7 (user = i % 40

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.ScanPruning
+import graft.storage.FileIndex
 
 /** Streaming file ingestion through the skipping index: every
   * micro-batch becomes its own ledgered generation, rows stay
@@ -30,7 +31,7 @@ class StreamingFileIngestSpec extends AnyFunSuite {
     // the layout is fixed by a corpus build, as in production
     val corpus = (0L until 100L).map(i => row(i, i % 10))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val root = ScanPruning.FileIndexStore.buildRootFrom(spark, corpus)
+    val root = FileIndex.buildRootFrom(spark, corpus)
 
     val input = MemoryStream[(Long, Long, Long, String, Double, String)]
     val stream = input.toDS()
@@ -47,15 +48,15 @@ class StreamingFileIngestSpec extends AnyFunSuite {
       q.processAllAvailable()
     } finally q.stop()
 
-    val gens = ScanPruning.FileIndexStore.absorbedIds(spark, root)
+    val gens = FileIndex.absorbedIds(spark, root)
     assert(gens.contains("batch-000000000") && gens.contains("batch-000000001"),
       s"expected two batch generations, got $gens")
 
     // streamed rows are served through the SAME pruned point-lookup
     // path as batch data
-    val hits = ScanPruning.pointSurvivors(spark, root, 3L)
+    val hits = FileIndex.pointSurvivors(spark, root, 3L)
     val paths = hits.select(col("inc_id"), col("zbucket")).collect()
-      .map(r => ScanPruning.FileIndexStore
+      .map(r => FileIndex
         .bucketDir(root, r.getString(0), r.getInt(1)))
     val found = spark.read.parquet(paths.toIndexedSeq: _*)
       .filter(col("user_id") === 3L).count()
@@ -64,12 +65,12 @@ class StreamingFileIngestSpec extends AnyFunSuite {
 
     // restart contract: the engine re-delivers a batch with the same
     // id — the ledger makes the sink a no-op
-    val zoneBefore = ScanPruning.FileIndexStore.zone(spark, root)
+    val zoneBefore = FileIndex.zone(spark, root)
       .collect().map(_.toSeq).toSet
     val replayed = (Seq(row(100L, 3L), row(101L, 7L)))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     StreamingFileIngest.sink(root)(replayed, 0L)
-    assert(ScanPruning.FileIndexStore.zone(spark, root)
+    assert(FileIndex.zone(spark, root)
       .collect().map(_.toSeq).toSet == zoneBefore,
       "replayed batch id changed the index")
   }

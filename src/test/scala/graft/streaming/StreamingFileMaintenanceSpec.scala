@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.ScanPruning
+import graft.storage.FileIndex
 
 /** Streaming copy-on-write maintenance: erase/update commands applied
   * through the control stream take effect exactly once — a replayed
@@ -44,7 +45,7 @@ class StreamingFileMaintenanceSpec extends AnyFunSuite {
 
     val corpus = (0L until 200L).map(i => row(i, i % 20))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val root = ScanPruning.FileIndexStore.buildRootFrom(spark, corpus)
+    val root = FileIndex.buildRootFrom(spark, corpus)
 
     val input = MemoryStream[(String, Long, Double, String)]
     val cmds = input.toDS().toDF("op", "user_id", "value", "cmd_id")
@@ -61,8 +62,8 @@ class StreamingFileMaintenanceSpec extends AnyFunSuite {
 
     // the mutations behaved like their batch twins
     val head = spark.read.parquet(
-      ScanPruning.FileIndexStore.livePairs(spark, root).map { case (g, b) =>
-        ScanPruning.FileIndexStore.bucketDir(root, g, b)
+      FileIndex.livePairs(spark, root).map { case (g, b) =>
+        FileIndex.bucketDir(root, g, b)
       }: _*)
     assert(head.filter(col("user_id") === 7L).count() == 0,
       "streamed erase left the user readable")
@@ -73,14 +74,14 @@ class StreamingFileMaintenanceSpec extends AnyFunSuite {
     // redelivery: the SAME commands arrive again (engine restart, or
     // the producer retries the queue) — every byte stays put
     val before = storeState(root)
-    val seqBefore = ScanPruning.FileIndexStore.currentSeq(spark, root)
+    val seqBefore = FileIndex.currentSeq(spark, root)
     val replay = Seq(("erase", 7L, 0.0, "cmd-erase-7"),
       ("update", 3L, 9.99, "cmd-update-3"))
       .toDF("op", "user_id", "value", "cmd_id")
     StreamingFileMaintenance.sink(root)(replay, 99L)
     assert(storeState(root) == before,
       "replayed command batch changed store bytes")
-    assert(ScanPruning.FileIndexStore.currentSeq(spark, root) == seqBefore,
+    assert(FileIndex.currentSeq(spark, root) == seqBefore,
       "replayed command batch advanced the manifest version")
 
     // a mixed batch (one applied, one new) applies ONLY the new one —
@@ -90,8 +91,8 @@ class StreamingFileMaintenanceSpec extends AnyFunSuite {
       .toDF("op", "user_id", "value", "cmd_id")
     StreamingFileMaintenance.sink(root)(mixed, 100L)
     val after = spark.read.parquet(
-      ScanPruning.FileIndexStore.livePairs(spark, root).map { case (g, b) =>
-        ScanPruning.FileIndexStore.bucketDir(root, g, b)
+      FileIndex.livePairs(spark, root).map { case (g, b) =>
+        FileIndex.bucketDir(root, g, b)
       }: _*)
     assert(after.filter(col("user_id") === 11L).count() == 0)
     assert(after.count() == 180L,
