@@ -1,5 +1,8 @@
 package graft
+import java.net.URI
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.SparkSession
+import graft.storage.{ForkFreeLocalFileSystem, ForkFreeLocalFs}
 
 /** The ONE local SparkSession builder shared by every runner (Bench,
   * Verify, and perfbench's workloads) so measurement tools always see
@@ -9,6 +12,23 @@ import org.apache.spark.sql.SparkSession
   * Each setting is a constant with its LOCAL value inline and the
   * production (100 TB, remote object storage) value documented beside
   * it; only the core count is read from the environment.
+  *
+  * The local `file:` filesystem is graft's fork-free one
+  * ([[graft.storage.ForkFreeRawLocalFileSystem]]): `fs.file.impl` for
+  * `FileSystem` users (the store's task writers, its staged commits and
+  * maintenance) and `fs.AbstractFileSystem.file.impl` for `FileContext`
+  * users (Spark's offset and commit logs, state-store deltas). The Spark
+  * distribution ships no `libhadoop`, so Hadoop's stock local filesystem
+  * starts a `chmod` process for every file and directory it creates and
+  * a `readlink` process per `FileContext` rename: about 130 processes
+  * per ingest micro-batch, each blocking its thread for 3–5 ms. Both
+  * classes stay checksummed like the stock ones. In production (HDFS,
+  * S3) the two keys do nothing: they name the `file:` scheme only.
+  *
+  * Hadoop caches one `FileSystem` per scheme and user, not per conf, so
+  * the first `FileSystem.get` of a `file:` path in the JVM decides which
+  * class every later session gets. [[build]] fails when that instance
+  * is not graft's, rather than measure the stock filesystem unnoticed.
   */
 object GraftSession {
 
@@ -76,14 +96,28 @@ object GraftSession {
     // Spark's vectorized reader rejects without this; current data
     // is timestamp[us]. Either way Tables.events normalizes ts to
     // the canonical epoch-nanos long.
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // no OS process per local file (see the object's doc); HDFS and S3
+    // paths never reach these classes
+    "spark.hadoop.fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[ForkFreeLocalFs].getName)
 
   def build(): SparkSession = {
     val nCpus = cpus
-    settings(nCpus)
+    val spark = settings(nCpus)
       .foldLeft(SparkSession.builder().master(s"local[$nCpus]")) {
         case (b, (k, v)) => b.config(k, v)
       }
       .getOrCreate()
+    val conf = spark.sparkContext.hadoopConfiguration
+    val local = FileSystem.get(URI.create("file:///"), conf)
+    val contextFs = conf.get("fs.AbstractFileSystem.file.impl")
+    if (!local.isInstanceOf[ForkFreeLocalFileSystem] ||
+        contextFs != classOf[ForkFreeLocalFs].getName)
+      throw new IllegalStateException(
+        s"the JVM's file: filesystem is ${local.getClass.getName} and its " +
+        s"FileContext filesystem $contextFs, not graft's: a FileSystem or " +
+        "SparkSession created before GraftSession.build() fixed them")
+    spark
   }
 }

@@ -507,11 +507,15 @@ private[graft] object FileIndex {
     * file (a destroyed data file or a retired vector file) when its
     * tasks open it: a visible failure, never a wrong answer, and the
     * caller retries — re-planning sees the current files.
-    * Returns the reclaimed (gen, bucket) pairs. */
+    * Only files dead above the persisted horizon are new: an earlier
+    * vacuum destroyed the rest. The horizon persists after both folds,
+    * so a vacuum that crashed before it re-runs them next time.
+    * Returns the (gen, bucket) pairs this vacuum reclaimed. */
   def vacuumBefore(s: SparkSession, root: String,
       horizonSeq: Long): Seq[(String, Int)] = {
+    val prior = retentionHorizon(root)
     val dead = headState(root).collect {
-      case ManifestRow(g, b, "dead", mseq) if mseq <= horizonSeq => (g, b)
+      case ManifestRow(g, b, "dead", mseq) if mseq > prior && mseq <= horizonSeq => (g, b)
     }.toSeq.sorted
     val conf = s.sparkContext.hadoopConfiguration
     dead.foreach { case (g, b) =>
@@ -519,9 +523,9 @@ private[graft] object FileIndex {
       p.getFileSystem(conf).delete(p, true)
     }
     if (dead.nonEmpty) {
-      persistHorizon(root, horizonSeq)
       foldLog(s, dvPath(root), dead.toSet)
       foldLog(s, dvPosPath(root), dead.toSet)
+      persistHorizon(root, horizonSeq)
     }
     dead
   }

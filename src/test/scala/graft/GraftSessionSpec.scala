@@ -18,9 +18,20 @@ class GraftSessionSpec extends AnyFunSuite {
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
       "spark.ui.enabled" -> "false",
       "spark.sql.session.timeZone" -> "UTC",
-      "spark.sql.legacy.parquet.nanosAsLong" -> "true"))
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.hadoop.fs.file.impl" -> "graft.storage.ForkFreeLocalFileSystem",
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.storage.ForkFreeLocalFs"))
     // one value per key: a later duplicate would silently win
     assert(GraftSession.settings("4").map(_._1).distinct.size ==
       GraftSession.settings("4").size)
+  }
+
+  test("the test JVM's -Dspark.* options mirror the session settings") {
+    // build.sbt passes them so that every spec's own session builder
+    // runs on the same filesystem, time zone and UI setting
+    val mirrored = GraftSession.settings("4").filter { case (k, _) => sys.props.contains(k) }
+    assert(mirrored.map(_._1).toSet.contains("spark.hadoop.fs.file.impl"))
+    assert(mirrored.map(_._1).toSet.contains("spark.hadoop.fs.AbstractFileSystem.file.impl"))
+    mirrored.foreach { case (k, v) => assert(sys.props(k) == v, k) }
   }
 }

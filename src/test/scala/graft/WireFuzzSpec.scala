@@ -1,23 +1,27 @@
 package graft
+
+import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.triggers._
 import graft.sources.AmqpWire
 
-/** Wire-parser fuzz soak (test scope): the byte surfaces that ingest
-  * NETWORK data — BSON payloads, the AMQP frame/content-header
-  * readers, protobuf event/RPC wires — hammered with corrupted and
-  * truncated inputs. Contract per surface: Option-returning decoders
-  * must be TOTAL (any throw is a finding); stream/server surfaces may
-  * reject with IOException/IllegalArgumentException (protocol errors)
-  * but memory-safety failures (negative allocation, index
-  * out-of-bounds, NPE, stack overflow) are findings everywhere.
-  *
-  * Usage: Test/runMain graft.WireFuzz [iterations]
+/** Wire-parser fuzz: the byte surfaces that ingest NETWORK data —
+  * BSON payloads, the AMQP frame/content-header readers, protobuf
+  * event/RPC wires — hammered with corrupted and truncated inputs.
+  * Contract per surface: Option-returning decoders must be TOTAL (any
+  * throw is a finding); stream/server surfaces may reject with
+  * IOException/IllegalArgumentException (protocol errors) but
+  * memory-safety failures (negative allocation, index out-of-bounds,
+  * NPE, stack overflow) are findings everywhere. Fixed seed, bounded
+  * size, so every run feeds the same 30,000 inputs.
   */
-object WireFuzz {
-  def main(args: Array[String]): Unit = {
-    val iters = args.headOption.map(_.toInt).getOrElse(30000)
-    val rnd = new scala.util.Random(4242)
+class WireFuzzSpec extends AnyFunSuite {
+
+  private val Seed = 4242
+  private val Inputs = 30000
+
+  test("30,000 corrupted inputs across eight wire surfaces: no unsafe failure") {
+    val rnd = new scala.util.Random(Seed)
     val bsonSeed = Bson.encode(Seq("v" -> 42, "t" -> "text", "a" -> Seq(1, 2)))
     val trig = Trigger("t1", TriggerEventType.IncomingData,
       TriggerScope.OnInterface("com.x.Y", 1), Some("/p"),
@@ -55,9 +59,10 @@ object WireFuzz {
       ("amqp_hdr", hdrSeed, b => AmqpWire.parseContentHeader(b), false),
       ("amqp_frame", frameSeed, b => AmqpWire.readFrame(
         new java.io.DataInputStream(new java.io.ByteArrayInputStream(b))), false))
-    var n = 0
-    while (n < iters) {
+    val seen = scala.collection.mutable.Set.empty[String]
+    for (n <- 0 until Inputs) {
       val (tag, seed, run, total) = targets(rnd.nextInt(targets.length))
+      seen += tag
       val mut =
         if (rnd.nextBoolean()) java.util.Arrays.copyOfRange(seed, 0, rnd.nextInt(seed.length + 1))
         else seed.clone()
@@ -66,13 +71,11 @@ object WireFuzz {
       try run(mut)
       catch {
         case e: Throwable if unsafe(e) || total =>
-          println(s"[wire-fuzz] CRASH in $tag after $n: $e")
-          e.getStackTrace.take(5).foreach(f => println(s"  at $f"))
-          sys.exit(1)
+          fail(s"crash in $tag at input $n on ${mut.map("%02x".format(_)).mkString}: $e\n" +
+            e.getStackTrace.take(5).mkString("  at ", "\n  at ", ""))
         case _: Throwable => () // clean protocol rejection
       }
-      n += 1
     }
-    println(s"[wire-fuzz] $n corrupted inputs across ${targets.length} wire surfaces, no unsafe failures")
+    assert(seen.size == targets.size, s"surfaces never drawn: ${targets.map(_._1).toSet -- seen}")
   }
 }

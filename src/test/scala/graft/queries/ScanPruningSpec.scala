@@ -1396,17 +1396,22 @@ class ScanPruningSpec extends AnyFunSuite {
     * with user 7 erased merge-on-read and then compacted, so dve-1's vectors target dead
     * files that the next vacuum destroys. */
   private def foldedDvRoot(): String = {
-    import spark.implicits._
-    val synth = (0 until 400).map { i =>
-      (i.toLong, i.toLong * 1000000000L, (i % 40).toLong, "view",
-        (i % 97 + 1) / 100.0, "{}")
-    }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    val synth = synthEvents()
     val root = FileIndex.buildRootFrom(spark, synth)
     assert(FileIndex.absorb(spark, root,
       synth.withColumn("event_id", col("event_id") + 10000L), "inc-1"))
     assert(FileIndex.eraseDv(spark, root, 7L, "dve-1"))
     assert(FileIndex.compact(spark, root).isDefined)
     root
+  }
+
+  /** 400 synthetic events of 40 users. */
+  private def synthEvents(): DataFrame = {
+    import spark.implicits._
+    (0 until 400).map { i =>
+      (i.toLong, i.toLong * 1000000000L, (i % 40).toLong, "view",
+        (i % 97 + 1) / 100.0, "{}")
+    }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
   }
 
   private def userIds(root: String): Set[Long] =
@@ -1419,6 +1424,48 @@ class ScanPruningSpec extends AnyFunSuite {
       .filter(_.endsWith(".parquet")).toSet
   }
 
+  /** Where vacuum persists the retention horizon. */
+  private def horizonFile(root: String): java.nio.file.Path =
+    java.nio.file.Paths.get(root, "retention-horizon.tsv")
+
+  /** Every file under the dv and dv-position dirs, checksums and hidden
+    * files included, with its bytes. */
+  private def dvBytes(root: String): Map[String, Seq[Byte]] =
+    Seq(FileIndex.dvPath(root), FileIndex.dvPosPath(root)).flatMap { d =>
+      val dir = java.nio.file.Paths.get(d)
+      if (!java.nio.file.Files.exists(dir)) Nil
+      else {
+        val files = scala.collection.mutable.ArrayBuffer.empty[(String, Seq[Byte])]
+        java.nio.file.Files.walk(dir).forEach { p =>
+          if (java.nio.file.Files.isRegularFile(p))
+            files += (p.toString -> java.nio.file.Files.readAllBytes(p).toSeq)
+        }
+        files
+      }
+    }.toMap
+
+  test("a vacuum with nothing new to destroy returns empty and leaves the dv dirs as they were") {
+    val root = foldedDvRoot()
+    assert(FileIndex.eraseDv(spark, root, 11L, "dve-2"))
+    val first = FileIndex.vacuum(spark, root)
+    assert(first.nonEmpty)
+    val horizon = FileIndex.retentionHorizon(root)
+    val before = dvBytes(root)
+    assert(before.nonEmpty, "dve-2's vectors target live files and stay")
+    assert(FileIndex.vacuum(spark, root).isEmpty, "a second vacuum reclaimed again")
+    assert(dvBytes(root) == before, "a second vacuum rewrote the dv log")
+    assert(FileIndex.retentionHorizon(root) == horizon)
+    // a later compaction retires more files: the next vacuum takes
+    // exactly those
+    assert(FileIndex.absorb(spark, root,
+      synthEvents().withColumn("event_id", col("event_id") + 20000L)
+        .filter(!col("user_id").isin(7L, 11L)), "inc-2"))
+    assert(FileIndex.compact(spark, root).isDefined)
+    val third = FileIndex.vacuum(spark, root)
+    assert(third.nonEmpty && third.toSet.intersect(first.toSet).isEmpty)
+    assert(!userIds(root)(7L) && !userIds(root)(11L))
+  }
+
   test("a dv fold that crashed between move-in and retire") {
     val root = foldedDvRoot()
     assert(FileIndex.eraseDv(spark, root, 11L, "dve-2"))
@@ -1427,15 +1474,18 @@ class ScanPruningSpec extends AnyFunSuite {
     val saved = java.nio.file.Files.createTempDirectory("dv-snapshot")
     snapshot.foreach(n => java.nio.file.Files.copy(dv.resolve(n),
       saved.resolve(n)))
+    assert(FileIndex.retentionHorizon(root) == -1L)
     assert(FileIndex.vacuum(spark, root).nonEmpty)
     val liveDv = FileIndex.dv(spark, root).collect().toSet
     val ids = userIds(root)
     assert(!ids(7L) && !ids(11L))
 
     // the crash: the folded replacement moved in, the snapshot files
-    // never retired — copy them back beside it
+    // never retired — copy them back beside it; the horizon, persisted
+    // only after both folds, was never written
     snapshot.foreach(n => java.nio.file.Files.copy(saved.resolve(n),
       dv.resolve(n)))
+    java.nio.file.Files.delete(horizonFile(root))
     assert(snapshot.subsetOf(dvFiles(root)))
     assert(FileIndex.dv(spark, root).collect().toSet == liveDv)
     assert(userIds(root) == ids)
@@ -1463,15 +1513,18 @@ class ScanPruningSpec extends AnyFunSuite {
     assert(!userIds(root)(7L), "the compacted erase resurfaced")
 
     // a fold that crashed between its last retirement and the prune
-    // leaves the dir empty: reads take it for no log, and the next
-    // vacuum removes it
+    // leaves the dir empty and the horizon unwritten: reads take the
+    // dir for no log, and the next vacuum re-runs the fold, removing it
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(FileIndex.dvPath(root)))
+    java.nio.file.Files.delete(horizonFile(root))
     assert(!FileIndex.hasDv(root))
     assert(FileIndex.dv(spark, root).count() == 0L)
     assert(!userIds(root)(7L), "the compacted erase resurfaced")
     FileIndex.vacuum(spark, root)
     assert(!FileIndex.hasDv(root))
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(FileIndex.dvPath(root))))
 
     // a later erase recreates the log
     assert(FileIndex.eraseDv(spark, root, 9L, "dve-2"))

@@ -31,28 +31,11 @@ class TwoJvmFileIndexSoakSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
   private def launchChild(root: String, writer: String, nAbs: Int,
       rowsPer: Int, base: Long, logDir: String): Process = {
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val cmd = (Seq(javaBin) ++ addOpens ++ Seq(
-      "-Xmx1g", "-Dspark.ui.enabled=false",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.queries.FileIndexSoakChild",
-      root, writer, nAbs.toString, rowsPer.toString, base.toString))
-    new ProcessBuilder(cmd: _*)
-      .redirectOutput(new java.io.File(s"$logDir/$writer.out"))
-      .redirectErrorStream(true)
-      .start()
+    graft.ChildJvm.launch("graft.queries.FileIndexSoakChild",
+      Seq(root, writer, nAbs.toString, rowsPer.toString, base.toString),
+      new java.io.File(s"$logDir/$writer.out"))
   }
 
   test("two child JVMs + the parent absorb concurrently; head reads are exact") {

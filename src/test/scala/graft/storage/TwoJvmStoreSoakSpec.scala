@@ -25,31 +25,11 @@ class TwoJvmStoreSoakSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
   private def launchChild(table: String, writer: String, nBatches: Int,
       rowsPer: Int, compactEvery: Int, logDir: String): Process = {
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    // Test / fork := true, so java.class.path IS the real test
-    // classpath (spark jars + compiled classes + test classes)
-    val cmd = (Seq(javaBin) ++ addOpens ++ Seq(
-      "-Xmx1g", "-Dspark.ui.enabled=false",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.storage.StoreSoakChild",
-      table, writer, nBatches.toString, rowsPer.toString,
-      compactEvery.toString))
-    new ProcessBuilder(cmd: _*)
-      .redirectOutput(new java.io.File(s"$logDir/$writer.out"))
-      .redirectErrorStream(true)
-      .start()
+    graft.ChildJvm.launch("graft.storage.StoreSoakChild",
+      Seq(table, writer, nBatches.toString, rowsPer.toString, compactEvery.toString),
+      new java.io.File(s"$logDir/$writer.out"))
   }
 
   test("two child JVMs + the parent append and compact one table; no row lost or doubled") {
