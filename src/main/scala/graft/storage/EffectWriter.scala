@@ -6,9 +6,11 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapred.JobConf
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.TaskContext
+import org.apache.spark.{SparkContext, TaskContext}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -57,10 +59,23 @@ private[graft] final class TableOut(val path: String, val partitionCols: Seq[Str
   * so file format, codec and Spark row metadata are the same. Object
   * leaf columns are typed from the registry snapshot the tables were
   * planned from; a task reports the `(iface, major)` pairs the snapshot
-  * cannot type instead of failing. A planned table is kept for later
-  * batches with the same input schema, session conf and layout, so a
-  * batch plans only tables it has not seen before, however many object
-  * interfaces the registry holds.
+  * cannot type instead of failing.
+  *
+  * What is shipped once: a batch's tables, their routing and the Hadoop
+  * configuration form one [[Plan]], sent to executors as one broadcast
+  * and kept for later batches with the same input schema, session conf,
+  * table set and layouts. A batch's tasks carry only the writer id, the
+  * batch id, the staging name and the broadcast handle, a few hundred
+  * bytes however many tables the registry holds. A new plan plans only
+  * the tables no earlier plan holds, and ships once; a batch whose plan
+  * is kept does not wait while another is planned.
+  *
+  * What is built per executor: each task thread builds a table's
+  * projections and its writer configuration the first time it writes
+  * that table, and the event deserializer and serializer the first time
+  * it publishes, then reuses them in every later task and batch of the
+  * same plan; it keeps only its latest plan's. Projections are not
+  * thread-safe, so no two threads share one.
   *
   * Commit ([[StagedCommit]]): tasks write under one hidden per-batch
   * directory in each root (store root, topic root), file names carrying
@@ -79,77 +94,164 @@ private[graft] object EffectWriter {
   /** Parquet writers one task keeps open at once. */
   private val MaxOpenWriters = 32
 
-  /** Planned tables kept across batches, least recently used dropped first. */
+  /** Planned tables kept across batches, least recently used dropped
+    * first; also the most tables the kept plans hold between them.
+    */
   private val PlannedTables = 1024
 
-  private final case class SpecKey(
+  /** A table as a batch's registry and sinks lay it out. */
+  private final case class TableKey(root: String, table: String, partitionCols: Seq[String],
+      layout: Seq[Mapping])
+
+  private def tableKey(root: String, t: TableOut) = TableKey(root, t.path, t.partitionCols, t.layout)
+
+  private final case class SpecKey(input: StructType, conf: Map[String, String], table: TableKey)
+
+  /** A batch's whole table set, for one Spark context. */
+  private final case class PlanKey(
+      sc: SparkContext,
       input: StructType,
       conf: Map[String, String],
-      root: String,
-      table: String,
-      partitionCols: Seq[String],
-      layout: Seq[Mapping])
+      byKind: Map[String, TableKey],
+      objects: Option[Map[(String, Int), TableKey]],
+      topic: Option[TableKey])
 
   private val planned = new java.util.LinkedHashMap[SpecKey, Spec](16, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[SpecKey, Spec]): Boolean =
       size() > PlannedTables
   }
 
+  /** A plan as shipped: its broadcast, and the driver's Hadoop conf it
+    * was made from.
+    */
+  private final class Shipped(val key: PlanKey, val plan: Broadcast[Plan], val hadoopConf: Configuration,
+      val tables: Int)
+
+  private val shipped = new java.util.LinkedHashMap[PlanKey, Shipped](16, 0.75f, true)
+
   /** How many tables have been planned, each a miss of `planned`. */
   private[storage] val tablesPlanned = new AtomicLong
+
+  /** How many plans have been broadcast. */
+  private[graft] val plansShipped = new AtomicLong
 
   def write(
       effects: Dataset[EffectRow],
       store: Option[(AstarteStore, Registry)],
       events: Option[EventSink],
       batchId: Option[Long] = None): Unit = {
-    val spark = effects.sparkSession
-    val writer = batchId.flatMap(_ => Option(spark.sparkContext.getLocalProperty("sql.streaming.queryId")))
-      .getOrElse(UUID.randomUUID().toString)
-    val staging = s"${StagedCommit.Prefix}$writer-${batchId.getOrElse(0L)}"
     val df = effects.toDF()
-    val input = df.queryExecution.analyzed.output
-    val schema = df.schema
-    val hadoopConf = WriteBridge.hadoopConf(spark)
-    val conf = spark.conf.getAll
-
-    val specs = mutable.ArrayBuffer.empty[Spec]
-    val ids = mutable.HashMap.empty[TableOut, Int]
-    def spec(root: String, t: TableOut, from: => Seq[Attribute]): Int = ids.getOrElseUpdate(t, {
-      val key = SpecKey(schema, conf, root, t.path, t.partitionCols, t.layout)
-      specs += planned.synchronized(Option(planned.get(key))).getOrElse {
-        val s = planTable(spark, hadoopConf, root, t, from)
-        tablesPlanned.incrementAndGet()
-        planned.synchronized(planned.put(key, s))
-        s
-      }
-      specs.size - 1
-    })
-
-    val (byKind, objects) = store match {
-      case Some((s, registry)) =>
-        val (kinds, objs) = s.tables(df, registry)
-        (kinds.map { case (k, t) => k -> spec(s.root, t, input) },
-          Some(objs.map { case (key, t) => key -> spec(s.root, t, input) }))
-      case None => (Map.empty[String, Int], None)
-    }
-    val topic = events.map { sink =>
-      val t = sink.table(spark)
-      (spec(sink.path, t, t.rows.queryExecution.analyzed.output),
-        ExpressionEncoder[EffectRow]().resolveAndBind(input), ExpressionEncoder[EventWireRow]())
-    }
-    val plan = Plan(writer, batchId.getOrElse(0L), staging, WriteBridge.serializable(hadoopConf),
-      specs.toIndexedSeq, schema.fieldIndex("kind"), schema.fieldIndex("iface"), schema.fieldIndex("major"),
-      byKind, objects, topic)
-
-    val stagingDirs = (store.map(_._1.root) ++ events.map(_.path)).toSeq.map(r => new Path(s"$r/$staging"))
+    val (task, hadoopConf) = this.task(df, store.map { case (s, registry) => (s.root, s.tables(df, registry)) },
+      events.map(sink => (sink.path, sink.table(df.sparkSession))), batchId)
+    val stagingDirs = (store.map(_._1.root) ++ events.map(_.path)).toSeq.map(r => new Path(s"$r/${task.staging}"))
     StagedCommit(stagingDirs, hadoopConf) {
-      val out = effects.queryExecution.toRdd.mapPartitions(rows => Iterator(writeTask(rows, plan))).collect()
+      val out = effects.queryExecution.toRdd.mapPartitions(task).collect()
       out.flatMap(_.untyped).distinct.sorted.headOption.foreach { case (iface, major) =>
         throw AstarteStore.untypedObject(store.get._2, iface, major)
       }
       out.toSeq.flatMap(_.files)
     }
+  }
+
+  /** The batch's task over `df` and the Hadoop conf its plan was made
+    * from: the kept plan of the batch's store tables (by kind, and by
+    * object `(iface, major)`, under their root) and topic table, or one
+    * shipped now. Planning and broadcasting run outside the lock, so a
+    * batch whose plan is kept never waits on one being planned.
+    */
+  private[storage] def task(
+      df: DataFrame,
+      tables: Option[(String, (Map[String, TableOut], Map[(String, Int), TableOut]))],
+      topic: Option[(String, TableOut)],
+      batchId: Option[Long]): (Task, Configuration) = {
+    val spark = df.sparkSession
+    val writer = batchId.flatMap(_ => Option(spark.sparkContext.getLocalProperty("sql.streaming.queryId")))
+      .getOrElse(UUID.randomUUID().toString)
+    val planKey = PlanKey(spark.sparkContext, df.schema, spark.conf.getAll,
+      tables.map { case (root, (kinds, _)) => kinds.map { case (k, t) => k -> tableKey(root, t) } }
+        .getOrElse(Map.empty),
+      tables.map { case (root, (_, objs)) => objs.map { case (o, t) => o -> tableKey(root, t) } },
+      topic.map { case (root, t) => tableKey(root, t) })
+
+    val s = shipped.synchronized(Option(shipped.get(planKey))).getOrElse {
+      val made = ship(spark, df, planKey, tables, topic)
+      val first = shipped.synchronized {
+        val first = Option(shipped.get(planKey))
+        if (first.isEmpty) {
+          shipped.put(planKey, made)
+          evict()
+        }
+        first
+      }
+      first match {
+        case Some(f) => // another batch shipped the same plan meanwhile
+          made.plan.destroy()
+          f
+        case None =>
+          plansShipped.incrementAndGet()
+          made
+      }
+    }
+    val batch = batchId.getOrElse(0L)
+    (Task(writer, batch, s"${StagedCommit.Prefix}$writer-$batch", s.plan), s.hadoopConf)
+  }
+
+  /** Drops the least recently used plans while the kept ones hold more
+    * than [[PlannedTables]] tables, and every plan of a stopped Spark
+    * context; the newest plan stays. Spark's context cleaner removes a
+    * dropped plan's broadcast once nothing holds it, so a batch still
+    * running on it keeps it until the batch's job ends.
+    */
+  private def evict(): Unit = {
+    var held = shipped.values.asScala.map(_.tables).sum
+    shipped.values.asScala.toList.init.foreach { s =>
+      if (held > PlannedTables || s.key.sc.isStopped) {
+        shipped.remove(s.key)
+        held -= s.tables
+      }
+    }
+  }
+
+  /** Plans the batch's tables, each taken from `planned` or planned
+    * now, and broadcasts them.
+    */
+  private def ship(
+      spark: SparkSession,
+      df: DataFrame,
+      key: PlanKey,
+      tables: Option[(String, (Map[String, TableOut], Map[(String, Int), TableOut]))],
+      topic: Option[(String, TableOut)]): Shipped = {
+    val hadoopConf = WriteBridge.hadoopConf(spark)
+    val input = df.queryExecution.analyzed.output
+    val specs = mutable.ArrayBuffer.empty[Spec]
+    val ids = mutable.HashMap.empty[TableKey, Int]
+    def spec(root: String, t: TableOut, from: => Seq[Attribute]): Int = {
+      val table = tableKey(root, t)
+      ids.getOrElseUpdate(table, {
+        val specKey = SpecKey(key.input, key.conf, table)
+        specs += planned.synchronized(Option(planned.get(specKey))).getOrElse {
+          val s = planTable(spark, hadoopConf, root, t, from)
+          tablesPlanned.incrementAndGet()
+          planned.synchronized(planned.put(specKey, s))
+          s
+        }
+        specs.size - 1
+      })
+    }
+    val (byKind, objects) = tables match {
+      case Some((root, (kinds, objs))) =>
+        (kinds.map { case (k, t) => k -> spec(root, t, input) },
+          Some(objs.map { case (o, t) => o -> spec(root, t, input) }))
+      case None => (Map.empty[String, Int], None)
+    }
+    val events = topic.map { case (root, t) =>
+      Topic(spec(root, t, t.rows.queryExecution.analyzed.output),
+        ExpressionEncoder[EffectRow]().resolveAndBind(input), ExpressionEncoder[EventWireRow]())
+    }
+    val schema = key.input
+    val plan = Plan(WriteBridge.serializable(hadoopConf), specs.toIndexedSeq,
+      schema.fieldIndex("kind"), schema.fieldIndex("iface"), schema.fieldIndex("major"), byKind, objects, events)
+    new Shipped(key, spark.sparkContext.broadcast(plan), hadoopConf, specs.size)
   }
 
   /** One table as tasks write it: its select list bound to `input`, and
@@ -184,7 +286,7 @@ private[graft] object EffectWriter {
     * values (as strings), the writer factory, and the configuration
     * entries `prepareWrite` set for it on top of the shared one.
     */
-  private final case class Spec(
+  private[storage] final case class Spec(
       table: String,
       root: String,
       data: Seq[Expression],
@@ -194,11 +296,18 @@ private[graft] object EffectWriter {
       factory: OutputWriterFactory,
       conf: Map[String, String])
 
-  /** Everything a task needs: the tables and how rows route to them. */
-  private final case class Plan(
-      writer: String,
-      batch: Long,
-      staging: String,
+  /** The event topic: its table, and the encoders a routed event goes
+    * through.
+    */
+  private[storage] final case class Topic(
+      table: Int,
+      effect: ExpressionEncoder[EffectRow],
+      wire: ExpressionEncoder[EventWireRow])
+
+  /** What every task of every batch with the same tables shares: the
+    * Hadoop conf, the tables and how rows route to them.
+    */
+  private[storage] final case class Plan(
       conf: () => Configuration,
       specs: IndexedSeq[Spec],
       kindOrd: Int,
@@ -206,17 +315,24 @@ private[graft] object EffectWriter {
       majorOrd: Int,
       byKind: Map[String, Int],
       objects: Option[Map[(String, Int), Int]],
-      topic: Option[(Int, ExpressionEncoder[EffectRow], ExpressionEncoder[EventWireRow])])
+      topic: Option[Topic])
 
-  private final case class TaskFiles(files: Array[Staged], untyped: Array[(String, Int)])
+  /** One batch's task function: the batch's names and the shared plan. */
+  private[storage] final case class Task(writer: String, batch: Long, staging: String, plan: Broadcast[Plan])
+      extends (Iterator[InternalRow] => Iterator[TaskFiles]) {
+    def apply(rows: Iterator[InternalRow]): Iterator[TaskFiles] = Iterator(writeTask(rows, this))
+  }
 
-  private def writeTask(rows: Iterator[InternalRow], plan: Plan): TaskFiles = {
-    val out = new TaskWriters(plan, TaskContext.get())
+  private[storage] final case class TaskFiles(files: Array[Staged], untyped: Array[(String, Int)])
+
+  private def writeTask(rows: Iterator[InternalRow], task: Task): TaskFiles = {
+    val built = Built(task.plan.value)
+    val out = new TaskWriters(task, built, TaskContext.get())
+    val plan = built.plan
     val untyped = mutable.LinkedHashSet.empty[(String, Int)]
-    val publish = plan.topic.map { case (i, effect, wire) =>
-      val toEffect = effect.createDeserializer()
-      val toWire = wire.createSerializer()
-      (row: InternalRow) => EventSink.route(toEffect(row)).foreach(w => out.write(i, toWire(w)))
+    val publish = plan.topic.map { topic =>
+      val (toEffect, toWire) = built.events
+      (row: InternalRow) => EventSink.route(toEffect(row)).foreach(w => out.write(topic.table, toWire(w)))
     }
     try {
       rows.foreach { row =>
@@ -254,8 +370,8 @@ private[graft] object EffectWriter {
     * at most [[MaxOpenWriters]] open; rows of further directories wait
     * in a sorter until the input ends.
     */
-  private final class TaskWriters(plan: Plan, tc: TaskContext) {
-    private val base = plan.conf()
+  private final class TaskWriters(task: Task, built: Built, tc: TaskContext) {
+    private val plan = built.plan
     private val tables = new Array[TableTask](plan.specs.size)
     private val open = mutable.HashMap.empty[(Int, String), OutputWriter]
     private val files = mutable.ArrayBuffer.empty[Staged]
@@ -263,7 +379,7 @@ private[graft] object EffectWriter {
     private lazy val toWaiting = UnsafeProjection.create(WaitingSchema)
 
     private def table(i: Int): TableTask = {
-      if (tables(i) == null) tables(i) = new TableTask(plan, plan.specs(i), base, tc)
+      if (tables(i) == null) tables(i) = new TableTask(task, plan.specs(i), built.table(i), tc)
       tables(i)
     }
 
@@ -331,25 +447,68 @@ private[graft] object EffectWriter {
     }
   }
 
-  /** One table in one task: its projections and the names of its files. */
-  private final class TableTask(plan: Plan, spec: Spec, base: Configuration, tc: TaskContext) {
-    private val context = {
-      val conf = new Configuration(base)
-      spec.conf.foreach { case (k, v) => conf.set(k, v) }
-      new TaskAttemptContextImpl(conf, new TaskAttemptID(
-        new TaskID(new JobID("graft", tc.stageId()), TaskType.MAP, tc.partitionId()), tc.attemptNumber()))
+  /** What a task thread built for the plan of its latest task: each
+    * table's [[BuiltTable]], made the first time the thread writes the
+    * table, and the event deserializer and serializer. A thread keeps
+    * one plan's: a task of another plan replaces them, so a thread
+    * holds no more than one task of its plan would build.
+    */
+  private final class Built(val plan: Plan) {
+    private lazy val base = plan.conf()
+    private val tables = new Array[BuiltTable](plan.specs.size)
+
+    lazy val events = {
+      val topic = plan.topic.get
+      (topic.effect.createDeserializer(), topic.wire.createSerializer())
     }
-    private val name = f"part-${tc.partitionId()}%05d-${plan.writer}-b${plan.batch}"
-    private val ext = spec.factory.getFileExtension(context)
-    private val staging = s"${spec.root}/${plan.staging}${spec.table.stripPrefix(spec.root)}"
-    private val partition = UnsafeProjection.create(spec.partition)
+
+    def table(i: Int): BuiltTable = {
+      if (tables(i) == null) tables(i) = new BuiltTable(plan.specs(i), base)
+      tables(i)
+    }
+  }
+
+  private object Built {
+    private val current = new ThreadLocal[Built]
+
+    /** The calling thread's builds for `plan`. */
+    def apply(plan: Plan): Built = {
+      val b = current.get()
+      if (b != null && (b.plan eq plan)) b
+      else {
+        val made = new Built(plan)
+        current.set(made)
+        made
+      }
+    }
+  }
+
+  /** A table's projections and writer configuration (a `JobConf`, which
+    * a task attempt context takes without copying).
+    */
+  private final class BuiltTable(spec: Spec, base: Configuration) {
+    val conf = new JobConf(base)
+    spec.conf.foreach { case (k, v) => conf.set(k, v) }
+    val partition: UnsafeProjection = UnsafeProjection.create(spec.partition)
     val data: UnsafeProjection = UnsafeProjection.create(spec.data)
+  }
+
+  /** One table in one task: its thread's projections and the names of
+    * its files.
+    */
+  private final class TableTask(task: Task, spec: Spec, built: BuiltTable, tc: TaskContext) {
+    private val context = new TaskAttemptContextImpl(built.conf, new TaskAttemptID(
+      new TaskID(new JobID("graft", tc.stageId()), TaskType.MAP, tc.partitionId()), tc.attemptNumber()))
+    private val name = f"part-${tc.partitionId()}%05d-${task.writer}-b${task.batch}"
+    private val ext = spec.factory.getFileExtension(context)
+    private val staging = s"${spec.root}/${task.staging}${spec.table.stripPrefix(spec.root)}"
+    val data: UnsafeProjection = built.data
 
     private def under(dir: String, sub: String) = if (sub.isEmpty) dir else s"$dir/$sub"
 
     /** The partition directory of `row`, relative to the table. */
     def dir(row: InternalRow): String = {
-      val p = partition(row)
+      val p = built.partition(row)
       spec.partitionCols.indices.map { i =>
         ExternalCatalogUtils.getPartitionPathString(spec.partitionCols(i),
           if (p.isNullAt(i)) ExternalCatalogUtils.DEFAULT_PARTITION_NAME else p.getUTF8String(i).toString)

@@ -5,7 +5,7 @@ import java.net.URI
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermissions
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream, FileStatus,
   FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
@@ -32,7 +32,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   * Everything else, checksums included, is the stock class: the
   * `file:` scheme uses it through [[ForkFreeLocalFileSystem]] (a
   * `LocalFileSystem`, so `.crc` sidecars are written and verified) and
-  * [[ForkFreeLocalFs]] (a `ChecksumFs`, for `FileContext`).
+  * [[ForkFreeLocalFs]] (a `ChecksumFs`, for `FileContext`, which also
+  * verifies a read opened without a buffer size).
   */
 class ForkFreeRawLocalFileSystem extends RawLocalFileSystem {
 
@@ -91,7 +92,15 @@ class ForkFreeRawLocalFs(uri: URI, conf: Configuration)
 /** `fs.AbstractFileSystem.file.impl`: the checksummed `FileContext`
   * filesystem over [[ForkFreeRawLocalFs]], mirroring Hadoop's
   * `local.LocalFs`. Spark's checkpoint file manager (offset and commit
-  * logs, state-store deltas) writes through it.
+  * logs, state-store deltas) writes and reads through it.
+  *
+  * `open(path)` verifies checksums, as `open(path, bufferSize)` does.
+  * The stock `ChecksumFs` inherits `FilterFs.open(path)`, which reads
+  * the raw file and never its `.crc`; Spark's checkpoint manager opens
+  * files that way, so its sidecars would be written and never checked.
   */
 class ForkFreeLocalFs(uri: URI, conf: Configuration)
-  extends ChecksumFs(new ForkFreeRawLocalFs(uri, conf))
+  extends ChecksumFs(new ForkFreeRawLocalFs(uri, conf)) {
+
+  override def open(f: Path): FSDataInputStream = open(f, getServerDefaults(f).getFileBufferSize)
+}

@@ -804,7 +804,7 @@ class MultimodalSpec extends AnyFunSuite {
     }
     // declared-dimension bomb: 65535x65535 frame dims multiply past
     // Int range (and would demand gigabytes) — must refuse, not
-    // crash or preallocate (found by GifFuzz, 20k-corruption soak)
+    // crash or preallocate (found by the 20k-corruption GIF soak, now GifFuzzSpec)
     val bomb = gif.clone()
     // image descriptor starts after header(13) + global palette(768):
     // width at +5, height at +7 (LE16 each)

@@ -237,6 +237,104 @@ class AstarteStoreSpec extends AnyFunSuite {
     assert(store.objectTable(spark, objects(0), reg(1).mappingsOf(objects(0).name)).count() == 3)
   }
 
+  /** `n` object interfaces with one `/value` leaf each; `reg` can bump
+    * the first one's minor, which adds an `/extra` leaf. A batch holds a
+    * property value and a value of the first object interface.
+    */
+  private final class ObjectTraffic(prefix: String, n: Int) {
+    val objects = (0 until n).map(i => InterfaceDescriptor(s"$prefix$i", 1, 0,
+      InterfaceType.Datastream, Ownership.Device, Aggregation.Object))
+    def reg(take: Int = n, minor: Int = 0): Registry = {
+      val os = objects.take(take).updated(0, objects(0).copy(minor = minor))
+      Registry(registry.interfaces ++ os.map(o => o.name -> o),
+        registry.mappings ++ os.map(o => o.name -> (Mapping(o.name, 1, "/value", ADouble) +:
+          (if (o.minor > 0) Seq(Mapping(o.name, 1, "/extra", ADouble)) else Nil))), Nil)
+    }
+    private val t0 = 15216455705950000L
+    def batch(k: Long): org.apache.spark.sql.Dataset[EffectRow] = {
+      import spark.implicits._
+      DeviceStateMachine.processBatch(Seq(
+        Envelope("r", "dev", "data", lcd.name, "/time/from",
+          Bson.encode(Seq("v" -> k)), t0 + k * 10000, "ip", 2 * k),
+        Envelope("r", "dev", "data", objects(0).name, "/",
+          Bson.encode(Seq("v" -> Map("value" -> k.toDouble))), t0 + k * 10000 + 1, "ip", 2 * k + 1)).toDS(),
+        reg())
+    }
+    def rows(store: AstarteStore): Long =
+      store.objectTable(spark, objects(0), reg(1).mappingsOf(objects(0).name)).count()
+  }
+
+  /** (plans shipped, tables planned) while `sink` runs. */
+  private def shipped(sink: => Unit): (Long, Long) = {
+    val (plans, tables) = (EffectWriter.plansShipped.get, EffectWriter.tablesPlanned.get)
+    sink
+    (EffectWriter.plansShipped.get - plans, EffectWriter.tablesPlanned.get - tables)
+  }
+
+  test("a batch's plan ships once: one broadcast per table set, a closure that does not grow") {
+    val store = new AstarteStore(Files.createTempDirectory("graft-shipped").toString)
+    val fx = new ObjectTraffic("com.example.Shipped", 40)
+    assert(shipped(store.applyEffects(fx.batch(1), fx.reg()))._1 == 1)
+    assert(shipped(store.applyEffects(fx.batch(2), fx.reg()))._1 == 0)
+    // a minor bump adds a leaf column to one object table: one new plan
+    assert(shipped(store.applyEffects(fx.batch(3), fx.reg(minor = 1)))._1 == 1)
+    assert(shipped(store.applyEffects(fx.batch(4), fx.reg(minor = 1)))._1 == 0)
+    assert(fx.rows(store) == 4)
+
+    // what every task of the batch's job is sent: the same few hundred
+    // bytes for one object interface as for forty
+    def closureBytes(n: Int): Int = {
+      val df = fx.batch(5).toDF()
+      val (task, _) = EffectWriter.task(df, Some(store.root -> store.tables(df, fx.reg(take = n))), None, None)
+      org.apache.spark.SparkEnv.get.closureSerializer.newInstance().serialize(task).limit()
+    }
+    assert(closureBytes(1) == closureBytes(40))
+    assert(closureBytes(40) < 2048, s"${closureBytes(40)} bytes")
+  }
+
+  test("plans past the kept-table bound are evicted and ship again when next used") {
+    val store = new AstarteStore(Files.createTempDirectory("graft-evicted").toString)
+    // two plans of 5 kind tables and 520 object tables each, sharing
+    // all but one: together past the 1024 tables kept
+    val fx = new ObjectTraffic("com.example.Evicted", 520)
+    assert(shipped(store.applyEffects(fx.batch(1), fx.reg())) == ((1, 525)))
+    assert(shipped(store.applyEffects(fx.batch(2), fx.reg(minor = 1))) == ((1, 1)))
+    // the first plan was evicted (its broadcast left to Spark's context
+    // cleaner); its tables are still planned, so it ships again without
+    // planning any
+    assert(shipped(store.applyEffects(fx.batch(3), fx.reg())) == ((1, 0)))
+    assert(shipped(store.applyEffects(fx.batch(4), fx.reg())) == ((0, 0)))
+    assert(fx.rows(store) == 4)
+  }
+
+  test("a batch whose plan is kept does not wait while another plan is planned") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val store = new AstarteStore(Files.createTempDirectory("graft-unblocked").toString)
+    val fx = new ObjectTraffic("com.example.Unblocked", 1)
+    store.applyEffects(fx.batch(1), fx.reg())
+    // a topic table whose planning lasts until the warm batch is done
+    val topic = Files.createTempDirectory("graft-unblocked-topic").toString
+    val (planning, warmDone) = (new CountDownLatch(1), new CountDownLatch(1))
+    val slow = new TableOut(topic, Seq("event_type"))({
+      planning.countDown()
+      warmDone.await(60, TimeUnit.SECONDS)
+      new graft.events.EventSink(topic).table(spark).rows
+    })
+    val df = fx.batch(2).toDF()
+    val cold = Future(EffectWriter.task(df, None, Some(topic -> slow), None))
+    try {
+      assert(planning.await(60, TimeUnit.SECONDS))
+      val shipping = shipped(Await.result(Future(store.applyEffects(fx.batch(3), fx.reg())), 30.seconds))
+      assert(shipping == ((0, 0)))
+      assert(!cold.isCompleted)
+    } finally warmDone.countDown()
+    Await.result(cold, 60.seconds)
+    assert(fx.rows(store) == 2)
+  }
+
   test("replaying a batch of effects is harmless (effectively-once)") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-replay").toString

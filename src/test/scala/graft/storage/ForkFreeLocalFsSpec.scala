@@ -125,7 +125,7 @@ class ForkFreeLocalFsSpec extends AnyFunSuite {
       corrupt(Paths.get(s"$d/data"))
       intercept[ChecksumException](readAll(fs, s"$d/data"))
     }
-    def contextRead(forkFree: Boolean): String = {
+    def contextRead(forkFree: Boolean, bufferSize: Option[Int]): String = {
       val fc = context(forkFree)
       val d = tmp()
       val p = new Path(s"$d/data")
@@ -134,15 +134,18 @@ class ForkFreeLocalFsSpec extends AnyFunSuite {
       assert(Files.exists(Paths.get(s"$d/.data.crc")))
       corrupt(Paths.get(s"$d/data"))
       try {
-        // with a buffer size: FilterFs.open(Path) skips ChecksumFs's
-        // reader, on the stock LocalFs too
-        val in = fc.open(p, 4096)
+        val in = bufferSize.fold(fc.open(p))(fc.open(p, _))
         try in.readAllBytes() finally in.close()
         "read"
       } catch { case e: java.io.IOException => e.getClass.getSimpleName }
     }
-    assert(contextRead(forkFree = true) == contextRead(forkFree = false))
-    assert(contextRead(forkFree = true) == "ChecksumException")
+    assert(contextRead(forkFree = true, Some(4096)) == contextRead(forkFree = false, Some(4096)))
+    assert(contextRead(forkFree = true, Some(4096)) == "ChecksumException")
+    // without a buffer size (as Spark's checkpoint manager opens files)
+    // the stock LocalFs inherits FilterFs.open(Path), which skips
+    // ChecksumFs's reader; the fork-free one verifies there too
+    assert(contextRead(forkFree = false, None) == "read")
+    assert(contextRead(forkFree = true, None) == "ChecksumException")
   }
 
   test("link status: a symlink still reports isSymlink, the rest as the stock class") {

@@ -193,6 +193,67 @@ class PipelineSpec extends AnyFunSuite {
     assert(batch.last.stateOperators(0).numRowsUpdated == 2)
   }
 
+  test("three micro-batches ship one plan broadcast, and write every batch's rows") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-pipe-shipped").toString
+    val srcDir = s"$base/src"
+    new java.io.File(srcDir).mkdirs()
+    val store = new AstarteStore(s"$base/store")
+    val sink = new EventSink(s"$base/events")
+    val traffic = (0 until 3).map(i => twoTableTraffic(s"dev${i}A", s"dev${i}B", 8000000000L + i * 1000000L))
+    val before = graft.storage.EffectWriter.plansShipped.get
+    val q = Pipeline.start(Pipeline.fileSource(spark, s"$srcDir/*"),
+      DeviceStateMachine.StaticRegistryProvider(traffic.head._1), store, sink, s"$base/ckpt")
+    try traffic.zipWithIndex.foreach { case ((_, envs), i) =>
+      envs.toDS().write.parquet(s"$srcDir/shard-$i")
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq == Seq(0L, 1L, 2L))
+    assert(graft.storage.EffectWriter.plansShipped.get - before == 1)
+
+    val devices = (0 until 3).flatMap(i => Seq(s"dev${i}A", s"dev${i}B"))
+    val props = store.propertyValues(spark, ALongInteger).collect()
+      .map(r => r.getAs[String]("device_id") -> r.getAs[Long]("value")).toMap
+    assert(props == devices.map(d => d -> (if (d.endsWith("A")) 12L else 42L)).toMap)
+    assert(store.datastreams(spark).select("device_id", "integer_value").as[(String, Int)].collect().sorted.toSeq ==
+      devices.map(d => d -> (if (d.endsWith("A")) 1 else 2)))
+    val fired = sink.read(spark).select("device_id", "event_type", "routing_key").as[(String, String, String)]
+      .collect().sorted.toSeq
+    assert(fired == devices.map(d => (d, "incoming_data", "job_events")))
+  }
+
+  test("a flipped byte in a stopped query's checkpoint fails the restart") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-pipe-crc").toString
+    val srcDir = s"$base/src"
+    new java.io.File(srcDir).mkdirs()
+    val (registry, envelopes) = twoTableTraffic("devA", "devB", 9000000000L)
+    envelopes.toDS().write.parquet(s"$srcDir/shard-0")
+    val store = new AstarteStore(s"$base/store")
+    val sink = new EventSink(s"$base/events")
+    def start() = Pipeline.start(Pipeline.fileSource(spark, s"$srcDir/*"),
+      DeviceStateMachine.StaticRegistryProvider(registry), store, sink, s"$base/ckpt")
+    val q = start()
+    try q.processAllAvailable() finally q.stop()
+
+    // the commit log entry of batch 0, "v1\n{"nextBatchWatermarkMs":0}":
+    // its last digit becomes another valid one
+    val commit = java.nio.file.Paths.get(s"$base/ckpt/commits/0")
+    assert(Files.exists(java.nio.file.Paths.get(s"$base/ckpt/commits/.0.crc")))
+    val bytes = Files.readAllBytes(commit)
+    val at = bytes.lastIndexWhere(_ == '0'.toByte)
+    bytes(at) = '1'.toByte
+    Files.write(commit, bytes)
+
+    val again = start()
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      try again.processAllAvailable() finally again.stop()
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(_.isInstanceOf[org.apache.hadoop.fs.ChecksumException]),
+      causes.map(_.toString).mkString("\n"))
+  }
+
   /** Two devices' property sets (each fires the trigger) and datastream
     * values, received from `t0` (decimicroseconds) on.
     */
